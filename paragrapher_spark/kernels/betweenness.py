@@ -38,15 +38,13 @@ scalars. Backward reuses the persisted per-level table — no recomputation.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
+from paragrapher_spark.plans import superstep
 
 
 @dataclass
@@ -97,14 +95,9 @@ def _forward_levels(
         .repartition(n_part, "source", "id")
         .localCheckpoint(eager=True)
     )
-    visited = frontier
 
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    depth = 0
-    state_ckpt = StateCheckpointer(spark)
-    for d in range(1, max_depth + 1):
-        t0 = time.monotonic()
+    def step(d: int, state, ckpt):
+        visited, frontier, _ = state
         cand = (
             frontier.join(e, on=frontier["id"] == e["src"])
             .groupBy("source", F.col("dst").alias("nid"))
@@ -119,29 +112,69 @@ def _forward_levels(
         frontier = (
             cand.join(visited.select("source", "id"), on=["source", "id"], how="left_anti")
             .repartition(n_part, "source", "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         n_front = frontier.count()
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "level": d,
-                "frontier_size": n_front,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-        if n_front == 0:
-            break
-        depth = d
-        visited = visited.unionByName(frontier).transform(state_ckpt.cut_lazy)
+        if n_front:
+            visited = visited.unionByName(frontier).transform(ckpt.cut_lazy)
+        return (visited, frontier, n_front), {"frontier_size": n_front}
 
     # pin into cached partitions + reclaim round-trip files (ADVICE r4);
     # a caller's later unpersist() on this frame is a cache-manager no-op
-    levels = state_ckpt.pin(visited.repartition(n_part, "source", "id"))
-    return levels, depth, history
+    loop = superstep.run(
+        step,
+        (frontier, frontier, None),
+        spark=spark,
+        max_iter=max_depth,
+        key="level",
+        done=lambda s: s[2] == 0,
+        result=lambda s: s[0].repartition(n_part, "source", "id"),
+    )
+    # the level that found the frontier empty reached no new depth
+    depth = loop.last - 1 if loop.done else loop.last
+    return loop.result, depth, loop.history
+
+
+def _credits(
+    levels: DataFrame, e: DataFrame, delta_next: DataFrame, d: int
+) -> DataFrame:
+    """(source, id, wid, part): the Brandes credit σ(s,v)/σ(s,w)·(1 +
+    δ(s,w)) of every shortest-path DAG edge v -> w from level d to d+1
+    (δ is 0 at the deepest level). Columns are renamed BEFORE the
+    self-joins on ``levels`` so attribute resolution is unambiguous."""
+    lv = levels.where(F.col("dist") == d).select("source", "id", "sigma")
+    lw = levels.where(F.col("dist") == d + 1).select(
+        F.col("source").alias("wsource"),
+        F.col("id").alias("wid"),
+        F.col("sigma").alias("wsigma"),
+    )
+    dn = delta_next.select(
+        F.col("source").alias("dsource"),
+        F.col("id").alias("did"),
+        "delta",
+    )
+    return (
+        lv.join(e, on=F.col("id") == F.col("src"))
+        .join(
+            lw,
+            on=(F.col("source") == F.col("wsource")) & (F.col("dst") == F.col("wid")),
+        )
+        .join(
+            dn,
+            on=(F.col("source") == F.col("dsource")) & (F.col("wid") == F.col("did")),
+            how="left",
+        )
+        .select(
+            "source",
+            "id",
+            "wid",
+            (
+                F.col("sigma").cast("double")
+                / F.col("wsigma").cast("double")
+                * (F.lit(1.0) + F.coalesce(F.col("delta"), F.lit(0.0)))
+            ).alias("part"),
+        )
+    )
 
 
 def shortest_path_levels(
@@ -240,46 +273,12 @@ def edge_betweenness(
     e = _symmetrized(edges, directed=False, n_part=n_part)
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
 
-    delta_next = spark.createDataFrame([], "source long, id long, delta double")
-    edge_parts = spark.createDataFrame([], "v long, w long, part double")
-    state_ckpt = StateCheckpointer(spark)
-    for d in range(depth - 1, -1, -1):
-        lv = levels.where(F.col("dist") == d).select("source", "id", "sigma")
-        lw = levels.where(F.col("dist") == d + 1).select(
-            F.col("source").alias("wsource"),
-            F.col("id").alias("wid"),
-            F.col("sigma").alias("wsigma"),
-        )
-        dn = delta_next.select(
-            F.col("source").alias("dsource"),
-            F.col("id").alias("did"),
-            "delta",
-        )
+    def back(i: int, state, ckpt):
+        delta_next, edge_parts = state
         joined = (
-            lv.join(e, on=F.col("id") == F.col("src"))
-            .join(
-                lw,
-                on=(F.col("source") == F.col("wsource"))
-                & (F.col("dst") == F.col("wid")),
-            )
-            .join(
-                dn,
-                on=(F.col("source") == F.col("dsource"))
-                & (F.col("wid") == F.col("did")),
-                how="left",
-            )
-            .select(
-                "source",
-                "id",
-                "wid",
-                (
-                    F.col("sigma").cast("double")
-                    / F.col("wsigma").cast("double")
-                    * (F.lit(1.0) + F.coalesce(F.col("delta"), F.lit(0.0)))
-                ).alias("part"),
-            )
+            _credits(levels, e, delta_next, depth - i)
             .repartition(n_part, "source", "id")
-            .transform(state_ckpt.cut)
+            .transform(ckpt.cut)
         )
         delta_next = joined.groupBy("source", "id").agg(
             F.sum("part").alias("delta")
@@ -287,27 +286,37 @@ def edge_betweenness(
         edge_parts = edge_parts.unionByName(
             joined.select(F.col("id").alias("v"), F.col("wid").alias("w"), "part")
         )
+        return (delta_next, edge_parts), {}
 
-    credits = (
-        edge_parts.groupBy(
-            F.least("v", "w").alias("a"), F.greatest("v", "w").alias("b")
+    def _scores(state) -> DataFrame:
+        credits = (
+            state[1].groupBy(
+                F.least("v", "w").alias("a"), F.greatest("v", "w").alias("b")
+            )
+            .agg(F.sum("part").alias("ebc"))
         )
-        .agg(F.sum("part").alias("ebc"))
-    )
-    scores = (
-        e.where(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .join(credits, on=["a", "b"], how="left")
-        .select("a", "b", F.coalesce("ebc", F.lit(0.0)).alias("ebc"))
-        # eager checkpoint so the persisted substrates can be released
-        # before returning (the similarity.py persist-leak discipline)
-        .localCheckpoint(eager=True)
+        return (
+            e.where(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            .join(credits, on=["a", "b"], how="left")
+            .select("a", "b", F.coalesce("ebc", F.lit(0.0)).alias("ebc"))
+        )
+
+    # backward sweep, deepest level first: step i credits level depth - i
+    loop = superstep.run(
+        back,
+        (
+            spark.createDataFrame([], "source long, id long, delta double"),
+            spark.createDataFrame([], "v long, w long, part double"),
+        ),
+        spark=spark,
+        max_iter=depth,
+        key="level",
+        result=_scores,
     )
     e.unpersist()
     levels.unpersist()
-    # scores is already eagerly pinned above — reclaim round-trip files
-    state_ckpt.close()
-    return EdgeBetweennessResult(scores=scores, depth=depth, history=history)
+    return EdgeBetweennessResult(scores=loop.result, depth=depth, history=history)
 
 
 def betweenness(
@@ -330,65 +339,32 @@ def betweenness(
     e = _symmetrized(edges, directed, n_part)
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
 
-    # backward dependency accumulation, level by level (descending);
-    # columns are renamed BEFORE the self-joins on `levels` so attribute
-    # resolution is unambiguous
-    spark_zero = spark.createDataFrame([], "source long, id long, delta double")
-    delta_next = spark_zero  # δ rows for level d+1 (deepest level: δ = 0)
-    all_delta = spark_zero
-    state_ckpt = StateCheckpointer(spark)
-    for d in range(depth - 1, -1, -1):
-        lv = levels.where(F.col("dist") == d).select("source", "id", "sigma")
-        lw = levels.where(F.col("dist") == d + 1).select(
-            F.col("source").alias("wsource"),
-            F.col("id").alias("wid"),
-            F.col("sigma").alias("wsigma"),
-        )
-        dn = delta_next.select(
-            F.col("source").alias("dsource"),
-            F.col("id").alias("did"),
-            "delta",
-        )
+    # backward dependency accumulation, level by level (descending)
+    def back(i: int, state, ckpt):
+        delta_next, all_delta = state
         contrib = (
-            lv.join(e, on=F.col("id") == F.col("src"))
-            .join(
-                lw,
-                on=(F.col("source") == F.col("wsource"))
-                & (F.col("dst") == F.col("wid")),
-            )
-            .join(
-                dn,
-                on=(F.col("source") == F.col("dsource"))
-                & (F.col("wid") == F.col("did")),
-                how="left",
-            )
-            .select(
-                "source",
-                "id",
-                (
-                    F.col("sigma").cast("double")
-                    / F.col("wsigma").cast("double")
-                    * (F.lit(1.0) + F.coalesce(F.col("delta"), F.lit(0.0)))
-                ).alias("part"),
-            )
+            _credits(levels, e, delta_next, depth - i)
             .groupBy("source", "id")
             .agg(F.sum("part").alias("delta"))
             .repartition(n_part, "source", "id")
-            .transform(state_ckpt.cut)
+            .transform(ckpt.cut)
         )
-        delta_next = contrib
-        all_delta = all_delta.unionByName(contrib)
+        return (contrib, all_delta.unionByName(contrib)), {}
 
-    scores = (
-        all_delta.where(F.col("id") != F.col("source"))
+    zero = spark.createDataFrame([], "source long, id long, delta double")
+    loop = superstep.run(
+        back,
+        (zero, zero),  # δ rows for level d+1 (deepest level: δ = 0), all δ
+        spark=spark,
+        max_iter=depth,
+        key="level",
+        result=lambda s: s[1]
+        .where(F.col("id") != F.col("source"))
         .groupBy("id")
-        .agg(F.sum("delta").alias("bc"))
+        .agg(F.sum("delta").alias("bc")),
     )
     e.unpersist()
-    # pin the lazy accumulated-delta aggregation before its round-trip
-    # files are reclaimed (levels is pinned by _forward_levels already)
-    scores = state_ckpt.pin(scores)
     return BetweennessResult(
-        scores=scores, levels=levels.select("source", "id", "dist", "sigma"),
+        scores=loop.result, levels=levels.select("source", "id", "dist", "sigma"),
         depth=depth, history=history,
     )

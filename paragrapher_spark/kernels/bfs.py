@@ -16,16 +16,14 @@ empty or ``max_depth`` is hit.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -74,31 +72,18 @@ def bfs(
     # deduplicated by the frontier logic below)
     src_df = src_df.distinct()
 
-    start_iter = 0
-    dist: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_iter, dist = resumed
-            dist = dist.repartition(n_part, "id").localCheckpoint(eager=True)
-    if dist is None:
-        dist = src_df.select("id", F.lit(0).cast("long").alias("dist"))
+    def _start(dist: DataFrame) -> tuple[DataFrame, DataFrame, None]:
+        """(distances, frontier, frontier size) loop state: the frontier is
+        the vertices at the current maximum depth (reconstructable from the
+        distance snapshot — that is what makes resume exact)."""
         dist = dist.repartition(n_part, "id").localCheckpoint(eager=True)
+        frontier = dist.where(
+            F.col("dist") == (dist.agg(F.max("dist")).collect()[0][0] or 0)
+        ).select("id")
+        return dist, frontier.localCheckpoint(eager=True), None
 
-    # frontier = vertices at the current maximum depth (reconstructable
-    # from the distance snapshot — that is what makes resume exact)
-    frontier = dist.where(
-        F.col("dist") == (dist.agg(F.max("dist")).collect()[0][0] or 0)
-    ).select("id")
-    frontier = frontier.localCheckpoint(eager=True)
-
-    history: list[dict[str, Any]] = []
-    exhausted = False
-    probe = ShuffleProbe(spark)
-    it = start_iter
-    state_ckpt = StateCheckpointer(spark)
-    for it in range(start_iter + 1, max_depth + 1):
-        t0 = time.monotonic()
+    def step(it: int, state, ckpt):
+        dist, frontier, _ = state
         # ONE job per superstep (the PageRank discipline): the unioned
         # distance table is a non-eager localCheckpoint and the frontier-
         # size aggregation below is the single action that materializes it.
@@ -111,45 +96,40 @@ def bfs(
             .join(dist, on="id", how="left_anti")
             .select("id", F.lit(it).cast("long").alias("dist"))
         )
-        new_dist = (
+        dist = (
             dist.unionByName(nxt)
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         frontier_size = (
-            new_dist.agg(
+            dist.agg(
                 F.sum((F.col("dist") == it).cast("long")).alias("f")
             ).collect()[0]["f"]
             or 0
         )
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        metrics = {
-            "frontier_size": frontier_size,
-            "duration_s": dt,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
-        }
-        history.append({"iteration": it, **metrics})
-        if frontier_size == 0:
-            exhausted = True
-            it -= 1
-            break
-        dist = new_dist
-        frontier = new_dist.where(F.col("dist") == it).select("id")
-        if checkpoint is not None:
-            if it % checkpoint_every == 0:
-                checkpoint.save(it, dist, metrics)
-            else:
-                checkpoint.log_metrics(it, metrics)
+        frontier = dist.where(F.col("dist") == it).select("id")
+        return (dist, frontier, frontier_size), {"frontier_size": frontier_size}
 
+    loop = superstep.run(
+        step,
+        lambda: _start(src_df.select("id", F.lit(0).cast("long").alias("dist"))),
+        spark=spark,
+        max_iter=max_depth,
+        done=lambda s: s[2] == 0,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: _start(snap),
+        snapshot=lambda s: s[0],
+        result=lambda s: s[0],
+        final=lambda lp: (lp.last, {"exhausted": True}) if lp.done else None,
+    )
     e.unpersist()
-    if checkpoint is not None and exhausted:
-        checkpoint.save(it + 1, dist, {"exhausted": True}, kind="final")
-    # pin + reclaim round-trip files now, not at interpreter exit
-    dist = state_ckpt.pin(dist)
     return BFSResult(
-        distances=dist, iterations=it, exhausted=exhausted, history=history
+        distances=loop.result,
+        # the superstep that found the frontier empty reached no new depth
+        iterations=loop.last - 1 if loop.done else loop.last,
+        exhausted=loop.done,
+        history=loop.history,
     )
 
 

@@ -35,7 +35,6 @@ non-convergence at ``max_rounds``.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -43,8 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.kernels.mis import _h
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
+from paragrapher_spark.plans import superstep
 
 SEED = 42
 
@@ -105,21 +103,9 @@ def greedy_coloring(
     undecided = pri.select("id").repartition(n_part, "id").localCheckpoint(
         eager=True
     )
-    colored = spark.createDataFrame([], "id long, color int")
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    rounds = 0
-    n_left = undecided.count()
-    state_ckpt = StateCheckpointer(spark)
-    while n_left > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            ladj.unpersist()
-            raise RuntimeError(
-                f"coloring did not converge within max_rounds={max_rounds} "
-                f"({n_left} vertices still undecided) — raise max_rounds"
-            )
-        t0 = time.monotonic()
+
+    def step(rnd: int, state, ckpt):
+        undecided, colored, _ = state
         # ready = undecided vertices with NO undecided lower neighbor
         blocked = (
             ladj.join(undecided.withColumnRenamed("id", "u"), on="u", how="left_semi")
@@ -153,36 +139,38 @@ def greedy_coloring(
                 .cast("int")
                 .alias("color"),
             )
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         undecided = (
             undecided.join(picked, on="id", how="left_anti")
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # ONE action per round: materializes picked + next undecided
         n_left = undecided.count()
         colored = colored.unionByName(picked)
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "round": rounds,
-                "undecided": n_left,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-    n_colors = colored.agg(F.max("color")).collect()[0][0] or 0
-    ladj.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    colors = state_ckpt.pin(
-        colored.select("id", F.col("color").cast("long").alias("color"))
+        return (undecided, colored, n_left), {"undecided": n_left}
+
+    loop = superstep.run(
+        step,
+        (undecided, spark.createDataFrame([], "id long, color int"), undecided.count()),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2] == 0,
+        result=lambda s: s[1].select("id", F.col("color").cast("long").alias("color")),
     )
+    ladj.unpersist()
+    if not loop.done:
+        raise RuntimeError(
+            f"coloring did not converge within max_rounds={max_rounds} "
+            f"({loop.state[2]} vertices still undecided) — raise max_rounds"
+        )
+    colors = loop.result
+    n_colors = colors.agg(F.max("color")).collect()[0][0] or 0
     return ColoringResult(
         colors=colors,
-        rounds=rounds,
+        rounds=loop.last,
         n_colors=int(n_colors),
-        history=history,
+        history=loop.history,
     )

@@ -27,16 +27,14 @@ Scale notes:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -124,64 +122,52 @@ def connected_components(
     ).persist()
     all_vertices.count()
 
-    e = _canonical(edges.select("src", "dst")).localCheckpoint(eager=True)
-    start_round = 0
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_round, e = resumed
-            e = e.localCheckpoint(eager=True)
+    def _start(e: DataFrame) -> tuple[DataFrame, tuple[int, int], bool]:
+        e = e.localCheckpoint(eager=True)
+        return e, _signature(e), False
 
-    sig = _signature(e)
     # star contractions reference the round's edge state twice — the
     # chained-checkpoint shape; cuts go through plans/iterstate.py
-    state_ckpt = StateCheckpointer(spark)
-    history: list[dict[str, Any]] = []
-    converged = False
-    probe = ShuffleProbe(spark)
-    rnd = start_round
-    for rnd in range(start_round + 1, max_rounds + 1):
-        t0 = time.monotonic()
+    def step(rnd: int, state, ckpt):
+        e, sig, _ = state
         # non-eager: the signature aggregation is the round's ONE job and
         # materializes the checkpoint as a side effect (same discipline as
         # the PageRank superstep)
-        e_new = state_ckpt.cut(_small_star(_large_star(e)), eager=False)
-        new_sig = _signature(e_new)
-        e = e_new
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        metrics = {
-            "edges": new_sig[0],
-            "checksum": new_sig[1],
-            "duration_s": dt,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
+        e = ckpt.cut(_small_star(_large_star(e)), eager=False)
+        new_sig = _signature(e)
+        return (e, new_sig, new_sig == sig), {
+            "edges": new_sig[0], "checksum": new_sig[1]
         }
-        history.append({"round": rnd, **metrics})
-        if checkpoint is not None:
-            if rnd % checkpoint_every == 0:
-                checkpoint.save(rnd, e, metrics)
-            else:
-                checkpoint.log_metrics(rnd, metrics)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
 
-    # at fixpoint the edge set is a star forest: (child, root), child > root
-    membership = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-    roots_and_isolated = (
-        all_vertices.join(membership, on="id", how="left_anti")
-        .select("id", F.col("id").alias("component"))
+    def _components(state) -> DataFrame:
+        # at fixpoint the edge set is a star forest: (child, root), child > root
+        membership = state[0].select(
+            F.col("src").alias("id"), F.col("dst").alias("component")
+        )
+        roots_and_isolated = (
+            all_vertices.join(membership, on="id", how="left_anti")
+            .select("id", F.col("id").alias("component"))
+        )
+        return membership.unionByName(roots_and_isolated)
+
+    loop = superstep.run(
+        step,
+        lambda: _start(_canonical(edges.select("src", "dst"))),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2],
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: _start(snap),
+        snapshot=lambda s: s[0],
+        result=_components,
+        final=lambda lp: (lp.last + 1, {"converged": True}) if lp.done else None,
     )
-    components = membership.unionByName(roots_and_isolated)
-    if checkpoint is not None and converged:
-        checkpoint.save(rnd + 1, components, {"converged": True}, kind="final")
     all_vertices.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    components = state_ckpt.pin(components)
     return ComponentsResult(
-        components=components, rounds=rnd, converged=converged, history=history
+        components=loop.result, rounds=loop.last, converged=loop.done,
+        history=loop.history,
     )
 
 

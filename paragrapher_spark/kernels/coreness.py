@@ -30,16 +30,14 @@ LOUDLY rather than returning a partial decomposition.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -84,30 +82,9 @@ def coreness(
         .sortWithinPartitions("u")
         .persist()
     )
-    start_round = 0
-    cur: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_round, cur = resumed
-            cur = cur.localCheckpoint(eager=True)
-    if cur is None:
-        cur = adj.groupBy(F.col("v").alias("id")).agg(
-            F.count(F.lit(1)).cast("long").alias("c")
-        ).localCheckpoint(eager=False)
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    rnd = start_round
-    state_ckpt = StateCheckpointer(spark)
-    while True:
-        rnd += 1
-        if rnd > max_rounds:
-            adj.unpersist()
-            raise RuntimeError(
-                f"coreness H-index iteration did not converge within "
-                f"max_rounds={max_rounds} — raise max_rounds"
-            )
-        t0 = time.monotonic()
+
+    def step(rnd: int, state, ckpt):
+        cur, _ = state
         ranked = adj.join(
             cur.select(F.col("id").alias("u"), F.col("c").alias("cu")), on="u"
         ).select(
@@ -123,7 +100,7 @@ def coreness(
             )
             .cast("long")
             .alias("c")
-        ).transform(state_ckpt.cut_lazy)
+        ).transform(ckpt.cut_lazy)
         # ONE action per round: materializes the new values AND detects the
         # fixpoint (the operator is pointwise non-increasing from degrees,
         # so "no vertex changed" == converged to the coreness).
@@ -132,27 +109,32 @@ def coreness(
             .where(F.col("c") != F.col("c_prev"))
             .count()
         )
-        shuffle_w, shuffle_r = probe.tick()
-        metrics = {
-            "changed": changed,
-            "duration_s": time.monotonic() - t0,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
-        }
-        history.append({"round": rnd, **metrics})
-        cur = nxt
-        if checkpoint is not None:
-            if rnd % checkpoint_every == 0:
-                checkpoint.save(rnd, cur, metrics)
-            else:
-                checkpoint.log_metrics(rnd, metrics)
-        if changed == 0:
-            break
+        return (nxt, changed), {"changed": changed}
+
+    loop = superstep.run(
+        step,
+        lambda: (
+            adj.groupBy(F.col("v").alias("id"))
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+            .localCheckpoint(eager=False),
+            None,
+        ),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[1] == 0,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: (snap.localCheckpoint(eager=True), None),
+        snapshot=lambda s: s[0],
+        result=lambda s: s[0].select("id", F.col("c").alias("coreness")),
+    )
     adj.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    vertices = state_ckpt.pin(cur.select("id", F.col("c").alias("coreness")))
+    if not loop.done:
+        raise RuntimeError(
+            f"coreness H-index iteration did not converge within "
+            f"max_rounds={max_rounds} — raise max_rounds"
+        )
     return CorenessResult(
-        vertices=vertices,
-        rounds=rnd,
-        history=history,
+        vertices=loop.result, rounds=loop.last, history=loop.history
     )

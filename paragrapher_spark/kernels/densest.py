@@ -23,14 +23,13 @@ members (isolated vertices never belong to a densest subgraph).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 
 
 @dataclass
@@ -56,6 +55,7 @@ def densest_subgraph(
     """
     if eps_num < 0 or eps_den <= 0:
         raise ValueError(f"invalid epsilon {eps_num}/{eps_den}")
+    spark = edges.sparkSession
     e = (
         edges.where(F.col("src") != F.col("dst"))
         .select(
@@ -64,21 +64,15 @@ def densest_subgraph(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    history: list[dict[str, Any]] = []
-    best_m = 0
-    best_n = 0
-    best_round = 0
-    best_members: DataFrame | None = None
-    rnd = 0
-    state_ckpt = StateCheckpointer(edges.sparkSession)
-    for rnd in range(0, max_rounds + 1):
-        t0 = time.monotonic()
+
+    def step(rnd: int, state, ckpt):
+        e, _, best = state
         deg = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("deg"))
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # the round's ONE action: n and 2m in a single two-scalar collect
         # (materializes both checkpoints: this round's e and deg)
@@ -87,16 +81,12 @@ def densest_subgraph(
         ).collect()[0]
         n = int(row["n"] or 0)
         m = int(row["deg2"] or 0) // 2
-        history.append(
-            {"round": rnd, "n": n, "m": m, "duration_s": time.monotonic() - t0}
-        )
         if n == 0:
-            rnd -= 1
-            break
+            return (e, 0, best), {"n": n, "m": m}
         # exact rational argmax, strict improvement keeps the earliest tie
+        best_m, best_n, _, best_members = best
         if m * best_n > best_m * n or best_members is None:
-            best_m, best_n, best_round = m, n, rnd
-            best_members = deg.select("id")
+            best = (m, n, rnd, deg.select("id"))
         # peel: drop v with deg·n·den ≤ 2·m·(den + num); the min-degree
         # vertex always qualifies, so the set strictly shrinks each round
         keep = deg.where(
@@ -106,18 +96,32 @@ def densest_subgraph(
         e = (
             e.join(keep.withColumnRenamed("id", "src"), on="src", how="left_semi")
             .join(keep.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
-    if best_members is None:  # edgeless input: round 0 saw n == 0
-        best_members = e.sparkSession.createDataFrame([], "id long")
-        rnd = 0
-    # pin + reclaim round-trip files now, not at interpreter exit
-    best_members = state_ckpt.pin(best_members)
+        return (e, n, best), {"n": n, "m": m}
+
+    # state: (edges, n, best) with best = (m, n, round, members) of the
+    # densest peel prefix so far; round 0 measures the full graph
+    loop = superstep.run(
+        step,
+        (e, None, (0, 0, 0, None)),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[1] == 0,
+        result=lambda s: s[2][3]
+        if s[2][3] is not None
+        else spark.createDataFrame([], "id long"),  # edgeless input
+        start=-1,
+    )
+    best_m, best_n, best_round, _ = loop.state[2]
+    # the round that found the graph empty peeled nothing
+    rounds = max(loop.last - 1, 0) if loop.done else loop.last
     return DensestResult(
-        members=best_members,
+        members=loop.result,
         best_m=best_m,
         best_n=best_n,
         best_round=best_round,
-        rounds=rnd,
-        history=history,
+        rounds=rounds,
+        history=loop.history,
     )

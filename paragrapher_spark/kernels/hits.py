@@ -22,16 +22,14 @@ caching (kernels/pagerank.py measurement), driver state O(1) scalars.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -69,16 +67,10 @@ def hits(
         .repartition(n_part, "id")
         .localCheckpoint(eager=True)
     )
-    hub = vertices.select("id", F.lit(1.0).alias("hub"))
 
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    auth = None
-    state_ckpt = StateCheckpointer(spark)
-    for it in range(1, iterations + 1):
-        t0 = time.monotonic()
+    def step(it: int, state, ckpt):
         auth = (
-            e.join(hub.select(F.col("id").alias("src"), "hub"), on="src")
+            e.join(state[1].select(F.col("id").alias("src"), "hub"), on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("hub").alias("auth"))
         )
@@ -87,31 +79,32 @@ def hits(
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("auth").alias("hub"))
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         n = hub.count()  # ONE action per round materializes the checkpoint
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "iteration": it,
-                "hub_vertices": n,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
+        return (auth, hub), {"hub_vertices": n}
+
+    def _scores(state) -> DataFrame:
+        auth, hub = state
+        return (
+            vertices.join(auth, on="id", how="left")
+            .join(hub, on="id", how="left")
+            .select(
+                "id",
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+            )
         )
 
-    scores = (
-        vertices.join(auth, on="id", how="left")
-        .join(hub, on="id", how="left")
-        .select(
-            "id",
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-        )
-        .localCheckpoint(eager=True)
+    loop = superstep.run(
+        step,
+        (None, vertices.select("id", F.lit(1.0).alias("hub"))),
+        spark=spark,
+        max_iter=iterations,
+        result=_scores,
     )
+    e.unpersist()
+    scores = loop.result
     norms = scores.agg(
         F.sum("auth").alias("na"), F.sum("hub").alias("nh")
     ).collect()[0]
@@ -122,9 +115,7 @@ def hits(
         F.round(F.col("auth") / F.lit(float(na)), 6).alias("authority"),
         F.round(F.col("hub") / F.lit(float(nh)), 6).alias("hub"),
     )
-    # scores is already eagerly pinned above — reclaim round-trip files
-    state_ckpt.close()
-    return HITSResult(scores=out, iterations=iterations, history=history)
+    return HITSResult(scores=out, iterations=iterations, history=loop.history)
 
 
 # ---------------------------------------------------------------------------
@@ -198,24 +189,10 @@ def salsa(
         .repartition(n_part, "id")
         .localCheckpoint(eager=True)
     )
-    auth = vertices.select("id", F.lit(SALSA_FIXED_POINT).cast("long").alias("a"))
 
-    # resumable (north-rule contract): the snapshot carries BOTH vectors
-    # (id, a, h) so a restart needs no recomputation of the interleave
-    start_round = 0
-    hub = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_round, snap = resumed
-            snap = snap.repartition(n_part, "id").localCheckpoint(eager=True)
-            auth = snap.where(F.col("a").isNotNull()).select("id", "a")
-            hub = snap.where(F.col("h").isNotNull()).select("id", "h")
-
-    state_ckpt = StateCheckpointer(spark)
-    for rnd in range(start_round + 1, iterations + 1):
+    def step(rnd: int, state, ckpt):
         hub = (
-            ed.join(auth.select(F.col("id").alias("dst"), "a"), on="dst")
+            ed.join(state[0].select(F.col("id").alias("dst"), "a"), on="dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum(F.expr("a DIV indeg")).cast("long").alias("h"))
         )
@@ -224,24 +201,41 @@ def salsa(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.expr("h DIV outdeg")).cast("long").alias("a"))
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut)  # one action per round, cuts lineage
+            .transform(ckpt.cut)  # one action per round, cuts lineage
         )
-        if checkpoint is not None and (
-            rnd % checkpoint_every == 0 or rnd == iterations
-        ):
-            snap = auth.join(hub, "id", "full_outer").select("id", "a", "h")
-            checkpoint.save(rnd, snap, {})
+        return (auth, hub), {}
 
-    scores = (
-        vertices.join(auth, on="id", how="left")
-        .join(hub, on="id", how="left")
-        .select(
-            "id",
-            F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth_fp"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub_fp"),
+    def _restore(_: int, snap: DataFrame):
+        snap = snap.repartition(n_part, "id").localCheckpoint(eager=True)
+        return (
+            snap.where(F.col("a").isNotNull()).select("id", "a"),
+            snap.where(F.col("h").isNotNull()).select("id", "h"),
         )
+
+    def _scores(state) -> DataFrame:
+        auth, hub = state
+        return (
+            vertices.join(auth, on="id", how="left")
+            .join(hub, on="id", how="left")
+            .select(
+                "id",
+                F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth_fp"),
+                F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub_fp"),
+            )
+        )
+
+    # resumable (north-rule contract): the snapshot carries BOTH vectors
+    # (id, a, h) so a restart needs no recomputation of the interleave
+    loop = superstep.run(
+        step,
+        (vertices.select("id", F.lit(SALSA_FIXED_POINT).cast("long").alias("a")), None),
+        spark=spark,
+        max_iter=iterations,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=_restore,
+        snapshot=lambda s: s[0].join(s[1], "id", "full_outer").select("id", "a", "h"),
+        result=_scores,
     )
     ed.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    scores = state_ckpt.pin(scores)
-    return SALSAResult(scores=scores, iterations=iterations)
+    return SALSAResult(scores=loop.result, iterations=iterations)

@@ -41,15 +41,13 @@ BFS. Radius is small (effective diameters of web/link graphs are < 20).
 from __future__ import annotations
 
 import math
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
+from paragrapher_spark.plans import superstep
 
 M = 16  # registers per counter (b = 4 index bits)
 ALPHA_M = 0.673  # standard HLL bias constant for m = 16
@@ -194,12 +192,7 @@ def hyperball(
         )
     ]
 
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    rad = 0
-    state_ckpt = StateCheckpointer(spark)
-    for rad in range(1, radius + 1):
-        t0 = time.monotonic()
+    def step(rad: int, state: DataFrame, ckpt):
         msgs = e.join(
             state.select(F.col("id").alias("dst"), *REG_COLS), on="dst"
         ).select(F.col("src").alias("id"), *REG_COLS)
@@ -209,7 +202,7 @@ def hyperball(
             .groupBy("id")
             .agg(*[F.max(c).alias(c) for c in REG_COLS])
         )
-        new_state = (
+        state = (
             merged.join(state.select("id", "est", "harmonic"), on="id")
             .withColumn("new_est", F.round(ball_estimate(), 6))
             # harmonic accumulates INTEGER-rounded ball deltas: n/2 and n/4
@@ -227,34 +220,32 @@ def hyperball(
             )
             .select("id", *REG_COLS, F.col("new_est").alias("est"), "harmonic")
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # ONE action per round: materializes the checkpoint AND reads off
         # the radius-r neighborhood function
-        row = new_state.agg(
+        row = state.agg(
             F.sum(F.round(F.col("est")).cast("long")).alias("nf"),
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
-        nf.append(int(row["nf"]))
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "radius": rad,
-                "nf": int(row["nf"]),
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-        state = new_state
+        return state, {"nf": int(row["nf"])}
 
-    e.unpersist()
-    out = state.select(
-        "id",
-        F.col("est").alias("ball"),
-        F.round(F.col("harmonic"), 6).alias("harmonic"),
+    loop = superstep.run(
+        step,
+        state,
+        spark=spark,
+        max_iter=radius,
+        key="radius",
+        result=lambda s: s.select(
+            "id",
+            F.col("est").alias("ball"),
+            F.round(F.col("harmonic"), 6).alias("harmonic"),
+        ),
     )
-    # pin + reclaim round-trip files now, not at interpreter exit
-    out = state_ckpt.pin(out)
-    return HyperBallResult(states=out, nf=nf, radius=rad, history=history)
+    e.unpersist()
+    return HyperBallResult(
+        states=loop.result,
+        nf=nf + [h["nf"] for h in loop.history],
+        radius=loop.last,
+        history=loop.history,
+    )

@@ -39,15 +39,13 @@ repartitioned + sorted once before caching; driver state O(1) scalars.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
+from paragrapher_spark.plans import superstep
 
 _GUARD = 2**62
 
@@ -112,12 +110,10 @@ def katz(
         e.groupBy("dst").count().agg(F.max("count")).collect()[0][0] or 0
     )
 
-    y = vertices.select("id", F.lit(1).cast("long").alias("y"))
-    max_y = 1
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    state_ckpt = StateCheckpointer(spark)
-    for t in range(1, rounds + 1):
+    den = base**rounds
+
+    def step(t: int, state, ckpt):
+        y, max_y = state
         bump = base**t
         # exact a-priori bound for THIS round: every vertex receives at most
         # max_in contributions of at most max_y, plus the base^t walk-0 term
@@ -127,7 +123,6 @@ def katz(
                 f"max_in_degree={max_in} * max_y={max_y} + {base}^{t} >= 2^62; "
                 f"lower rounds= or raise base="
             )
-        t0 = time.monotonic()
         gathered = (
             e.join(y.select(F.col("id").alias("src"), "y"), on="src")
             .groupBy(F.col("dst").alias("id"))
@@ -142,34 +137,30 @@ def katz(
                 ),
             )
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # ONE action per round: materializes the checkpoint AND returns the
         # exact running maximum for the next round's overflow guard
         max_y = y.agg(F.max("y")).collect()[0][0]
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "round": t,
-                "max_y": int(max_y),
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
+        return (y, max_y), {"max_y": int(max_y)}
 
-    den = base**rounds
-    scores = y.select(
-        "id",
-        F.col("y").alias("katz_num"),
-        F.lit(den).cast("long").alias("katz_den"),
-        (F.col("y").cast("double") / F.lit(float(den))).alias("katz"),
+    loop = superstep.run(
+        step,
+        (vertices.select("id", F.lit(1).cast("long").alias("y")), 1),
+        spark=spark,
+        max_iter=rounds,
+        key="round",
+        result=lambda s: s[0].select(
+            "id",
+            F.col("y").alias("katz_num"),
+            F.lit(den).cast("long").alias("katz_den"),
+            (F.col("y").cast("double") / F.lit(float(den))).alias("katz"),
+        ),
     )
     e.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    scores = state_ckpt.pin(scores)
-    return KatzResult(scores=scores, rounds=rounds, base=base, history=history)
+    return KatzResult(
+        scores=loop.result, rounds=rounds, base=base, history=loop.history
+    )
 
 
 def eigencentrality(
@@ -221,18 +212,13 @@ def eigencentrality(
     )
     max_in = e.groupBy("dst").count().agg(F.max("count")).collect()[0][0] or 0
 
-    y = vertices.select("id", F.lit(1).cast("long").alias("y"))
-    max_y = 1
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    state_ckpt = StateCheckpointer(spark)
-    for t in range(1, rounds + 1):
+    def step(t: int, state, ckpt):
+        y, max_y = state
         if max_in * max_y >= _GUARD:
             raise ValueError(
                 f"power iteration would overflow at round {t}: "
                 f"max_in_degree={max_in} * max_y={max_y} >= 2^62; lower rounds="
             )
-        t0 = time.monotonic()
         gathered = (
             e.join(y.select(F.col("id").alias("src"), "y"), on="src")
             .groupBy(F.col("dst").alias("id"))
@@ -242,29 +228,25 @@ def eigencentrality(
             vertices.join(gathered, on="id", how="left")
             .select("id", F.coalesce(F.col("g"), F.lit(0)).cast("long").alias("y"))
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         max_y = y.agg(F.max("y")).collect()[0][0]
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "round": t,
-                "max_y": int(max_y),
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
+        return (y, max_y), {"max_y": int(max_y)}
 
-    scores = y.select(
-        "id",
-        F.col("y").alias("walks"),
-        (F.col("y").cast("double") / F.lit(float(max_y))).alias("eig"),
+    loop = superstep.run(
+        step,
+        (vertices.select("id", F.lit(1).cast("long").alias("y")), 1),
+        spark=spark,
+        max_iter=rounds,
+        key="round",
+        result=lambda s: s[0].select(
+            "id",
+            F.col("y").alias("walks"),
+            (F.col("y").cast("double") / F.lit(float(s[1]))).alias("eig"),
+        ),
     )
     e.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    scores = state_ckpt.pin(scores)
     return EigenResult(
-        scores=scores, rounds=rounds, max_walks=int(max_y), history=history
+        scores=loop.result, rounds=rounds, max_walks=int(loop.state[1]),
+        history=loop.history,
     )

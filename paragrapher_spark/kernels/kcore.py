@@ -14,14 +14,13 @@ the vertex set is stable).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 
 
 @dataclass
@@ -42,12 +41,9 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> KCoreResult:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    history: list[dict[str, Any]] = []
-    prev_m: int | None = None
-    rnd = 0
-    state_ckpt = StateCheckpointer(edges.sparkSession)
-    for rnd in range(1, max_rounds + 1):
-        t0 = time.monotonic()
+
+    def step(rnd: int, state, ckpt):
+        e, prev_m, _ = state
         deg = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
@@ -63,22 +59,28 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> KCoreResult:
         e = (
             e.join(keep.withColumnRenamed("id", "src"), on="src", how="left_semi")
             .join(keep.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         m = e.count()
-        history.append(
-            {"round": rnd, "edges": m, "duration_s": time.monotonic() - t0}
+        return (e, m, m == prev_m or m == 0), {"edges": m}
+
+    def _core(state) -> tuple[DataFrame, DataFrame]:
+        e = state[0]
+        verts = (
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
         )
-        if prev_m is not None and m == prev_m:
-            break
-        prev_m = m
-        if m == 0:
-            break
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
+        return verts, e
+
+    loop = superstep.run(
+        step,
+        (e, None, False),
+        spark=edges.sparkSession,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2],
+        result=_core,
     )
-    # pin both escapes + reclaim round-trip files now
-    verts, e = state_ckpt.pin(verts, e)
-    return KCoreResult(vertices=verts, edges=e, rounds=rnd, history=history)
+    verts, e = loop.result
+    return KCoreResult(vertices=verts, edges=e, rounds=loop.last, history=loop.history)

@@ -28,16 +28,14 @@ LOUDLY rather than returning a partial truss.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -115,68 +113,54 @@ def ktruss(
     if k < 2:
         raise ValueError(f"k-truss needs k >= 2, got k={k}")
     spark = edges.sparkSession
-    history: list[dict[str, Any]] = []
-    prev_m: int | None = None
-    start_round = 0
-    e: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_round, kept = resumed
-            kept = kept.localCheckpoint(eager=True)
-            e = kept.select("a", "b")
-            prev_m = kept.count()
-    if e is None:
-        e = (
+
+    def _restore(_: int, snap: DataFrame):
+        kept = snap.localCheckpoint(eager=True)
+        return kept, kept.count(), False
+
+    def step(rnd: int, state, ckpt):
+        kept, prev_m, _ = state
+        e = kept.select("a", "b")
+        kept = (
+            e.join(_support(e), on=["a", "b"], how="left")
+            .select(
+                "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
+            )
+            .where(F.col("support") >= k - 2)
+            .transform(ckpt.cut_lazy)
+        )
+        # ONE action per round: the count below materializes the kept-edge
+        # checkpoint and doubles as the fixpoint detector — peeling
+        # strictly decreases the edge count until the truss is stable.
+        m = kept.count()
+        return (kept, m, m == 0 or m == prev_m), {"edges": m}
+
+    loop = superstep.run(
+        step,
+        lambda: (
             edges.where(F.col("src") != F.col("dst"))
             .select(
                 F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
             )
             .distinct()
             .localCheckpoint(eager=False)
+            .select("a", "b", F.lit(0).cast("long").alias("support")),
+            None,
+            False,
+        ),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2],
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=_restore,
+        snapshot=lambda s: s[0],
+        result=lambda s: s[0],
+    )
+    if not loop.done:
+        raise RuntimeError(
+            f"k-truss did not converge within max_rounds={max_rounds} "
+            f"({loop.state[1]} edges still peeling) — raise max_rounds"
         )
-        kept = e.select("a", "b", F.lit(0).cast("long").alias("support"))
-    probe = ShuffleProbe(spark)
-    rnd = start_round
-    state_ckpt = StateCheckpointer(spark)
-    while True:
-        rnd += 1
-        if rnd > max_rounds:
-            raise RuntimeError(
-                f"k-truss did not converge within max_rounds={max_rounds} "
-                f"({prev_m} edges still peeling) — raise max_rounds"
-            )
-        t0 = time.monotonic()
-        sup = _support(e)
-        kept = (
-            e.join(sup, on=["a", "b"], how="left")
-            .select(
-                "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
-            )
-            .where(F.col("support") >= k - 2)
-            .transform(state_ckpt.cut_lazy)
-        )
-        # ONE action per round: the count below materializes the kept-edge
-        # checkpoint and doubles as the fixpoint detector — peeling
-        # strictly decreases the edge count until the truss is stable.
-        m = kept.count()
-        shuffle_w, shuffle_r = probe.tick()
-        metrics = {
-            "edges": m,
-            "duration_s": time.monotonic() - t0,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
-        }
-        history.append({"round": rnd, **metrics})
-        if checkpoint is not None:
-            if rnd % checkpoint_every == 0:
-                checkpoint.save(rnd, kept, metrics)
-            else:
-                checkpoint.log_metrics(rnd, metrics)
-        if m == 0 or (prev_m is not None and m == prev_m):
-            break
-        prev_m = m
-        e = kept.select("a", "b")
-    # pin + reclaim round-trip files now, not at interpreter exit
-    kept = state_ckpt.pin(kept)
-    return KTrussResult(edges=kept, rounds=rnd, history=history)
+    return KTrussResult(edges=loop.result, rounds=loop.last, history=loop.history)

@@ -11,16 +11,14 @@ scale).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -67,24 +65,8 @@ def label_propagation(
         .distinct()
     )
 
-    start_iter = 0
-    labels: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_iter, labels = resumed
-            labels = labels.localCheckpoint(eager=True)
-    if labels is None:
-        labels = all_vertices.select("id", F.col("id").alias("label"))
-        labels = labels.localCheckpoint(eager=True)
-
-    history: list[dict[str, Any]] = []
-    converged = False
-    probe = ShuffleProbe(spark)
-    it = start_iter
-    state_ckpt = StateCheckpointer(spark)
-    for it in range(start_iter + 1, max_iter + 1):
-        t0 = time.monotonic()
+    def step(it: int, state, ckpt):
+        labels = state[0]
         # neighbor votes: vertex src receives the label of each neighbor dst
         nbr_votes = (
             und.join(labels.withColumnRenamed("id", "dst"), on="dst")
@@ -111,7 +93,7 @@ def label_propagation(
             )
             # non-eager: the changed-count aggregation below is the one job
             # of the superstep and materializes the checkpoint
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         changed = (
             joined.agg(
@@ -122,31 +104,30 @@ def label_propagation(
             or 0
         )
         labels = joined.select("id", F.col("new_label").alias("label"))
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        metrics = {
-            "changed": changed,
-            "duration_s": dt,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
-        }
-        history.append({"iteration": it, **metrics})
-        if checkpoint is not None:
-            if it % checkpoint_every == 0:
-                checkpoint.save(it, labels, metrics)
-            else:
-                checkpoint.log_metrics(it, metrics)
-        if changed == 0:
-            converged = True
-            break
+        return (labels, changed), {"changed": changed}
 
+    loop = superstep.run(
+        step,
+        lambda: (
+            all_vertices.select("id", F.col("id").alias("label")).localCheckpoint(
+                eager=True
+            ),
+            None,
+        ),
+        spark=spark,
+        max_iter=max_iter,
+        done=lambda s: s[1] == 0,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: (snap.localCheckpoint(eager=True), None),
+        snapshot=lambda s: s[0],
+        result=lambda s: s[0],
+        final=lambda lp: (lp.last, {"converged": True}) if lp.done else None,
+    )
     und.unpersist()
-    if checkpoint is not None and converged:
-        checkpoint.save(it, labels, {"converged": True}, kind="final")
-    # pin + reclaim round-trip files now, not at interpreter exit
-    labels = state_ckpt.pin(labels)
     return LabelPropResult(
-        labels=labels, iterations=it, converged=converged, history=history
+        labels=loop.result, iterations=loop.last, converged=loop.done,
+        history=loop.history,
     )
 
 

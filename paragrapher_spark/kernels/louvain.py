@@ -55,9 +55,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -104,20 +103,8 @@ def louvain_level(
         .repartition(n_part, "id")
         .localCheckpoint(eager=True)
     )
-    start_round = 0
-    labels = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_round, labels = resumed
-            labels = labels.repartition(n_part, "id").localCheckpoint(eager=True)
-    if labels is None:
-        labels = deg.select("id", F.col("id").alias("c"))
 
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    state_ckpt = StateCheckpointer(spark)
-    for r in range(start_round + 1, rounds + 1):
+    def step(r: int, labels: DataFrame, ckpt):
         lab = labels.select("id", "c")
         tot = (
             lab.join(deg, "id")
@@ -185,25 +172,23 @@ def louvain_level(
                 .alias("c"),
             )
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut)  # one action per round
+            .transform(ckpt.cut)  # one action per round
         )
         n_comms = labels.select("c").distinct().count()
-        shuffle_w, shuffle_r = probe.tick()
-        metrics = {
-            "n_communities": n_comms,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
-        }
-        history.append({"round": r, **metrics})
-        if checkpoint is not None:
-            if r % checkpoint_every == 0:
-                checkpoint.save(r, labels, metrics)
-            else:
-                checkpoint.log_metrics(r, metrics)
+        return labels, {"n_communities": n_comms}
 
-    und.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    labels = state_ckpt.pin(
-        labels.select("id", F.col("c").cast("long").alias("community"))
+    loop = superstep.run(
+        step,
+        lambda: deg.select("id", F.col("id").alias("c")),
+        spark=spark,
+        max_iter=rounds,
+        key="round",
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: snap.repartition(n_part, "id").localCheckpoint(
+            eager=True
+        ),
+        result=lambda s: s.select("id", F.col("c").cast("long").alias("community")),
     )
-    return LouvainResult(labels=labels, rounds=rounds, history=history)
+    und.unpersist()
+    return LouvainResult(labels=loop.result, rounds=rounds, history=loop.history)

@@ -33,7 +33,6 @@ in round k; dropped edges have no row, priorities are recomputed from
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -41,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.kernels.mis import SEED
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
 
@@ -86,23 +85,8 @@ def maximal_matching(
     the canonical undirected simple graph underlying ``edges(src, dst)``
     (self-loops dropped, directions collapsed)."""
     spark = edges.sparkSession
-    rounds = 0
-    undecided: DataFrame | None = None
-    matching = spark.createDataFrame([], "a long, b long, round int")
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            rounds, state = resumed
-            state = state.localCheckpoint(eager=True)
-            undecided = (
-                state.where(F.col("round").isNull())
-                .select("a", "b")
-                .withColumn("h", _edge_h(seed))
-            )
-            matching = state.where(F.col("round").isNotNull()).select(
-                "a", "b", F.col("round").cast("int").alias("round")
-            )
-    if undecided is None:
+
+    def _start() -> tuple[DataFrame, DataFrame, int]:
         undecided = (
             edges.where(F.col("src") != F.col("dst"))
             .select(
@@ -113,17 +97,23 @@ def maximal_matching(
             .withColumn("h", _edge_h(seed))
             .localCheckpoint(eager=False)
         )
-    history: list[dict[str, Any]] = []
-    n_left = undecided.count()
-    state_ckpt = StateCheckpointer(spark)
-    while n_left > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"matching did not converge within max_rounds={max_rounds} "
-                f"({n_left} edges still undecided) — raise max_rounds"
-            )
-        t0 = time.monotonic()
+        matching = spark.createDataFrame([], "a long, b long, round int")
+        return undecided, matching, undecided.count()
+
+    def _restore(_: int, snap: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+        snap = snap.localCheckpoint(eager=True)
+        undecided = (
+            snap.where(F.col("round").isNull())
+            .select("a", "b")
+            .withColumn("h", _edge_h(seed))
+        )
+        matching = snap.where(F.col("round").isNotNull()).select(
+            "a", "b", F.col("round").cast("int").alias("round")
+        )
+        return undecided, matching, undecided.count()
+
+    def step(rnd: int, state, ckpt):
+        undecided, matching, _ = state
         key = F.struct("h", "a", "b")
         # min undecided edge key per touched vertex (struct min =
         # lexicographic (h, a, b), map-side combinable)
@@ -140,7 +130,7 @@ def maximal_matching(
             .join(vmin.select(F.col("v").alias("b"), F.col("mn").alias("mnb")), on="b")
             .where((key == F.col("mna")) & (key == F.col("mnb")))
             .select("a", "b")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         matched_verts = (
             winners.select(F.col("a").alias("v"))
@@ -152,24 +142,37 @@ def maximal_matching(
                 matched_verts.withColumnRenamed("v", "a"), on="a", how="left_anti"
             )
             .join(matched_verts.withColumnRenamed("v", "b"), on="b", how="left_anti")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # ONE action per round: materializes winners (in the plan) and
         # counts the shrinking undecided set
         n_left = undecided.count()
         matching = matching.unionByName(
-            winners.select("a", "b", F.lit(rounds).cast("int").alias("round"))
+            winners.select("a", "b", F.lit(rnd).cast("int").alias("round"))
         )
-        metrics = {"undecided_edges": n_left, "duration_s": time.monotonic() - t0}
-        history.append({"round": rounds, **metrics})
-        if checkpoint is not None:
-            if rounds % checkpoint_every == 0:
-                state = undecided.select(
-                    "a", "b", F.lit(None).cast("int").alias("round")
-                ).unionByName(matching)
-                checkpoint.save(rounds, state, metrics)
-            else:
-                checkpoint.log_metrics(rounds, metrics)
-    # pin + reclaim round-trip files now, not at interpreter exit
-    matching = state_ckpt.pin(matching)
-    return MatchingResult(matching=matching, rounds=rounds, history=history)
+        return (undecided, matching, n_left), {"undecided_edges": n_left}
+
+    loop = superstep.run(
+        step,
+        _start,
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2] == 0,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=_restore,
+        # one table: round NULL = still undecided
+        snapshot=lambda s: s[0]
+        .select("a", "b", F.lit(None).cast("int").alias("round"))
+        .unionByName(s[1]),
+        result=lambda s: s[1],
+    )
+    if not loop.done:
+        raise RuntimeError(
+            f"matching did not converge within max_rounds={max_rounds} "
+            f"({loop.state[2]} edges still undecided) — raise max_rounds"
+        )
+    return MatchingResult(
+        matching=loop.result, rounds=loop.last, history=loop.history
+    )

@@ -31,14 +31,13 @@ partial set.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
 SEED = 42
@@ -100,21 +99,8 @@ def maximal_independent_set(
         .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
         .persist()
     )
-    rounds = 0
-    undecided: DataFrame | None = None
-    members = spark.createDataFrame([], "id long, round int")
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            rounds, state = resumed
-            state = state.localCheckpoint(eager=True)
-            undecided = state.where(F.col("round").isNull()).select(
-                "id", _h("mis", seed, "id").alias("h")
-            )
-            members = state.where(F.col("round").isNotNull()).select(
-                "id", F.col("round").cast("int").alias("round")
-            )
-    if undecided is None:
+
+    def _start() -> tuple[DataFrame, DataFrame, int]:
         undecided = (
             und.select(F.col("a").alias("id"))
             .unionByName(und.select(F.col("b").alias("id")))
@@ -122,18 +108,21 @@ def maximal_independent_set(
             .select("id", _h("mis", seed, "id").alias("h"))
             .localCheckpoint(eager=False)
         )
-    history: list[dict[str, Any]] = []
-    n_left = undecided.count()
-    state_ckpt = StateCheckpointer(spark)
-    while n_left > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            adj.unpersist()
-            raise RuntimeError(
-                f"MIS did not converge within max_rounds={max_rounds} "
-                f"({n_left} vertices still undecided) — raise max_rounds"
-            )
-        t0 = time.monotonic()
+        members = spark.createDataFrame([], "id long, round int")
+        return undecided, members, undecided.count()
+
+    def _restore(_: int, snap: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+        snap = snap.localCheckpoint(eager=True)
+        undecided = snap.where(F.col("round").isNull()).select(
+            "id", _h("mis", seed, "id").alias("h")
+        )
+        members = snap.where(F.col("round").isNotNull()).select(
+            "id", F.col("round").cast("int").alias("round")
+        )
+        return undecided, members, undecided.count()
+
+    def step(rnd: int, state, ckpt):
+        undecided, members, _ = state
         # smallest undecided-neighbor priority per undecided vertex;
         # struct min = lexicographic (h, id) min, map-side combinable
         nbmin = (
@@ -151,7 +140,7 @@ def maximal_independent_set(
                 | (F.struct("h", "id") < F.col("mn"))
             )
             .select("id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         excluded = (
             adj.join(winners.withColumnRenamed("id", "u"), on="u", how="left_semi")
@@ -161,25 +150,36 @@ def maximal_independent_set(
         undecided = (
             undecided.join(winners, on="id", how="left_anti")
             .join(excluded, on="id", how="left_anti")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # ONE action per round: counting the next undecided set
         # materializes this round's winners checkpoint (it is in the plan)
         n_left = undecided.count()
         members = members.unionByName(
-            winners.select("id", F.lit(rounds).cast("int").alias("round"))
+            winners.select("id", F.lit(rnd).cast("int").alias("round"))
         )
-        metrics = {"undecided": n_left, "duration_s": time.monotonic() - t0}
-        history.append({"round": rounds, **metrics})
-        if checkpoint is not None:
-            if rounds % checkpoint_every == 0:
-                state = undecided.select(
-                    "id", F.lit(None).cast("int").alias("round")
-                ).unionByName(members)
-                checkpoint.save(rounds, state, metrics)
-            else:
-                checkpoint.log_metrics(rounds, metrics)
+        return (undecided, members, n_left), {"undecided": n_left}
+
+    loop = superstep.run(
+        step,
+        _start,
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2] == 0,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=_restore,
+        # one table: round NULL = still undecided
+        snapshot=lambda s: s[0]
+        .select("id", F.lit(None).cast("int").alias("round"))
+        .unionByName(s[1]),
+        result=lambda s: s[1],
+    )
     adj.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    members = state_ckpt.pin(members)
-    return MISResult(members=members, rounds=rounds, history=history)
+    if not loop.done:
+        raise RuntimeError(
+            f"MIS did not converge within max_rounds={max_rounds} "
+            f"({loop.state[2]} vertices still undecided) — raise max_rounds"
+        )
+    return MISResult(members=loop.result, rounds=loop.last, history=loop.history)

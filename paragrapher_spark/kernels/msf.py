@@ -20,14 +20,13 @@ accumulation rides localCheckpoints so lineage stays bounded.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 
 from paragrapher_spark.kernels.components import connected_components
 
@@ -72,12 +71,9 @@ def boruvka_msf(
         .select("id", F.col("id").alias("c"))
         .localCheckpoint(eager=False)
     )
-    msf = spark.createDataFrame([], "a long, b long, w long")
-    history: list[dict[str, Any]] = []
-    rounds = 0
-    state_ckpt = StateCheckpointer(spark)
-    for rnd in range(1, max_rounds + 1):
-        t0 = time.monotonic()
+
+    def step(rnd: int, state, ckpt):
+        comp, msf, _ = state
         lab = (
             e.join(comp.select(F.col("id").alias("a"), F.col("c").alias("ca")), on="a")
             .join(comp.select(F.col("id").alias("b"), F.col("c").alias("cb")), on="b")
@@ -95,13 +91,9 @@ def boruvka_msf(
             .localCheckpoint(eager=True)  # the round's ONE action
         )
         n_hooks = hooks.count()
-        history.append(
-            {"round": rnd, "hooks": n_hooks, "duration_s": time.monotonic() - t0}
-        )
         if n_hooks == 0:
-            break
-        rounds = rnd
-        msf = msf.unionByName(hooks.select("a", "b", "w")).transform(state_ckpt.cut_lazy)
+            return (comp, msf, 0), {"hooks": 0}
+        msf = msf.unionByName(hooks.select("a", "b", "w")).transform(ckpt.cut_lazy)
         # contract: WCC over the hook graph (component-id vertices only);
         # labels are min old-component ids — the oracle's closure rule
         cc = connected_components(
@@ -114,20 +106,29 @@ def boruvka_msf(
                 how="left",
             )
             .select("id", F.coalesce("component", F.col("c")).alias("c"))
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
-    stats = msf.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("w"), F.lit(0)).alias("tw")
-    ).collect()[0]
-    # pin both escapes + reclaim round-trip files now
-    msf_edges, comp = state_ckpt.pin(
-        msf.select("a", "b", F.col("w").alias("weight")), comp
+        return (comp, msf, n_hooks), {"hooks": n_hooks}
+
+    loop = superstep.run(
+        step,
+        (comp, spark.createDataFrame([], "a long, b long, w long"), None),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[2] == 0,
+        result=lambda s: (s[1].select("a", "b", F.col("w").alias("weight")), s[0]),
     )
+    msf_edges, comp = loop.result
+    stats = msf_edges.agg(
+        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("weight"), F.lit(0)).alias("tw")
+    ).collect()[0]
     return MSFResult(
         edges=msf_edges,
         clusters=comp,
         n_edges=int(stats["n"]),
         total_weight=int(stats["tw"]),
-        rounds=rounds,
-        history=history,
+        # the round that found no hook merged nothing
+        rounds=loop.last - 1 if loop.done else loop.last,
+        history=loop.history,
     )

@@ -42,7 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 
 SCALE = 10**6
 
@@ -110,40 +110,45 @@ def neighbor_feature_agg(
 
     e = edges.select("src", "dst").repartition(n_part, "dst").persist()
     e.count()
-    state_ckpt = StateCheckpointer(spark)
-    for _ in range(hops):
+
+    def step(_: int, state: DataFrame, ckpt):
         state = (
             e.join(state.withColumnRenamed("id", "dst"), on="dst")
             .groupBy(F.col("src").alias("id"), "pos")
             .agg(F.sum("s").alias("s"))
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut)
+            .transform(ckpt.cut)
         )
-    e.unpersist()
+        return state, {}
 
-    cnt = state.where(F.col("pos") == -1).select("id", F.col("s").alias("cnt"))
-    # sum_q/cnt are EXACT longs — the oracle-gated payload. The double mean
-    # is a convenience projection only: a decimal tie (odd sum over an even
-    # path count lands exactly on x.xxxxxx5) rounds differently between
-    # engines (Spark round goes through the shortest-decimal BigDecimal,
-    # DuckDB rounds the binary double), so the gate compares the integers.
-    out = (
-        state.where(F.col("pos") >= 0)
-        .join(cnt, on="id")
-        .select(
-            "id",
-            "pos",
-            F.col("s").alias("sum_q"),
-            "cnt",
-            (
-                F.col("s").cast("double")
-                / (F.col("cnt").cast("double") * F.lit(float(scale)))
-            ).alias("mean"),
+    def _features(state: DataFrame) -> DataFrame:
+        cnt = state.where(F.col("pos") == -1).select("id", F.col("s").alias("cnt"))
+        # sum_q/cnt are EXACT longs — the oracle-gated payload. The double
+        # mean is a convenience projection only: a decimal tie (odd sum over
+        # an even path count lands exactly on x.xxxxxx5) rounds differently
+        # between engines (Spark round goes through the shortest-decimal
+        # BigDecimal, DuckDB rounds the binary double), so the gate compares
+        # the integers.
+        return (
+            state.where(F.col("pos") >= 0)
+            .join(cnt, on="id")
+            .select(
+                "id",
+                "pos",
+                F.col("s").alias("sum_q"),
+                "cnt",
+                (
+                    F.col("s").cast("double")
+                    / (F.col("cnt").cast("double") * F.lit(float(scale)))
+                ).alias("mean"),
+            )
         )
+
+    loop = superstep.run(
+        step, state, spark=spark, max_iter=hops, key="hop", result=_features
     )
-    # pin + reclaim round-trip files now, not at interpreter exit
-    out = state_ckpt.pin(out)
-    return NeighborhoodResult(features=out, hops=hops, dim=dim)
+    e.unpersist()
+    return NeighborhoodResult(features=loop.result, hops=hops, dim=dim)
 
 
 def assemble(result: NeighborhoodResult) -> DataFrame:

@@ -32,7 +32,6 @@ Scale design (SURVEY.md §7 step 5):
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -40,9 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.operators.salting import explode_salts, salt_column
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 
 @dataclass
@@ -222,19 +220,7 @@ def pagerank(
     def _p_col():
         return F.lit(p_lit) if tp is None else F.col("p")
 
-    # resume path
-    start_iter = 0
-    ranks: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_iter, ranks = resumed
-            ranks = (
-                _with_flag(ranks.select("id", "rank"))
-                .repartition(n_part, "id")
-                .localCheckpoint(eager=True)
-            )
-    if ranks is None:
+    def _cold_start() -> DataFrame:
         if init_ranks is not None:
             # warm start: previous vector where present; vertices the
             # delta introduced fall back to the SAME per-vertex teleport
@@ -245,7 +231,7 @@ def pagerank(
             # undocumented asymmetry a personalized-incremental oracle
             # would trip over). Left join keeps the vertex set
             # authoritative (ids dropped by the delta vanish with it).
-            ranks = _with_flag(
+            return _with_flag(
                 vertices.join(
                     init_ranks.select(
                         "id", F.col("rank").cast("double").alias("_r0")
@@ -259,38 +245,27 @@ def pagerank(
                 "is_dangling",
                 *p_cols,
             )
-        else:
-            ranks = _with_flag(
-                vertices.select("id", F.lit(0.0).alias("rank"))
-            ).select("id", _p_col().alias("rank"), "is_dangling", *p_cols)
-        ranks = ranks.repartition(n_part, "id").localCheckpoint(eager=True)
+        return _with_flag(
+            vertices.select("id", F.lit(0.0).alias("rank"))
+        ).select("id", _p_col().alias("rank"), "is_dangling", *p_cols)
 
-    def _delta_and_dangling(r: DataFrame) -> tuple[float, float]:
-        row = r.agg(
-            F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-            F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
-        ).collect()[0]
-        return row["delta"] or 0.0, row["dm"] or 0.0
+    def _start(r: DataFrame) -> tuple[DataFrame, float, float]:
+        """(ranks, dangling mass, delta) loop state from a start vector."""
+        r = r.repartition(n_part, "id").localCheckpoint(eager=True)
+        dm = (
+            r.agg(
+                F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0))
+            ).collect()[0][0]
+            or 0.0
+        )
+        return r, dm, float("inf")
 
-    dm = (
-        ranks.agg(
-            F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0))
-        ).collect()[0][0]
-        or 0.0
-    )
-
-    history: list[dict[str, Any]] = []
-    converged = False
-    delta = float("inf")
-    probe = ShuffleProbe(spark)
-    it = start_iter
-    # per-iteration state cuts: the superstep references ``ranks`` twice
-    # (gather join + old_rank merge) — the chained-checkpoint shape whose
-    # driver cost blows up past ~18 generations (plans/iterstate.py);
-    # the convergence path runs 17-40+ iterations, squarely in that zone
-    state_ckpt = StateCheckpointer(spark)
-    for it in range(start_iter + 1, max_iter + 1):
-        t0 = time.monotonic()
+    # the superstep references ``ranks`` twice (gather join + old_rank
+    # merge) — the chained-checkpoint shape whose driver cost blows up
+    # past ~18 generations (plans/iterstate.py); the convergence path
+    # runs 17-40+ iterations, squarely in that zone
+    def step(it: int, state, ckpt):
+        ranks, dm, _ = state
         ranks_src = ranks.select(F.col("id").alias("src"), "rank")
         if n_salts:
             e = salt_column(edges_w, "src", n_salts)
@@ -321,46 +296,37 @@ def pagerank(
         )
         # non-eager cut: the delta/dangling aggregation below is the ONE
         # job of the superstep — it materializes the checkpoint as a
-        # side effect (parquet round-trip every 8th iteration, eager)
-        new_ranks = state_ckpt.cut(new_ranks, eager=False)
-        delta, dm = _delta_and_dangling(new_ranks)
+        # side effect (parquet round-trip every 4th iteration, eager)
+        new_ranks = ckpt.cut(new_ranks, eager=False)
+        row = new_ranks.agg(
+            F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
+            F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
+        ).collect()[0]
+        delta, dm = row["delta"] or 0.0, row["dm"] or 0.0
         ranks = new_ranks.select("id", "rank", "is_dangling", *p_cols)
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
+        metrics = {"delta": delta, "dangling_mass": dm, "frontier_size": n}
+        return (ranks, dm, delta), metrics
 
-        metrics = {
-            "delta": delta,
-            "dangling_mass": dm,
-            "frontier_size": n,
-            "duration_s": dt,
-            "shuffle_write_bytes": shuffle_w,
-            "shuffle_read_bytes": shuffle_r,
-        }
-        history.append({"iteration": it, **metrics})
-        if checkpoint is not None:
-            if it % checkpoint_every == 0:
-                checkpoint.save(it, ranks.select("id", "rank"), metrics)
-            else:
-                checkpoint.log_metrics(it, metrics)
-        if delta < tol:
-            converged = True
-            break
-
-    if checkpoint is not None and converged:
-        checkpoint.save(
-            it, ranks.select("id", "rank"), {"delta": delta, "converged": True},
-            kind="final",
-        )
+    loop = superstep.run(
+        step,
+        lambda: _start(_cold_start()),
+        spark=spark,
+        max_iter=max_iter,
+        done=lambda s: s[2] < tol,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: _start(_with_flag(snap.select("id", "rank"))),
+        snapshot=lambda s: s[0].select("id", "rank"),
+        result=lambda s: s[0].select("id", "rank"),
+        final=lambda lp: (
+            (lp.last, {"delta": lp.state[2], "converged": True}) if lp.done else None
+        ),
+    )
     edges_w.unpersist()
     vertices.unpersist()
-    # pin the result into cached partitions BEFORE deleting the
-    # checkpointer's parquet files (iterstate contract: the returned
-    # vector must not depend on files close() removes)
-    out_ranks = ranks.select("id", "rank").localCheckpoint(eager=True)
-    state_ckpt.close()
     return PageRankResult(
-        ranks=out_ranks, iterations=it, converged=converged,
-        final_delta=delta, history=history,
+        ranks=loop.result, iterations=loop.last, converged=loop.done,
+        final_delta=loop.state[2], history=loop.history,
     )
 
 
@@ -431,21 +397,7 @@ def ppr_batch(
         [(int(s), int(s), S - alpha_num * S // alpha_den) for s in seeds],
         "seed long, id long, t long",
     )
-    # resumable (north-rule mid-iteration contract): the (seed, id, r)
-    # state IS the checkpoint payload; restart continues at the next round
-    start_round = 0
-    state = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_round, state = resumed
-            state = state.repartition(n_part, "id").localCheckpoint(eager=True)
-    if state is None:
-        state = spark.createDataFrame(
-            [(int(s), int(s), S) for s in seeds], "seed long, id long, r long"
-        ).repartition(n_part, "id")
-
-    for rnd in range(start_round + 1, rounds + 1):
+    def step(rnd: int, state: DataFrame, ckpt):
         pushed = (
             ed.join(
                 state.select(F.col("id").alias("src"), "seed", "r"), on="src"
@@ -457,7 +409,7 @@ def ppr_batch(
                 .alias("p")
             )
         )
-        state = (
+        state = ckpt.cut(  # one action per round
             pushed.join(teleport, ["seed", "id"], "full_outer")
             .select(
                 "seed",
@@ -467,15 +419,27 @@ def ppr_batch(
                 .alias("r"),
             )
             .repartition(n_part, "id")
-            .localCheckpoint(eager=True)  # one action per round
         )
-        if checkpoint is not None:
-            if rnd % checkpoint_every == 0 or rnd == rounds:
-                checkpoint.save(rnd, state, {"seeds": len(seeds)})
-            else:
-                checkpoint.log_metrics(rnd, {"seeds": len(seeds)})
+        return state, {"seeds": len(seeds)}
 
-    ed.unpersist()
-    return state.select("seed", "id", F.col("r").alias("ppr_fp")).where(
-        F.col("ppr_fp") > 0
+    # resumable (north-rule mid-iteration contract): the (seed, id, r)
+    # state IS the checkpoint payload; restart continues at the next round
+    loop = superstep.run(
+        step,
+        lambda: spark.createDataFrame(
+            [(int(s), int(s), S) for s in seeds], "seed long, id long, r long"
+        ).repartition(n_part, "id"),
+        spark=spark,
+        max_iter=rounds,
+        key="round",
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=lambda _, snap: snap.repartition(n_part, "id").localCheckpoint(
+            eager=True
+        ),
+        result=lambda s: s.select("seed", "id", F.col("r").alias("ppr_fp")).where(
+            F.col("ppr_fp") > 0
+        ),
     )
+    ed.unpersist()
+    return loop.result

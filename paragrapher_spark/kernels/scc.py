@@ -61,17 +61,16 @@ traffic is O(1) scalars.
 
 from __future__ import annotations
 
-import os
-import sys
-import time
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 #: Seed for the deterministic pseudo-random vertex priorities. Fixed so
 #: repeated runs (and the checkpoint/resume story) are bit-identical.
@@ -87,16 +86,8 @@ TRIM_PEELS_PER_ROUND = 4
 #: Catalyst compile time (the composed plan re-references the state 2x
 #: per application) for fewer driver round-trips — the right trade on a
 #: real cluster where every action is a scheduling barrier; local wall
-#: is roughly neutral. Env override for measurement.
-PROP_UNROLL = max(1, int(os.environ.get("PG_SCC_UNROLL", "2")))
-
-#: PG_SCC_DEBUG=1 streams per-action timings to stderr (profiling aid).
-_DBG = os.environ.get("PG_SCC_DEBUG") == "1"
-
-
-def _dbg(msg: str) -> None:
-    if _DBG:
-        print(f"[scc] {msg}", file=sys.stderr, flush=True)
+#: is roughly neutral.
+PROP_UNROLL = 2
 
 
 def _prio(col: str = "id"):
@@ -167,7 +158,6 @@ def _min_propagate(
     changed = 0
     steps = 0
     for _ in range(max_iter):
-        t_step = time.monotonic()
         # TWO applications per action (superstep-batching): at ~0.4 s of
         # scheduler latency per action, halving the action count beats
         # the <=1 wasted application after the fixpoint. Convergence is
@@ -184,12 +174,7 @@ def _min_propagate(
             one_step(plan).repartition(n_part, "id"),
             eager=False,
         )
-        t0 = time.monotonic()
         changed = nxt.agg(F.sum("chg").alias("n")).collect()[0]["n"] or 0
-        _dbg(
-            f"prop step {steps} chg {changed} "
-            f"agg {time.monotonic() - t0:.2f}s full {time.monotonic() - t_step:.2f}s"
-        )
         cur = nxt.select("id", "lab")
         if changed == 0:
             break
@@ -227,24 +212,48 @@ def scc(
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # Constraint propagation OFF for the kernel's lifetime: every
-    # localCheckpoint snapshots the optimized plan's constraint set into
-    # the LogicalRDD, and Spark 4.1's rewriteStatsAndConstraints maps
-    # those constraints through an output-attribute map that does NOT
-    # cover attributes captured from checkpoint-generation-N-minus-k
-    # plans — on deep accumulated unions (many outer rounds) the rewrite
-    # dies with ``NoSuchElementException: key not found: id#N``
-    # (reproduced: test_scc_md5_graph_has_giant_component). With the
-    # conf off, constraints snapshot empty and the rewrite is a no-op.
-    # Constraints add nothing here: every join is an equi-join on a
-    # non-null vertex key. Restored in the finally below.
-    _CP_CONF = "spark.sql.constraintPropagation.enabled"
-    _cp_old = spark.conf.get(_CP_CONF, "true")
-    spark.conf.set(_CP_CONF, "false")
-    try:
+    with _constraint_propagation_off(spark):
         return _scc_impl(edges, spark, n_part, max_rounds)
+
+
+_CP_CONF = "spark.sql.constraintPropagation.enabled"
+_cp_lock = threading.Lock()
+#: session -> [scc calls in flight, conf value saved by the first one]
+_cp_users: dict[Any, list] = {}
+
+
+@contextmanager
+def _constraint_propagation_off(spark):
+    """Constraint propagation OFF while any ``scc`` runs on ``spark``:
+    every localCheckpoint snapshots the optimized plan's constraint set
+    into the LogicalRDD, and Spark 4.1's rewriteStatsAndConstraints maps
+    those constraints through an output-attribute map that does NOT
+    cover attributes captured from checkpoint-generation-N-minus-k
+    plans — on deep accumulated unions (many outer rounds) the rewrite
+    dies with ``NoSuchElementException: key not found: id#N``
+    (reproduced: test_scc_md5_graph_has_giant_component). With the
+    conf off, constraints snapshot empty and the rewrite is a no-op.
+    Constraints add nothing here: every join is an equi-join on a
+    non-null vertex key.
+
+    The conf is session-global, so overlapping calls share one save:
+    the first call in saves and clears it, the last call out restores
+    it (a plain save/restore per call could restore ``false`` over the
+    original value)."""
+    with _cp_lock:
+        entry = _cp_users.setdefault(spark, [0, None])
+        if entry[0] == 0:
+            entry[1] = spark.conf.get(_CP_CONF, "true")
+            spark.conf.set(_CP_CONF, "false")
+        entry[0] += 1
+    try:
+        yield
     finally:
-        spark.conf.set(_CP_CONF, _cp_old)
+        with _cp_lock:
+            entry[0] -= 1
+            if entry[0] == 0:
+                spark.conf.set(_CP_CONF, entry[1])
+                del _cp_users[spark]
 
 
 def _scc_impl(
@@ -253,33 +262,28 @@ def _scc_impl(
     n_part: int,
     max_rounds: int,
 ) -> SCCResult:
-    ckpt = StateCheckpointer(spark)
     # NOTE every cross-round graph table is localCheckpoint/ckpt-CUT, not
     # persist()ed: persist caches data but keeps the logical plan, so a
     # later round's every action re-COMPILES the whole prior-round plan
     # tree (measured: round-2 propagate steps at 60-170 s of pure
     # Catalyst time on a 2.7k-edge graph before this change)
-    live = ckpt.cut(
+    live = (
         edges.select("src", "dst")
         .distinct()
         .repartition(n_part, "src")
+        .localCheckpoint(eager=True)
     )
-    verts = ckpt.cut(
+    verts = (
         live.select(F.col("src").alias("id"))
         .unionByName(live.select(F.col("dst").alias("id")))
         .distinct()
         .repartition(n_part, "id")
+        .localCheckpoint(eager=True)
     )
-    remaining = verts.count()
 
-    done: DataFrame | None = None
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    converged = False
-    rnd = 0
-    while remaining > 0 and rnd < max_rounds:
-        rnd += 1
-        t0 = time.monotonic()
+    def step(rnd: int, state, ckpt):
+        # found: the settled (id, scc) rows of every round so far
+        live, verts, found, remaining = state
         # 0. TRIM (the FW-BW literature's standard preprocessing): a
         # vertex with no live in-edges or no live out-edges cannot sit on
         # a cycle of the live graph, and the live graph retains every
@@ -303,15 +307,13 @@ def _scc_impl(
                 .repartition(n_part, "id")
                 .localCheckpoint(eager=True)
             )
-            tp = time.monotonic()
             n_keep = both.count()
-            _dbg(f"trim peel keep {n_keep}/{remaining} {time.monotonic() - tp:.2f}s")
             if n_keep == remaining:
                 break
             trimmed = verts.join(both, on="id", how="left_anti").select(
                 "id", F.col("id").alias("scc")
             ).localCheckpoint(eager=True)
-            done = trimmed if done is None else done.unionByName(trimmed)
+            found = trimmed if found is None else found.unionByName(trimmed)
             n_trimmed += remaining - n_keep
             verts = both
             remaining = n_keep
@@ -323,26 +325,19 @@ def _scc_impl(
                 .repartition(n_part, "src")
             )
         if remaining == 0:
-            history.append(
-                {
-                    "round": rnd,
-                    "settled": n_trimmed,
-                    "trimmed": n_trimmed,
-                    "remaining": 0,
-                    "forward_supersteps": 0,
-                    "backward_supersteps": 0,
-                    "duration_s": time.monotonic() - t0,
-                }
-            )
-            break
+            return (live, verts, found, 0), {
+                "settled": n_trimmed,
+                "trimmed": n_trimmed,
+                "remaining": 0,
+                "forward_supersteps": 0,
+                "backward_supersteps": 0,
+            }
 
         # 1+2. forward min-priority coloring with pointer jumping:
         # color(v) = min random priority over {v} ∪ ancestors(v)
-        tf = time.monotonic()
         colors, fwd_steps = _min_propagate(
             verts.select("id", _prio("id").alias("lab")), live, n_part, ckpt
         )
-        _dbg(f"round {rnd} fwd done steps {fwd_steps} {time.monotonic() - tf:.1f}s")
         # one generation deep over materialized parents each round —
         # plain eager cut is safe (no cross-round chaining)
         colors = colors.withColumnRenamed("lab", "color").localCheckpoint(
@@ -369,7 +364,7 @@ def _scc_impl(
             .localCheckpoint(eager=True)
         )
         n_singles = singles.count()
-        done = singles if done is None else done.unionByName(singles)
+        found = singles if found is None else found.unionByName(singles)
 
         # same-color edge subgraph over multi-member classes — guards
         # the backward sweep AND becomes the (settled-pruned) next-round
@@ -393,12 +388,10 @@ def _scc_impl(
         rev = ec.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        tb = time.monotonic()
         blab, bwd_steps = _min_propagate(
             mverts.select("id", _prio("id").alias("lab")), rev, n_part, ckpt
         )
-        _dbg(f"round {rnd} bwd done steps {bwd_steps} {time.monotonic() - tb:.1f}s")
-        # cached (never parquet-backed): ``done`` retains every round's
+        # cached (never parquet-backed): ``found`` retains every round's
         # settled rows for the whole run, so they must not depend on
         # iterstate files that a later cut deletes
         settled = (
@@ -413,7 +406,7 @@ def _scc_impl(
         # MATERIALIZE before unioning: ``out`` is a self-join of the
         # localCheckpoint-backed ``settled`` (scc_ids derives from it, so
         # Catalyst dedups attribute ids on the join) — unioning the
-        # un-cut plan into ``done`` across rounds trips Spark 4.1's
+        # un-cut plan into ``found`` across rounds trips Spark 4.1's
         # constraints rewrite at the final checkpoint with
         # ``NoSuchElementException: key not found: id#N`` once the union
         # is deep enough (ADVICE r4; reproduced by
@@ -425,14 +418,14 @@ def _scc_impl(
             .select("id", "scc")
             .localCheckpoint(eager=True)
         )
-        done = out if done is None else done.unionByName(out)
-        # bound the accumulated-union depth: cut ``done`` itself on the
+        found = out if found is None else found.unionByName(out)
+        # bound the accumulated-union depth: cut ``found`` itself on the
         # iterstate cadence (localCheckpoint, NEVER iterstate parquet —
-        # ``done`` must survive ckpt.close()). Keeps the result plan's
+        # ``found`` must survive ckpt.close()). Keeps the result plan's
         # Union arity <= period regardless of outer-round count, so the
         # final checkpoint cost is O(period), not O(rounds).
         if rnd % ckpt.period == 0:
-            done = done.localCheckpoint(eager=True)
+            found = found.localCheckpoint(eager=True)
 
         # shrink with the PAIR refinement: an SCC's members share BOTH
         # the forward color (already enforced by ec) AND the backward
@@ -468,40 +461,30 @@ def _scc_impl(
                 )
                 .repartition(n_part, "src")
             )
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "round": rnd,
-                "settled": n_settled + n_trimmed,
-                "trimmed": n_trimmed,
-                "remaining": remaining,
-                "forward_supersteps": fwd_steps,
-                "backward_supersteps": bwd_steps,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-        if remaining == 0:
-            break
-    converged = remaining == 0
+        return (live, verts, found, remaining), {
+            "settled": n_settled + n_trimmed,
+            "trimmed": n_trimmed,
+            "remaining": remaining,
+            "forward_supersteps": fwd_steps,
+            "backward_supersteps": bwd_steps,
+        }
 
-    spark_empty = spark.createDataFrame([], "id long, scc long")
-    components = done if done is not None else spark_empty
-    components = components.select(
-        F.col("id").cast("long"), F.col("scc").cast("long")
+    loop = superstep.run(
+        step,
+        (live, verts, None, verts.count()),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[3] == 0,
+        result=lambda s: (
+            s[2] if s[2] is not None else spark.createDataFrame([], "id long, scc long")
+        ).select(F.col("id").cast("long"), F.col("scc").cast("long")),
     )
-    if done is not None:
-        # pin the result into cached partitions BEFORE releasing the
-        # checkpointer's parquet files (iterstate contract)
-        components = components.localCheckpoint(eager=True)
-    ckpt.close()
     return SCCResult(
-        components=components,
-        rounds=rnd,
-        converged=converged,
-        history=history,
+        components=loop.result,
+        rounds=loop.last,
+        converged=loop.done,
+        history=loop.history,
     )
 
 

@@ -32,15 +32,13 @@ driver-side vertex state, no collect of anything vertex-sized.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
+from paragrapher_spark.plans import superstep
 
 
 @dataclass
@@ -102,15 +100,10 @@ def sssp(
         .repartition(n_part, "id")
         .localCheckpoint(eager=True)
     )
-    frontier = dist.select("id", "dist")
 
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    converged = False
-    it = 0
-    state_ckpt = StateCheckpointer(spark)
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
+    def step(it: int, state, ckpt):
+        dist, _ = state
+        frontier = dist.where(F.col("upd") == 1).select("id", "dist")
         cand = (
             e.join(
                 frontier.select(
@@ -129,42 +122,31 @@ def sssp(
         # by a STRICTLY smaller dist (upd=1 sorts after upd=0 on ties, so a
         # tie keeps the settled row and the vertex does not re-enter the
         # frontier; termination then cannot loop on equal-cost paths)
-        new_dist = (
+        dist = (
             dist.select("id", "dist", F.lit(0).cast("int").alias("upd"))
             .unionByName(cand)
             .groupBy("id")
             .agg(F.min(F.struct("dist", "upd")).alias("s"))
             .select("id", F.col("s.dist").alias("dist"), F.col("s.upd").alias("upd"))
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
-        improved = (
-            new_dist.agg(F.sum("upd").alias("n")).collect()[0]["n"] or 0
-        )
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "iteration": it,
-                "frontier_size": improved,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-        dist = new_dist
-        if improved == 0:
-            converged = True
-            it -= 1
-            break
-        frontier = new_dist.where(F.col("upd") == 1).select("id", "dist")
+        improved = dist.agg(F.sum("upd").alias("n")).collect()[0]["n"] or 0
+        return (dist, improved), {"frontier_size": improved}
 
+    loop = superstep.run(
+        step,
+        (dist, None),
+        spark=spark,
+        max_iter=max_iter,
+        done=lambda s: s[1] == 0,
+        result=lambda s: s[0].select("id", "dist"),
+    )
     e.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    distances = state_ckpt.pin(dist.select("id", "dist"))
     return SSSPResult(
-        distances=distances,
-        iterations=it,
-        converged=converged,
-        history=history,
+        distances=loop.result,
+        # the round that improved nothing relaxed no new distance
+        iterations=loop.last - 1 if loop.done else loop.last,
+        converged=loop.done,
+        history=loop.history,
     )

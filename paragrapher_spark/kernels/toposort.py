@@ -32,15 +32,13 @@ materializes the round's checkpoint).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
+from paragrapher_spark.plans import superstep
 
 
 @dataclass
@@ -80,15 +78,8 @@ def topo_levels(
     )
     n_vertices = vertices.count()
 
-    lvl = vertices.select("id", F.lit(0).cast("long").alias("level"))
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    rounds = 0
-    converged = False
-    state_ckpt = StateCheckpointer(spark)
-    while rounds < max_rounds:
-        rounds += 1
-        t0 = time.monotonic()
+    def step(rnd: int, state, ckpt):
+        lvl = state[0]
         cand = (
             e.join(lvl.select(F.col("id").alias("src"), "level"), on="src")
             .groupBy(F.col("dst").alias("id"))
@@ -106,7 +97,7 @@ def topo_levels(
                 .alias("chg"),
             )
             .repartition(n_part, "id")
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         # ONE action per round: materializes the checkpoint and returns the
         # change count + running max level for the cycle guard
@@ -114,36 +105,33 @@ def topo_levels(
             F.sum("chg").alias("changed"), F.max("new_level").alias("max_level")
         ).collect()[0]
         changed, max_level = int(row["changed"]), int(row["max_level"])
-        lvl = nxt.select("id", F.col("new_level").alias("level"))
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "round": rounds,
-                "changed": changed,
-                "max_level": max_level,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
         if max_level > n_vertices:
             raise ValueError(
                 f"topo_levels: level {max_level} exceeds |V|={n_vertices} — "
                 f"the input graph has a cycle; condense SCCs first "
                 f"(kernels/scc.py)"
             )
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
+        lvl = nxt.select("id", F.col("new_level").alias("level"))
+        return (lvl, changed), {"changed": changed, "max_level": max_level}
+
+    loop = superstep.run(
+        step,
+        (vertices.select("id", F.lit(0).cast("long").alias("level")), None),
+        spark=spark,
+        max_iter=max_rounds,
+        key="round",
+        done=lambda s: s[1] == 0,
+        result=lambda s: s[0],
+    )
+    if not loop.done:
         raise ValueError(
             f"topo_levels did not reach a fixpoint in {max_rounds} rounds "
             f"(DAG deeper than max_rounds, or cyclic input); raise max_rounds"
         )
     e.unpersist()
-    # pin + reclaim round-trip files now, not at interpreter exit
-    lvl = state_ckpt.pin(lvl)
     return TopoResult(
-        levels=lvl, rounds=rounds, depth=history[-1]["max_level"], history=history
+        levels=loop.result,
+        rounds=loop.last,
+        depth=loop.history[-1]["max_level"],
+        history=loop.history,
     )

@@ -40,16 +40,14 @@ count, not graph size.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-from paragrapher_spark.plans.iterstate import StateCheckpointer
-from paragrapher_spark.plans.metrics import ShuffleProbe
 
 SEED = 42
 
@@ -82,6 +80,54 @@ class WalksResult:
     length: int
     n_walks: int
     history: list[dict[str, Any]] = field(default_factory=list)
+
+
+def _start(src_df: DataFrame, n_part: int):
+    """Fresh walk state: one walker per distinct start, parked at step 0."""
+    walkers = (
+        src_df.distinct()
+        .select(F.col("id").alias("walk_id"), F.col("id").alias("cur"))
+        .repartition(n_part, "cur")
+        .localCheckpoint(eager=True)
+    )
+    out = walkers.select(
+        "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
+    )
+    return walkers, out, walkers.count(), None
+
+
+def _advance(nxt: DataFrame, state, t: int, n_part: int, ckpt):
+    """Cut the step-``t`` walker positions and append them to the steps
+    table; the survivor count is the step's one action."""
+    _, out, n_walks, _ = state
+    walkers = nxt.repartition(n_part, "cur").transform(ckpt.cut_lazy)
+    alive = walkers.count()
+    out = out.unionByName(
+        walkers.select(
+            "walk_id", F.lit(t).cast("int").alias("step"), F.col("cur").alias("id")
+        )
+    )
+    return (walkers, out, n_walks, alive), {"alive_walkers": alive}
+
+
+def _run_walks(spark, step, start, restore, length, checkpoint, checkpoint_every):
+    """The walk loop over (walkers, steps table, n_walks, alive) state:
+    stops when every walker parked on a sink; the emitted-steps table is
+    the snapshot, the pinned result and the final record."""
+    return superstep.run(
+        step,
+        start,
+        spark=spark,
+        max_iter=length,
+        key="step",
+        done=lambda s: s[3] == 0,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        restore=restore,
+        snapshot=lambda s: s[1],
+        result=lambda s: s[1],
+        final=lambda lp: (min(lp.last, length), {"final": True}),
+    )
 
 
 def random_walks(
@@ -177,43 +223,18 @@ def random_walks(
     # walker state is reconstructable as the rows at the snapshot's step
     # (walkers parked on sinks before that step ended and are naturally
     # absent) — the bfs.py reconstruct-frontier-from-snapshot discipline
-    start_step = 0
-    out: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_step, out = resumed
-            out = out.repartition(n_part, "walk_id").localCheckpoint(eager=True)
-    if out is None:
-        state = (
-            src_df.distinct()
-            .select(
-                F.col("id").alias("walk_id"),
-                F.col("id").alias("cur"),
-            )
-            .repartition(n_part, "cur")
-            .localCheckpoint(eager=True)
-        )
-        out = state.select(
-            "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
-        )
-        n_walks = state.count()
-    else:
-        state = (
+    def _restore(start_step: int, out: DataFrame):
+        out = out.repartition(n_part, "walk_id").localCheckpoint(eager=True)
+        walkers = (
             out.where(F.col("step") == start_step)
             .select("walk_id", F.col("id").alias("cur"))
             .repartition(n_part, "cur")
             .localCheckpoint(eager=True)
         )
-        n_walks = out.where(F.col("step") == 0).count()
+        return walkers, out, out.where(F.col("step") == 0).count(), None
 
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    state_ckpt = StateCheckpointer(spark)
-    t = start_step
-    for t in range(start_step + 1, length + 1):
-        t0 = time.monotonic()
-        hashed = state.select(
+    def step(t: int, state, ckpt):
+        hashed = state[0].select(
             "walk_id",
             F.col("cur").alias("src"),
             _h("walk", seed, "walk_id", F.lit(t)).alias("hv"),
@@ -231,40 +252,18 @@ def random_walks(
                 (F.col("r") >= F.col("cumw") - F.col("w"))
                 & (F.col("r") < F.col("cumw"))
             )
-        state = (
-            nxt.select("walk_id", F.col("dst").alias("cur"))
-            .repartition(n_part, "cur")
-            .transform(state_ckpt.cut_lazy)
-        )
-        alive = state.count()
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "step": t,
-                "alive_walkers": alive,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-        out = out.unionByName(
-            state.select(
-                "walk_id", F.lit(t).cast("int").alias("step"), F.col("cur").alias("id")
-            )
-        )
-        if checkpoint is not None and alive > 0 and t % checkpoint_every == 0:
-            checkpoint.save(t, out, history[-1])
-        if alive == 0:
-            break
+        nxt = nxt.select("walk_id", F.col("dst").alias("cur"))
+        return _advance(nxt, state, t, n_part, ckpt)
 
+    loop = _run_walks(
+        spark, step, lambda: _start(src_df, n_part), _restore, length,
+        checkpoint, checkpoint_every,
+    )
     adj.unpersist()
     degs.unpersist()
-    if checkpoint is not None:
-        checkpoint.save(min(t, length), out, {"final": True}, kind="final")
-    # pin the accumulated steps + reclaim round-trip files (ADVICE r4)
-    out = state_ckpt.pin(out)
-    return WalksResult(steps=out, length=length, n_walks=n_walks, history=history)
+    return WalksResult(
+        steps=loop.result, length=length, n_walks=loop.state[2], history=loop.history
+    )
 
 
 def node2vec_walks(
@@ -369,97 +368,49 @@ def node2vec_walks(
     else:
         src_df = starts.select("id")
 
-    start_step = 0
-    out: DataFrame | None = None
-    if checkpoint is not None:
-        resumed = checkpoint.resume(spark)
-        if resumed is not None:
-            start_step, out = resumed
-            out = out.repartition(n_part, "walk_id").localCheckpoint(eager=True)
-
-    history: list[dict[str, Any]] = []
-    probe = ShuffleProbe(spark)
-    state_ckpt = StateCheckpointer(spark)
-
-    if out is None:
-        state0 = (
-            src_df.distinct()
-            .select(F.col("id").alias("walk_id"), F.col("id").alias("cur"))
-            .repartition(n_part, "cur")
-            .localCheckpoint(eager=True)
-        )
-        out = state0.select(
-            "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
-        )
-        n_walks = state0.count()
-        # step 1: first-order index pick (no predecessor yet)
-        if length >= 1:
-            t0 = time.monotonic()
-            picked = state0.select(
-                "walk_id",
-                F.col("cur").alias("src"),
-                _h("n2v", seed, "walk_id", F.lit(1)).alias("hv"),
-            ).join(degs, on="src").select(
-                "walk_id", "src", F.pmod(F.col("hv"), F.col("deg")).alias("idx")
-            )
-            nxt = picked.join(adj, on=["src", "idx"])
-            state = (
-                nxt.select(
-                    "walk_id",
-                    F.col("src").alias("prev"),
-                    F.col("dst").alias("cur"),
-                )
-                .repartition(n_part, "cur")
-                .transform(state_ckpt.cut_lazy)
-            )
-            alive = state.count()
-            shuffle_w, shuffle_r = probe.tick()
-            history.append(
-                {
-                    "step": 1,
-                    "alive_walkers": alive,
-                    "duration_s": time.monotonic() - t0,
-                    "shuffle_write_bytes": shuffle_w,
-                    "shuffle_read_bytes": shuffle_r,
-                }
-            )
-            out = out.unionByName(
-                state.select(
-                    "walk_id",
-                    F.lit(1).cast("int").alias("step"),
-                    F.col("cur").alias("id"),
-                )
-            )
-            start_step = 1
-        else:
-            state = None
-            alive = 0
-    else:
-        n_walks = out.where(F.col("step") == 0).count()
+    # the emitted steps table IS the snapshot; (prev, cur) walker state
+    # rebuilds from steps t and t-1
+    def _restore(start_step: int, out: DataFrame):
+        out = out.repartition(n_part, "walk_id").localCheckpoint(eager=True)
         cur_rows = out.where(F.col("step") == start_step).select(
             "walk_id", F.col("id").alias("cur")
         )
         prev_rows = out.where(F.col("step") == start_step - 1).select(
             "walk_id", F.col("id").alias("prev")
         )
-        state = (
+        walkers = (
             cur_rows.join(prev_rows, on="walk_id")
             .select("walk_id", "prev", "cur")
             .repartition(n_part, "cur")
             .localCheckpoint(eager=True)
         )
-        alive = state.count()
+        n_walks = out.where(F.col("step") == 0).count()
+        return walkers, out, n_walks, walkers.count()
 
-    t = start_step
-    for t in range(start_step + 1, length + 1):
-        if state is None or alive == 0:
-            break
-        t0 = time.monotonic()
+    def step(t: int, state, ckpt):
+        walkers = state[0]
+        if t == 1:
+            # first-order index pick: no predecessor yet
+            picked = walkers.select(
+                "walk_id",
+                F.col("cur").alias("src"),
+                _h("n2v", seed, "walk_id", F.lit(1)).alias("hv"),
+            ).join(degs, on="src").select(
+                "walk_id", "src", F.pmod(F.col("hv"), F.col("deg")).alias("idx")
+            )
+            nxt = picked.join(adj, on=["src", "idx"]).select(
+                "walk_id", F.col("src").alias("prev"), F.col("dst").alias("cur")
+            )
+        else:
+            nxt = _n2v_step(walkers, t)
+        return _advance(nxt, state, t, n_part, ckpt)
+
+    def _n2v_step(walkers: DataFrame, t: int) -> DataFrame:
         cand = (
-            state.join(adj, state["cur"] == adj["src"])
+            walkers.join(adj, walkers["cur"] == adj["src"])
             .join(
                 memb,
-                (state["prev"] == F.col("p_src")) & (adj["dst"] == F.col("p_dst")),
+                (walkers["prev"] == F.col("p_src")) & (adj["dst"] == F.col("p_dst")),
                 "left",
             )
             .select(
@@ -490,46 +441,20 @@ def node2vec_walks(
                 _h("n2v", seed, "walk_id", F.lit(t)), F.col("tot")
             ).alias("r"),
         )
-        nxt = scanned.where(
+        return scanned.where(
             (F.col("r") >= F.col("cum") - F.col("aw")) & (F.col("r") < F.col("cum"))
-        )
-        state = (
-            nxt.select(
-                "walk_id", F.col("cur").alias("prev"), F.col("dst").alias("cur")
-            )
-            .repartition(n_part, "cur")
-            .transform(state_ckpt.cut_lazy)
-        )
-        alive = state.count()
-        dt = time.monotonic() - t0
-        shuffle_w, shuffle_r = probe.tick()
-        history.append(
-            {
-                "step": t,
-                "alive_walkers": alive,
-                "duration_s": dt,
-                "shuffle_write_bytes": shuffle_w,
-                "shuffle_read_bytes": shuffle_r,
-            }
-        )
-        out = out.unionByName(
-            state.select(
-                "walk_id", F.lit(t).cast("int").alias("step"), F.col("cur").alias("id")
-            )
-        )
-        if checkpoint is not None and alive > 0 and t % checkpoint_every == 0:
-            checkpoint.save(t, out, history[-1])
-        if alive == 0:
-            break
+        ).select("walk_id", F.col("cur").alias("prev"), F.col("dst").alias("cur"))
 
+    loop = _run_walks(
+        spark, step, lambda: _start(src_df, n_part), _restore, length,
+        checkpoint, checkpoint_every,
+    )
     adj.unpersist()
     degs.unpersist()
     memb.unpersist()
-    if checkpoint is not None:
-        checkpoint.save(min(max(t, start_step), length), out, {"final": True}, kind="final")
-    # pin the accumulated steps + reclaim round-trip files (ADVICE r4)
-    out = state_ckpt.pin(out)
-    return WalksResult(steps=out, length=length, n_walks=n_walks, history=history)
+    return WalksResult(
+        steps=loop.result, length=length, n_walks=loop.state[2], history=loop.history
+    )
 
 
 def neighbor_sampling(

@@ -25,14 +25,13 @@ contract, same as the peel kernels.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans.iterstate import StateCheckpointer
+from paragrapher_spark.plans import superstep
 
 from paragrapher_spark.operators.indexing import dense_ids
 
@@ -70,14 +69,9 @@ def wl_refinement(
         .agg(F.count(F.lit(1)).alias("color"))
         .localCheckpoint(eager=False)
     )
-    history: list[dict[str, Any]] = []
-    prev_c: int | None = None
-    n_colors = 0
-    stable = False
-    done = 0
-    state_ckpt = StateCheckpointer(edges.sparkSession)
-    for r in range(1, rounds + 1):
-        t0 = time.monotonic()
+
+    def step(r: int, state, ckpt):
+        colors, prev_c, _ = state
         nsig = (
             sym.join(colors.select(F.col("id").alias("u"), "color"), on="u")
             .groupBy(F.col("v").alias("id"))
@@ -95,19 +89,26 @@ def wl_refinement(
         colors = (
             combined.join(mapping, on=["color", "nsig"])
             .select("id", F.col("new_color").alias("color"))
-            .transform(state_ckpt.cut_lazy)
+            .transform(ckpt.cut_lazy)
         )
         n_colors = mapping.count()
-        done = r
-        history.append(
-            {"round": r, "n_colors": n_colors, "duration_s": time.monotonic() - t0}
-        )
-        if prev_c is not None and n_colors == prev_c:
-            stable = True  # partition is a fixpoint; ids already canonical
-            break
-        prev_c = n_colors
-    # pin + reclaim round-trip files now, not at interpreter exit
-    colors = state_ckpt.pin(colors)
+        # an unchanged class count means the partition is a fixpoint; ids
+        # are already canonical
+        return (colors, n_colors, n_colors == prev_c), {"n_colors": n_colors}
+
+    loop = superstep.run(
+        step,
+        (colors, None, False),
+        spark=edges.sparkSession,
+        max_iter=rounds,
+        key="round",
+        done=lambda s: s[2],
+        result=lambda s: s[0],
+    )
     return WLResult(
-        colors=colors, n_colors=n_colors, rounds=done, stable=stable, history=history
+        colors=loop.result,
+        n_colors=loop.state[1] or 0,
+        rounds=loop.last,
+        stable=loop.done,
+        history=loop.history,
     )

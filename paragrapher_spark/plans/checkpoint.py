@@ -43,8 +43,28 @@ class CheckpointManager:
     def __post_init__(self) -> None:
         os.makedirs(self.job_dir, exist_ok=True)
         if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as fh:
-                self._records = [json.loads(line) for line in fh if line.strip()]
+            self._load()
+
+    def _load(self) -> None:
+        """Read the manifest. A crash mid-append leaves a torn FINAL line:
+        it is dropped and truncated off the file, so the previous record
+        stays the resume point and the next append starts on a clean line.
+        A malformed line anywhere else is corruption and raises."""
+        with open(self.manifest_path, "r+b") as fh:
+            lines = fh.read().splitlines(keepends=True)
+            offset = 0
+            for n, line in enumerate(lines):
+                if line.strip():
+                    try:
+                        self._records.append(json.loads(line))
+                    except ValueError:
+                        if any(rest.strip() for rest in lines[n + 1 :]):
+                            raise
+                        fh.truncate(offset)
+                        return
+                offset += len(line)
+            if lines and not lines[-1].endswith(b"\n"):
+                fh.write(b"\n")  # a complete record cut just before its newline
 
     @property
     def job_dir(self) -> str:

@@ -55,22 +55,21 @@ from pyspark.sql import DataFrame
 #: Cut generations between parquet round-trips. The measured cliff is
 #: R^generations ~ 2^18 for R references per step; 4 is safe for every
 #: loop shape in this engine (R <= 4: 4^4 = 256 << 2^18).
-#: PG_ITERSTATE_PERIOD overrides for measurement.
-DEFAULT_PERIOD = int(os.environ.get("PG_ITERSTATE_PERIOD", "4"))
+DEFAULT_PERIOD = 4
 
 
 class StateCheckpointer:
     """Per-loop state cutter: localCheckpoint generations with a
     lineage-severing parquet round-trip every ``period``-th cut.
 
-    Usage::
+    Kernels do not build one: ``plans/superstep.py:run`` owns it and
+    hands it to each step, then pins the result and closes it::
 
-        ckpt = StateCheckpointer(spark)
-        try:
-            while ...:
-                state = ckpt.cut(new_state)
-        finally:
-            ckpt.close()
+        def step(i, state, ckpt):
+            state = ckpt.cut(next_state(state), eager=False)
+            return state, {"changed": state.count()}
+
+        loop = superstep.run(step, state, spark=spark, max_iter=20)
     """
 
     def __init__(
@@ -139,13 +138,8 @@ class StateCheckpointer:
         re-read a round-trip file afterwards), then ``close()`` —
         reclaiming this run's parquet round-trips immediately instead of
         at interpreter exit. Returns the pinned frame (one argument) or
-        a list of pinned frames, in argument order.
-
-        This is the standard last line of an iterative kernel::
-
-            state = ckpt.pin(state)
-            return Result(state=state, ...)
-        """
+        a list of pinned frames, in argument order. ``superstep.run``
+        calls it on every kernel's result frames."""
         pinned = [df.localCheckpoint(eager=True) for df in dfs]
         self.close()
         return pinned[0] if len(pinned) == 1 else pinned

@@ -1,60 +1,10 @@
-"""Per-superstep engine metrics from Spark's app-status store.
+"""Partition balance metric for checkpoint manifests.
 
-The reference exposes scan progress via get_set_options
-(`src/webgraph.c:504-550`: READ_STATUS / READ_TOTAL_CALLBACKS /
-READ_EDGES); the Spark-native analogue is the AppStatusStore the UI is
-built on. ``ShuffleProbe`` snapshots cumulative shuffle read/write bytes
-so an iterative kernel can record the delta per superstep — the
-"shuffle bytes" field of the north rule's per-superstep metrics.
-
-Driver cost: O(#stages) per call, no executor work. Falls back to -1 if
-the (stable-in-practice, but not public-API) py4j path breaks.
+Per-superstep shuffle bytes come from ``plans/superstep.py``, which reads
+Spark's app-status store once per step.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import SparkSession
-
-
-def _totals(spark: SparkSession) -> tuple[int, int]:
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()  # type: ignore[attr-defined]
-    empty = sc._jvm.java.util.ArrayList()  # type: ignore[attr-defined]
-    defaults = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-    stages = store.stageList(empty, *defaults)
-    it = stages.iterator()
-    w = r = 0
-    while it.hasNext():
-        s = it.next()
-        w += s.shuffleWriteBytes()
-        r += s.shuffleReadBytes()
-    return w, r
-
-
-class ShuffleProbe:
-    """Delta-counter over cumulative shuffle bytes: ``tick()`` returns
-    (write_bytes, read_bytes) since the previous tick."""
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-        self.ok = True
-        try:
-            self._w, self._r = _totals(spark)
-        except Exception:
-            self.ok = False
-            self._w = self._r = 0
-
-    def tick(self) -> tuple[int, int]:
-        if not self.ok:
-            return -1, -1
-        try:
-            w, r = _totals(self.spark)
-        except Exception:
-            self.ok = False
-            return -1, -1
-        dw, dr = w - self._w, r - self._r
-        self._w, self._r = w, r
-        return dw, dr
 
 
 def skew_factor(partition_rows: list[int]) -> float:

@@ -7,6 +7,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from paragrapher_spark.fixtures import powerlaw_graph, two_components
 from paragrapher_spark.kernels.components import connected_components
@@ -248,3 +249,30 @@ def test_salsa_resume_identical(spark, tmp_path):
     cm2 = CheckpointManager(str(tmp_path), "salsa")
     got = salsa(edges, iterations=4, checkpoint=cm2, checkpoint_every=2)
     assert sorted(map(tuple, got.scores.collect())) == want
+
+
+def test_torn_manifest_tail_is_dropped(spark, tmp_path):
+    cm = CheckpointManager(str(tmp_path), "torn")
+    df = spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, rank double")
+    cm.save(2, df, {"delta": 0.5})
+    cm.save(4, df.select("id", (F.col("rank") + 1).alias("rank")), {"delta": 0.1})
+    # a crash mid-append leaves half a JSON record as the final line
+    with open(cm.manifest_path, "a") as fh:
+        fh.write('{"iteration": 6, "status": "comp')
+    cm2 = CheckpointManager(str(tmp_path), "torn")
+    it, back = cm2.resume(spark)
+    assert it == 4
+    assert sorted(r.rank for r in back.collect()) == [i + 1.0 for i in range(10)]
+    # the torn tail was truncated away: the next append starts a clean line
+    cm2.save(6, df, {"delta": 0.01})
+    cm3 = CheckpointManager(str(tmp_path), "torn")
+    assert [r["iteration"] for r in cm3.records()] == [2, 4, 6]
+
+
+def test_malformed_inner_manifest_line_raises(tmp_path):
+    cm = CheckpointManager(str(tmp_path), "bad")
+    with open(cm.manifest_path, "w") as fh:
+        fh.write('{"iteration": 1, "status": "progress"}\n{"iter\n')
+        fh.write('{"iteration": 2, "status": "progress"}\n')
+    with pytest.raises(json.JSONDecodeError):
+        CheckpointManager(str(tmp_path), "bad")

@@ -155,6 +155,45 @@ def test_scc_matches_mutual_reachability(spark, edges):
     assert res.converged
 
 
+def test_overlapping_scc_calls_restore_the_conf(spark):
+    # scc() turns constraint propagation off for its lifetime. A second
+    # call that starts while the first runs, and ends after it, must not
+    # leave the first call's "false" behind.
+    import threading
+    import time
+
+    conf = "spark.sql.constraintPropagation.enabled"
+    before = spark.conf.get(conf, "true")
+    inputs = [
+        [(0, 1), (1, 2), (2, 0)],
+        [(i, (i + 1) % 8) for i in range(8)] + [(8, 9), (9, 8), (7, 8), (9, 10)],
+    ]
+    got: dict[int, list] = {}
+    errors: list[BaseException] = []
+
+    def run(k: int) -> None:
+        try:
+            e = spark.createDataFrame(inputs[k], "src long, dst long")
+            got[k] = sorted(tuple(r) for r in scc(e).components.collect())
+        except BaseException as exc:  # surfaced below
+            errors.append(exc)
+
+    first = threading.Thread(target=run, args=(0,))
+    first.start()
+    deadline = time.monotonic() + 60
+    while spark.conf.get(conf, "true") != "false" and time.monotonic() < deadline:
+        time.sleep(0.005)  # wait until the first call is inside scc()
+    second = threading.Thread(target=run, args=(1,))
+    second.start()
+    first.join(timeout=600)
+    second.join(timeout=600)
+    assert not first.is_alive() and not second.is_alive()
+    assert not errors, errors
+    for k, edges in enumerate(inputs):
+        assert got[k] == _scc_oracle(edges)
+    assert spark.conf.get(conf, "true") == before
+
+
 def test_scc_md5_graph_has_giant_component(spark):
     # a sparse random digraph grows a giant SCC; the kernel must agree
     # with the closure oracle on every vertex, not just the giant one
