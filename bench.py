@@ -1,151 +1,61 @@
-"""Benchmark harness — prints a COMPACT JSON line for the driver.
-
-Headline metric (BASELINE.json): PageRank edges/sec to 1e-6 convergence on
-the derived code/co-purchase edge table, plus throughput scaling efficiency
-between two parallelism levels (the sandbox stand-in for N vs 4N executors:
-same job, same input, local[SCALE_LO] vs local[SCALE_HI] in separate JVMs).
-
-Round-4 restructure (VERDICT r3 "What's wrong" #1: rc=124, parsed null —
-the r3 harness ran ~50 min of work and printed its one JSON line only at
-the very end, so the driver's timeout lost everything):
-
-- The harness now enforces ITS OWN wall budget (``SPARK_GRAFT_BUDGET``,
-  default 840 s) with a deadline check before every phase, worker and
-  sweep query, so it always finishes and always prints.
-- The compact JSON line is printed+flushed IMMEDIATELY after the headline
-  and the scaling ladder complete — before the all-queries sweep — and
-  again (enriched with sweep evidence) at the end. Both lines are
-  self-sufficient driver records.
-- Spark console progress bars are disabled in every session this harness
-  creates, so a mid-sweep kill cannot scroll the early line out of the
-  driver's ~2000-char stdout tail.
-Round-5 restructure (VERDICT r4 "What's wrong" #2/#3: the r4 ladder
-measured its own host starvation and reported the starved efficiency
-anyway, and the per-query sweep was budget-cut 145/145):
-
-- HEALTH-GATED ladder: every worker brackets its measurement with memcpy
-  probes; a visit below SPARK_GRAFT_HEALTH_FLOOR (default 0.6) x the
-  health reference (max of record-start probe and nominal-healthy
-  constants) is REJECTED and retried in a fresh JVM, up to
-  SPARK_GRAFT_SCALE_MAX_VISITS per level. Gating levels need >=2
-  accepted visits. All visits — accepted and rejected — are disclosed;
-  a pair built from any rejected-only level carries clean=false in the
-  compact record.
-- SWEEP RESERVE: the ladder stops scheduling visits once it would eat
-  into SPARK_GRAFT_SWEEP_RESERVE (default 300 s) of the wall budget, so
-  the per-query sweep always runs.
-- The sweep orders queries cheapest-first by the PRIOR record's
-  timings (registry order is now the driver-gate priority order —
-  heavy queries first — the wrong order for a deadline-bounded sweep).
-- knn_ivf and triangle_count move to sf0.01 (keys *_sf001): their sf0.1
-  runs cost ~25 s that now fund the sweep; the plans exercised are
-  scale-independent.
-- Ladder job: replicate factor 16 (was 32), 3 measured supersteps after
-  1 warmup, 1 pass per visit. Factor 16 keeps the 2-core superstep ~5 s
-  vs a sub-second stage floor, so the gate pair (2→8) stays
-  compute-dominated while each visit halves in cost — funding the
-  health-retry loop inside the same window.
-
-The driver records only the LAST ~2000 chars of stdout; the full detail
-(per-pass superstep arrays, scan-floor probes, worker runs) goes to
+"""Benchmark harness: one compact JSON line on stdout, full detail in
 ``BENCH_local.json`` next to this file.
 
+Phases, each started only while the wall budget allows:
+
+1. Headline: PageRank to 1e-6 on the sf0.1 co-purchase edge table at
+   ``local[CPUS]``, best of two passes.
+2. Main-phase probes in the same session: in-degree distribution, WCC,
+   text stats, MinHash near-dups, sessionization, and triangle count plus
+   IVF kNN at sf0.01.
+3. BVGraph ingest probe: encode and decode the headline graph with the
+   pure-Python BVGraph codec.
+4. Scaling pair: the same fixed-superstep PageRank over the 16x replicated
+   headline graph, once at ``local[1]`` and once at ``local[CPUS]``, each
+   in its own worker JVM that also measures the parquet scan floor. The
+   efficiency ``(throughput_hi / throughput_lo) / CPUS`` is reported as
+   measured.
+5. The compact line is printed (``"sweep": "pending"``), so a timeout
+   during the sweep still leaves a complete record.
+6. Sweep: every ``queries()`` entry once at sf0.001, cheapest first by the
+   prior records' timings; queries the deadline cuts are listed as
+   skipped. The compact line is printed again with the sweep summary.
+
+The compact line stays <= 1900 chars and Spark's console progress bars
+are off, so a reader that keeps only the last ~2000 chars of stdout still
+gets a whole record.
+
 Env knobs:
-  SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     main parallelism (default 32)
-  SPARK_GRAFT_BUDGET   total wall budget seconds, 0 = unlimited (default 840)
-  SPARK_GRAFT_SCALING  "0" to skip the scaling subprocess runs (default on)
-  SPARK_GRAFT_ALLQ     "0" to skip the all-queries sweep (default on)
-  SPARK_GRAFT_ONLY     "scaling" to run ONLY the core-ladder workers
-  SPARK_GRAFT_SWEEP_RESERVE      wall seconds protected for the sweep (300)
-  SPARK_GRAFT_HEALTH_FLOOR       accept floor vs health reference (0.6)
-  SPARK_GRAFT_SCALE_MAX_VISITS   visit cap per ladder level (4)
-  SPARK_GRAFT_SCALE_MIN_ACCEPTED accepted visits per gating level (2)
+  SPARK_GRAFT_SF_DIR        headline input dir (default: the sf0.1 test data)
+  SPARK_GRAFT_CPUS          main parallelism (default: this host's CPU count)
+  SPARK_GRAFT_BUDGET        total wall budget seconds, 0 = unlimited (840)
+  SPARK_GRAFT_SCALING       "0" skips the scaling pair
+  SPARK_GRAFT_ALLQ          "0" skips the sweep
+  SPARK_GRAFT_SMALL_SF_DIR  triangle/IVF probe dir (sf0.01 test data)
+  SPARK_GRAFT_ALLQ_DIR      sweep input dir (sf0.001 test data)
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
 
+NPROC = os.cpu_count() or 1
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(NPROC)))
 BUDGET = float(os.environ.get("SPARK_GRAFT_BUDGET", "840"))
 T_START = time.monotonic()
-# Scaling evidence (north rule: throughput efficiency >=0.8 from N to 4N
-# executors). Sandbox stand-in: the identical fixed-superstep PageRank job
-# on the identical replicated edge table at a ladder of local[...] core
-# counts, reporting steady-state superstep throughput (iteration 1
-# excluded as cache warmup) and the efficiency of each 4x pair.
-#
-# Two pairs are reported deliberately: 2->8 sits in this VM's linear
-# region; 8->32 crosses the single-box memory-bandwidth knee (one shared
-# DRAM bus — measured: scan/shuffle throughput plateaus ~10-20M rows/s
-# regardless of cores past ~8-16), which a multi-node 4N-executor cluster
-# does not share. The 2->8 figure is the honest analogue of N->4N across
-# nodes; the 8->32 figure is disclosed, not hidden.
-#
-# r5 calibration note: in mp-starved windows (4-proc memcpy aggregate
-# 0.3-2 GB/s against a healthy ~3 GB/s single-thread — co-tenant core
-# steal) NO pair measures the engine: 2->8 collapses (0.516 measured
-# floor-disabled) and even the 1->4 pair is an artifact generator,
-# because the 1-core level's steady superstep itself swings 7.3-10.5 s
-# across such windows while its single-thread probe stays healthy —
-# producing "efficiencies" from 0.62 to 0.89 depending on which level
-# the steal hits. Hence the mp floor gates EVERY level: a starved
-# window yields disclosed-rejected visits and a clean=false fallback,
-# never a plausible-but-meaningless number. Clean-window evidence
-# (r2/r3: 0.833/0.882/0.801 local, 0.952 driver, 0.823 on the 1->4
-# pair) is reproducible whenever the host is healthy.
-SCALE_CORES = [
-    int(c)
-    for c in os.environ.get("SPARK_GRAFT_SCALE_CORES", f"2,8,{CPUS}").split(",")
-]
-# Replication makes per-superstep compute dominate fixed stage-scheduling
-# latency (~9.5M edges at factor 16 on sf0.1, ~5 s/superstep at 2 cores vs
-# a sub-second stage floor — compute >90% of the superstep) so the
-# measurement reflects the engine, not the scheduler. r5 halves the r4
-# factor (32 -> 16): the efficiency pairs are within-record ratios, so the
-# job size cancels, and the saved worker time funds health-gated retries
-# plus the per-query sweep (VERDICT r4 tasks #2/#4).
-SCALE_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "16"))
-SCALE_ITERS = int(os.environ.get("SPARK_GRAFT_SCALE_ITERS", "3"))
-# Noise protocol (fixed, never result-conditioned; every sample disclosed):
-# each level runs in its own short JVM once per visit, visits alternating
-# in order (2,8,32 then 8,2,...) so slow host drift hits both ends of a
-# pair symmetrically; the per-level figure is the best pass-median
-# superstep time over all ACCEPTED visits. r5 adds contamination
-# rejection (VERDICT r4 task #2: the r4 record measured its own
-# starvation and reported the starved number anyway): each worker probes
-# memcpy bandwidth before AND after its measurement, and a visit is
-# accepted only if both probes clear SCALE_HEALTH_FLOOR x the reference
-# bandwidth (record start, floored at nominal-healthy so a starved
-# record start cannot lower the bar). Rejected visits are retried while
-# budget allows — after the sweep reserve — and disclosed either way.
-SCALE_PASSES = int(os.environ.get("SPARK_GRAFT_SCALE_PASSES", "1"))
-#: accepted visits needed per GATING level (the 2->8 north-rule pair);
-#: the top level (single-box DRAM-ceiling disclosure) needs one.
-SCALE_MIN_ACCEPTED = int(os.environ.get("SPARK_GRAFT_SCALE_MIN_ACCEPTED", "2"))
-#: hard cap on visits per level (accepted + rejected) — bounds a
-#: hopelessly sick window to a finite ladder.
-SCALE_MAX_VISITS = int(os.environ.get("SPARK_GRAFT_SCALE_MAX_VISITS", "4"))
-#: a visit's health probes must clear floor*reference to be accepted
-SCALE_HEALTH_FLOOR = float(os.environ.get("SPARK_GRAFT_HEALTH_FLOOR", "0.6"))
-#: nominal-healthy bandwidths for this VM class (measured r2-r4 clean
-#: windows: ~3.1 GB/s single-thread, ~6.5 GB/s 4-proc aggregate); the
-#: health reference is max(record-start, these) so a contaminated record
-#: start cannot quietly lower the acceptance bar.
-NOMINAL_MEMCPY_GB_S = float(os.environ.get("SPARK_GRAFT_NOMINAL_MEMCPY", "2.5"))
-NOMINAL_MP_MEMCPY_GB_S = float(
-    os.environ.get("SPARK_GRAFT_NOMINAL_MP_MEMCPY", "5.0")
-)
-#: seconds of the wall budget reserved for the per-query sweep — the
-#: ladder stops scheduling visits once it would eat into this (VERDICT
-#: r4 task #4: the r3+r4 sweeps were budget-cut to zero by the ladder).
-SWEEP_RESERVE = float(os.environ.get("SPARK_GRAFT_SWEEP_RESERVE", "300"))
+#: the scaling pair's job: replicating the edge table keeps each superstep
+#: several seconds long, so compute, not the stage floor, sets its time
+REPLICATE_FACTOR = 16
+PAIR_SUPERSTEPS = 3
+#: wall seconds the scaling workers leave for the sweep
+SWEEP_RESERVE_S = 300.0
+WORKER_CAP_S = 900.0
 
 
 def remaining() -> float:
@@ -169,77 +79,9 @@ def _get_spark(cores: int, shuffle_partitions: int):
         app_name=f"bench-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=shuffle_partitions,
-        # keep stdout/stderr quiet: the driver's record is a ~2000-char
-        # tail, and r3 died with that tail full of progress-bar frames
+        # progress-bar frames would push the record out of the stdout tail
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-
-
-def _mp_copy(args) -> tuple[float, float, int]:
-    """Child-process body for the multi-process memcpy probe.
-
-    Waits on the shared barrier so every child's copy window overlaps,
-    then copies for ``passes`` rounds; returns (t_start, t_end, bytes) so
-    the parent can compute aggregate bandwidth over the overlapping
-    window only (buffer setup excluded)."""
-    mb, passes, barrier = args
-    import numpy as np
-
-    a = np.random.randint(0, 255, mb * 1_000_000, dtype=np.uint8)
-    barrier.wait(timeout=30)
-    t0 = time.monotonic()
-    n = 0
-    for _ in range(passes):
-        b = a.copy()
-        n += a.nbytes
-        del b
-    return (t0, time.monotonic(), n)
-
-
-def memcpy_probe(mb: int = 200, passes: int = 3, procs: int = 4) -> dict:
-    """Host-health disclosure: single-thread AND multi-process memcpy.
-
-    This sandbox VM is subject to host-side memory starvation (observed:
-    0.01-0.2 GB/s windows where a healthy box does 2-8 GB/s — a 10-100x
-    swing that hits every Spark stage equally). Recording the floor
-    alongside the timings lets a reader tell an engine regression from a
-    sick host: comparable numbers require comparable `memcpy_gb_s`.
-
-    The single-thread probe is blind to CPU-scheduling interference (a
-    host stealing cores slows a 32-thread Spark stage but not a 1-thread
-    copy) — BASELINE.md r3 documents that blind spot, so the probe now
-    also runs ``procs`` concurrent copier processes and reports aggregate
-    bandwidth (`mp_memcpy_gb_s`): low single-thread = bandwidth
-    starvation; low multi-process with healthy single-thread = core
-    starvation."""
-    import multiprocessing as mp
-
-    import numpy as np
-
-    a = np.random.randint(0, 255, mb * 1_000_000, dtype=np.uint8)
-    best = float("inf")
-    for _ in range(passes):
-        t0 = time.monotonic()
-        b = a.copy()
-        best = min(best, time.monotonic() - t0)
-        del b
-    out = {"mb": mb, "passes": passes, "memcpy_gb_s": round(mb / 1000 / best, 2)}
-    try:
-        ctx = mp.get_context("fork")
-        with ctx.Manager() as mgr:
-            barrier = mgr.Barrier(procs)
-            with ctx.Pool(procs) as pool:
-                spans = pool.map(_mp_copy, [(mb, passes, barrier)] * procs)
-        # aggregate bytes over the overlapping copy window only
-        t_lo = min(s[0] for s in spans)
-        t_hi = max(s[1] for s in spans)
-        nbytes = sum(s[2] for s in spans)
-        wall = t_hi - t_lo
-        out["mp_procs"] = procs
-        out["mp_memcpy_gb_s"] = round(nbytes / 1e9 / wall, 2) if wall > 0 else 0.0
-    except Exception as exc:  # noqa: BLE001 — health probe must never kill bench
-        out["mp_error"] = str(exc)[:120]
-    return out
 
 
 def pagerank_run(spark, sf_dir: str) -> dict:
@@ -251,10 +93,8 @@ def pagerank_run(spark, sf_dir: str) -> dict:
     n_edges = edges.count()  # materialize outside the timed section (the
     # reference also excludes dataset prep; loading IS part of the kernel
     # loop below since every superstep rescans the persisted table)
-    # best-of-2 convergence runs, both disclosed: a single pass is exposed
-    # to one bad host-starvation window (see memcpy_probe); the second
-    # pass costs ~25 s healthy and halves the flake odds. The second pass
-    # is skipped if it would bust the harness budget.
+    # best of two convergence runs, both disclosed; the second is skipped
+    # if it would bust the harness budget
     passes = []
     res = None
     for i in range(2):
@@ -276,54 +116,33 @@ def pagerank_run(spark, sf_dir: str) -> dict:
     }
 
 
-def pagerank_scale_run(
-    spark, sf_dir: str, factor: int, iters: int, passes: int = SCALE_PASSES
-) -> dict:
-    """Fixed-superstep PageRank over the k-replicated graph — the scaling
-    probe. Identical job at every parallelism level; edges/sec compares.
+def pagerank_scale_run(spark, sf_dir: str, factor: int, iters: int) -> dict:
+    """Fixed-superstep PageRank over the ``factor``-replicated graph, the
+    scaling pair's job: identical at every parallelism level.
 
-    After one unmeasured warmup (JIT + codegen + cache population), runs
-    ``passes`` measurement passes in the same JVM; each pass's steady
-    estimate is the MEDIAN of its superstep times (robust to one-off GC
-    pauses) and the reported figure is the BEST pass (robust to a noisy
-    neighbor slowing one window of the run). All passes are disclosed."""
+    One unmeasured superstep warms the JVM (JIT, codegen, cache), then one
+    pass of ``iters`` supersteps; the steady figure is the median
+    superstep time, robust to a one-off GC pause."""
     from paragrapher_spark.kernels.pagerank import pagerank
     from paragrapher_spark.sources.edges import copurchase_edges, replicate_edges
 
-    import statistics
-
     edges = replicate_edges(copurchase_edges(spark, sf_dir), factor).persist()
     n_edges = edges.count()
-    # warmup pass: JIT + codegen + cache population; NOT measured
     pagerank(edges, tol=0.0, max_iter=1)
-    pass_stats = []
-    total_dt = 0.0
-    for _ in range(max(1, passes)):
-        t0 = time.monotonic()
-        res = pagerank(edges, tol=0.0, max_iter=iters)
-        res.ranks.count()
-        dt = time.monotonic() - t0
-        total_dt += dt
-        iter_secs = [h["duration_s"] for h in res.history]
-        pass_stats.append(
-            {
-                "seconds": round(dt, 3),
-                "superstep_secs": [round(s, 2) for s in iter_secs],
-                "steady_superstep_sec": round(statistics.median(iter_secs), 3),
-            }
-        )
+    t0 = time.monotonic()
+    res = pagerank(edges, tol=0.0, max_iter=iters)
+    res.ranks.count()
+    dt = time.monotonic() - t0
     edges.unpersist()
-    best = min(p["steady_superstep_sec"] for p in pass_stats)
+    iter_secs = [h["duration_s"] for h in res.history]
+    steady = statistics.median(iter_secs)
     return {
-        "seconds": round(total_dt, 3),
+        "seconds": round(dt, 3),
         "edges": n_edges,
-        "iterations": iters * len(pass_stats),
-        "edges_per_sec": n_edges * iters * len(pass_stats) / total_dt
-        if total_dt > 0
-        else 0.0,
-        "passes": pass_stats,
-        "steady_superstep_sec": best,
-        "steady_edges_per_sec": n_edges / best if best > 0 else 0.0,
+        "iterations": iters,
+        "superstep_secs": [round(s, 2) for s in iter_secs],
+        "steady_superstep_sec": round(steady, 3),
+        "steady_edges_per_sec": round(n_edges / steady) if steady > 0 else 0,
     }
 
 
@@ -372,30 +191,19 @@ def scan_floor_run(spark, sf_dir: str, repeats: int = 3) -> dict:
 
 
 def _worker(cores: int, sf_dir: str) -> None:
-    # health probes BRACKET the measurement (VERDICT r4 task #2): the
-    # parent accepts this visit only if both the pre and post probes
-    # clear the floor — a starvation window that opens or closes during
-    # the measurement is caught by whichever side it touches
-    health_pre = memcpy_probe()
     spark = _get_spark(cores, shuffle_partitions=max(8, cores))
     spark.sparkContext.setLogLevel("ERROR")
-    out = pagerank_scale_run(spark, sf_dir, SCALE_FACTOR, SCALE_ITERS)
+    out = pagerank_scale_run(spark, sf_dir, REPLICATE_FACTOR, PAIR_SUPERSTEPS)
     out["cores"] = cores
     out["scan_floor"] = scan_floor_run(spark, sf_dir)
-    out["host_health_pre"] = health_pre
-    out["host_health"] = memcpy_probe()
     print("BENCH_WORKER_JSON:" + json.dumps(out))
     spark.stop()
 
 
-def _run_worker(cores: int, sf_dir: str, reserve: float = 0.0) -> dict | None:
-    """One ladder level in its own JVM. NEVER raises: a worker that times
-    out or dies (observed: host-side memory starvation stretching a 6-min
-    run past any sane timeout) yields None and the ladder continues — one
-    sick level must not cost the whole bench record. The worker timeout is
-    also clamped to the harness's remaining wall budget minus ``reserve``
-    (the sweep's protected share)."""
-    cap = float(os.environ.get("SPARK_GRAFT_WORKER_TIMEOUT", "900"))
+def _run_worker(cores: int, sf_dir: str, reserve: float) -> dict | None:
+    """One scaling level in its own JVM. Never raises: a worker that times
+    out or dies yields None, so one failed level cannot cost the record.
+    The timeout is clamped to the remaining budget minus ``reserve``."""
     budget_left = remaining() - reserve - 20  # room for sweep + record
     if budget_left < 45:
         sys.stderr.write(f"scaling worker cores={cores}: budget exhausted; skipped\n")
@@ -406,7 +214,7 @@ def _run_worker(cores: int, sf_dir: str, reserve: float = 0.0) -> dict | None:
             capture_output=True,
             text=True,
             env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-            timeout=min(cap, budget_left) if BUDGET > 0 else cap,
+            timeout=min(WORKER_CAP_S, budget_left),
         )
     except subprocess.TimeoutExpired:
         sys.stderr.write(f"scaling worker cores={cores} timed out; skipped\n")
@@ -421,190 +229,21 @@ def _run_worker(cores: int, sf_dir: str, reserve: float = 0.0) -> dict | None:
     return None
 
 
-def _visit_health(r: dict) -> tuple[float, float]:
-    """Worst-case (single-thread, multi-process) GB/s across the visit's
-    pre and post probes — the contamination signal for acceptance."""
-    pre = r.get("host_health_pre", {})
-    post = r.get("host_health", {})
-    single = min(
-        pre.get("memcpy_gb_s", 0.0) or 0.0, post.get("memcpy_gb_s", 0.0) or 0.0
-    )
-    mp = min(
-        pre.get("mp_memcpy_gb_s", single) or single,
-        post.get("mp_memcpy_gb_s", single) or single,
-    )
-    return single, mp
-
-
-def _scaling_ladder(sf_dir: str, ref_health: dict | None = None) -> dict:
-    """Health-gated core ladder (VERDICT r4 task #2); returns the
-    `scaling` extra block.
-
-    A visit (one worker JVM at one core count) is ACCEPTED only if its
-    bracketing memcpy probes clear ``SCALE_HEALTH_FLOOR`` x the health
-    reference — max(record-start probe, nominal-healthy constants), so a
-    record that starts inside a starvation window cannot lower its own
-    bar. Rejected visits are retried (alternating level order, fresh
-    JVMs) while the wall budget minus the sweep reserve allows, capped at
-    ``SCALE_MAX_VISITS`` per level; every visit, accepted or rejected, is
-    disclosed in the record. Gating levels (all but the top) need
-    ``SCALE_MIN_ACCEPTED`` accepted visits; the top level — which exists
-    to DISCLOSE the single-box DRAM ceiling, not to gate — needs one."""
-    ref = ref_health or {}
-    ref_single = max(ref.get("memcpy_gb_s", 0.0) or 0.0, NOMINAL_MEMCPY_GB_S)
-    ref_mp = max(
-        ref.get("mp_memcpy_gb_s", 0.0) or 0.0, NOMINAL_MP_MEMCPY_GB_S
-    )
-    floor_single = SCALE_HEALTH_FLOOR * ref_single
-    floor_mp = SCALE_HEALTH_FLOOR * ref_mp
-
-    top = max(SCALE_CORES)
-    need = {
-        c: (1 if (c == top and len(SCALE_CORES) > 2) else SCALE_MIN_ACCEPTED)
-        for c in SCALE_CORES
-    }
-    accepted: dict[int, list[dict]] = {c: [] for c in SCALE_CORES}
-    rejected: dict[int, list[dict]] = {c: [] for c in SCALE_CORES}
-    visits = {c: 0 for c in SCALE_CORES}
-    sweep_on = os.environ.get("SPARK_GRAFT_ALLQ", "1") != "0"
-    reserve = SWEEP_RESERVE if sweep_on else 0.0
-    for rnd in range(SCALE_MAX_VISITS):
-        order = SCALE_CORES if rnd % 2 == 0 else SCALE_CORES[::-1]
-        pending = [
-            c for c in order if len(accepted[c]) < need[c] and visits[c] < SCALE_MAX_VISITS
-        ]
-        if not pending:
-            break
-        for c in pending:
-            r = _run_worker(c, sf_dir, reserve=reserve)
-            if r is None:
-                visits[c] = SCALE_MAX_VISITS  # budget/timeout: stop this level
-                continue
-            visits[c] += 1
-            single, mp = _visit_health(r)
-            r["visit"] = visits[c]
-            # both floors apply to EVERY level: mp-starved windows
-            # distort even 1-core steady times (see the calibration
-            # note on SCALE_CORES), so no level's figure is trustworthy
-            # while the aggregate probe is under the floor
-            r["health_ok"] = single >= floor_single and mp >= floor_mp
-            (accepted if r["health_ok"] else rejected)[c].append(r)
-            if not r["health_ok"]:
-                sys.stderr.write(
-                    f"scaling cores={c}: visit rejected (memcpy {single:.2f}/"
-                    f"{mp:.2f} GB/s < floor {floor_single:.2f}/{floor_mp:.2f})\n"
-                )
-
-    def _summ(r: dict) -> dict:
-        s, m = _visit_health(r)
-        return {
-            "visit": r.get("visit"),
-            "health_ok": r.get("health_ok"),
-            "steady_superstep_sec": r["steady_superstep_sec"],
-            "passes": r["passes"],
-            "host_memcpy_gb_s": round(s, 2),
-            "host_mp_memcpy_gb_s": round(m, 2),
-        }
-
-    # per level: best accepted visit; fall back to best rejected visit
-    # (clearly flagged) so a fully-starved window still yields a record
-    runs: dict[int, dict | None] = {}
-    for c in SCALE_CORES:
-        pool = accepted[c] or rejected[c]
-        if not pool:
-            runs[c] = None
-            continue
-        best = min(pool, key=lambda r: r["steady_superstep_sec"])
-        merged = dict(best)
-        merged["n_accepted"] = len(accepted[c])
-        merged["n_rejected"] = len(rejected[c])
-        merged["from_rejected_only"] = not accepted[c]
-        merged["visits"] = [
-            _summ(r) for r in accepted[c] + rejected[c]
-        ]
-        runs[c] = merged
-    skipped = [c for c, r in runs.items() if r is None]
-    pairs = []
-    for lo_c, hi_c in zip(SCALE_CORES, SCALE_CORES[1:]):
-        lo, hi = runs.get(lo_c), runs.get(hi_c)
-        if not (lo and hi):
-            continue
-        thr_lo = lo["steady_edges_per_sec"]
-        thr_hi = hi["steady_edges_per_sec"]
-        ratio = hi_c / lo_c
-        # paired-by-visit efficiencies: visit k of both levels runs in
-        # the same ladder round (time-adjacent windows), so each paired
-        # figure sees one host state — disclosed alongside the
-        # conservative headline (best-of-level), because under drifting
-        # interference the independent per-level minima can come from
-        # DIFFERENT windows and understate the true ratio (observed:
-        # paired 0.877 in the same record whose best-of-level read
-        # 0.722, 1-core level swinging +-20% between visits).
-        lo_by_visit = {
-            v["visit"]: v["steady_superstep_sec"]
-            for v in lo.get("visits", [])
-            if v.get("health_ok")
-        }
-        hi_by_visit = {
-            v["visit"]: v["steady_superstep_sec"]
-            for v in hi.get("visits", [])
-            if v.get("health_ok")
-        }
-        paired = [
-            round((lo_by_visit[k] / hi_by_visit[k]) / ratio, 3)
-            for k in sorted(set(lo_by_visit) & set(hi_by_visit))
-            if hi_by_visit[k] > 0
-        ]
-        pairs.append(
-            {
-                "cores_lo": lo_c,
-                "cores_hi": hi_c,
-                "parallelism_ratio": ratio,
-                "steady_edges_per_sec_lo": round(thr_lo),
-                "steady_edges_per_sec_hi": round(thr_hi),
-                "efficiency": round((thr_hi / thr_lo) / ratio, 3)
-                if thr_lo > 0
-                else 0.0,
-                "paired_efficiencies": paired,
-                # a pair is clean iff both its levels had accepted visits
-                "clean_window": not (
-                    lo.get("from_rejected_only") or hi.get("from_rejected_only")
-                ),
-            }
-        )
+def _scaling_pair(sf_dir: str, reserve: float) -> dict:
+    """The ``scaling`` detail block: the replicated-PageRank worker at
+    ``local[1]`` and at ``local[CPUS]``, efficiency as measured."""
+    runs = {c: _run_worker(c, sf_dir, reserve) for c in (1, CPUS)}
+    lo, hi = runs[1], runs[CPUS]
+    eff = None
+    if lo and hi and lo["steady_edges_per_sec"] > 0:
+        eff = round(hi["steady_edges_per_sec"] / lo["steady_edges_per_sec"] / CPUS, 3)
     return {
-        "replicate_factor": SCALE_FACTOR,
-        "supersteps": SCALE_ITERS,
-        "passes_per_level": SCALE_PASSES,
-        "min_accepted_per_gating_level": SCALE_MIN_ACCEPTED,
-        "health_floor_gb_s": {
-            "single": round(floor_single, 2),
-            "mp": round(floor_mp, 2),
-        },
-        "skipped_levels": skipped,
-        "steady_estimator": (
-            "best pass-median superstep time over health-ACCEPTED visits "
-            "(alternating level order, one JVM per visit; rejected visits "
-            "disclosed, used only as a flagged fallback)"
-        ),
-        "edges": next((r["edges"] for r in runs.values() if r), None),
-        "scan_floor": {
-            str(r["cores"]): r["scan_floor"]
-            for r in runs.values()
-            if r and "scan_floor" in r
-        },
-        "runs": {
-            str(c): {
-                k: (round(v, 3) if isinstance(v, float) else v)
-                for k, v in r.items()
-                if k not in ("host_health_pre", "host_health")
-            }
-            for c, r in runs.items()
-            if r
-        },
-        "pairs": pairs,
-        # headline: the linear-region 4x pair (see SCALE_CORES note)
-        "efficiency": pairs[0]["efficiency"] if pairs else None,
+        "replicate_factor": REPLICATE_FACTOR,
+        "supersteps": PAIR_SUPERSTEPS,
+        "skipped_levels": [c for c, r in runs.items() if r is None],
+        "runs": {str(c): r for c, r in runs.items() if r},
+        "pairs": [[1, CPUS, eff]] if eff is not None else [],
+        "efficiency": eff,
     }
 
 
@@ -622,29 +261,11 @@ def _compact_record(
         "sf": _sf_label(SF_DIR),
         "pagerank_edges_per_sec": round(pr.get("edges_per_sec", -1)),
         "pagerank_iterations": pr.get("iterations", -1),
-        # [cores_lo, cores_hi, efficiency, clean] — clean=False means the
-        # pair includes a level whose every visit failed the health gate
-        # (the number is a flagged fallback, not evidence)
-        "scaling_pairs": [
-            [
-                p["cores_lo"],
-                p["cores_hi"],
-                p["efficiency"],
-                bool(p.get("clean_window")),
-            ]
-            for p in scaling.get("pairs", [])
-        ],
+        "pagerank_converged": pr.get("converged"),
+        # [cores_lo, cores_hi, efficiency]
+        "scaling_pairs": scaling.get("pairs", []),
         "scaling_efficiency": scaling.get("efficiency"),
-        # host-starvation disclosure: healthy ~2-8 GB/s single-thread;
-        # readings <0.5 mean the run was starved by the host, not the engine
-        "host_memcpy_gb_s": [
-            extra.get("host_health_start", {}).get("memcpy_gb_s"),
-            extra.get("host_health_end", {}).get("memcpy_gb_s"),
-        ],
-        "host_mp_memcpy_gb_s": [
-            extra.get("host_health_start", {}).get("mp_memcpy_gb_s"),
-            extra.get("host_health_end", {}).get("mp_memcpy_gb_s"),
-        ],
+        "nproc": NPROC,
         "wall_sec": round(time.monotonic() - T_START, 1),
         "sweep": sweep_state,
         "detail": "BENCH_local.json",
@@ -703,6 +324,7 @@ def _write_detail(queries: dict, extra: dict, allq: dict | None) -> None:
         "unit": "sec",
         "queries": queries,
         "sf": _sf_label(SF_DIR),
+        "nproc": NPROC,
         **extra,
     }
     if allq is not None:
@@ -724,12 +346,7 @@ def main() -> None:
     # prior sweep timings for cheapest-first sweep ordering — read BEFORE
     # the early _write_detail overwrites BENCH_local.json
     prior_sweep = _load_prior_sweep()
-    extra["host_health_start"] = memcpy_probe()
-
-    # SPARK_GRAFT_ONLY=scaling: skip the main-phase queries and run just
-    # the core-ladder workers — for re-measuring the scaling pairs after a
-    # host-starvation window without paying the full sweep
-    only_scaling = os.environ.get("SPARK_GRAFT_ONLY") == "scaling"
+    sweep_on = os.environ.get("SPARK_GRAFT_ALLQ", "1") != "0"
 
     spark = _get_spark(CPUS, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -744,15 +361,11 @@ def main() -> None:
     from paragrapher_spark.sources.edges import copurchase_edges, load_table
 
     # headline: PageRank to convergence (in-process at CPUS)
-    if only_scaling:
-        queries["pagerank_copurchase"] = -1.0
-        extra["pagerank"] = {"skipped": "SPARK_GRAFT_ONLY=scaling"}
-    else:
-        pr = pagerank_run(spark, SF_DIR)
-        queries["pagerank_copurchase"] = round(pr["seconds"], 3)
-        extra["pagerank"] = pr
+    pr = pagerank_run(spark, SF_DIR)
+    queries["pagerank_copurchase"] = round(pr["seconds"], 3)
+    extra["pagerank"] = pr
 
-    if not only_scaling and remaining() > 120:
+    if remaining() > 120:
         edges = copurchase_edges(spark, SF_DIR).persist()
         edges.count()
 
@@ -779,11 +392,10 @@ def main() -> None:
         from paragrapher_spark.operators.similarity import knn_ivf
         from paragrapher_spark.streaming.events import sessionize_batch
 
-        # knn_ivf + triangle_count tracked at sf0.01 from r5 on (VERDICT
-        # r4 task #4: their sf0.1 runs cost ~25 s of the 840 s window;
-        # the sf0.01 versions regression-track the same plans and the
-        # saved time funds the per-query sweep). Keys carry the sf tag so
-        # cross-round comparisons never silently mix scales.
+        # knn_ivf + triangle_count run at sf0.01: the plans are
+        # scale-independent and their sf0.1 runs would cost ~25 s of the
+        # sweep's time. Keys carry the sf tag so comparisons never mix
+        # scales.
         sf001_dir = os.environ.get(
             "SPARK_GRAFT_SMALL_SF_DIR", "/root/testdata/sf0.01"
         )
@@ -805,7 +417,7 @@ def main() -> None:
         sessionize_batch(ev, gap_minutes=30).count()
         queries["sessions"] = round(time.monotonic() - t0, 3)
 
-    if not only_scaling and remaining() > 90:
+    if remaining() > 90:
         # BVGraph ingest probe — the reference's headline metric class is
         # compressed-graph LOAD throughput (paper §5.2/§5.4: 179-952 M
         # edges/s with a C/Java codec). This engine's steady-state path is
@@ -863,28 +475,22 @@ def main() -> None:
 
     spark.stop()
 
-    # scaling evidence: same job, ladder of parallelism levels, separate
-    # JVMs, health-gated visits per level (see the noise-protocol note)
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0" and len(SCALE_CORES) > 1:
-        extra["scaling"] = _scaling_ladder(
-            SF_DIR, ref_health=extra.get("host_health_start")
+    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0" and CPUS > 1:
+        extra["scaling"] = _scaling_pair(
+            SF_DIR, reserve=SWEEP_RESERVE_S if sweep_on else 0.0
         )
 
-    extra["host_health_end"] = memcpy_probe()
-
-    # EARLY compact record: everything the driver's gate needs (headline +
-    # scaling pairs) is on stdout and flushed BEFORE the sweep starts, so
-    # an external timeout during the sweep can no longer void the round's
-    # bench evidence (the r1-r3 failure mode).
+    # early compact record: headline and scaling pair are on stdout before
+    # the sweep starts, so a timeout during the sweep keeps them
     _write_detail(queries, extra, None)
     print(_compact_record(queries, extra, None, sweep_state="pending"), flush=True)
 
     # per-query regression sweep: every registry query, one pass at
-    # sf0.001, in registry order (cheapest-first by construction), under
-    # the harness deadline; anything cut is LOUDLY listed as skipped.
+    # sf0.001, under the harness deadline; anything cut is listed as
+    # skipped.
     allq: dict[str, float] = {}
     skipped_q: list[str] = []
-    if not only_scaling and os.environ.get("SPARK_GRAFT_ALLQ", "1") != "0":
+    if sweep_on:
         spark = _get_spark(CPUS, shuffle_partitions=CPUS)
         spark.sparkContext.setLogLevel("ERROR")
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -893,11 +499,10 @@ def main() -> None:
         allq_dir = os.environ.get(
             "SPARK_GRAFT_ALLQ_DIR", "/root/testdata/sf0.001"
         )
-        # cheapest-first by the PREVIOUS record's sweep timings (registry
-        # order is now the driver-gate priority order — heavy never-gated
-        # queries first — which is exactly the wrong order for a
-        # deadline-bounded sweep). Unknown/new queries slot in at the
-        # median so one new monster cannot eat the budget before the
+        # cheapest-first by the prior records' sweep timings (registry
+        # order groups queries by family, not by cost), so a deadline cut
+        # drops the most expensive queries. Unknown/new queries slot in at
+        # the median so one new monster cannot eat the budget before the
         # bulk has reported.
         qmap = entrymod.queries()
         if prior_sweep:

@@ -338,6 +338,12 @@ def train_ivf_centroids(
         .collect()
     )
     cents = [(i, list(r["vec"])) for i, r in enumerate(seeds)]
+    if not cents:
+        base.unpersist()
+        raise ValueError(
+            f"IVF training needs n_centroids >= 1 and a non-empty input "
+            f"(n_centroids={n_centroids})"
+        )
     dim = len(cents[0][1])
     sc = float(_IVF_SCALE)
     for _ in range(lloyd_iters):
@@ -392,9 +398,13 @@ def knn_ivf(
     deterministic, SQL-reproducible path used by the oracle-gated
     ``knn_ivf_fixed`` driver query).
     """
-    cents = centroids or train_ivf_centroids(
-        emb, n_centroids, lloyd_iters, vec_col, id_col, seed
-    )
+    cents = centroids
+    if cents is None:
+        cents = train_ivf_centroids(
+            emb, n_centroids, lloyd_iters, vec_col, id_col, seed
+        )
+    elif not cents:
+        raise ValueError("knn_ivf needs at least one centroid")
     base = with_norm(emb, vec_col, id_col).persist()
     scored = base.select(
         F.col(id_col).alias("id"), "vec", "norm",

@@ -1,0 +1,87 @@
+"""Registry and bench-record checks that need no Spark session.
+
+Nothing here starts a JVM: the registry and oracle dicts are built without
+running a query, ``_substrate`` is driven with stand-in session objects, and
+``bench._compact_record`` formats a synthetic record.
+"""
+
+from __future__ import annotations
+
+import gc
+import json
+import weakref
+
+import pytest
+
+import __spark_entry__ as entry
+import bench
+
+
+class _Session:
+    """Stand-in for a SparkSession: only its identity matters."""
+
+
+def test_queries_and_oracles_name_the_same_146():
+    names = set(entry.queries())
+    assert len(names) == 146
+    assert names == set(entry.oracle_sql())
+
+
+def test_substrate_reuses_per_session_and_evicts_on_switch(monkeypatch):
+    monkeypatch.setattr(entry, "_SUBSTRATE_CACHE", {"spark": None, "values": {}})
+    builds = []
+
+    class _Value:
+        pass
+
+    def build():
+        builds.append(1)
+        return _Value()
+
+    s1 = _Session()
+    v1 = entry._substrate(s1, "k", build)
+    assert entry._substrate(s1, "k", build) is v1
+    assert len(builds) == 1
+    entry._substrate(s1, ("other", "sf"), build)
+    assert len(builds) == 2
+
+    s2 = _Session()
+    v2 = entry._substrate(s2, "k", build)
+    assert v2 is not v1 and len(builds) == 3
+    # the first session and everything built for it are no longer held
+    dead_session, dead_value = weakref.ref(s1), weakref.ref(v1)
+    del s1, v1
+    gc.collect()
+    assert dead_session() is None and dead_value() is None
+    assert entry._substrate(s2, "k", build) is v2 and len(builds) == 3
+
+
+@pytest.mark.parametrize("failed", [0, 3])
+def test_compact_record_fits_with_a_full_sweep(failed):
+    names = sorted(entry.queries())
+    allq = {n: (-1.0 if i < failed else round(0.5 + i / 7, 2)) for i, n in enumerate(names)}
+    queries = {
+        "pagerank_copurchase": 24.81,
+        "in_degree_dist": 1.2,
+        "wcc": 9.87,
+        "text_stats": 0.91,
+        "minhash_near_dups": 6.54,
+        "triangle_count_sf001": 2.31,
+        "knn_ivf_sf001": 3.02,
+        "sessions": 1.75,
+        "webgraph_decode": 12.4,
+    }
+    extra = {
+        "pagerank": {"edges_per_sec": 812345.6, "iterations": 17, "converged": True},
+        "scaling": {"pairs": [[1, 4, 0.812]], "efficiency": 0.812},
+        "sweep_n_skipped": 0,
+    }
+    line = bench._compact_record(queries, extra, allq, sweep_state="done")
+    assert len(line) <= 1900
+    rec = json.loads(line)
+    assert rec["nproc"] == bench.NPROC
+    assert rec["scaling_pairs"] == [[1, 4, 0.812]]
+    assert all(len(p) == 3 for p in rec["scaling_pairs"])
+    assert rec["sweep_sf0001"]["n_ok"] == 146 - failed
+    assert len(rec["sweep_sf0001"]["failed"]) == failed
+    assert rec["queries"] == queries

@@ -235,6 +235,21 @@ def test_knn_ivf_overlaps_bruteforce(emb):
     assert sum(recalls) / len(recalls) >= 0.6, sum(recalls) / len(recalls)
 
 
+def test_knn_ivf_rejects_empty_centroids(spark, emb):
+    """An empty supplied quantizer must not silently train, and training
+    that yields no centroid (k=0, or no input rows) must fail clearly."""
+    from paragrapher_spark.operators.similarity import knn_ivf
+
+    df, _ = emb
+    with pytest.raises(ValueError, match="at least one centroid"):
+        knn_ivf(df, k=3, centroids=[])
+    with pytest.raises(ValueError, match="n_centroids"):
+        knn_ivf(df, k=3, n_centroids=0)
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="non-empty input"):
+        knn_ivf(empty, k=3, n_centroids=4)
+
+
 def test_topk_plan_is_bounded(emb):
     """The per-query top-k must compile to WindowGroupLimit nodes (partial
     below the shuffle AND final above it) — the bounded-buffer guarantee:
