@@ -23,8 +23,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import md5_60, portable_hash
 from paragrapher_spark.functions.text import detect_language, fingerprint, text_stats
-from paragrapher_spark.graph import Graph, edges_from_corpus
+from paragrapher_spark.graph import Graph, edges_from_corpus, undirected_pairs
 from paragrapher_spark.kernels.bfs import bfs
 from paragrapher_spark.kernels.components import component_sizes, connected_components
 from paragrapher_spark.kernels.degrees import degree_distribution, top_k_degrees
@@ -1179,12 +1180,7 @@ def _q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         surv, "lang", _STRAT_FRACTIONS, ["doc_id"], default_fraction=_STRAT_DEFAULT
     )
     split = assign_splits(sampled, _SPLIT_WEIGHTS, ["doc_id"])
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit("pack"), F.lit("42"),
-                              F.col("doc_id").cast("string"))), 1, 15
-        ), 16, 10,
-    ).cast("long")
+    h = portable_hash("pack", 42, "doc_id")
     withb = split.withColumn(
         "bucket", F.pmod(h, F.lit(_PACK_BUCKETS)).cast("int")
     )
@@ -1559,19 +1555,7 @@ def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(tempfile.gettempdir(), f"pg_jsonl_docs_{tag}")
     write_jsonl(docs, path, num_files=8)
     back = read_jsonl(spark, path)
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.col("doc_id").cast("string"), "lang", "text"
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_60(F.concat_ws(":", F.col("doc_id").cast("string"), "lang", "text"))
     # fold each 60-bit hash to 32 bits before summing: the digest sum
     # stays a valid long to ~2^31 docs per group (the raw sum overflows
     # at ~8 rows)
@@ -2693,12 +2677,8 @@ def _q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # share the (expensive) co-purchase derivation instead of replaying
     # the whole lineage twice (plan audit: 84 -> ~40 exchanges)
     edges = (
-        copurchase_edges(spark, sf_dir)
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
+        undirected_pairs(copurchase_edges(spark, sf_dir))
+        .toDF("src", "dst")
         .localCheckpoint(eager=True)
     )
     s = triangle_count_sampled(edges, fraction=0.5)
@@ -4591,9 +4571,9 @@ def _lp_oracle_sql(rounds: int) -> str:
         f"WITH edges AS MATERIALIZED ({COPURCHASE_EDGES_SQL}),",
         """
     und AS MATERIALIZED (
-        SELECT src AS a, dst AS b FROM edges
+        SELECT src AS a, dst AS b FROM edges WHERE src <> dst
         UNION
-        SELECT dst AS a, src AS b FROM edges
+        SELECT dst AS a, src AS b FROM edges WHERE src <> dst
     ),
     lp0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS label FROM und)""",
     ]
@@ -5526,7 +5506,7 @@ def _minhash_oracle_sql(
 
 def _simhash_oracle_sql(max_hamming: int = 8) -> str:
     """operators/dedup.py simhash_candidates mirrored: 60-bit SimHash
-    (token_hash60 per token, majority bit-vote 2*ones > n), 4x15-bit
+    (md5_60 per token, majority bit-vote 2*ones > n), 4x15-bit
     pigeonhole bands, popcount(xor) Hamming filter. Docs with zero tokens
     hash to 0 and participate in banding, exactly like the kernel."""
     from paragrapher_spark.operators.dedup import SIMHASH_BITS

@@ -156,12 +156,18 @@ def graph_from_edges(edges: DataFrame, weight: bool = False) -> Graph:
     return Graph(vertices=vertices, edges=edges, num_vertices=n_v, num_edges=n_e)
 
 
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected view: edges ∪ reversed edges, distinct (paper §5 dataset
-    prep; needed by CC/LP/triangles)."""
-    fwd = edges.select("src", "dst")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
+def undirected_pairs(edges: DataFrame) -> DataFrame:
+    """The undirected simple graph underlying ``edges(src, dst)``: one
+    ``(a, b)`` row per unordered pair, ``a < b`` — self-loops dropped,
+    directions and duplicates collapsed."""
+    return (
+        edges.where(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .distinct()
+    )
 
 
 def quotient_graph(

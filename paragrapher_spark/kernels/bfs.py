@@ -22,6 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -160,11 +161,7 @@ def pseudo_diameter(
     discipline. Everything is integer-exact, so the result gates
     bit-for-bit against an unrolled-BFS SQL oracle.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))

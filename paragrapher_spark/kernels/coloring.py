@@ -9,7 +9,7 @@ workloads are degree/WCC/converters) — this EXCEEDS it the same way
 MIS/k-truss do.
 
 Determinism contract: vertices carry the repo's fixed md5 priority
-(`sources/corpus.py:58-80` hash family, totally ordered by (h, id)). A
+(`functions/hashing.py:portable_hash`, totally ordered by (h, id)). A
 vertex is colored in the round after ALL its lower-priority neighbors are
 colored, and picks the SMALLEST positive color unused by them. The result
 is exactly the SEQUENTIAL greedy coloring over vertices sorted by (h, id)
@@ -41,7 +41,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.kernels.mis import _h
+from paragrapher_spark.functions.hashing import portable_hash
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 
 SEED = 42
@@ -68,18 +69,12 @@ def greedy_coloring(
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     pri = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
         .distinct()
-        .select("id", _h("color", seed, "id").alias("h"))
+        .select("id", portable_hash("color", seed, "id").alias("h"))
     )
     sym = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
         und.select(F.col("b").alias("v"), F.col("a").alias("u"))

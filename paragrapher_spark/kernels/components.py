@@ -33,6 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -323,13 +324,7 @@ def bipartite_check(edges: DataFrame, max_depth: int = 16) -> DataFrame:
             f"bipartite_check: {n_unreached} vertices unreached at "
             f"max_depth={max_depth} — raise max_depth"
         )
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     conflicts = (
         und.join(side.select(F.col("id").alias("a"), F.col("side").alias("sa"),
                              F.col("component")), on="a")

@@ -36,6 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -63,11 +64,7 @@ def coreness(
     the H-index operator is a pure function of the persisted state, so
     a resumed run converges to the identical fixpoint."""
     spark = edges.sparkSession
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
         und.select(F.col("a").alias("v"), F.col("b").alias("u"))

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
+
 
 def in_degrees(edges: DataFrame) -> DataFrame:
     """(id, in_degree) — `test1:59`'s atomic in_degrees[dst]++."""
@@ -69,11 +71,7 @@ def rich_club(edges: DataFrame) -> DataFrame:
     |E|. Cost = degree agg + one two-sided degree join on the edges +
     two histogram aggs.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -144,11 +142,7 @@ def avg_neighbor_degree(edges: DataFrame) -> DataFrame:
     the same single-pass shape as ``rich_club`` above; no per-k scan, no
     window over |E| rows.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))

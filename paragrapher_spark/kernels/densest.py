@@ -29,6 +29,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 
 
@@ -56,14 +57,7 @@ def densest_subgraph(
     if eps_num < 0 or eps_den <= 0:
         raise ValueError(f"invalid epsilon {eps_num}/{eps_den}")
     spark = edges.sparkSession
-    e = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = undirected_pairs(edges).toDF("src", "dst").localCheckpoint(eager=False)
 
     def step(rnd: int, state, ckpt):
         e, _, best = state

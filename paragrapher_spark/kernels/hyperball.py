@@ -47,6 +47,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
 from paragrapher_spark.plans import superstep
 
 M = 16  # registers per counter (b = 4 index bits)
@@ -71,23 +72,9 @@ class HyperBallResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _hash60(col: Column, tag: str = "hb", seed: int = 42) -> Column:
-    """Engine-portable 60-bit hash (sources/corpus.py family): DuckDB twin
-    is ('0x' || substr(md5(concat_ws(':', tag, seed, id)), 1, 15))::BIGINT."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(tag), F.lit(str(seed)), col.cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
 def _init_registers(vertices: DataFrame) -> DataFrame:
     """(id) -> (id, r0..r15): the singleton-set HLL counter of each vertex."""
-    h = _hash60(F.col("id"))
+    h = portable_hash("hb", 42, "id")
     reg = F.pmod(h, F.lit(M))
     rest = F.shiftright(h, 4)  # remaining 56 hash bits
     tz = F.bit_count((rest.bitwiseAND(-rest)) - F.lit(1))

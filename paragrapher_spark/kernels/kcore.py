@@ -20,6 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 
 
@@ -33,14 +34,7 @@ class KCoreResult:
 
 def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> KCoreResult:
     """k-core of the undirected simple graph underlying edges(src, dst)."""
-    e = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = undirected_pairs(edges).toDF("src", "dst").localCheckpoint(eager=False)
 
     def step(rnd: int, state, ckpt):
         e, prev_m, _ = state

@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -138,11 +139,7 @@ def ktruss(
     loop = superstep.run(
         step,
         lambda: (
-            edges.where(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-            )
-            .distinct()
+            undirected_pairs(edges)
             .localCheckpoint(eager=False)
             .select("a", "b", F.lit(0).cast("long").alias("support")),
             None,

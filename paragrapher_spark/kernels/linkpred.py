@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.kernels.triangles import _undirected
+from paragrapher_spark.graph import undirected_pairs
 
 RA_FIXED_POINT = 1_000_000_000_000  # 1e-12 resolution; deg < 1e12 assumed
 
@@ -62,7 +62,7 @@ def link_prediction(
     (single IEEE division). Pairs already joined by an edge are anti-joined
     out — the link-prediction task scores *candidate* links only.
     """
-    und = _undirected(edges).persist()
+    und = undirected_pairs(edges).persist()
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -130,7 +130,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
     S·Σxy ≤ 4m²·deg_max² — exact in int64 up to ~10^9 edge-degree product
     scale; past that promote the products to decimal(38,0).
     """
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))

@@ -10,8 +10,8 @@ loaded-graph shape.
 
 Determinism contract (the repo-wide mis/coloring discipline): every
 canonical undirected edge (a < b) gets ONE fixed priority from the
-corpus md5 hash family, totally ordered by (h, a, b). Each round an
-undecided edge joins the matching iff its key is strictly smallest
+portable md5 hash (functions/hashing.py), totally ordered by (h, a, b).
+Each round an undecided edge joins the matching iff its key is strictly smallest
 among all undecided edges touching either of its endpoints; edges
 incident to a newly matched vertex are removed. The fixpoint is the
 *lexicographically first* maximal matching w.r.t. that order —
@@ -39,32 +39,11 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.kernels.mis import SEED
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
-
-
-def _edge_h(seed: int) -> F.Column:
-    """md5 priority of the canonical edge (a, b) — the mis/corpus hash
-    family keyed on 'a:b' so DuckDB replays it as
-    ``('0x' || substr(md5(concat_ws(':', 'match', seed, a, b)), 1, 15))::BIGINT``."""
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("match"),
-                    F.lit(str(seed)),
-                    F.col("a").cast("string"),
-                    F.col("b").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 @dataclass
@@ -88,13 +67,8 @@ def maximal_matching(
 
     def _start() -> tuple[DataFrame, DataFrame, int]:
         undecided = (
-            edges.where(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-            .withColumn("h", _edge_h(seed))
+            undirected_pairs(edges)
+            .withColumn("h", portable_hash("match", seed, "a", "b"))
             .localCheckpoint(eager=False)
         )
         matching = spark.createDataFrame([], "a long, b long, round int")
@@ -105,7 +79,7 @@ def maximal_matching(
         undecided = (
             snap.where(F.col("round").isNull())
             .select("a", "b")
-            .withColumn("h", _edge_h(seed))
+            .withColumn("h", portable_hash("match", seed, "a", "b"))
         )
         matching = snap.where(F.col("round").isNotNull()).select(
             "a", "b", F.col("round").cast("int").alias("round")

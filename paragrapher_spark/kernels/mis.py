@@ -9,9 +9,9 @@ literature — Luby, "A simple parallel algorithm for the maximal
 independent set problem", SIAM J. Comput. 15(4), 1986).
 
 Determinism contract: instead of Luby's per-round random priorities, every
-vertex gets ONE fixed priority from the corpus md5 hash family
-(`sources/corpus.py:58-80`), totally ordered by (h, id). Each round,
-an undecided vertex joins the MIS iff its priority is strictly smallest
+vertex gets ONE fixed priority from the engine-portable md5 hash
+(`functions/hashing.py:portable_hash`), totally ordered by (h, id). Each
+round, an undecided vertex joins the MIS iff its priority is strictly smallest
 among itself and all UNDECIDED neighbors; its neighbors become excluded.
 The fixpoint is the *lexicographically first* MIS w.r.t. the (h, id)
 order — identical to the sequential greedy over vertices sorted by
@@ -37,29 +37,12 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
+from paragrapher_spark.graph import undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
 SEED = 42
-
-
-def _h(tag: str, seed: int, col) -> F.Column:
-    """Corpus md5 hash family (sources/corpus.py:58-80): uniform 63-bit
-    value DuckDB reproduces as
-    ``('0x' || substr(md5(concat_ws(':', tag, seed, col)), 1, 15))::BIGINT``."""
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(tag), F.lit(str(seed)), F.col(col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 @dataclass
@@ -86,13 +69,7 @@ def maximal_independent_set(
     vertices simply have no row, and the md5 priority is a pure function
     of id so it is recomputed on resume rather than stored."""
     spark = edges.sparkSession
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
+    und = undirected_pairs(edges)
     # symmetric adjacency, reused every round
     adj = (
         und.select(F.col("a").alias("v"), F.col("b").alias("u"))
@@ -105,7 +82,7 @@ def maximal_independent_set(
             und.select(F.col("a").alias("id"))
             .unionByName(und.select(F.col("b").alias("id")))
             .distinct()
-            .select("id", _h("mis", seed, "id").alias("h"))
+            .select("id", portable_hash("mis", seed, "id").alias("h"))
             .localCheckpoint(eager=False)
         )
         members = spark.createDataFrame([], "id long, round int")
@@ -114,7 +91,7 @@ def maximal_independent_set(
     def _restore(_: int, snap: DataFrame) -> tuple[DataFrame, DataFrame, int]:
         snap = snap.localCheckpoint(eager=True)
         undecided = snap.where(F.col("round").isNull()).select(
-            "id", _h("mis", seed, "id").alias("h")
+            "id", portable_hash("mis", seed, "id").alias("h")
         )
         members = snap.where(F.col("round").isNotNull()).select(
             "id", F.col("round").cast("int").alias("round")

@@ -26,21 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _undirected(edges: DataFrame) -> DataFrame:
-    return (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+from paragrapher_spark.graph import undirected_pairs
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """(src, dst, sdeg, ddeg): src -> dst iff (deg, id) of src < of dst."""
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -110,7 +101,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     2*t(v) / (d(v)*(d(v)-1)) over the undirected simple graph, for every
     vertex with degree >= 2 (the denominator's domain). Composes the
     triangle kernel with the degree aggregation — one extra join."""
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -148,7 +139,7 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     combinable count + one left join on (a, b) — all shuffles keyed on
     edge endpoints, no skew beyond the triangle kernel's own (already
     orientation-capped)."""
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     tris = triangles(edges)
 
     def _edge(u: str, v: str) -> list:
@@ -174,7 +165,7 @@ def transitivity(edges: DataFrame) -> DataFrame:
     wedges over all wedges — Newman SIAM Rev. 2003 eq. 3). Exact longs
     (d(d-1)/2 is always integral) + ONE IEEE division, SQL-reproducible
     bit-for-bit. Cost: the triangle kernel + one degree aggregation."""
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -230,13 +221,7 @@ def triangle_count_sampled(
         threshold_for,
     )
 
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
-    )
+    und = undirected_pairs(edges).toDF("src", "dst")
     kept = sample_hash(und, fraction, ["src", "dst"], tag=tag, seed=seed)
     inv = Fraction(HASH_SPACE, threshold_for(fraction)) ** 3
     return triangle_count(kept).select(
@@ -268,7 +253,7 @@ def square_count(
     drop — the minhash/knn_lsh metric convention); with the cap unset
     the count is exact and the extra columns are omitted.
     """
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         und.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -345,15 +330,15 @@ def delta_triangles(
     Hub deltas fan out like any wedge join; AQE skew-split applies (the
     degree-orientation trick does not, because both endpoints' full
     adjacencies are needed)."""
-    und = _undirected(full_edges)  # (a, b) with a < b, distinct
+    und = undirected_pairs(full_edges)  # (a, b) with a < b, distinct
     adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         und.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )  # (v, n) both directions
-    d = _undirected(delta_edges)
+    d = undirected_pairs(delta_edges)
     if old_edges is not None:
         # drop delta edges the old graph already had — their triangles
         # are in previous_total; counting them again double-counts
-        d = d.join(_undirected(old_edges), on=["a", "b"], how="left_anti")
+        d = d.join(undirected_pairs(old_edges), on=["a", "b"], how="left_anti")
     wa = adj.select(F.col("v").alias("a"), F.col("n").alias("w"))
     wb = adj.select(F.col("v").alias("b"), F.col("n").alias("w"))
     tris = (

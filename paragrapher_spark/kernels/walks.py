@@ -10,7 +10,7 @@ it as one equi-join per step.
 
 Determinism instead of RNG: the neighbor choice at step ``t`` of walk ``w``
 is ``H(seed, w, t) mod degree(cur)`` where ``H`` is the engine-portable
-md5 hash family of ``sources/corpus.py`` (first 15 md5 hex chars of
+md5 hash of ``functions/hashing.py`` (first 15 md5 hex chars of
 ``'walk:seed:w:t'`` parsed base-16). Wall-clock-free, resumable, and a
 DuckDB oracle replays the exact same walks with unrolled joins — which
 puts a "random" algorithm under the exact-match gate.
@@ -46,32 +46,11 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
 SEED = 42
-
-
-def _h(tag: str, seed: int, *cols) -> F.Column:
-    """The corpus md5 hash family (sources/corpus.py:58-80): uniform
-    63-bit value DuckDB reproduces as
-    ``('0x' || substr(md5(concat_ws(':', tag, seed, cols...)), 1, 15))::BIGINT``."""
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(tag),
-                    F.lit(str(seed)),
-                    *[F.col(c).cast("string") if isinstance(c, str) else c for c in cols],
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 @dataclass
@@ -237,7 +216,7 @@ def random_walks(
         hashed = state[0].select(
             "walk_id",
             F.col("cur").alias("src"),
-            _h("walk", seed, "walk_id", F.lit(t)).alias("hv"),
+            portable_hash("walk", seed, "walk_id", F.lit(t)).alias("hv"),
         ).join(degs, on="src")
         if weight_col is None:
             picked = hashed.select(
@@ -394,7 +373,7 @@ def node2vec_walks(
             picked = walkers.select(
                 "walk_id",
                 F.col("cur").alias("src"),
-                _h("n2v", seed, "walk_id", F.lit(1)).alias("hv"),
+                portable_hash("n2v", seed, "walk_id", F.lit(1)).alias("hv"),
             ).join(degs, on="src").select(
                 "walk_id", "src", F.pmod(F.col("hv"), F.col("deg")).alias("idx")
             )
@@ -438,7 +417,7 @@ def node2vec_walks(
             .alias("cum"),
             F.sum("aw").over(Window.partitionBy("walk_id")).alias("tot"),
             F.pmod(
-                _h("n2v", seed, "walk_id", F.lit(t)), F.col("tot")
+                portable_hash("n2v", seed, "walk_id", F.lit(t)), F.col("tot")
             ).alias("r"),
         )
         return scanned.where(
@@ -503,7 +482,8 @@ def neighbor_sampling(
             "src", "dst"
         )
         w = Window.partitionBy("src").orderBy(
-            _h("nsamp", seed, F.lit(hop), "src", "dst").asc(), F.col("dst").asc()
+            portable_hash("nsamp", seed, F.lit(hop), "src", "dst").asc(),
+            F.col("dst").asc(),
         )
         picked = (
             cand.withColumn("rn", F.row_number().over(w))

@@ -10,7 +10,7 @@ task-retry idempotence requirement, same reasoning as operators/salting.py):
   bucket join. Pure JVM expressions (nested transform/aggregate), no
   Python in the signature path.
 - ``simhash_signatures`` / ``simhash_candidates`` — 60-bit SimHash: token
-  hashes JVM-side (md5-derived ``token_hash60``), bit-vote in a batch-
+  hashes JVM-side (``functions/hashing.py:md5_60``), bit-vote in a batch-
   vectorized Arrow pandas UDF; candidates by 4x15-bit banding + popcount
   Hamming check.
 - ``ngram_jaccard_pairs`` — exact n-gram Jaccard via inverted-index join
@@ -29,6 +29,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from paragrapher_spark.functions.hashing import md5_60
 
 # Universal-hash family for MinHash: shingle universe is [0, 2^31); the
 # modulus must sit just above the universe (p = 2^31 + 11, prime) so that
@@ -71,14 +73,14 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 def _shingle_hashes(text: Column, k: int) -> Column:
     """Distinct hashes of the k-char shingles of ``text``, mapped into
     [0, 2^31) so universal hashing stays overflow-free. The shingle hash
-    is ``token_hash60`` (md5-derived) rather than xxhash64 so the DuckDB
+    is ``md5_60`` (functions/hashing.py) rather than xxhash64 so the DuckDB
     oracle can reproduce the exact hash family (VERDICT r2 task #1)."""
     n = F.greatest(F.length(text) - F.lit(k - 1), F.lit(1))
     shingles = F.transform(
         F.sequence(F.lit(1), n), lambda i: F.substring(text, i, k)
     )
     return F.array_distinct(
-        F.transform(shingles, lambda s: F.pmod(token_hash60(s), F.lit(_C31)))
+        F.transform(shingles, lambda s: F.pmod(md5_60(s), F.lit(_C31)))
     )
 
 
@@ -235,15 +237,6 @@ def minhash_candidates(
 SIMHASH_BITS = 60  # 15 hex chars of md5 -> 60-bit token hashes
 
 
-def token_hash60(c: Column) -> Column:
-    """Deterministic 60-bit token/shingle hash both engines can compute:
-    the first 15 hex chars of md5 parsed base-16. md5 hashes the utf-8
-    bytes identically everywhere, so a DuckDB oracle reproduces the value
-    exactly (the xxhash64 family it replaced is Spark-only — VERDICT r2
-    task #1)."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
 def simhash_signatures(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -251,7 +244,7 @@ def simhash_signatures(
     (functions.text.tokens — the tokenization every text op shares and the
     one the DuckDB oracle mirrors).
 
-    Token hashing runs JVM-side (``token_hash60`` inside a transform —
+    Token hashing runs JVM-side (``md5_60`` inside a transform —
     no Python in the hashing path); the Arrow-batched pandas UDF only
     does the bit-vote, vectorized across the WHOLE batch with
     ``np.add.reduceat`` over the flattened token-hash array (the
@@ -263,7 +256,7 @@ def simhash_signatures(
 
     hashed = docs.select(
         F.col(id_col),
-        F.transform(tokens(F.col(text_col)), token_hash60).alias("_th"),
+        F.transform(tokens(F.col(text_col)), md5_60).alias("_th"),
     )
 
     def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -793,7 +786,7 @@ def winnow_fingerprints(
     at least one shared fingerprint.
 
     Determinism/portability: the k-gram hash is the repo's engine-portable
-    md5-prefix (first 15 hex chars base-16 — the corpus.py hash family),
+    md5-prefix (first 15 hex chars base-16 — functions/hashing.py:md5_60),
     NOT a Karp-Rabin rolling hash: rolling saves nothing here (the hash
     runs JVM-side either way) and md5 is what the DuckDB oracle can
     replay byte-identically.
@@ -819,13 +812,7 @@ def winnow_fingerprints(
         .select(
             "id",
             "pos",
-            F.conv(
-                F.substring(F.md5(F.expr(f"substring(t, pos, {k})")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
+            md5_60(F.expr(f"substring(t, pos, {k})")).alias("h"),
         )
     )
     # window wpos covers gram positions wpos .. wpos+w-1; a gram at pos

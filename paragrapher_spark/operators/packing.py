@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
 from paragrapher_spark.functions.text import token_count
 
 
@@ -52,19 +53,7 @@ def pack_documents(
         raise ValueError(f"budget_tokens must be positive, got {budget_tokens}")
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(tag), F.lit(str(seed)), F.col(id_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = portable_hash(tag, seed, id_col)
     w = (
         Window.partitionBy("bucket")
         .orderBy(F.asc(id_col))

@@ -17,8 +17,10 @@ salting opt-in per kernel.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from paragrapher_spark.functions.hashing import portable_hash
 
 
 def salt_column(df: DataFrame, key: str, n_salts: int, salt_col: str = "_salt") -> DataFrame:
@@ -117,23 +119,6 @@ def skew_report(
 # ---------------------------------------------------------------------------
 
 
-def _portable_hash(tag: str, seed: int, col: Column) -> Column:
-    """Engine-portable uniform hash (the sources/corpus.py contract):
-    first 15 md5 hex chars of 'tag:seed:value' parsed base-16. DuckDB
-    twin: ('0x' || substr(md5('tag:seed:' || v::VARCHAR), 1, 15))::BIGINT
-    — so every grid assignment below is exactly replayable by a SQL
-    oracle."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(tag), F.lit(str(seed)), col.cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
 def grid_partition(
     edges: DataFrame, p: int, seed: int = 42, tag: str = "vc"
 ) -> DataFrame:
@@ -153,8 +138,8 @@ def grid_partition(
     repartitions on it)."""
     if p < 1:
         raise ValueError(f"grid dimension p must be >= 1, got {p}")
-    hs = F.pmod(_portable_hash(tag, seed, F.col("src")), F.lit(p))
-    hd = F.pmod(_portable_hash(tag, seed, F.col("dst")), F.lit(p))
+    hs = F.pmod(portable_hash(tag, seed, "src"), F.lit(p))
+    hd = F.pmod(portable_hash(tag, seed, "dst"), F.lit(p))
     return edges.withColumn("block", (hs * p + hd).cast("long"))
 
 
@@ -173,7 +158,7 @@ def vertex_cut_report(edges: DataFrame, p: int, seed: int = 42) -> DataFrame:
     per-row Python; at 100 TB this is a single shuffle on vertex id."""
     g2 = grid_partition(edges, p, seed=seed)
     b1 = F.pmod(
-        _portable_hash("vc", seed, F.col("src")), F.lit(int(p) * int(p))
+        portable_hash("vc", seed, "src"), F.lit(int(p) * int(p))
     ).cast("long")
     g1 = edges.withColumn("block", b1)
 

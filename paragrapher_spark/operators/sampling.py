@@ -8,7 +8,7 @@ threshold sampling on a content-addressed hash: a row is kept iff
     h(tag:seed:key) < fraction * 2^60
 
 with ``h`` the engine-portable 60-bit md5 prefix used across this repo
-(`operators/dedup.py:token_hash60` — first 15 md5 hex chars parsed
+(`functions/hashing.py:portable_hash` — first 15 md5 hex chars parsed
 base-16, reproducible verbatim in DuckDB, the family that replaced
 Spark-only xxhash64). This is the same determinism discipline as the
 reference's resumable readers: re-running any block yields byte-identical
@@ -35,28 +35,10 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
+
 HASH_BITS = 60
 HASH_SPACE = 1 << HASH_BITS
-
-
-def _row_hash(key_cols: Sequence[str], tag: str, seed: int) -> Column:
-    """60-bit deterministic row hash over ``tag:seed:key...`` (utf-8)."""
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(tag),
-                    F.lit(str(seed)),
-                    *[F.col(c).cast("string") for c in key_cols],
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 def threshold_for(fraction: float) -> int:
@@ -79,7 +61,8 @@ def sample_hash(
     below ``fraction`` of the hash space. Nested: the ``fraction=0.1``
     sample is a strict subset of the ``fraction=0.2`` sample (same tag,
     seed, and keys), so sample rates can be grown without resampling."""
-    return df.where(_row_hash(key_cols, tag, seed) < F.lit(threshold_for(fraction)))
+    thr = F.lit(threshold_for(fraction))
+    return df.where(portable_hash(tag, seed, *key_cols) < thr)
 
 
 def stratified_sample(
@@ -101,7 +84,7 @@ def stratified_sample(
         thr = F.when(
             F.col(strata_col) == F.lit(value), F.lit(threshold_for(frac))
         ).otherwise(thr)
-    return df.where(_row_hash(key_cols, tag, seed) < thr)
+    return df.where(portable_hash(tag, seed, *key_cols) < thr)
 
 
 def assign_splits(
@@ -132,7 +115,7 @@ def assign_splits(
     bounds[-1] = HASH_SPACE  # the last slice absorbs float round-off
     # nested whens ascending: the first (smallest) bound that covers the
     # hash wins, the last slice is the unconditional fallback
-    h = _row_hash(key_cols, tag, seed)
+    h = portable_hash(tag, seed, *key_cols)
     expr: Column = F.lit(names[-1])
     for name, hi in reversed(list(zip(names[:-1], bounds[:-1]))):
         expr = F.when(h < F.lit(hi), F.lit(name)).otherwise(expr)

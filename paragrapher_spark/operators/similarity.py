@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -315,22 +317,7 @@ def train_ivf_centroids(
     k x dim floats.
     """
     base = with_norm(emb, vec_col, id_col).persist()
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("ivf"),
-                    F.lit(str(seed)),
-                    F.col(id_col).cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = portable_hash("ivf", seed, id_col)
     seeds = (
         base.select("vec", h.alias("h"), F.col(id_col).alias("_id"))
         .orderBy("h", "_id")

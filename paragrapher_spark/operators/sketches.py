@@ -29,27 +29,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
 from paragrapher_spark.kernels.hyperball import (
     M,
     REG_COLS,
     RHO_CAP,
     ball_estimate,
 )
-
-
-def _value_hash(value: Column, tag: str, seed: int) -> Column:
-    """60-bit md5-prefix hash of the value (the engine-portable family)."""
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(":", F.lit(tag), F.lit(str(seed)), value.cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 def _register_rows(
@@ -62,7 +48,7 @@ def _register_rows(
     """(group_cols..., r0..r15): per-row singleton register columns —
     works identically on batch and streaming DataFrames."""
     v = F.col(value) if isinstance(value, str) else value
-    h = _value_hash(v, tag, seed)
+    h = portable_hash(tag, seed, v)
     reg = F.pmod(h, F.lit(M))
     rest = F.shiftright(h, 4)
     tz = F.bit_count((rest.bitwiseAND(-rest)) - F.lit(1))
@@ -136,7 +122,7 @@ def cms_sketch(
     v = F.col(value) if isinstance(value, str) else value
     probes = F.array(
         *[
-            F.pmod(_value_hash(v, f"{tag}:{i}", seed), F.lit(width))
+            F.pmod(portable_hash(f"{tag}:{i}", seed, v), F.lit(width))
             for i in range(depth)
         ]
     )
@@ -168,7 +154,7 @@ def cms_estimate(
     probes = F.array(
         *[
             F.pmod(
-                _value_hash(F.col(value_col), f"{tag}:{i}", seed),
+                portable_hash(f"{tag}:{i}", seed, F.col(value_col)),
                 F.lit(width),
             )
             for i in range(depth)
@@ -212,7 +198,7 @@ def bloom_build(
     v = F.col(value) if isinstance(value, str) else value
     bits = F.array(
         *[
-            F.pmod(_value_hash(v, f"{tag}:{i}", seed), F.lit(n_bits))
+            F.pmod(portable_hash(f"{tag}:{i}", seed, v), F.lit(n_bits))
             for i in range(n_hashes)
         ]
     )
@@ -242,7 +228,7 @@ def bloom_probe(
         F.array(
             *[
                 F.pmod(
-                    _value_hash(F.col(value_col), f"{tag}:{i}", seed),
+                    portable_hash(f"{tag}:{i}", seed, F.col(value_col)),
                     F.lit(n_bits),
                 )
                 for i in range(n_hashes)

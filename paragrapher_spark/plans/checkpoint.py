@@ -34,6 +34,15 @@ from pyspark.sql import functions as F
 MANIFEST_NAME = "manifest.jsonl"
 
 
+def skew_factor(partition_rows: list[int]) -> float:
+    """max/mean partition row count — 1.0 is perfectly balanced (the
+    reference's edge-balanced blocks, `src/webgraph.c:957-1005`)."""
+    if not partition_rows:
+        return 1.0
+    mean = sum(partition_rows) / len(partition_rows)
+    return max(partition_rows) / mean if mean > 0 else 1.0
+
+
 @dataclass
 class CheckpointManager:
     root: str
@@ -107,7 +116,6 @@ class CheckpointManager:
             .agg(F.count(F.lit(1)).alias("rows"))
             .collect()
         )
-        from paragrapher_spark.plans.metrics import skew_factor
 
         part_rows = {str(r["partition"]): r["rows"] for r in lineage_rows}
         record = {

@@ -34,175 +34,81 @@ Layout (n files, R repos; R even, n even):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paragrapher_spark.functions.hashing import portable_hash
 
 SEED = 42
 N_PATH_DIRS = 4
 
 
-def synth_corpus(
-    spark: SparkSession,
-    n_files: int = 2000,
-    n_repos: int = 8,
-    max_out: int = 12,
-    seed: int = SEED,
-    hub_count: int = 16,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Return corpus(repo, path, commit, lang, content) with n_files rows."""
+def _repo_of(t: Column, n_repos: int) -> Column:
+    return F.concat(F.lit("repo_"), F.lpad((t % n_repos).cast("string"), 3, "0"))
+
+
+def _path_of(t: Column, t_ext: Column, n_repos: int) -> Column:
+    tk = (t / n_repos).cast("long")
+    return F.concat(
+        F.lit("pkg"), (tk % N_PATH_DIRS).cast("string"),
+        F.lit("/f"), tk.cast("string"), t_ext,
+    )
+
+
+def _module_of(t: Column, n_repos: int) -> Column:
+    tk = (t / n_repos).cast("long")
+    return F.concat(
+        F.lit("pkg"), (tk % N_PATH_DIRS).cast("string"),
+        F.lit(".f"), tk.cast("string"),
+    )
+
+
+def _check_parity(n_files: int, n_repos: int) -> None:
     if n_files % 2 or n_repos % 2:
         raise ValueError("n_files and n_repos must be even (parity = language)")
 
-    def h(tag: str, *cols: Column) -> Column:
-        # engine-portable uniform hash (not xxhash64, which only Spark
-        # computes): first 15 md5 hex chars of "tag:seed:col:col..." parsed
-        # base-16 — a DuckDB oracle regenerates the exact same stream with
-        # ('0x' || substr(md5(concat_ws(':', ...)), 1, 15))::BIGINT, which
-        # is what puts the hash-skew corpus pipeline under the oracle gate
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(tag),
-                        F.lit(str(seed)),
-                        *[c.cast("string") for c in cols],
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
 
-    def pm(c: Column, m: int) -> Column:
-        return F.pmod(c, F.lit(m))
-
-    def repo_of(t: Column) -> Column:
-        return F.concat(F.lit("repo_"), F.lpad((t % n_repos).cast("string"), 3, "0"))
-
-    def path_of(t: Column, t_ext: Column) -> Column:
-        tk = (t / n_repos).cast("long")
-        return F.concat(
-            F.lit("pkg"),
-            (tk % N_PATH_DIRS).cast("string"),
-            F.lit("/f"),
-            tk.cast("string"),
-            t_ext,
-        )
-
-    def module_of(t: Column) -> Column:
-        tk = (t / n_repos).cast("long")
-        return F.concat(
-            F.lit("pkg"), (tk % N_PATH_DIRS).cast("string"), F.lit(".f"), tk.cast("string")
-        )
-
-    df = spark.range(0, n_files, 1, partitions or max(2, min(32, n_files // 250)))
+def _corpus_rows(
+    df: DataFrame, n_repos: int, ext: Column, body: list[Column], commit_tag: str
+) -> DataFrame:
+    """The corpus schema over ``df``'s file ids: a ``# file i`` /
+    ``// file i`` header line, then the lines of the ``body`` arrays."""
     i = F.col("id")
     is_py = (i % 2) == 0
-    ext = F.when(is_py, ".py").otherwise(".h")
-    deg = pm(h("deg", i), max_out)
-
-    def target(j: Column) -> Column:
-        """Deterministic skewed same-parity target for import #j of file i."""
-        m = pm(h("m", i, j), n_files) + 1
-        base = F.pmod(h("t", i, j), m)  # Zipf-ish: uniform in [0, m)
-        hub = pm(h("hub", i, j), 4) == 0
-        t0 = F.when(hub, pm(h("hb", i, j), hub_count * 2)).otherwise(base)
-        # force source parity (same language), stay in range, avoid self
-        t1 = t0 - (t0 % 2) + (i % 2)
-        t2 = F.when(t1 >= n_files, t1 - 2).otherwise(t1)
-        return F.when(t2 == i, (t2 + 2) % n_files).otherwise(t2)
-
-    imports = F.when(deg > 0,
-        F.transform(
-            F.sequence(F.lit(1), deg),
-            lambda j: F.when(
-                is_py,
-                F.concat(
-                    F.lit("from "), repo_of(target(j)), F.lit(" import "),
-                    module_of(target(j)),
-                ),
-            ).otherwise(
-                F.concat(
-                    F.lit('#include "'), repo_of(target(j)), F.lit("/"),
-                    path_of(target(j), F.lit(".h")), F.lit('"'),
-                ),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
     header = F.when(is_py, F.concat(F.lit("# file "), i.cast("string"))).otherwise(
         F.concat(F.lit("// file "), i.cast("string"))
     )
-    filler_val = pm(h("fill", i), 1000000).cast("string")
-    filler = F.when(
-        is_py, F.concat(F.lit("x_"), i.cast("string"), F.lit(" = "), filler_val)
-    ).otherwise(
-        F.concat(F.lit("static int v_"), i.cast("string"), F.lit(" = "), filler_val, F.lit(";"))
-    )
-    content = F.concat_ws("\n", F.concat(F.array(header), imports, F.array(filler)))
-
     return df.select(
-        repo_of(i).alias("repo"),
-        path_of(i, ext).alias("path"),
+        _repo_of(i, n_repos).alias("repo"),
+        _path_of(i, ext, n_repos).alias("path"),
         F.substring(
-            F.sha2(F.concat(F.lit("commit"), i.cast("string")), 256), 1, 40
+            F.sha2(F.concat(F.lit(commit_tag), i.cast("string")), 256), 1, 40
         ).alias("commit"),
         F.when(is_py, F.lit("python")).otherwise(F.lit("c")).alias("lang"),
-        content.alias("content"),
+        F.concat_ws("\n", F.concat(F.array(header), *body)).alias("content"),
     )
 
 
-def synth_corpus_sql(
-    spark: SparkSession,
-    n_files: int = 1200,
-    n_repos: int = 8,
-    max_out: int = 10,
-    partitions: int = 8,
+def _import_corpus(
+    df: DataFrame,
+    n_files: int,
+    n_repos: int,
+    deg: Column,
+    draw: Callable[[Column], Column],
+    filler_val: Column,
 ) -> DataFrame:
-    """ANSI-SQL-reproducible corpus twin of ``synth_corpus``: identical
-    schema and import-statement formats, but every random-looking choice
-    is plain modular ARITHMETIC (no xxhash64), so a DuckDB oracle can
-    regenerate the exact link structure and check the whole
-    extract→dense-ids→PageRank pipeline end to end
-    (__spark_entry__._import_pagerank_sql mirrors these formulas).
-
-    deg(i) = (i*7919 + 13) % max_out; target j of file i starts from
-    (i*104729 + j*7907 + 17) % n_files and is parity-aligned to the
-    source's language exactly like synth_corpus. All products stay below
-    2^62 (ANSI overflow-safe in Spark and DuckDB BIGINT alike).
-    """
-    if n_files % 2 or n_repos % 2:
-        raise ValueError("n_files and n_repos must be even (parity = language)")
-
-    def repo_of(t: Column) -> Column:
-        return F.concat(F.lit("repo_"), F.lpad((t % n_repos).cast("string"), 3, "0"))
-
-    def path_of(t: Column, t_ext: Column) -> Column:
-        tk = (t / n_repos).cast("long")
-        return F.concat(
-            F.lit("pkg"), (tk % N_PATH_DIRS).cast("string"),
-            F.lit("/f"), tk.cast("string"), t_ext,
-        )
-
-    def module_of(t: Column) -> Column:
-        tk = (t / n_repos).cast("long")
-        return F.concat(
-            F.lit("pkg"), (tk % N_PATH_DIRS).cast("string"),
-            F.lit(".f"), tk.cast("string"),
-        )
-
-    df = spark.range(0, n_files, 1, partitions)
+    """The import-corpus layout shared by ``synth_corpus`` and its SQL twin:
+    file i imports ``deg`` targets, target #j drawn as ``draw(j)`` and then
+    parity-aligned to i's language, kept in range and off i itself; a
+    filler line assigns ``filler_val``."""
     i = F.col("id")
     is_py = (i % 2) == 0
-    ext = F.when(is_py, ".py").otherwise(".h")
-    deg = (i * 7919 + 13) % max_out
 
     def target(j: Column) -> Column:
-        t0 = (i * 104729 + j * 7907 + 17) % n_files
+        t0 = draw(j)
+        # force source parity (same language), stay in range, avoid self
         t1 = t0 - (t0 % 2) + (i % 2)
         t2 = F.when(t1 >= n_files, t1 - 2).otherwise(t1)
         return F.when(t2 == i, (t2 + 2) % n_files).otherwise(t2)
@@ -214,22 +120,17 @@ def synth_corpus_sql(
             lambda j: F.when(
                 is_py,
                 F.concat(
-                    F.lit("from "), repo_of(target(j)), F.lit(" import "),
-                    module_of(target(j)),
+                    F.lit("from "), _repo_of(target(j), n_repos), F.lit(" import "),
+                    _module_of(target(j), n_repos),
                 ),
             ).otherwise(
                 F.concat(
-                    F.lit('#include "'), repo_of(target(j)), F.lit("/"),
-                    path_of(target(j), F.lit(".h")), F.lit('"'),
+                    F.lit('#include "'), _repo_of(target(j), n_repos), F.lit("/"),
+                    _path_of(target(j), F.lit(".h"), n_repos), F.lit('"'),
                 ),
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-    header = F.when(is_py, F.concat(F.lit("# file "), i.cast("string"))).otherwise(
-        F.concat(F.lit("// file "), i.cast("string"))
-    )
-    filler_val = ((i * 523 + 7) % 1000000).cast("string")
     filler = F.when(
         is_py, F.concat(F.lit("x_"), i.cast("string"), F.lit(" = "), filler_val)
     ).otherwise(
@@ -238,16 +139,71 @@ def synth_corpus_sql(
             filler_val, F.lit(";"),
         )
     )
-    content = F.concat_ws("\n", F.concat(F.array(header), imports, F.array(filler)))
+    ext = F.when(is_py, ".py").otherwise(".h")
+    return _corpus_rows(df, n_repos, ext, [imports, F.array(filler)], "commit")
 
-    return df.select(
-        repo_of(i).alias("repo"),
-        path_of(i, ext).alias("path"),
-        F.substring(
-            F.sha2(F.concat(F.lit("commit"), i.cast("string")), 256), 1, 40
-        ).alias("commit"),
-        F.when(is_py, F.lit("python")).otherwise(F.lit("c")).alias("lang"),
-        content.alias("content"),
+
+def synth_corpus(
+    spark: SparkSession,
+    n_files: int = 2000,
+    n_repos: int = 8,
+    max_out: int = 12,
+    seed: int = SEED,
+    hub_count: int = 16,
+    partitions: int | None = None,
+) -> DataFrame:
+    """Return corpus(repo, path, commit, lang, content) with n_files rows.
+
+    Every draw is ``portable_hash`` (functions/hashing.py) keyed on the
+    file id, so a DuckDB oracle regenerates the exact same stream — which
+    is what puts the hash-skew corpus pipeline under the oracle gate."""
+    _check_parity(n_files, n_repos)
+    df = spark.range(0, n_files, 1, partitions or max(2, min(32, n_files // 250)))
+    i = F.col("id")
+
+    def pm(c: Column, m: int) -> Column:
+        return F.pmod(c, F.lit(m))
+
+    def draw(j: Column) -> Column:
+        """Skewed target draw for import #j of file i."""
+        m = pm(portable_hash("m", seed, i, j), n_files) + 1
+        # Zipf-ish: uniform in [0, m)
+        base = F.pmod(portable_hash("t", seed, i, j), m)
+        hub = pm(portable_hash("hub", seed, i, j), 4) == 0
+        hub_t = pm(portable_hash("hb", seed, i, j), hub_count * 2)
+        return F.when(hub, hub_t).otherwise(base)
+
+    deg = pm(portable_hash("deg", seed, i), max_out)
+    filler_val = pm(portable_hash("fill", seed, i), 1000000).cast("string")
+    return _import_corpus(df, n_files, n_repos, deg, draw, filler_val)
+
+
+def synth_corpus_sql(
+    spark: SparkSession,
+    n_files: int = 1200,
+    n_repos: int = 8,
+    max_out: int = 10,
+    partitions: int = 8,
+) -> DataFrame:
+    """ANSI-SQL-reproducible corpus twin of ``synth_corpus``: identical
+    schema and import-statement formats, but every random-looking choice
+    is plain modular ARITHMETIC (no hash), so a DuckDB oracle can
+    regenerate the exact link structure and check the whole
+    extract→dense-ids→PageRank pipeline end to end
+    (__spark_entry__._import_pagerank_sql mirrors these formulas).
+
+    deg(i) = (i*7919 + 13) % max_out; target j of file i starts from
+    (i*104729 + j*7907 + 17) % n_files and is parity-aligned to the
+    source's language exactly like synth_corpus. All products stay below
+    2^62 (ANSI overflow-safe in Spark and DuckDB BIGINT alike).
+    """
+    _check_parity(n_files, n_repos)
+    i = F.col("id")
+    return _import_corpus(
+        spark.range(0, n_files, 1, partitions), n_files, n_repos,
+        (i * 7919 + 13) % max_out,
+        lambda j: (i * 104729 + j * 7907 + 17) % n_files,
+        ((i * 523 + 7) % 1000000).cast("string"),
     )
 
 
@@ -282,19 +238,7 @@ def synth_callgraph_corpus_sql(
     expressions (nested higher-order ``transform``), whole-stage codegen,
     no shuffle: at 10^12 files this stays a single map stage.
     """
-    if n_files % 2 or n_repos % 2:
-        raise ValueError("n_files and n_repos must be even (parity = language)")
-
-    def repo_of(t: Column) -> Column:
-        return F.concat(F.lit("repo_"), F.lpad((t % n_repos).cast("string"), 3, "0"))
-
-    def path_of(t: Column, t_ext: Column) -> Column:
-        tk = (t / n_repos).cast("long")
-        return F.concat(
-            F.lit("pkg"), (tk % N_PATH_DIRS).cast("string"),
-            F.lit("/f"), tk.cast("string"), t_ext,
-        )
-
+    _check_parity(n_files, n_repos)
     df = spark.range(0, n_files, 1, partitions)
     i = F.col("id")
     is_py = (i % 2) == 0
@@ -337,21 +281,8 @@ def synth_callgraph_corpus_sql(
             )
         )
 
-    header = F.when(is_py, F.concat(F.lit("# file "), i.cast("string"))).otherwise(
-        F.concat(F.lit("// file "), i.cast("string"))
-    )
     defs = F.transform(F.sequence(F.lit(1), nf), def_line)
-    content = F.concat_ws("\n", F.concat(F.array(header), defs))
-
-    return df.select(
-        repo_of(i).alias("repo"),
-        path_of(i, ext).alias("path"),
-        F.substring(
-            F.sha2(F.concat(F.lit("ccommit"), i.cast("string")), 256), 1, 40
-        ).alias("commit"),
-        F.when(is_py, F.lit("python")).otherwise(F.lit("c")).alias("lang"),
-        content.alias("content"),
-    )
+    return _corpus_rows(df, n_repos, ext, [defs], "ccommit")
 
 
 def callgraph_vertex_count(n_files: int, max_funcs: int = 3) -> int:

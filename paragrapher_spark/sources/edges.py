@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paragrapher_spark.functions.hashing import portable_hash
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -100,8 +102,8 @@ def md5_vertex_graph(
 ) -> DataFrame:
     """Deterministic directed graph over vertex ids [0, n): vertex ``i``
     points at ``H(tag, seed, i, j) mod n`` for j in 1..out_deg (self-loops
-    dropped, parallel edges deduped). The engine-portable md5 hash family
-    of sources/corpus.py, so a DuckDB oracle regenerates the identical
+    dropped, parallel edges deduped). The engine-portable md5 hash
+    (functions/hashing.py), so a DuckDB oracle regenerates the identical
     edge set (MD5_VERTEX_GRAPH_SQL below) — used to wire feature tables
     (embeddings.parquet) into graph kernels without external topology.
     Pure ``spark.range`` + JVM expressions: no shuffle, no UDF, trivially
@@ -115,23 +117,7 @@ def md5_vertex_graph(
         .select(
             "src",
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ":",
-                                F.lit(tag),
-                                F.lit(str(seed)),
-                                F.col("src").cast("string"),
-                                F.col("j").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
+                portable_hash(tag, seed, "src", "j"),
                 F.lit(n).cast("long"),
             ).alias("dst"),
         )
@@ -195,7 +181,7 @@ def rmat_edges(
     deduped — the simple-graph convention every kernel here expects).
 
     Per draw k and bit level l the quadrant comes from the engine-portable
-    md5 hash family (corpus.py contract): u = H(tag:seed:k:l) mod 100,
+    md5 hash (functions/hashing.py): u = H(tag:seed:k:l) mod 100,
     compared against the integer thresholds above — so a DuckDB oracle
     regenerates the IDENTICAL power-law graph (rmat_edges_sql). This is
     the deliberately-skewed counterpart of ``md5_vertex_graph`` (uniform
@@ -211,26 +197,7 @@ def rmat_edges(
     df = spark.range(0, n_draws, 1, partitions or spark.sparkContext.defaultParallelism)
     k = F.col("id").alias("k")
     lvl = F.explode(F.sequence(F.lit(0), F.lit(scale - 1))).alias("l")
-    u = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(tag),
-                        F.lit(str(seed)),
-                        F.col("k").cast("string"),
-                        F.col("l").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(100),
-    )
+    u = F.pmod(portable_hash(tag, seed, "k", "l"), F.lit(100))
     bits = (
         df.select(k, lvl)
         .select(

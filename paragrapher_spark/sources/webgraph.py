@@ -45,6 +45,12 @@ Scale design:
   transitively-referenced lists live inside the slice) and decodes nodes
   RANDOM-ACCESS at their recorded bit offsets, resolving references
   recursively with memoization — no sequential scan of the whole stream.
+
+Id width: vertex ids are Spark ``LongType`` (signed 64-bit), so ids
+≥ 2^63 are unsupported. The reference's WG800 reader carries them as
+unsigned 64-bit (`src/WG800AP.java`), but no published dataset comes
+near: the largest public web graphs have a few billion vertices. The
+"big" graphclass below only lifts Java's 2^31-1 int cap.
 """
 
 from __future__ import annotations

@@ -1,15 +1,18 @@
-"""Registry and bench-record checks that need no Spark session.
+"""Registry, bench-record and source checks that need no Spark session.
 
 Nothing here starts a JVM: the registry and oracle dicts are built without
-running a query, ``_substrate`` is driven with stand-in session objects, and
-``bench._compact_record`` formats a synthetic record.
+running a query, ``_substrate`` is driven with stand-in session objects,
+``bench._compact_record`` formats a synthetic record, and the hash scan
+only parses source files.
 """
 
 from __future__ import annotations
 
+import ast
 import gc
 import json
 import weakref
+from pathlib import Path
 
 import pytest
 
@@ -85,3 +88,30 @@ def test_compact_record_fits_with_a_full_sweep(failed):
     assert rec["sweep_sf0001"]["n_ok"] == 146 - failed
     assert len(rec["sweep_sf0001"]["failed"]) == failed
     assert rec["queries"] == queries
+
+
+def _md5_inside_conv(tree: ast.AST) -> bool:
+    def is_f_call(node: ast.AST, name: str) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+
+    return any(
+        is_f_call(conv, "conv") and any(is_f_call(n, "md5") for n in ast.walk(conv))
+        for conv in ast.walk(tree)
+    )
+
+
+def test_md5_hash_is_defined_only_in_hashing_module():
+    root = Path(__file__).resolve().parents[1]
+    sources = [*(root / "paragrapher_spark").rglob("*.py"), root / "__spark_entry__.py"]
+    hits = {
+        p.relative_to(root).as_posix()
+        for p in sources
+        if _md5_inside_conv(ast.parse(p.read_text(), filename=str(p)))
+    }
+    assert hits == {"paragrapher_spark/functions/hashing.py"}

@@ -1,0 +1,76 @@
+"""The engine-portable hash and the undirected edge view, pinned against
+hashlib and DuckDB on one tiny frame."""
+
+from __future__ import annotations
+
+import hashlib
+
+import duckdb
+from pyspark.sql import functions as F
+
+from paragrapher_spark.functions.hashing import md5_60, portable_hash
+from paragrapher_spark.graph import undirected_pairs
+
+# a loop, a duplicate, reversed duplicates, negative ids, utf-8 / empty /
+# colon-bearing strings
+ROWS = [
+    (3, 1, "a"),
+    (1, 3, "héllo"),
+    (2, 2, "x:y"),
+    (-7, 4, ""),
+    (4, -7, "z"),
+    (3, 1, "a"),
+]
+
+
+def _py60(key: str) -> int:
+    return int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
+
+
+def test_portable_hash_and_undirected_pairs(spark):
+    df = spark.createDataFrame(ROWS, "src long, dst long, s string")
+    got = df.select(
+        "src",
+        "dst",
+        "s",
+        md5_60(F.col("s")).alias("m"),
+        portable_hash("t", 42, "src").alias("h1"),
+        portable_hash("t", 7, "src", F.col("dst"), "s").alias("h3"),
+        portable_hash("t", 42, F.lit(5)).alias("hl"),
+    ).collect()
+
+    want_py = [
+        (
+            _py60(s),
+            _py60(f"t:42:{a}"),
+            _py60(f"t:7:{a}:{b}:{s}"),
+            _py60("t:42:5"),
+        )
+        for a, b, s in ROWS
+    ]
+    values = ", ".join(
+        "({}, {}, '{}')".format(a, b, s.replace("'", "''")) for a, b, s in ROWS
+    )
+    want_duck = duckdb.sql(
+        f"""
+        SELECT ('0x' || substr(md5(s), 1, 15))::BIGINT,
+               ('0x' || substr(md5(concat_ws(':', 't', '42', src::VARCHAR)),
+                       1, 15))::BIGINT,
+               ('0x' || substr(md5(concat_ws(':', 't', '7', src::VARCHAR,
+                                             dst::VARCHAR, s)), 1, 15))::BIGINT,
+               ('0x' || substr(md5('t:42:5'), 1, 15))::BIGINT
+        FROM (VALUES {values}) v(src, dst, s)
+        ORDER BY src, dst, s
+        """
+    ).fetchall()
+    got_rows = sorted(
+        ((r.src, r.dst, r.s), (r.m, r.h1, r.h3, r.hl)) for r in got
+    )
+    want_rows = sorted(zip(ROWS, want_py))
+    assert got_rows == want_rows
+    assert [tuple(w) for _, w in want_rows] == want_duck
+    assert all(0 <= v < 1 << 60 for _, w in got_rows for v in w)
+
+    pairs = undirected_pairs(df)
+    assert pairs.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in pairs.collect()) == [(-7, 4), (1, 3)]

@@ -79,6 +79,13 @@ def test_lp_powerlaw(spark):
     _lp_compare(spark, powerlaw_graph(spark, n=300, m=3))
 
 
+def test_lp_self_loop_casts_no_vote(spark):
+    # the loop (5, 5) must not vote: 5 then takes label 1 from its
+    # neighbours, where a loop vote would keep it at 5
+    edges = spark.createDataFrame([(1, 5), (2, 5), (5, 5)], "src long, dst long")
+    _lp_compare(spark, edges)
+
+
 def test_doulion_sampled_count_matches_hash_replay(spark):
     import hashlib
     from itertools import combinations
