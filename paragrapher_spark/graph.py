@@ -170,6 +170,16 @@ def undirected_pairs(edges: DataFrame) -> DataFrame:
     )
 
 
+def undirected_adjacency(edges: DataFrame) -> DataFrame:
+    """``undirected_pairs`` in both directions: one ``(v, u)`` row per
+    ordered neighbor pair of the simple graph, for kernels that gather
+    over neighbors."""
+    und = undirected_pairs(edges)
+    return und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
+        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
+    )
+
+
 def quotient_graph(
     edges: DataFrame,
     mapping: DataFrame,

@@ -36,7 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_adjacency
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -64,11 +64,9 @@ def coreness(
     the H-index operator is a pure function of the persisted state, so
     a resumed run converges to the identical fixpoint."""
     spark = edges.sparkSession
-    und = undirected_pairs(edges)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
+        undirected_adjacency(edges)
         # partition + sort by the join key ONCE, then PERSIST (not
         # localCheckpoint: a checkpointed RDD scan loses its
         # outputPartitioning, so the join would re-exchange all |E| rows

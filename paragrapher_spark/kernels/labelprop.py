@@ -17,7 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_adjacency
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -41,10 +41,9 @@ def label_propagation(
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    pairs = undirected_pairs(edges)
     und = (
-        pairs.toDF("src", "dst")
-        .unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        undirected_adjacency(edges)
+        .toDF("src", "dst")
         .repartition(n_part, "dst")
         # sorted before caching: the per-round gather join is a
         # SortMergeJoin once labels outgrow the broadcast threshold; the

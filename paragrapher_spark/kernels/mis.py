@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_adjacency, undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -71,11 +71,7 @@ def maximal_independent_set(
     spark = edges.sparkSession
     und = undirected_pairs(edges)
     # symmetric adjacency, reused every round
-    adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .persist()
-    )
+    adj = undirected_adjacency(edges).persist()
 
     def _start() -> tuple[DataFrame, DataFrame, int]:
         undecided = (

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_adjacency, undirected_pairs
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -253,10 +253,7 @@ def square_count(
     drop — the minhash/knn_lsh metric convention); with the cap unset
     the count is exact and the extra columns are omitted.
     """
-    und = undirected_pairs(edges)
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
+    adj = undirected_adjacency(edges).toDF("v", "n")
     if max_center_degree is not None:
         deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
         dropped = deg.where(F.col("deg") > max_center_degree)
@@ -330,10 +327,7 @@ def delta_triangles(
     Hub deltas fan out like any wedge join; AQE skew-split applies (the
     degree-orientation trick does not, because both endpoints' full
     adjacencies are needed)."""
-    und = undirected_pairs(full_edges)  # (a, b) with a < b, distinct
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )  # (v, n) both directions
+    adj = undirected_adjacency(full_edges).toDF("v", "n")  # both directions
     d = undirected_pairs(delta_edges)
     if old_edges is not None:
         # drop delta edges the old graph already had — their triangles

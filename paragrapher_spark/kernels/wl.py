@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_adjacency
 from paragrapher_spark.operators.indexing import dense_ids
 from paragrapher_spark.plans import superstep
 
@@ -56,10 +56,7 @@ def wl_refinement(
     partition is stable and further rounds relabel it identically (the
     canonical rank order is preserved), so fixed-round results gate
     bit-for-bit even past stabilization."""
-    und = undirected_pairs(edges)
-    sym = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    ).localCheckpoint(eager=False)
+    sym = undirected_adjacency(edges).localCheckpoint(eager=False)
     colors = (
         sym.groupBy(F.col("v").alias("id"))
         .agg(F.count(F.lit(1)).alias("color"))

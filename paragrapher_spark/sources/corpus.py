@@ -190,7 +190,7 @@ def synth_corpus_sql(
     is plain modular ARITHMETIC (no hash), so a DuckDB oracle can
     regenerate the exact link structure and check the whole
     extract→dense-ids→PageRank pipeline end to end
-    (__spark_entry__._import_pagerank_sql mirrors these formulas).
+    (``queries/code.py``'s ``_import_edges_sql`` mirrors these formulas).
 
     deg(i) = (i*7919 + 13) % max_out; target j of file i starts from
     (i*104729 + j*7907 + 17) % n_files and is parity-aligned to the
@@ -220,7 +220,7 @@ def synth_callgraph_corpus_sql(
     import corpus (``synth_corpus_sql``). Same (repo, path, commit, lang,
     content) schema; every random-looking choice is plain modular
     arithmetic so a DuckDB oracle regenerates the exact call-graph
-    structure (``__spark_entry__._call_sites_cte`` mirrors these formulas
+    structure (``queries/code.py``'s ``_call_sites_cte`` mirrors these formulas
     term-for-term).
 
     File ``i`` defines ``nf(i) = (i*31 + 5) % max_funcs + 1`` functions

@@ -136,7 +136,7 @@ def test_dead_functions_matches_python_bfs(spark):
     from the same attribute-defined root set (repo_000's pkg0 files)."""
     from collections import deque
 
-    import __spark_entry__ as entry
+    import paragrapher_spark.queries.code as entry
 
     adj: dict[str, list[str]] = {}
     N, R, MF, MC = (

@@ -1,7 +1,7 @@
 """Registry, bench-record and source checks that need no Spark session.
 
-Nothing here starts a JVM: the registry and oracle dicts are built without
-running a query, ``_substrate`` is driven with stand-in session objects,
+Nothing here starts a JVM: the query registry is built without running a
+query, ``_substrate`` is driven with stand-in session objects,
 ``bench._compact_record`` formats a synthetic record, and the hash scan
 only parses source files.
 """
@@ -16,8 +16,9 @@ from pathlib import Path
 
 import pytest
 
-import __spark_entry__ as entry
+import __spark_entry__
 import bench
+import paragrapher_spark.queries as entry
 
 
 class _Session:
@@ -28,6 +29,22 @@ def test_queries_and_oracles_name_the_same_146():
     names = set(entry.queries())
     assert len(names) == 146
     assert names == set(entry.oracle_sql())
+
+
+def test_query_rejects_a_duplicate_name_and_an_empty_oracle():
+    with pytest.raises(ValueError, match="already registered"):
+        entry.query("graph_meta", oracle="SELECT 1")
+    for oracle in ("", " \n "):
+        with pytest.raises(ValueError, match="non-empty oracle"):
+            entry.query("not_a_query", oracle=oracle)
+    assert "not_a_query" not in entry.queries()
+
+
+def test_every_query_is_registered_by_a_family_module():
+    modules = {fn.__module__ for fn in entry.queries().values()}
+    assert all(m.startswith("paragrapher_spark.queries.") for m in modules)
+    assert __spark_entry__.queries is entry.queries
+    assert __spark_entry__.oracle_sql is entry.oracle_sql
 
 
 def test_substrate_reuses_per_session_and_evicts_on_switch(monkeypatch):

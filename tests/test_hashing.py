@@ -1,4 +1,4 @@
-"""The engine-portable hash and the undirected edge view, pinned against
+"""The engine-portable hash and the undirected edge views, pinned against
 hashlib and DuckDB on one tiny frame."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import md5_60, portable_hash
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_adjacency, undirected_pairs
 
 # a loop, a duplicate, reversed duplicates, negative ids, utf-8 / empty /
 # colon-bearing strings
@@ -74,3 +74,9 @@ def test_portable_hash_and_undirected_pairs(spark):
     pairs = undirected_pairs(df)
     assert pairs.columns == ["a", "b"]
     assert sorted(tuple(r) for r in pairs.collect()) == [(-7, 4), (1, 3)]
+
+    adj = undirected_adjacency(df)
+    assert adj.columns == ["v", "u"]
+    assert sorted(tuple(r) for r in adj.collect()) == [
+        (-7, 4), (1, 3), (3, 1), (4, -7),
+    ]
