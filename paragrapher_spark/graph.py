@@ -144,9 +144,7 @@ def graph_from_edges(edges: DataFrame, weight: bool = False) -> Graph:
     if not weight:
         edges = edges.select("src", "dst").withColumn("weight", F.lit(1).cast("long"))
     vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+        vertex_ids(edges)
         .withColumn("repo", F.lit(None).cast("string"))
         .withColumn("path", F.lit(None).cast("string"))
     )
@@ -154,6 +152,46 @@ def graph_from_edges(edges: DataFrame, weight: bool = False) -> Graph:
     n_e = edges.count()
     n_v = vertices.count()
     return Graph(vertices=vertices, edges=edges, num_vertices=n_v, num_edges=n_e)
+
+
+def vertex_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """The ``(id)`` vertex frame of a graph: ``vertices.id`` when a vertex
+    table is given (isolated vertices included), otherwise the distinct
+    ``src`` ∪ ``dst`` endpoints of ``edges``."""
+    if vertices is not None:
+        return vertices.select("id")
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
+def gather_table(df: DataFrame, key: str) -> tuple[DataFrame, int]:
+    """Cache ``df`` as the edge side of a superstep's gather join on
+    ``key``; returns the cached frame and its row count (the count is the
+    action that fills the cache).
+
+    The layout: hash-partitioned on ``key`` into the session's
+    ``spark.sql.shuffle.partitions`` (the count the loop state is
+    repartitioned into, so both sides of the join are co-partitioned and
+    only the |V|-row state shuffles each superstep), sorted within
+    partitions on ``key``, persisted.
+
+    - Sorted BEFORE caching: once the state outgrows the broadcast
+      threshold the gather is a SortMergeJoin, and a cached UNSORTED
+      table would be re-sorted (all |E| rows) every superstep; the cached
+      sort order is reported by the in-memory scan, so only the |V|-row
+      side sorts per superstep. (A shuffle_hash build on the state was
+      measured slower: hash-probe latency over |E| lookups loses to
+      sequential merge bandwidth on this shape.)
+    - ``persist`` rather than ``localCheckpoint``: a checkpointed RDD scan
+      loses its output partitioning, so every superstep would shuffle the
+      |E| side again.
+    """
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    cached = df.repartition(n_part, key).sortWithinPartitions(key).persist()
+    return cached, cached.count()
 
 
 def undirected_pairs(edges: DataFrame) -> DataFrame:

@@ -44,6 +44,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table
 from paragrapher_spark.plans import superstep
 
 
@@ -55,20 +56,13 @@ class BetweennessResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _symmetrized(edges: DataFrame, directed: bool, n_part: int) -> DataFrame:
+def _symmetrized(edges: DataFrame, directed: bool) -> DataFrame:
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    e = (
-        e.distinct()
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e.count()
-    return e
+    return gather_table(e.distinct(), "src")[0]
 
 
 def _forward_levels(
@@ -182,15 +176,14 @@ def shortest_path_levels(
     sources: DataFrame | list[int],
     directed: bool = False,
     max_depth: int = 50,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, int, list[dict[str, Any]]]:
     """Public forward phase alone: (source, id, dist, sigma) exact levels
     from the sampled sources, plus the reached depth and per-level
     history — the shared substrate of betweenness, sampled closeness, and
     harmonic centrality."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = _symmetrized(edges, directed, n_part)
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e = _symmetrized(edges, directed)
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
     e.unpersist()
     return levels, depth, history
@@ -250,7 +243,6 @@ def edge_betweenness(
     edges: DataFrame,
     sources: DataFrame | list[int],
     max_depth: int = 50,
-    num_partitions: int | None = None,
 ) -> EdgeBetweennessResult:
     """Girvan–Newman edge betweenness from the sampled sources (Brandes
     2001 §4 edge variant; Girvan & Newman PNAS 2002): during the backward
@@ -268,9 +260,9 @@ def edge_betweenness(
     state keyed (source, vertex) exactly like the forward phase.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _symmetrized(edges, directed=False, n_part=n_part)
+    e = _symmetrized(edges, directed=False)
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
 
     def back(i: int, state, ckpt):
@@ -324,7 +316,6 @@ def betweenness(
     sources: DataFrame | list[int],
     directed: bool = False,
     max_depth: int = 50,
-    num_partitions: int | None = None,
 ) -> BetweennessResult:
     """Brandes betweenness from ``sources`` over edges(src, dst).
 
@@ -334,9 +325,9 @@ def betweenness(
     for integer-exact verification.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _symmetrized(edges, directed, n_part)
+    e = _symmetrized(edges, directed)
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
 
     # backward dependency accumulation, level by level (descending)

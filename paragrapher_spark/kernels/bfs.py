@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import gather_table, undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -40,30 +40,20 @@ def bfs(
     sources: DataFrame | list[int],
     max_depth: int = 50,
     directed: bool = True,
-    num_partitions: int | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 5,
 ) -> BFSResult:
     """BFS over edges(src, dst) from ``sources`` (a (id) DataFrame or a
     list of vertex ids). Returns hop distances for every reached vertex."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    # sorted before caching — once frontiers outgrow the broadcast
-    # threshold the frontier join is a SortMergeJoin; the cached order
-    # spares the |E| side a re-sort every superstep (see pagerank.py)
-    e = (
-        e.distinct()
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e.count()
+    e, _ = gather_table(e.distinct(), "src")
 
     if isinstance(sources, list):
         src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")
@@ -85,7 +75,7 @@ def bfs(
 
     def step(it: int, state, ckpt):
         dist, frontier, _ = state
-        # ONE job per superstep (the PageRank discipline): the unioned
+        # one action per superstep (the PageRank discipline): the unioned
         # distance table is a non-eager localCheckpoint and the frontier-
         # size aggregation below is the single action that materializes it.
         # The next frontier is then a cheap filter over the checkpointed
@@ -145,7 +135,6 @@ def pseudo_diameter(
     edges: DataFrame,
     sweeps: int = 2,
     max_depth: int = 64,
-    num_partitions: int | None = None,
 ) -> PseudoDiameterResult:
     """Double-sweep pseudo-diameter lower bound (the GAPBS/iFUB warm-start
     heuristic, Crescenzi et al.; e.g. Magnien, Latapy & Habib 2009): BFS
@@ -157,7 +146,7 @@ def pseudo_diameter(
     battery's |S| runs.
 
     Driver traffic is O(1) rows per sweep (one argmax row each); each
-    sweep is a frontier BFS with the kernel's one-job-per-superstep
+    sweep is a frontier BFS with the kernel's one-action-per-superstep
     discipline. Everything is integer-exact, so the result gates
     bit-for-bit against an unrolled-BFS SQL oracle.
     """
@@ -181,7 +170,6 @@ def pseudo_diameter(
             [source],
             max_depth=max_depth,
             directed=False,
-            num_partitions=num_partitions,
         )
         far = (
             res.distances.orderBy(F.desc("dist"), F.asc("id")).limit(1).collect()[0]

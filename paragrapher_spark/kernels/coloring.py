@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import gather_table, undirected_pairs
 from paragrapher_spark.plans import superstep
 
 SEED = 42
@@ -60,14 +60,13 @@ def greedy_coloring(
     edges: DataFrame,
     seed: int = SEED,
     max_rounds: int = 200,
-    num_partitions: int | None = None,
 ) -> ColoringResult:
     """Sequential-greedy-equivalent coloring of the canonical undirected
     simple graph underlying ``edges(src, dst)`` (vertex set = edge
     endpoints; isolated vertices are trivially color 1 and passed through
     by the caller if needed)."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     und = undirected_pairs(edges)
     pri = (
@@ -81,19 +80,16 @@ def greedy_coloring(
     )
     # lower-priority adjacency, materialized ONCE: (v, u) where u is a
     # neighbor of v with (h_u, u) < (h_v, v)
-    ladj = (
+    ladj, _ = gather_table(
         sym.join(pri.select(F.col("id").alias("v"), F.col("h").alias("hv")), "v")
         .join(pri.select(F.col("id").alias("u"), F.col("h").alias("hu")), "u")
         .where(
             F.struct(F.col("hu").alias("h"), F.col("u").alias("id"))
             < F.struct(F.col("hv").alias("h"), F.col("v").alias("id"))
         )
-        .select("v", "u")
-        .repartition(n_part, "v")
-        .sortWithinPartitions("v")
-        .persist()
+        .select("v", "u"),
+        "v",
     )
-    ladj.count()
 
     undecided = pri.select("id").repartition(n_part, "id").localCheckpoint(
         eager=True

@@ -33,7 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_pairs, vertex_ids
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -114,13 +114,7 @@ def connected_components(
     own singleton components (reference counts them too, test2:250-258).
     """
     spark = edges.sparkSession
-    all_vertices = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    ).persist()
+    all_vertices = vertex_ids(edges, vertices).persist()
     all_vertices.count()
 
     def _start(e: DataFrame) -> tuple[DataFrame, tuple[int, int], bool]:
@@ -131,7 +125,7 @@ def connected_components(
     # chained-checkpoint shape; cuts go through plans/iterstate.py
     def step(rnd: int, state, ckpt):
         e, sig, _ = state
-        # non-eager: the signature aggregation is the round's ONE job and
+        # non-eager: the signature aggregation is the round's one action and
         # materializes the checkpoint as a side effect (same discipline as
         # the PageRank superstep)
         e = ckpt.cut(_small_star(_large_star(e)), eager=False)
@@ -244,11 +238,7 @@ def decremental_components(
     split detection cannot do less without maintaining a spanning
     structure per component.
     """
-    removed_ids = (
-        removed_edges.select(F.col("src").alias("id"))
-        .unionByName(removed_edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    removed_ids = vertex_ids(removed_edges)
     affected_comps = (
         prev_labels.join(removed_ids, on="id")
         .select("component")

@@ -21,8 +21,8 @@ fixpoint, so over-unrolling is exact).
 Scale shape (100 TB): per round ONE equi-join (neighbor values onto the
 static adjacency) + one per-vertex H-index aggregation. The H-index is
 computed with a window ``row_number`` partitioned by vertex — partition
-width is bounded by max degree, and the adjacency is materialized once
-(localCheckpoint) and reused every round, so per-round cost is one
+width is bounded by max degree, and the adjacency is cached once
+(``graph.gather_table``) and reused every round, so per-round cost is one
 shuffle pair on |E| rows. Convergence check rides the round's single
 action (count of changed vertices). Unconverged at ``max_rounds`` fails
 LOUDLY rather than returning a partial decomposition.
@@ -36,7 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_adjacency
+from paragrapher_spark.graph import gather_table, undirected_adjacency
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -64,19 +64,7 @@ def coreness(
     the H-index operator is a pure function of the persisted state, so
     a resumed run converges to the identical fixpoint."""
     spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    adj = (
-        undirected_adjacency(edges)
-        # partition + sort by the join key ONCE, then PERSIST (not
-        # localCheckpoint: a checkpointed RDD scan loses its
-        # outputPartitioning, so the join would re-exchange all |E| rows
-        # every round; InMemoryRelation keeps it). Per round only the
-        # |V|-row value table and the |E|-row window re-hash — the
-        # pagerank discipline, kernels/pagerank.py:134-143.
-        .repartition(n_part, "u")
-        .sortWithinPartitions("u")
-        .persist()
-    )
+    adj, _ = gather_table(undirected_adjacency(edges), "u")
 
     def step(rnd: int, state, ckpt):
         cur, _ = state

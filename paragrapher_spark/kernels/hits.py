@@ -17,7 +17,7 @@ any sane round count (growth is lambda^k, lambda <= max degree * max score).
 
 100 TB shape: identical cost class to a PageRank superstep — two shuffles
 on the vertex key per round, edge table repartitioned + sorted once before
-caching (kernels/pagerank.py measurement), driver state O(1) scalars.
+caching (``graph.gather_table``), driver state O(1) scalars.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -42,31 +43,16 @@ class HITSResult:
 def hits(
     edges: DataFrame,
     iterations: int = 8,
-    num_partitions: int | None = None,
 ) -> HITSResult:
     """Fixed-round HITS over directed edges(src, dst). Every vertex (either
     endpoint) gets a row; sink/source vertices keep score 0 on the side
     they cannot earn. Deterministic: a DuckDB oracle reproduces it with
     ``iterations`` unrolled materialized CTE rounds."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e.count()
-
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
+    e, _ = gather_table(edges.select("src", "dst").distinct(), "src")
+    vertices = vertex_ids(e).repartition(n_part, "id").localCheckpoint(eager=True)
 
     def step(it: int, state, ckpt):
         auth = (
@@ -134,7 +120,6 @@ class SALSAResult:
 def salsa(
     edges: DataFrame,
     iterations: int = 4,
-    num_partitions: int | None = None,
     checkpoint: "CheckpointManager | None" = None,
     checkpoint_every: int = 2,
 ) -> SALSAResult:
@@ -163,7 +148,7 @@ def salsa(
     change), so no per-round degree join.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = (
         edges.select("src", "dst")
@@ -172,23 +157,13 @@ def salsa(
     )
     ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = (
+    ed, _ = gather_table(
         e.join(ind, "dst")
         .join(outd, "src")
-        .select("src", "dst", "indeg", "outdeg")
-        .repartition(n_part, "dst")
-        .sortWithinPartitions("dst")
-        .persist()
+        .select("src", "dst", "indeg", "outdeg"),
+        "dst",
     )
-    ed.count()
-
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
+    vertices = vertex_ids(e).repartition(n_part, "id").localCheckpoint(eager=True)
 
     def step(rnd: int, state, ckpt):
         hub = (

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
+from paragrapher_spark.graph import gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 
 M = 16  # registers per counter (b = 4 index bits)
@@ -130,7 +131,6 @@ def hyperball(
     edges: DataFrame,
     radius: int = 4,
     directed: bool = False,
-    num_partitions: int | None = None,
 ) -> HyperBallResult:
     """Neighborhood function + harmonic centrality to ``radius`` over
     edges(src, dst).
@@ -142,28 +142,16 @@ def hyperball(
     decimals, plus the per-radius neighborhood function (exact integer sums
     of rounded per-vertex estimates — order-free, reproducible)."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    e = (
-        e.distinct()
-        # the gather below joins on dst (state flows dst -> src), so cache
-        # in dst order to spare the per-round SortMergeJoin re-sort
-        .repartition(n_part, "dst")
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    e.count()
-
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    # the gather below joins on dst (state flows dst -> src)
+    e, _ = gather_table(e.distinct(), "dst")
+    vertices = vertex_ids(e)
     state = (
         _init_registers(vertices)
         .withColumn("est", F.round(ball_estimate(), 6))

@@ -45,6 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 
 _GUARD = 2**62
@@ -66,55 +67,34 @@ class EigenResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def katz(
+def _walk_counts(
     edges: DataFrame,
-    rounds: int = 6,
-    base: int = 16,
-    directed: bool = True,
-    num_partitions: int | None = None,
-) -> KatzResult:
-    """Truncated Katz centrality with alpha = 1/base over edges(src, dst).
+    rounds: int,
+    directed: bool,
+    base: int | None,
+) -> superstep.Loop:
+    """The integer walk-count loop katz and eigencentrality share:
 
-    Returns one row per vertex: ``katz_num`` = base^rounds * x_rounds
-    (exact BIGINT), ``katz_den`` = base^rounds, and ``katz`` = their IEEE
-    quotient. ``directed=False`` symmetrizes first (walks in both
-    directions), matching the undirected co-purchase semantics.
-    """
-    if rounds < 1 or base < 2:
-        raise ValueError(f"need rounds >= 1 and base >= 2, got {rounds}/{base}")
+        y_0 = 1;   y_{t+1}(v) = bump_t + sum over in-neighbors u of y_t(u)
+
+    with bump_t = base^t for Katz and no bump for eigencentrality
+    (``base=None``). The loop state is ``(y(id, y), max(y))``; the pinned
+    result is the final ``y``."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    e = (
-        e.where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e.count()
-
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
-    max_in = (
-        e.groupBy("dst").count().agg(F.max("count")).collect()[0][0] or 0
-    )
-
-    den = base**rounds
+    e, _ = gather_table(e.where(F.col("src") != F.col("dst")).distinct(), "src")
+    vertices = vertex_ids(e).repartition(n_part, "id").localCheckpoint(eager=True)
+    max_in = e.groupBy("dst").count().agg(F.max("count")).collect()[0][0] or 0
 
     def step(t: int, state, ckpt):
         y, max_y = state
-        bump = base**t
+        bump = base**t if base else 0
         # exact a-priori bound for THIS round: every vertex receives at most
         # max_in contributions of at most max_y, plus the base^t walk-0 term
         if max_in * max_y + bump >= _GUARD:
@@ -122,20 +102,20 @@ def katz(
                 f"katz fixed-point would overflow at round {t}: "
                 f"max_in_degree={max_in} * max_y={max_y} + {base}^{t} >= 2^62; "
                 f"lower rounds= or raise base="
+                if base
+                else f"power iteration would overflow at round {t}: "
+                f"max_in_degree={max_in} * max_y={max_y} >= 2^62; lower rounds="
             )
         gathered = (
             e.join(y.select(F.col("id").alias("src"), "y"), on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("y").alias("g"))
         )
+        g = F.coalesce(F.col("g"), F.lit(0))
+        y_col = F.lit(bump).cast("long") + g if base else g.cast("long")
         y = (
             vertices.join(gathered, on="id", how="left")
-            .select(
-                "id",
-                (F.lit(bump).cast("long") + F.coalesce(F.col("g"), F.lit(0))).alias(
-                    "y"
-                ),
-            )
+            .select("id", y_col.alias("y"))
             .repartition(n_part, "id")
             .transform(ckpt.cut_lazy)
         )
@@ -150,24 +130,42 @@ def katz(
         spark=spark,
         max_iter=rounds,
         key="round",
-        result=lambda s: s[0].select(
-            "id",
-            F.col("y").alias("katz_num"),
-            F.lit(den).cast("long").alias("katz_den"),
-            (F.col("y").cast("double") / F.lit(float(den))).alias("katz"),
-        ),
+        result=lambda s: s[0],
     )
     e.unpersist()
-    return KatzResult(
-        scores=loop.result, rounds=rounds, base=base, history=loop.history
+    return loop
+
+
+def katz(
+    edges: DataFrame,
+    rounds: int = 6,
+    base: int = 16,
+    directed: bool = True,
+) -> KatzResult:
+    """Truncated Katz centrality with alpha = 1/base over edges(src, dst).
+
+    Returns one row per vertex: ``katz_num`` = base^rounds * x_rounds
+    (exact BIGINT), ``katz_den`` = base^rounds, and ``katz`` = their IEEE
+    quotient. ``directed=False`` symmetrizes first (walks in both
+    directions), matching the undirected co-purchase semantics.
+    """
+    if rounds < 1 or base < 2:
+        raise ValueError(f"need rounds >= 1 and base >= 2, got {rounds}/{base}")
+    den = base**rounds
+    loop = _walk_counts(edges, rounds, directed, base)
+    scores = loop.result.select(
+        "id",
+        F.col("y").alias("katz_num"),
+        F.lit(den).cast("long").alias("katz_den"),
+        (F.col("y").cast("double") / F.lit(float(den))).alias("katz"),
     )
+    return KatzResult(scores=scores, rounds=rounds, base=base, history=loop.history)
 
 
 def eigencentrality(
     edges: DataFrame,
     rounds: int = 6,
     directed: bool = False,
-    num_partitions: int | None = None,
 ) -> EigenResult:
     """Eigenvector centrality by truncated power iteration, integer-exact.
 
@@ -175,9 +173,10 @@ def eigencentrality(
     y_t(u) with y_0 = 1 counts length-t walks ending at v; y_T /
     max(y_T) is the power-iteration estimate of the dominant
     eigenvector (Bonacich 1972), converging at rate lambda_2/lambda_1.
-    Every y_t is an exact BIGINT (the Katz discipline minus the
-    attenuation bump), so an unrolled SQL oracle reproduces ``walks``
-    bit-for-bit and ``eig`` is ONE IEEE division of two exact longs.
+    Every y_t is an exact BIGINT (the Katz recurrence minus the
+    attenuation bump: ``_walk_counts`` with ``base=None``), so an
+    unrolled SQL oracle reproduces ``walks`` bit-for-bit and ``eig`` is
+    ONE IEEE division of two exact longs.
 
     Same per-round plan as katz/pagerank: one shuffle join + one
     map-side-combinable sum over the pre-partitioned cached edge table;
@@ -187,66 +186,13 @@ def eigencentrality(
     """
     if rounds < 1:
         raise ValueError(f"need rounds >= 1, got {rounds}")
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = (
-        e.where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
+    loop = _walk_counts(edges, rounds, directed, None)
+    max_walks = int(loop.state[1])
+    scores = loop.result.select(
+        "id",
+        F.col("y").alias("walks"),
+        (F.col("y").cast("double") / F.lit(float(max_walks))).alias("eig"),
     )
-    e.count()
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
-    max_in = e.groupBy("dst").count().agg(F.max("count")).collect()[0][0] or 0
-
-    def step(t: int, state, ckpt):
-        y, max_y = state
-        if max_in * max_y >= _GUARD:
-            raise ValueError(
-                f"power iteration would overflow at round {t}: "
-                f"max_in_degree={max_in} * max_y={max_y} >= 2^62; lower rounds="
-            )
-        gathered = (
-            e.join(y.select(F.col("id").alias("src"), "y"), on="src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("y").alias("g"))
-        )
-        y = (
-            vertices.join(gathered, on="id", how="left")
-            .select("id", F.coalesce(F.col("g"), F.lit(0)).cast("long").alias("y"))
-            .repartition(n_part, "id")
-            .transform(ckpt.cut_lazy)
-        )
-        max_y = y.agg(F.max("y")).collect()[0][0]
-        return (y, max_y), {"max_y": int(max_y)}
-
-    loop = superstep.run(
-        step,
-        (vertices.select("id", F.lit(1).cast("long").alias("y")), 1),
-        spark=spark,
-        max_iter=rounds,
-        key="round",
-        result=lambda s: s[0].select(
-            "id",
-            F.col("y").alias("walks"),
-            (F.col("y").cast("double") / F.lit(float(s[1]))).alias("eig"),
-        ),
-    )
-    e.unpersist()
     return EigenResult(
-        scores=loop.result, rounds=rounds, max_walks=int(loop.state[1]),
-        history=loop.history,
+        scores=scores, rounds=rounds, max_walks=max_walks, history=loop.history
     )

@@ -20,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_pairs, vertex_ids
 from paragrapher_spark.plans import superstep
 
 
@@ -60,12 +60,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> KCoreResult:
 
     def _core(state) -> tuple[DataFrame, DataFrame]:
         e = state[0]
-        verts = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        return verts, e
+        return vertex_ids(e), e
 
     loop = superstep.run(
         step,

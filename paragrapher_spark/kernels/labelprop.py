@@ -17,7 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_adjacency
+from paragrapher_spark.graph import gather_table, undirected_adjacency, vertex_ids
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -34,33 +34,12 @@ def label_propagation(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 20,
-    num_partitions: int | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 5,
 ) -> LabelPropResult:
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    und = (
-        undirected_adjacency(edges)
-        .toDF("src", "dst")
-        .repartition(n_part, "dst")
-        # sorted before caching: the per-round gather join is a
-        # SortMergeJoin once labels outgrow the broadcast threshold; the
-        # cached sort order keeps the |E| side from re-sorting every round
-        # (same rationale as kernels/pagerank.py edges_w)
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    und.count()
-
-    all_vertices = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    und, _ = gather_table(undirected_adjacency(edges).toDF("src", "dst"), "dst")
+    all_vertices = vertex_ids(edges, vertices)
 
     def step(it: int, state, ckpt):
         labels = state[0]
@@ -88,7 +67,7 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("new_label"),
                 F.col("label").alias("old_label"),
             )
-            # non-eager: the changed-count aggregation below is the one job
+            # non-eager: the changed-count aggregation below is the one action
             # of the superstep and materializes the checkpoint
             .transform(ckpt.cut_lazy)
         )

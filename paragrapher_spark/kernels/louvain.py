@@ -55,6 +55,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -69,7 +70,6 @@ class LouvainResult:
 def louvain_level(
     edges: DataFrame,
     rounds: int = 3,
-    num_partitions: int | None = None,
     checkpoint: "CheckpointManager | None" = None,
     checkpoint_every: int = 1,
 ) -> LouvainResult:
@@ -85,17 +85,15 @@ def louvain_level(
     parity-move rule, the manifest's iteration number keeps the
     alternation phase exact across restarts."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst").distinct()
-    und = (
+    # the row count is 2m — one action, reused every round as a literal
+    und, two_m = gather_table(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .select(F.col("src").alias("v"), F.col("dst").alias("u"))
-        .repartition(n_part, "u")
-        .sortWithinPartitions("u")
-        .persist()
+        .select(F.col("src").alias("v"), F.col("dst").alias("u")),
+        "u",
     )
-    two_m = und.count()  # 2m — one action, reused every round as a literal
 
     deg = (
         und.groupBy(F.col("v").alias("id"))

@@ -61,7 +61,6 @@ def neighbor_feature_agg(
     vec_col: str = "vec",
     hops: int = 1,
     scale: int = SCALE,
-    num_partitions: int | None = None,
 ) -> NeighborhoodResult:
     """Mean of quantized features over the ``hops``-hop out-neighborhood
     path multiset of directed edges(src, dst).
@@ -75,7 +74,7 @@ def neighbor_feature_agg(
     if hops < 1:
         raise ValueError(f"hops must be >= 1, got {hops}")
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     dim_row = features.select(F.size(vec_col).alias("d")).agg(
         F.min("d").alias("lo"), F.max("d").alias("hi")

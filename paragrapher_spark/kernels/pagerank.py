@@ -38,6 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table, vertex_ids
 from paragrapher_spark.operators.salting import explode_salts, salt_column
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
@@ -58,7 +59,6 @@ def pagerank(
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     n_salts: int | str | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 5,
@@ -103,17 +103,9 @@ def pagerank(
     over ``init_ranks``.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    else:
-        vertices = vertices.select("id")
-    vertices = vertices.repartition(n_part, "id").persist()
+    vertices = vertex_ids(edges, vertices).repartition(n_part, "id").persist()
     n = vertices.count()
     if n == 0:
         empty = vertices.select("id", F.lit(0.0).alias("rank"))
@@ -144,17 +136,7 @@ def pagerank(
             .join(out_deg, on="src")
             .select("src", "dst", (F.col("_w") / F.col("wsum")).alias("coef"))
         )
-    # sorted-within-partitions BEFORE caching: once ranks outgrow the
-    # broadcast threshold the gather is a SortMergeJoin, and a cached
-    # UNSORTED edge table would be re-sorted (all |E| rows) every
-    # superstep; the cached sort order is reported by the in-memory scan,
-    # so only the |V|-row rank side sorts per iteration. (A shuffle_hash
-    # build on ranks was measured slower: hash-probe latency over
-    # |E| lookups loses to sequential merge bandwidth on this shape.)
-    edges_w = (
-        edges_w.repartition(n_part, "src").sortWithinPartitions("src").persist()
-    )
-    n_edges = edges_w.count()
+    edges_w, n_edges = gather_table(edges_w, "src")
 
     if n_salts == "auto":
         max_deg = (
@@ -294,8 +276,8 @@ def pagerank(
             )
             .repartition(n_part, "id")
         )
-        # non-eager cut: the delta/dangling aggregation below is the ONE
-        # job of the superstep — it materializes the checkpoint as a
+        # non-eager cut: the delta/dangling aggregation below is the one
+        # action of the superstep — it materializes the checkpoint as a
         # side effect (parquet round-trip every 4th iteration, eager)
         new_ranks = ckpt.cut(new_ranks, eager=False)
         row = new_ranks.agg(
@@ -343,7 +325,6 @@ def ppr_batch(
     rounds: int = 6,
     alpha_num: int = 85,
     alpha_den: int = 100,
-    num_partitions: int | None = None,
     checkpoint: "CheckpointManager | None" = None,
     checkpoint_every: int = 2,
 ) -> DataFrame:
@@ -378,19 +359,13 @@ def ppr_batch(
     as classic PageRank.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if not seeds:
         raise ValueError("ppr_batch needs at least one seed")
 
     e = edges.select("src", "dst").distinct()
     outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = (
-        e.join(outd, "src")
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    ed.count()
+    ed, _ = gather_table(e.join(outd, "src"), "src")
 
     S = PPR_FIXED_POINT
     teleport = spark.createDataFrame(

@@ -69,6 +69,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import vertex_ids
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.iterstate import StateCheckpointer
 
@@ -165,7 +166,7 @@ def _min_propagate(
         # operator to the first half's output changed nothing, that
         # output was already the fixpoint (monotone operator).
         steps += PROP_UNROLL
-        # lazy cut: the chg aggregation below is the step's ONE job and
+        # lazy cut: the chg aggregation below is the step's one action and
         # materializes the checkpoint as a side effect
         plan = cur
         for _u in range(PROP_UNROLL - 1):
@@ -200,7 +201,6 @@ class SCCResult:
 def scc(
     edges: DataFrame,
     max_rounds: int = 50,
-    num_partitions: int | None = None,
 ) -> SCCResult:
     """SCC labels for every vertex of directed edges(src, dst).
 
@@ -210,7 +210,7 @@ def scc(
     at test scale.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     with _constraint_propagation_off(spark):
         return _scc_impl(edges, spark, n_part, max_rounds)
@@ -273,13 +273,7 @@ def _scc_impl(
         .repartition(n_part, "src")
         .localCheckpoint(eager=True)
     )
-    verts = (
-        live.select(F.col("src").alias("id"))
-        .unionByName(live.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
+    verts = vertex_ids(live).repartition(n_part, "id").localCheckpoint(eager=True)
 
     def step(rnd: int, state, ckpt):
         # found: the settled (id, scc) rows of every round so far

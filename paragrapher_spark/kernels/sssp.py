@@ -14,12 +14,12 @@ Execution shape (the BFS/PageRank discipline):
   so results equal the classic |V|-1-round relaxation but each round only
   touches edges OUT OF vertices improved last round (delta/frontier
   optimization — identical fixpoint, far less work on small frontiers);
-- ONE job per round: the merged distance table rides a non-eager
+- one action per round: the merged distance table rides a non-eager
   localCheckpoint and the improved-count aggregation is the single action
   that materializes it;
 - driver state is O(1) scalars per round; the edge table is repartitioned
   and sorted once before caching so the per-round SortMergeJoin reuses the
-  order (see kernels/pagerank.py for the measurement behind this);
+  order (``graph.gather_table`` holds the measurement behind this);
 - weights must be non-negative for the early-exit fixpoint to be the true
   shortest-path solution (standard Bellman-Ford caveat; no negative-cycle
   detection — ``max_iter`` bounds the loop regardless).
@@ -38,6 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table
 from paragrapher_spark.plans import superstep
 
 
@@ -55,7 +56,6 @@ def sssp(
     weight_col: str = "weight",
     max_iter: int = 100,
     directed: bool = True,
-    num_partitions: int | None = None,
 ) -> SSSPResult:
     """Weighted shortest paths over edges(src, dst, ``weight_col``) from
     ``sources`` (a (id) DataFrame or a list of vertex ids).
@@ -67,7 +67,7 @@ def sssp(
     the fixpoint argument used by the k-core oracle).
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst", F.col(weight_col).alias("w"))
     if not directed:
@@ -80,14 +80,7 @@ def sssp(
         )
     # parallel edges are harmless (min() absorbs them) but carrying only the
     # cheapest one shrinks every subsequent round's join input
-    e = (
-        e.groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    e.count()
+    e, _ = gather_table(e.groupBy("src", "dst").agg(F.min("w").alias("w")), "src")
 
     if isinstance(sources, list):
         src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")

@@ -38,6 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 
 
@@ -52,30 +53,17 @@ class TopoResult:
 def topo_levels(
     edges: DataFrame,
     max_rounds: int = 64,
-    num_partitions: int | None = None,
 ) -> TopoResult:
     """Longest-path level per vertex of the DAG edges(src, dst), src -> dst
     meaning "dst depends on src" (dst builds after src)."""
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
+    e, _ = gather_table(
+        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
+        "src",
     )
-    e.count()
-
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(n_part, "id")
-        .localCheckpoint(eager=True)
-    )
+    vertices = vertex_ids(e).repartition(n_part, "id").localCheckpoint(eager=True)
     n_vertices = vertices.count()
 
     def step(rnd: int, state, ckpt):

@@ -26,7 +26,7 @@ Execution shape:
 - walkers parked on sinks (out-degree 0 in the directed case) terminate;
   surviving state is O(|walks|) rows regardless of graph size;
 - per-step state rides a non-eager localCheckpoint; the only action per
-  step is the survivor count (same single-job discipline as
+  step is the survivor count (same single-action discipline as
   kernels/sssp.py / kernels/pagerank.py).
 
 100 TB shape: the hot join is (walks ⋈ adjacency) on (vertex, idx). A hub
@@ -116,7 +116,6 @@ def random_walks(
     seed: int = SEED,
     directed: bool = False,
     weight_col: str | None = None,
-    num_partitions: int | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 4,
 ) -> WalksResult:
@@ -140,7 +139,7 @@ def random_walks(
     (edges, starts, length, seed).
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     if weight_col is None:
         e = edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
@@ -152,7 +151,7 @@ def random_walks(
         )
     # one materialization: indexed, degree-annotated adjacency sorted by the
     # join key — every step's SortMergeJoin reuses the order (the cached-edge
-    # discipline measured in kernels/pagerank.py). Parallel (src, dst) rows
+    # discipline measured in graph.gather_table). Parallel (src, dst) rows
     # collapse to one neighbor carrying the max weight (deterministic both
     # engines; min/max/sum would all do, max matches "strongest arc").
     win = Window.partitionBy("src").orderBy("dst")
@@ -255,7 +254,6 @@ def node2vec_walks(
     seed: int = SEED,
     directed: bool = False,
     weight_col: str | None = None,
-    num_partitions: int | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 4,
 ) -> WalksResult:
@@ -290,7 +288,7 @@ def node2vec_walks(
     steps t and t-1.
     """
     spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for nm, a in (
         ("alpha_return", alpha_return),
         ("alpha_in", alpha_in),

@@ -48,7 +48,6 @@ class WLResult:
 def wl_refinement(
     edges: DataFrame,
     rounds: int = 3,
-    num_partitions: int | None = None,
 ) -> WLResult:
     """1-WL refinement over the undirected simple graph underlying
     edges(src, dst), exactly ``rounds`` rounds from degree colors.
@@ -77,7 +76,6 @@ def wl_refinement(
             combined.select("color", "nsig"),
             ["color", "nsig"],
             id_col="new_color",
-            num_partitions=num_partitions,
         )
         colors = (
             combined.join(mapping, on=["color", "nsig"])

@@ -108,7 +108,7 @@ class StateCheckpointer:
     def cut(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """Materialize ``df`` and return a lineage-cut equivalent.
 
-        ``eager=False`` keeps the one-job-per-superstep property for
+        ``eager=False`` keeps the one-action-per-superstep property for
         loops whose next action materializes the checkpoint anyway; the
         parquet round-trip on period boundaries is always eager (the
         write is a job)."""
@@ -129,7 +129,7 @@ class StateCheckpointer:
 
     def cut_lazy(self, df: DataFrame) -> DataFrame:
         """`.transform(ckpt.cut_lazy)` drop-in for a fluent-chain
-        ``.localCheckpoint(eager=False)`` (one-job-per-superstep loops)."""
+        ``.localCheckpoint(eager=False)`` (one-action-per-superstep loops)."""
         return self.cut(df, eager=False)
 
     def pin(self, *dfs: DataFrame):

@@ -10,6 +10,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import vertex_ids
 from paragrapher_spark.kernels.betweenness import (
     betweenness,
     closeness_centrality,
@@ -719,11 +720,7 @@ def _q_pagerank_personalized_fixed(spark: SparkSession, sf_dir: str) -> DataFram
     vertex ids (uniform), 8 fixed supersteps; restart AND dangling mass
     return to the seed set per the teleport vector."""
     edges = copurchase_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     seeds = [r[0] for r in verts.orderBy("id").limit(10).collect()]
     res = pagerank(edges, tol=0.0, max_iter=8, teleport=seeds)
     return res.ranks.select(
@@ -749,11 +746,7 @@ _BC_UNROLL = 10
 
 def _bc_seeds(spark: SparkSession, sf_dir: str):
     edges = copurchase_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     return edges, verts.where(F.col("id") % _BC_SOURCE_MOD == 0)
 
 
@@ -1000,11 +993,7 @@ def _q_edge_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from paragrapher_spark.kernels.betweenness import edge_betweenness
 
     edges = copurchase_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     seeds = verts.where(F.col("id") % _BC_SOURCE_MOD == 0)
     res = edge_betweenness(edges, seeds)
     if res.depth > _BC_UNROLL:

@@ -233,7 +233,7 @@ def _import_scc(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
         corpus = synth_corpus(spark, n_files=_SCC_FILES, n_repos=8)
         g = edges_from_corpus(corpus, num_partitions=8)
         e = g.edges.select("src", "dst").localCheckpoint(eager=True)
-        return e, scc(e, num_partitions=8).components
+        return e, scc(e).components
 
     return _substrate(spark, "import_scc", build)
 
@@ -364,7 +364,7 @@ def _q_build_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see _import_scc)."""
     e, comp = _import_scc(spark)
     dag = condensation(e, comp)
-    res = topo_levels(dag, max_rounds=64, num_partitions=8)
+    res = topo_levels(dag, max_rounds=64)
     if res.rounds > _BUILD_ORDER_UNROLL:
         raise ValueError(
             f"build_order needed {res.rounds} relaxation rounds vs the "
@@ -640,7 +640,7 @@ def _q_call_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     transforming. Same definitional transitive-closure oracle as
     scc_imports, over the arithmetic-regenerated dense-id call edges."""
     g = _cg_graph(spark)
-    res = scc(g.edges.select("src", "dst"), num_partitions=8)
+    res = scc(g.edges.select("src", "dst"))
     return res.components.select(
         F.col("id").cast("long"), F.col("scc").cast("long")
     )

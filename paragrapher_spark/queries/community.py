@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import vertex_ids
 from paragrapher_spark.kernels.labelprop import label_propagation, modularity
 from paragrapher_spark.kernels.linkpred import link_prediction
 from paragrapher_spark.kernels.neighborhood import neighbor_feature_agg
@@ -161,11 +162,7 @@ def _q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (walk_id, step), so the DuckDB oracle replays the walks exactly with
     6 unrolled pick-joins — a 'random' algorithm under the exact gate."""
     edges = copurchase_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     starts = verts.where(F.col("id") % _WALK_START_MOD == 0)
     res = random_walks(edges, starts, length=_WALK_LEN, directed=False)
     return res.steps.select(
@@ -264,11 +261,7 @@ def _q_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from paragrapher_spark.kernels.walks import node2vec_walks
 
     edges = copurchase_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     starts = verts.where(F.col("id") % _WALK_START_MOD == 0)
     a_ret, a_in, a_out = _N2V_ALPHAS
     res = node2vec_walks(
@@ -339,11 +332,7 @@ def _q_neighbor_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from paragrapher_spark.kernels.walks import neighbor_sampling
 
     edges = copurchase_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     seeds = verts.where(F.col("id") % _WALK_START_MOD == 0)
     return neighbor_sampling(
         edges, seeds, fanouts=list(_NSAMP_FANOUTS), directed=False
@@ -364,11 +353,7 @@ def _q_random_walks_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative-weight intervals, md5-deterministic, replayed exactly by
     the oracle's unrolled interval-joins."""
     edges = copurchase_weighted_edges(spark, sf_dir)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     starts = verts.where(F.col("id") % _WALK_START_MOD == 0)
     res = random_walks(
         edges, starts, length=_WALK_LEN, directed=False, weight_col="weight"

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import edges_from_corpus, undirected_pairs
+from paragrapher_spark.graph import edges_from_corpus, undirected_pairs, vertex_ids
 from paragrapher_spark.kernels.coloring import greedy_coloring
 from paragrapher_spark.kernels.components import component_sizes, connected_components
 from paragrapher_spark.kernels.coreness import coreness
@@ -71,11 +71,7 @@ def _q_graph_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges(spark, sf_dir)
     deg_out = edges.groupBy("src").count()
     deg_in = edges.groupBy("dst").count()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     return (
         verts.agg(F.count(F.lit(1)).alias("vertices"))
         .crossJoin(edges.agg(F.count(F.lit(1)).alias("edges")))
@@ -934,7 +930,7 @@ def _q_scc_random_digraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recursive-CTE transitive closure over the byte-identical
     md5-regenerated edge set."""
     g = md5_vertex_graph(spark, _SCC_RAND_N, out_deg=_SCC_RAND_DEG)
-    res = scc(g.select("src", "dst"), num_partitions=8)
+    res = scc(g.select("src", "dst"))
     steps = sum(
         h.get("forward_supersteps", 0) + h.get("backward_supersteps", 0)
         for h in res.history
@@ -1276,7 +1272,7 @@ def _q_graph_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
     every (id, color) pair gates bit-for-bit. Oracle: the rounds unrolled
     as materialized CTEs with the candidates/anti-join min-gap."""
     g = md5_vertex_graph(spark, _COLOR_N, out_deg=_COLOR_OUT_DEG)
-    res = greedy_coloring(g, num_partitions=8)
+    res = greedy_coloring(g)
     if res.rounds > _COLOR_UNROLL:
         raise ValueError(
             f"coloring needed {res.rounds} rounds vs the oracle's "

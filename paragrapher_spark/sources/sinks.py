@@ -18,14 +18,15 @@ their own output files atomically.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from paragrapher_spark.graph import Graph
-from paragrapher_spark.operators.indexing import prefix_sum
 
 
 def write_csr(graph: Graph, path: str, num_partitions: int | None = None) -> None:
@@ -106,6 +107,66 @@ def write_edge_text(
     out.write.mode("overwrite").text(path)
 
 
+def _write_ordered_text(
+    rows: DataFrame, path: str, n_part: int, single_file: bool
+) -> None:
+    """Write the ``value`` column of ``rows(section, k1, k2, value)`` in
+    global ``(section, k1, k2)`` order: range-partitioning on that key
+    yields parts that are globally ordered by part number, so the
+    concatenation of ``part-00000..part-NNNNN`` IS the file (no driver
+    collect). ``single_file=True`` stream-concatenates the parts into ONE
+    plain text file at ``path`` (atomic tmp+rename; constant driver
+    memory)."""
+    out_dir = path + ".parts" if single_file else path
+    (
+        rows.repartitionByRange(n_part, "section", "k1", "k2")
+        .sortWithinPartitions("section", "k1", "k2")
+        .select("value")
+        .write.mode("overwrite")
+        .text(out_dir)
+    )
+    if single_file:
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as dst:
+            for part in sorted(glob.glob(os.path.join(out_dir, "part-*"))):
+                with open(part, "rb") as srcf:
+                    shutil.copyfileobj(srcf, dst)
+        os.replace(tmp, path)
+        shutil.rmtree(out_dir)
+
+
+def _numbered_lines(spark: SparkSession, path: str) -> DataFrame:
+    """``(idx, value)`` for every non-blank line of the text file (or
+    directory of ``part-*`` files) at ``path``: ``idx`` is the global line
+    number (blank lines keep their slot), ``value`` the stripped line.
+
+    Parts are read in NAME order from an explicit sorted list: a bare
+    directory path gives no guarantee that Hadoop's split enumeration
+    follows part-file name order (local FS listing order is arbitrary),
+    and zipWithIndex's global index is split-order-dependent. The frame is
+    materialized once (localCheckpoint): zipWithIndex alone costs an extra
+    counting pass, and the readers' derivations would otherwise re-read
+    and re-index the file for every downstream action."""
+    if os.path.isdir(path):
+        parts = sorted(
+            p
+            for p in glob.glob(os.path.join(path, "*"))
+            if os.path.basename(p).startswith("part-")
+        )
+        src = ",".join(parts)
+    else:
+        src = path
+    rdd = spark.sparkContext.textFile(src)
+    return (
+        spark.createDataFrame(
+            rdd.zipWithIndex().map(lambda x: (x[1], x[0].strip())),
+            "idx long, value string",
+        )
+        .where(F.col("value") != "")
+        .localCheckpoint(eager=True)
+    )
+
+
 def write_adjacency_text(
     graph: Graph,
     path: str,
@@ -162,27 +223,9 @@ def write_adjacency_text(
         F.col("dst").alias("k2"),
         F.col("dst").cast("string").alias("value"),
     )
-    out_dir = path + ".parts" if single_file else path
-    (
-        header.unionByName(offs)
-        .unionByName(dests)
-        .repartitionByRange(n, "section", "k1", "k2")
-        .sortWithinPartitions("section", "k1", "k2")
-        .select("value")
-        .write.mode("overwrite")
-        .text(out_dir)
+    _write_ordered_text(
+        header.unionByName(offs).unionByName(dests), path, n, single_file
     )
-    if single_file:
-        import glob
-        import shutil
-
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as dst:
-            for part in sorted(glob.glob(os.path.join(out_dir, "part-*"))):
-                with open(part, "rb") as srcf:
-                    shutil.copyfileobj(srcf, dst)
-        os.replace(tmp, path)
-        shutil.rmtree(out_dir)
 
 
 def read_edge_text(
@@ -241,33 +284,7 @@ def read_adjacency_text(spark: SparkSession, path: str) -> Graph:
     - each vertex explodes its ``[offset, offset+degree)`` edge-id range
       and equi-joins the destination lines on edge id.
     """
-    # explicit sorted file list: a bare directory path gives no guarantee
-    # that Hadoop's split enumeration follows part-file NAME order (local
-    # FS listing order is arbitrary), and zipWithIndex's global index is
-    # split-order-dependent — so name order is pinned here
-    if os.path.isdir(path):
-        import glob
-
-        parts = sorted(
-            p
-            for p in glob.glob(os.path.join(path, "*"))
-            if os.path.basename(p).startswith("part-")
-        )
-        src = ",".join(parts)
-    else:
-        src = path
-    rdd = spark.sparkContext.textFile(src)
-    # materialized once: zipWithIndex alone costs an extra counting pass,
-    # and the offsets/dests/edges derivations below would otherwise re-read
-    # and re-index the file for every downstream action
-    lines = (
-        spark.createDataFrame(
-            rdd.zipWithIndex().map(lambda x: (x[1], x[0].strip())),
-            "idx long, value string",
-        )
-        .where(F.col("value") != "")
-        .localCheckpoint(eager=True)
-    )
+    lines = _numbered_lines(spark, path)
     head = {r.idx: r.value for r in lines.where(F.col("idx") < 3).collect()}
     if head.get(0) != "AdjacencyGraph":
         raise ValueError(f"not an AdjacencyGraph file: {path!r} ({head.get(0)!r})")
@@ -408,26 +425,7 @@ def write_matrix_market(
         c.cast("long").alias("k2"),
         F.concat_ws(" ", *vals).alias("value"),
     )
-    out_dir = path + ".parts" if single_file else path
-    (
-        header.unionByName(entries)
-        .repartitionByRange(n_part, "section", "k1", "k2")
-        .sortWithinPartitions("section", "k1", "k2")
-        .select("value")
-        .write.mode("overwrite")
-        .text(out_dir)
-    )
-    if single_file:
-        import glob
-        import shutil
-
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as dst:
-            for part in sorted(glob.glob(os.path.join(out_dir, "part-*"))):
-                with open(part, "rb") as srcf:
-                    shutil.copyfileobj(srcf, dst)
-        os.replace(tmp, path)
-        shutil.rmtree(out_dir)
+    _write_ordered_text(header.unionByName(entries), path, n_part, single_file)
 
 
 def read_matrix_market(spark: SparkSession, path: str) -> Graph:
@@ -443,26 +441,7 @@ def read_matrix_market(spark: SparkSession, path: str) -> Graph:
     nnz, out-of-range 1-based indices, or non-numeric tokens all raise
     instead of silently dropping or nulling edges.
     """
-    if os.path.isdir(path):
-        import glob
-
-        parts = sorted(
-            p
-            for p in glob.glob(os.path.join(path, "*"))
-            if os.path.basename(p).startswith("part-")
-        )
-        src = ",".join(parts)
-    else:
-        src = path
-    rdd = spark.sparkContext.textFile(src)
-    lines = (
-        spark.createDataFrame(
-            rdd.zipWithIndex().map(lambda x: (x[1], x[0].strip())),
-            "idx long, value string",
-        )
-        .where(F.col("value") != "")
-        .localCheckpoint(eager=True)
-    )
+    lines = _numbered_lines(spark, path)
     banner_row = lines.orderBy("idx").limit(1).collect()
     if not banner_row or not banner_row[0]["value"].startswith("%%MatrixMarket"):
         got = banner_row[0]["value"][:60] if banner_row else "<empty>"

@@ -132,3 +132,26 @@ def test_md5_hash_is_defined_only_in_hashing_module():
         if _md5_inside_conv(ast.parse(p.read_text(), filename=str(p)))
     }
     assert hits == {"paragrapher_spark/functions/hashing.py"}
+
+
+def test_kernels_take_partitions_from_the_session_and_share_one_gather_cache():
+    """No public kernel has a ``num_partitions`` knob: every kernel reads
+    the session's ``spark.sql.shuffle.partitions``. The sorted gather cache
+    is built only by ``graph.gather_table``; the walks' ``(src, idx)``
+    sort is the one deliberate exception."""
+    root = Path(__file__).resolve().parents[1]
+    knobs, sorts = set(), set()
+    for p in sorted((root / "paragrapher_spark" / "kernels").glob("*.py")):
+        tree = ast.parse(p.read_text(), filename=str(p))
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
+                a = fn.args
+                if any(x.arg == "num_partitions" for x in a.args + a.kwonlyargs):
+                    knobs.add(f"{p.stem}.{fn.name}")
+        if any(
+            isinstance(n, ast.Attribute) and n.attr == "sortWithinPartitions"
+            for n in ast.walk(tree)
+        ):
+            sorts.add(p.name)
+    assert knobs == set()
+    assert sorts == {"walks.py"}

@@ -1,5 +1,6 @@
-"""The engine-portable hash and the undirected edge views, pinned against
-hashlib and DuckDB on one tiny frame."""
+"""The engine-portable hash, the undirected edge views and the kernels'
+shared vertex set and gather cache, pinned on one tiny frame (the hash
+against hashlib and DuckDB)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,12 @@ import duckdb
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import md5_60, portable_hash
-from paragrapher_spark.graph import undirected_adjacency, undirected_pairs
+from paragrapher_spark.graph import (
+    gather_table,
+    undirected_adjacency,
+    undirected_pairs,
+    vertex_ids,
+)
 
 # a loop, a duplicate, reversed duplicates, negative ids, utf-8 / empty /
 # colon-bearing strings
@@ -80,3 +86,33 @@ def test_portable_hash_and_undirected_pairs(spark):
     assert sorted(tuple(r) for r in adj.collect()) == [
         (-7, 4), (1, 3), (3, 1), (4, -7),
     ]
+
+
+def test_vertex_ids_and_gather_table(spark):
+    df = spark.createDataFrame(ROWS, "src long, dst long, s string")
+    ids = vertex_ids(df)
+    assert ids.columns == ["id"]
+    assert sorted(r.id for r in ids.collect()) == [-7, 1, 2, 3, 4]
+    verts = spark.createDataFrame([(9, "x"), (1, "y")], "id long, name string")
+    assert sorted(tuple(r) for r in vertex_ids(df, verts).collect()) == [(1,), (9,)]
+
+    # the partition count is the session's, read at call time
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    try:
+        for n in (int(saved), 3):
+            spark.conf.set(conf, str(n))
+            cached, rows = gather_table(df, "src")
+            try:
+                assert rows == len(ROWS)
+                assert cached.is_cached
+                parts = cached.select("src").rdd.glom().collect()
+                assert len(parts) == n
+                keys = [[r.src for r in part] for part in parts]
+                assert all(k == sorted(k) for k in keys)
+                # hash-partitioned on the key: no key spans two partitions
+                assert sum(len(set(k)) for k in keys) == len({r[0] for r in ROWS})
+            finally:
+                cached.unpersist()
+    finally:
+        spark.conf.set(conf, saved)

@@ -98,6 +98,6 @@ def test_kernel_epilogue_leaves_no_iterstate_files(spark, tmp_path, monkeypatch)
     res = comp_mod.connected_components(g)
     assert os.listdir(base) == [], "components leaked iterstate files"
     assert res.components.count() > 0
-    b = bfs(g, [0], max_depth=10, num_partitions=8)
+    b = bfs(g, [0], max_depth=10)
     assert os.listdir(base) == [], "bfs leaked iterstate files"
     assert b.distances.count() > 0

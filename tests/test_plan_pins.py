@@ -69,10 +69,12 @@ def _edges(spark):
 
 def _superstep(spark, deopt: bool = False):
     """One gather+scatter superstep exactly as kernels/pagerank.py shapes
-    it: coef-edges persisted pre-partitioned on src, rank state
-    checkpointed on id. ``deopt=True`` breaks the discipline the way a
-    careless edit would (no persist/pre-partition, rank state carries
-    its build lineage) — the pin must catch that."""
+    it: coef-edges cached by ``graph.gather_table`` (pre-partitioned and
+    sorted on src), rank state checkpointed on id. ``deopt=True`` breaks
+    the discipline the way a careless edit would (no persist/pre-partition,
+    rank state carries its build lineage) — the pin must catch that."""
+    from paragrapher_spark.graph import gather_table
+
     edges = _edges(spark)
     n_part = 8
     e = (
@@ -81,8 +83,7 @@ def _superstep(spark, deopt: bool = False):
         .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef"))
     )
     if not deopt:
-        e = e.repartition(n_part, "src").persist()
-        e.count()
+        e, _ = gather_table(e, "src")
     ranks = e.select(F.col("src").alias("id")).distinct().select(
         "id", F.lit(0.001).alias("rank")
     )
@@ -275,7 +276,7 @@ def test_scc_result_lineage_pin(spark):
     from paragrapher_spark.sources.edges import md5_vertex_graph
 
     g = md5_vertex_graph(spark, 40, out_deg=2)
-    res = scc(g, num_partitions=8)
+    res = scc(g)
     assert res.converged
     plan = _plan(res.components)
     assert "Union" not in plan, plan

@@ -659,7 +659,7 @@ if _HAVE_HYPOTHESIS:
         if not e:
             return
         df = spark.createDataFrame(e, "src long, dst long")
-        res = scc(df, num_partitions=4)
+        res = scc(df)
         assert res.converged
         got = sorted(tuple(r) for r in res.components.collect())
         assert got == _scc_oracle(e)

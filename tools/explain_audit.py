@@ -19,6 +19,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from paragrapher_spark import get_spark  # noqa: E402
+from paragrapher_spark.graph import gather_table  # noqa: E402
 from paragrapher_spark.kernels.degrees import degree_distribution  # noqa: E402
 from paragrapher_spark.operators.dedup import minhash_signatures  # noqa: E402
 from paragrapher_spark.sources.edges import copurchase_edges, load_table  # noqa: E402
@@ -111,18 +112,15 @@ def main() -> None:
     print(f"   exchanges={n_ex_samp} {'OK' if n_ex_samp == 0 else 'SHUFFLING'}")
 
     # coreness single round: ONE exchange pair expected — the value join
-    # onto the checkpointed adjacency + the per-vertex H-index aggregation
+    # onto the cached adjacency (the kernel's gather_table layout) + the
+    # per-vertex H-index aggregation
     from pyspark.sql import Window
 
-    n_part = 8
-    adj = (
+    adj, _ = gather_table(
         edges.select(F.col("src").alias("v"), F.col("dst").alias("u"))
-        .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("u")))
-        .repartition(n_part, "u")
-        .sortWithinPartitions("u")
-        .persist()
+        .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("u"))),
+        "u",
     )
-    adj.count()
     cur = (
         adj.groupBy(F.col("v").alias("id"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -149,17 +147,15 @@ def main() -> None:
         hstep,
     )
 
-    # PageRank single-superstep plan: edges persisted+partitioned on src,
+    # PageRank single-superstep plan: edges cached by gather_table on src,
     # ranks repartitioned on id -> join should reuse the edge partitioning
     n_part = 8
-    e = (
+    e, _ = gather_table(
         edges.select("src", "dst")
         .join(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), on="src")
-        .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef"))
-        .repartition(n_part, "src")
-        .persist()
+        .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef")),
+        "src",
     )
-    e.count()
     # ranks localCheckpointed exactly like the kernel's loop state — the
     # superstep plan then shows only the per-iteration work, not the rank
     # table's construction lineage
