@@ -50,11 +50,6 @@ class Graph:
             F.count(F.lit(1)).alias("out_degree")
         )
 
-    def in_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("dst").alias("id")).agg(
-            F.count(F.lit(1)).alias("in_degree")
-        )
-
     def offsets(self) -> DataFrame:
         """CSR offsets: offset[v] = edges before v's adjacency, covering all
         vertices (degree 0 included), ending such that the last vertex's
@@ -205,6 +200,19 @@ def undirected_pairs(edges: DataFrame) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
+    )
+
+
+def undirected_degrees(und: DataFrame) -> DataFrame:
+    """``(id, deg)``: the degree of every endpoint of an ``(a, b)`` pair
+    frame shaped like ``undirected_pairs`` output (one row per unordered
+    pair), the simple graph's degree sequence. ``.select("id")`` is its
+    distinct endpoint set."""
+    return (
+        und.select(F.col("a").alias("id"))
+        .unionByName(und.select(F.col("b").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("deg"))
     )
 
 

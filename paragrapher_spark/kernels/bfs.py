@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, undirected_pairs
+from paragrapher_spark.graph import gather_table, undirected_degrees, undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -151,12 +151,7 @@ def pseudo_diameter(
     bit-for-bit against an unrolled-BFS SQL oracle.
     """
     und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = undirected_degrees(und)
     start_row = deg.orderBy(F.desc("deg"), F.asc("id")).limit(1).collect()
     if not start_row:
         return PseudoDiameterResult(sweeps=[], diameter_lb=0, max_depth_seen=0)

@@ -42,7 +42,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-from paragrapher_spark.graph import gather_table, undirected_pairs
+from paragrapher_spark.graph import (
+    gather_table,
+    undirected_adjacency,
+    undirected_degrees,
+    undirected_pairs,
+)
 from paragrapher_spark.plans import superstep
 
 SEED = 42
@@ -68,16 +73,11 @@ def greedy_coloring(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = undirected_pairs(edges)
     pri = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .distinct()
+        undirected_degrees(undirected_pairs(edges))
         .select("id", portable_hash("color", seed, "id").alias("h"))
     )
-    sym = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    )
+    sym = undirected_adjacency(edges)
     # lower-priority adjacency, materialized ONCE: (v, u) where u is a
     # neighbor of v with (h_u, u) < (h_v, v)
     ladj, _ = gather_table(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_degrees, undirected_pairs
 
 
 def in_degrees(edges: DataFrame) -> DataFrame:
@@ -72,12 +72,7 @@ def rich_club(edges: DataFrame) -> DataFrame:
     two histogram aggs.
     """
     und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = undirected_degrees(und)
     # histogram of vertex degrees -> N_k = suffix count of deg > k
     vh = deg.groupBy("deg").agg(F.count(F.lit(1)).cast("long").alias("nv"))
     # histogram of per-edge min endpoint degree -> E_k = suffix count > k
@@ -143,12 +138,7 @@ def avg_neighbor_degree(edges: DataFrame) -> DataFrame:
     window over |E| rows.
     """
     und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = undirected_degrees(und)
     # each undirected edge contributes both directions: (deg a -> deg b)
     # and (deg b -> deg a)
     endp = (

@@ -29,7 +29,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_degrees, undirected_pairs
 from paragrapher_spark.plans import superstep
 
 
@@ -57,17 +57,11 @@ def densest_subgraph(
     if eps_num < 0 or eps_den <= 0:
         raise ValueError(f"invalid epsilon {eps_num}/{eps_den}")
     spark = edges.sparkSession
-    e = undirected_pairs(edges).toDF("src", "dst").localCheckpoint(eager=False)
+    e = undirected_pairs(edges).localCheckpoint(eager=False)
 
     def step(rnd: int, state, ckpt):
         e, _, best = state
-        deg = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .transform(ckpt.cut_lazy)
-        )
+        deg = undirected_degrees(e).transform(ckpt.cut_lazy)
         # the round's ONE action: n and 2m in a single two-scalar collect
         # (materializes both checkpoints: this round's e and deg)
         row = deg.agg(
@@ -88,8 +82,8 @@ def densest_subgraph(
             > F.lit(2 * m * (eps_den + eps_num))
         ).select("id")
         e = (
-            e.join(keep.withColumnRenamed("id", "src"), on="src", how="left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
+            e.join(keep.withColumnRenamed("id", "a"), on="a", how="left_semi")
+            .join(keep.withColumnRenamed("id", "b"), on="b", how="left_semi")
             .transform(ckpt.cut_lazy)
         )
         return (e, n, best), {"n": n, "m": m}

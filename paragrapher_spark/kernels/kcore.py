@@ -20,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs, vertex_ids
+from paragrapher_spark.graph import undirected_degrees, undirected_pairs, vertex_ids
 from paragrapher_spark.plans import superstep
 
 
@@ -34,16 +34,11 @@ class KCoreResult:
 
 def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> KCoreResult:
     """k-core of the undirected simple graph underlying edges(src, dst)."""
-    e = undirected_pairs(edges).toDF("src", "dst").localCheckpoint(eager=False)
+    e = undirected_pairs(edges).localCheckpoint(eager=False)
 
     def step(rnd: int, state, ckpt):
         e, prev_m, _ = state
-        deg = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
+        deg = undirected_degrees(e)
         keep = deg.where(F.col("deg") >= k).select("id")
         # ONE action per round (the PageRank discipline): the filtered edge
         # set rides a non-eager localCheckpoint materialized by the count
@@ -51,15 +46,15 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> KCoreResult:
         # removes >= 1 of its incident edges, so the edge count strictly
         # decreases until (and exactly until) the vertex set is stable.
         e = (
-            e.join(keep.withColumnRenamed("id", "src"), on="src", how="left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
+            e.join(keep.withColumnRenamed("id", "a"), on="a", how="left_semi")
+            .join(keep.withColumnRenamed("id", "b"), on="b", how="left_semi")
             .transform(ckpt.cut_lazy)
         )
         m = e.count()
         return (e, m, m == prev_m or m == 0), {"edges": m}
 
     def _core(state) -> tuple[DataFrame, DataFrame]:
-        e = state[0]
+        e = state[0].toDF("src", "dst")
         return vertex_ids(e), e
 
     loop = superstep.run(

@@ -10,13 +10,14 @@ rule's kernel quartet around the reference's loader clients
 analytics over the loaded graph; truss peeling is the standard next rung
 above the k-core robustness analytic).
 
-Each round recounts per-edge support with the degree-oriented triangle
-listing (Suri & Vassilvitskii WWW'11 — oriented out-degree capped at
-O(sqrt |E|), so wedge fan-out is bounded on hubs, the same power-law skew
-the reference's edge-balanced blocks address, `src/webgraph.c:957-971`)
-and drops edges below ``k-2``. All integer arithmetic — no tie ambiguity,
-bit-reproducible, DuckDB-replayable by unrolling rounds (peeling is
-idempotent at the fixpoint, so over-unrolling is exact).
+Each round recounts per-edge support with ``kernels/triangles.py``'s
+degree-oriented triangle listing (Suri & Vassilvitskii WWW'11 — oriented
+out-degree capped at O(sqrt |E|), so wedge fan-out is bounded on hubs, the
+same power-law skew the reference's edge-balanced blocks address,
+`src/webgraph.c:957-971`) and drops edges below ``k-2``. All integer
+arithmetic — no tie ambiguity, bit-reproducible, DuckDB-replayable by
+unrolling rounds (peeling is idempotent at the fixpoint, so over-unrolling
+is exact).
 
 Scale shape (100 TB): the edge set only shrinks; per round the cost is
 the triangle listing of the CURRENT subgraph (two equi-joins, no
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.kernels.triangles import _support
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -44,53 +46,6 @@ class KTrussResult:
     edges: DataFrame  # (a, b, support) — truss edges, a < b, fixpoint support
     rounds: int
     history: list[dict[str, Any]] = field(default_factory=list)
-
-
-def _support(und: DataFrame) -> DataFrame:
-    """(a, b, support): triangles through each canonical undirected edge.
-
-    Degree-oriented listing — every triangle found exactly once at its
-    lowest-(degree, id) apex, then credited to all three of its edges.
-    """
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    withdeg = und.join(
-        deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), on="a"
-    ).join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), on="b")
-    a_first = F.struct(F.col("da"), F.col("a")) < F.struct(F.col("db"), F.col("b"))
-    o = withdeg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddeg"),
-    )
-    x = o.select(
-        F.col("src").alias("apex"), F.col("dst").alias("v"), F.col("ddeg").alias("vdeg")
-    )
-    y = o.select(
-        F.col("src").alias("apex"), F.col("dst").alias("w"), F.col("ddeg").alias("wdeg")
-    )
-    wedges = x.join(y, on="apex").where(
-        F.struct(F.col("vdeg"), F.col("v")) < F.struct(F.col("wdeg"), F.col("w"))
-    )
-    closing = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    tris = wedges.join(closing, on=["v", "w"]).select("apex", "v", "w")
-
-    def _edge(u: str, v: str) -> F.Column:
-        return F.struct(
-            F.least(F.col(u), F.col(v)).alias("a"),
-            F.greatest(F.col(u), F.col(v)).alias("b"),
-        )
-
-    credits = tris.select(
-        F.explode(
-            F.array(_edge("apex", "v"), _edge("apex", "w"), _edge("v", "w"))
-        ).alias("e")
-    ).select("e.a", "e.b")
-    return credits.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
 
 
 def ktruss(

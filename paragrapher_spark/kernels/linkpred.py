@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_pairs
+from paragrapher_spark.graph import undirected_degrees, undirected_pairs
 
 RA_FIXED_POINT = 1_000_000_000_000  # 1e-12 resolution; deg < 1e12 assumed
 
@@ -63,12 +63,7 @@ def link_prediction(
     out — the link-prediction task scores *candidate* links only.
     """
     und = undirected_pairs(edges).persist()
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = undirected_degrees(und)
     # adjacency in both directions: (center w, endpoint u)
     adj = und.select(F.col("a").alias("w"), F.col("b").alias("u")).unionByName(
         und.select(F.col("b").alias("w"), F.col("a").alias("u"))
@@ -131,12 +126,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
     scale; past that promote the products to decimal(38,0).
     """
     und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = undirected_degrees(und)
     stubs = und.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
         und.select(F.col("b").alias("s"), F.col("a").alias("d"))
     )

@@ -38,7 +38,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-from paragrapher_spark.graph import undirected_adjacency, undirected_pairs
+from paragrapher_spark.graph import (
+    undirected_adjacency,
+    undirected_degrees,
+    undirected_pairs,
+)
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -75,9 +79,7 @@ def maximal_independent_set(
 
     def _start() -> tuple[DataFrame, DataFrame, int]:
         undecided = (
-            und.select(F.col("a").alias("id"))
-            .unionByName(und.select(F.col("b").alias("id")))
-            .distinct()
+            undirected_degrees(und)
             .select("id", portable_hash("mis", seed, "id").alias("h"))
             .localCheckpoint(eager=False)
         )

@@ -26,9 +26,9 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.plans import superstep
-
+from paragrapher_spark.graph import undirected_degrees
 from paragrapher_spark.kernels.components import connected_components
+from paragrapher_spark.plans import superstep
 
 
 @dataclass
@@ -65,9 +65,7 @@ def boruvka_msf(
         .localCheckpoint(eager=False)
     )
     comp = (
-        e.select(F.col("a").alias("id"))
-        .unionByName(e.select(F.col("b").alias("id")))
-        .distinct()
+        undirected_degrees(e)
         .select("id", F.col("id").alias("c"))
         .localCheckpoint(eager=False)
     )

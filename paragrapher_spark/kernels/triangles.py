@@ -26,18 +26,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_adjacency, undirected_pairs
+from paragrapher_spark.graph import (
+    undirected_adjacency,
+    undirected_degrees,
+    undirected_pairs,
+)
 
 
-def _oriented(edges: DataFrame) -> DataFrame:
-    """(src, dst, sdeg, ddeg): src -> dst iff (deg, id) of src < of dst."""
-    und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+def _oriented(und: DataFrame) -> DataFrame:
+    """(src, dst, ddeg) from a canonical ``(a, b)`` pair frame: src -> dst
+    iff (deg, id) of src < of dst."""
+    deg = undirected_degrees(und)
     withdeg = (
         und.join(deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), on="a")
         .join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), on="b")
@@ -50,10 +49,10 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangles(edges: DataFrame) -> DataFrame:
-    """All triangles as (u, v, w) vertex triples, each exactly once."""
-    o = _oriented(edges).persist()
-    o.count()
+def _listing(o: DataFrame) -> DataFrame:
+    """(apex, v, w): wedges of the oriented frame ``o`` on their apex,
+    ordered by (degree, id), closed against ``o`` — every triangle once,
+    at its lowest-(degree, id) vertex."""
     x = o.select(
         F.col("src").alias("apex"),
         F.col("dst").alias("v"),
@@ -68,8 +67,33 @@ def triangles(edges: DataFrame) -> DataFrame:
         F.struct(F.col("vdeg"), F.col("v")) < F.struct(F.col("wdeg"), F.col("w"))
     )
     closing = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    tris = wedges.join(closing, on=["v", "w"]).select("apex", "v", "w")
-    return tris
+    return wedges.join(closing, on=["v", "w"]).select("apex", "v", "w")
+
+
+def _support(und: DataFrame) -> DataFrame:
+    """(a, b, support): triangles through each edge of a canonical
+    ``(a, b)`` pair frame, for edges on at least one — each listed
+    triangle credits its three edges in one ``explode`` pass."""
+
+    def _edge(u: str, v: str) -> F.Column:
+        return F.struct(
+            F.least(F.col(u), F.col(v)).alias("a"),
+            F.greatest(F.col(u), F.col(v)).alias("b"),
+        )
+
+    credits = _listing(_oriented(und)).select(
+        F.explode(
+            F.array(_edge("apex", "v"), _edge("apex", "w"), _edge("v", "w"))
+        ).alias("e")
+    ).select("e.a", "e.b")
+    return credits.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
+
+
+def triangles(edges: DataFrame) -> DataFrame:
+    """All triangles as (u, v, w) vertex triples, each exactly once."""
+    o = _oriented(undirected_pairs(edges)).persist()
+    o.count()
+    return _listing(o)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -101,12 +125,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     2*t(v) / (d(v)*(d(v)-1)) over the undirected simple graph, for every
     vertex with degree >= 2 (the denominator's domain). Composes the
     triangle kernel with the degree aggregation — one extra join."""
-    und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
+    deg = undirected_degrees(undirected_pairs(edges)).withColumnRenamed(
+        "deg", "degree"
     )
     tri = triangles_per_vertex(edges)
     return (
@@ -140,22 +160,8 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     edge endpoints, no skew beyond the triangle kernel's own (already
     orientation-capped)."""
     und = undirected_pairs(edges)
-    tris = triangles(edges)
-
-    def _edge(u: str, v: str) -> list:
-        return [
-            F.least(F.col(u), F.col(v)).alias("a"),
-            F.greatest(F.col(u), F.col(v)).alias("b"),
-        ]
-
-    hits = (
-        tris.select(*_edge("apex", "v"))
-        .unionByName(tris.select(*_edge("apex", "w")))
-        .unionByName(tris.select(*_edge("v", "w")))
-    )
-    sup = hits.groupBy("a", "b").agg(F.count(F.lit(1)).alias("embeddedness"))
-    return und.join(sup, on=["a", "b"], how="left").select(
-        "a", "b", F.coalesce("embeddedness", F.lit(0)).alias("embeddedness")
+    return und.join(_support(und), on=["a", "b"], how="left").select(
+        "a", "b", F.coalesce("support", F.lit(0)).alias("embeddedness")
     )
 
 
@@ -165,18 +171,12 @@ def transitivity(edges: DataFrame) -> DataFrame:
     wedges over all wedges — Newman SIAM Rev. 2003 eq. 3). Exact longs
     (d(d-1)/2 is always integral) + ONE IEEE division, SQL-reproducible
     bit-for-bit. Cost: the triangle kernel + one degree aggregation."""
-    und = undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
+    deg = undirected_degrees(undirected_pairs(edges))
     # d(d-1) is always even: integer `div` keeps the whole sum in exact
     # long arithmetic (a double-sum would silently lose exactness past
     # 2^53 wedges — reachable at 100 TB hub degrees)
     wedges = deg.agg(
-        F.sum(F.expr("(degree * (degree - 1)) div 2"))
+        F.sum(F.expr("(deg * (deg - 1)) div 2"))
         .cast("long")
         .alias("wedges")
     )

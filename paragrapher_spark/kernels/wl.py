@@ -55,6 +55,7 @@ def wl_refinement(
     partition is stable and further rounds relabel it identically (the
     canonical rank order is preserved), so fixed-round results gate
     bit-for-bit even past stabilization."""
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sym = undirected_adjacency(edges).localCheckpoint(eager=False)
     colors = (
         sym.groupBy(F.col("v").alias("id"))
@@ -76,6 +77,7 @@ def wl_refinement(
             combined.select("color", "nsig"),
             ["color", "nsig"],
             id_col="new_color",
+            num_partitions=n_part,
         )
         colors = (
             combined.join(mapping, on=["color", "nsig"])

@@ -136,11 +136,12 @@ def test_md5_hash_is_defined_only_in_hashing_module():
 
 def test_kernels_take_partitions_from_the_session_and_share_one_gather_cache():
     """No public kernel has a ``num_partitions`` knob: every kernel reads
-    the session's ``spark.sql.shuffle.partitions``. The sorted gather cache
-    is built only by ``graph.gather_table``; the walks' ``(src, idx)``
-    sort is the one deliberate exception."""
+    the session's ``spark.sql.shuffle.partitions``, and passes it on to
+    every ``dense_ids`` call (whose own default is ``defaultParallelism``).
+    The sorted gather cache is built only by ``graph.gather_table``; the
+    walks' ``(src, idx)`` sort is the one deliberate exception."""
     root = Path(__file__).resolve().parents[1]
-    knobs, sorts = set(), set()
+    knobs, bare_dense_ids, sorts = set(), set(), set()
     for p in sorted((root / "paragrapher_spark" / "kernels").glob("*.py")):
         tree = ast.parse(p.read_text(), filename=str(p))
         for fn in tree.body:
@@ -148,10 +149,62 @@ def test_kernels_take_partitions_from_the_session_and_share_one_gather_cache():
                 a = fn.args
                 if any(x.arg == "num_partitions" for x in a.args + a.kwonlyargs):
                     knobs.add(f"{p.stem}.{fn.name}")
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and _call_name(n) == "dense_ids"
+                and not any(k.arg == "num_partitions" for k in n.keywords)
+            ):
+                bare_dense_ids.add(f"{p.name}:{n.lineno}")
         if any(
             isinstance(n, ast.Attribute) and n.attr == "sortWithinPartitions"
             for n in ast.walk(tree)
         ):
             sorts.add(p.name)
     assert knobs == set()
+    assert bare_dense_ids == set()
     assert sorts == {"walks.py"}
+
+
+def _call_name(node: ast.Call) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _str_args(node: ast.Call) -> list[str | None]:
+    return [a.value if isinstance(a, ast.Constant) else None for a in node.args]
+
+
+def test_undirected_degrees_and_triangle_orientation_are_defined_once():
+    """The endpoint-as-id projection behind the undirected degree table
+    (``F.col("a"|"b").alias("id")``) lives only in ``graph.py``, and the
+    ``(deg, id)`` struct comparison that orients edges for triangle
+    listing lives only in ``kernels/triangles.py``."""
+    root = Path(__file__).resolve().parents[1]
+    sources = [*(root / "paragrapher_spark").rglob("*.py"), root / "__spark_entry__.py"]
+    endpoint_ids, orientations = set(), set()
+    for p in sources:
+        name = p.relative_to(root).as_posix()
+        for n in ast.walk(ast.parse(p.read_text(), filename=str(p))):
+            if (
+                isinstance(n, ast.Call)
+                and _call_name(n) == "alias"
+                and _str_args(n) == ["id"]
+                and isinstance(n.func.value, ast.Call)
+                and _call_name(n.func.value) == "col"
+                and _str_args(n.func.value) in (["a"], ["b"])
+            ):
+                endpoint_ids.add(name)
+            if isinstance(n, ast.Compare) and all(
+                isinstance(s, ast.Call) and _call_name(s) == "struct"
+                for s in (n.left, *n.comparators)
+            ):
+                lead = n.left.args[0] if n.left.args else None
+                if (
+                    isinstance(lead, ast.Call)
+                    and _call_name(lead) == "col"
+                    and _str_args(lead)[0] in ("da", "db", "vdeg", "wdeg", "deg")
+                ):
+                    orientations.add(name)
+    assert endpoint_ids == {"paragrapher_spark/graph.py"}
+    assert orientations == {"paragrapher_spark/kernels/triangles.py"}

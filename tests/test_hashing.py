@@ -1,6 +1,6 @@
-"""The engine-portable hash, the undirected edge views and the kernels'
-shared vertex set and gather cache, pinned on one tiny frame (the hash
-against hashlib and DuckDB)."""
+"""The engine-portable hash, the undirected edge views and degree table,
+and the kernels' shared vertex set and gather cache, pinned on one tiny
+frame (the hash against hashlib and DuckDB)."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from paragrapher_spark.functions.hashing import md5_60, portable_hash
 from paragrapher_spark.graph import (
     gather_table,
     undirected_adjacency,
+    undirected_degrees,
     undirected_pairs,
     vertex_ids,
 )
@@ -86,6 +87,14 @@ def test_portable_hash_and_undirected_pairs(spark):
     assert sorted(tuple(r) for r in adj.collect()) == [
         (-7, 4), (1, 3), (3, 1), (4, -7),
     ]
+
+    # the self-loop vertex has no row; duplicates count once
+    deg = undirected_degrees(pairs)
+    assert deg.columns == ["id", "deg"]
+    assert sorted(tuple(r) for r in deg.collect()) == [
+        (-7, 1), (1, 1), (3, 1), (4, 1),
+    ]
+    assert undirected_degrees(undirected_pairs(df.limit(0))).collect() == []
 
 
 def test_vertex_ids_and_gather_table(spark):
