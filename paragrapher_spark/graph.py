@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.extract import extract_import_keys, vertex_key
@@ -162,6 +162,14 @@ def vertex_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame
     )
 
 
+def id_set(spark: SparkSession, ids: DataFrame | list[int]) -> DataFrame:
+    """The distinct ``(id)`` frame of a vertex-id list or of an ``(id)``
+    frame: a traversal's seed set, duplicate seeds collapsed."""
+    if isinstance(ids, DataFrame):
+        return ids.select("id").distinct()
+    return spark.createDataFrame([(int(i),) for i in ids], "id long").distinct()
+
+
 def gather_table(df: DataFrame, key: str) -> tuple[DataFrame, int]:
     """Cache ``df`` as the edge side of a superstep's gather join on
     ``key``; returns the cached frame and its row count (the count is the
@@ -203,6 +211,21 @@ def undirected_pairs(edges: DataFrame) -> DataFrame:
     )
 
 
+def arcs(edges: DataFrame, *, directed: bool) -> DataFrame:
+    """``(src, dst)``: the arcs of the simple graph underlying ``edges`` —
+    distinct rows, self-loops dropped. ``directed=False`` gives every
+    ``undirected_pairs`` row in both orientations, the ordered neighbor
+    pairs a kernel gathers over."""
+    if directed:
+        return (
+            edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
+        )
+    und = undirected_pairs(edges)
+    return und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+
+
 def undirected_degrees(und: DataFrame) -> DataFrame:
     """``(id, deg)``: the degree of every endpoint of an ``(a, b)`` pair
     frame shaped like ``undirected_pairs`` output (one row per unordered
@@ -213,16 +236,6 @@ def undirected_degrees(und: DataFrame) -> DataFrame:
         .unionByName(und.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
-    )
-
-
-def undirected_adjacency(edges: DataFrame) -> DataFrame:
-    """``undirected_pairs`` in both directions: one ``(v, u)`` row per
-    ordered neighbor pair of the simple graph, for kernels that gather
-    over neighbors."""
-    und = undirected_pairs(edges)
-    return und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
     )
 
 
@@ -287,8 +300,8 @@ def bipartite_project(
     arcs (one shuffle), in-degree agg + filter, self-equi-join on dst,
     map-side-combinable pair count. No per-row Python anywhere.
     """
-    arcs = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    indeg = arcs.groupBy("dst").agg(F.count(F.lit(1)).alias("d"))
+    simple = arcs(edges, directed=True)
+    indeg = simple.groupBy("dst").agg(F.count(F.lit(1)).alias("d"))
     if metrics is not None:
         drop = (
             indeg.where(F.col("d") > cap)
@@ -300,7 +313,7 @@ def bipartite_project(
         )
         metrics["n_dropped_dsts"] = int(drop["n"])
         metrics["n_dropped_refs"] = int(drop["r"])
-    keep = arcs.join(
+    keep = simple.join(
         indeg.where(F.col("d") <= cap).select("dst"), on="dst", how="left_semi"
     )
     a = keep.select(F.col("dst"), F.col("src").alias("a"))

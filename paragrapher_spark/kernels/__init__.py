@@ -42,7 +42,6 @@ __all__ = [
     "bfs",
     "greedy_coloring",
     "bipartite_check",
-    "bipartite_check",
     "component_sizes",
     "connected_components",
     "avg_neighbor_degree",

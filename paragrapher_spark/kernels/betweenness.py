@@ -44,7 +44,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table
+from paragrapher_spark.graph import arcs, gather_table, id_set
 from paragrapher_spark.plans import superstep
 
 
@@ -56,15 +56,6 @@ class BetweennessResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _symmetrized(edges: DataFrame, directed: bool) -> DataFrame:
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    return gather_table(e.distinct(), "src")[0]
-
-
 def _forward_levels(
     e: DataFrame,
     sources: DataFrame | list[int],
@@ -72,14 +63,11 @@ def _forward_levels(
     max_depth: int,
 ) -> tuple[DataFrame, int, list[dict[str, Any]]]:
     """Multi-source BFS with exact σ path counts over the pre-persisted
-    symmetrized edge table. Returns (levels persisted, depth, history)."""
+    simple arc table (a self-loop never lies on a dist + 1 DAG edge).
+    Returns (levels persisted, depth, history)."""
     spark = e.sparkSession
-    if isinstance(sources, list):
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")
-    else:
-        src_df = sources.select("id")
     frontier = (
-        src_df.distinct()
+        id_set(spark, sources)
         .select(
             F.col("id").alias("source"),
             F.col("id"),
@@ -183,7 +171,7 @@ def shortest_path_levels(
     harmonic centrality."""
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = _symmetrized(edges, directed)
+    e, _ = gather_table(arcs(edges, directed=directed), "src")
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
     e.unpersist()
     return levels, depth, history
@@ -262,7 +250,7 @@ def edge_betweenness(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _symmetrized(edges, directed=False)
+    e, _ = gather_table(arcs(edges, directed=False), "src")
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
 
     def back(i: int, state, ckpt):
@@ -327,7 +315,7 @@ def betweenness(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _symmetrized(edges, directed)
+    e, _ = gather_table(arcs(edges, directed=directed), "src")
     levels, depth, history = _forward_levels(e, sources, n_part, max_depth)
 
     # backward dependency accumulation, level by level (descending)

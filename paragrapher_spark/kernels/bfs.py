@@ -22,7 +22,13 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, undirected_degrees, undirected_pairs
+from paragrapher_spark.graph import (
+    arcs,
+    gather_table,
+    id_set,
+    undirected_degrees,
+    undirected_pairs,
+)
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -48,20 +54,11 @@ def bfs(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e, _ = gather_table(e.distinct(), "src")
-
-    if isinstance(sources, list):
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")
-    else:
-        src_df = sources.select("id")
+    # a self-loop never reaches an unvisited vertex: the simple arcs suffice
+    e, _ = gather_table(arcs(edges, directed=directed), "src")
     # duplicate seeds would survive into the result (depth-0 rows are not
     # deduplicated by the frontier logic below)
-    src_df = src_df.distinct()
+    src_df = id_set(spark, sources)
 
     def _start(dist: DataFrame) -> tuple[DataFrame, DataFrame, None]:
         """(distances, frontier, frontier size) loop state: the frontier is
@@ -150,8 +147,7 @@ def pseudo_diameter(
     discipline. Everything is integer-exact, so the result gates
     bit-for-bit against an unrolled-BFS SQL oracle.
     """
-    und = undirected_pairs(edges)
-    deg = undirected_degrees(und)
+    deg = undirected_degrees(undirected_pairs(edges))
     start_row = deg.orderBy(F.desc("deg"), F.asc("id")).limit(1).collect()
     if not start_row:
         return PseudoDiameterResult(sweeps=[], diameter_lb=0, max_depth_seen=0)
@@ -160,12 +156,7 @@ def pseudo_diameter(
     recs: list[dict[str, int]] = []
     max_depth_seen = 0
     for s in range(sweeps):
-        res = bfs(
-            und.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-            [source],
-            max_depth=max_depth,
-            directed=False,
-        )
+        res = bfs(edges, [source], max_depth=max_depth, directed=False)
         far = (
             res.distances.orderBy(F.desc("dist"), F.asc("id")).limit(1).collect()[0]
         )

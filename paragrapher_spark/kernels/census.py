@@ -34,14 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _simple_directed(edges: DataFrame) -> DataFrame:
-    """Distinct directed edges with self-loops dropped."""
-    return (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+from paragrapher_spark.graph import arcs
 
 
 def dyad_census(edges: DataFrame, n_vertices: int) -> DataFrame:
@@ -52,7 +45,7 @@ def dyad_census(edges: DataFrame, n_vertices: int) -> DataFrame:
     from ``n_vertices`` (the caller names the vertex universe — isolated
     vertices leave no trace in an edge table).
     """
-    e = _simple_directed(edges)
+    e = arcs(edges, directed=True)
     pair = e.select(
         F.least("src", "dst").alias("a"),
         F.greatest("src", "dst").alias("b"),
@@ -98,45 +91,57 @@ def triad_motifs(
     ``n_dropped_mids`` — the same bounded-blow-up contract as
     linkpred/dedup caps.
     """
-    e = _simple_directed(edges).persist()
-    left = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    right = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    n_dropped = 0
-    if max_mid_degree is not None:
-        ind = e.groupBy(F.col("dst").alias("v")).agg(F.count(F.lit(1)).alias("i"))
-        outd = e.groupBy(F.col("src").alias("v")).agg(F.count(F.lit(1)).alias("o"))
-        deg = ind.join(outd, "v", "outer").select(
-            "v",
-            F.greatest(
-                F.coalesce("i", F.lit(0)), F.coalesce("o", F.lit(0))
-            ).alias("d"),
+    e = arcs(edges, directed=True).persist()
+    try:
+        left = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        right = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+        n_dropped = 0
+        if max_mid_degree is not None:
+            ind = e.groupBy(F.col("dst").alias("v")).agg(
+                F.count(F.lit(1)).alias("i")
+            )
+            outd = e.groupBy(F.col("src").alias("v")).agg(
+                F.count(F.lit(1)).alias("o")
+            )
+            deg = ind.join(outd, "v", "outer").select(
+                "v",
+                F.greatest(
+                    F.coalesce("i", F.lit(0)), F.coalesce("o", F.lit(0))
+                ).alias("d"),
+            )
+            hot = deg.where(F.col("d") > max_mid_degree)
+            n_dropped = hot.count()
+            keep = deg.where(F.col("d") <= max_mid_degree).select("v")
+            left = left.join(keep, "v")
+            right = right.join(keep, "v")
+        wedges = (
+            left.join(right, "v")
+            .where(F.col("u") != F.col("w"))
+            .select("u", "v", "w")
         )
-        hot = deg.where(F.col("d") > max_mid_degree)
-        n_dropped = hot.count()
-        keep = deg.where(F.col("d") <= max_mid_degree).select("v")
-        left = left.join(keep, "v")
-        right = right.join(keep, "v")
-    wedges = (
-        left.join(right, "v").where(F.col("u") != F.col("w")).select("u", "v", "w")
-    )
-    closed = wedges.join(
-        e.select(F.col("src").alias("u"), F.col("dst").alias("w")),
-        ["u", "w"],
-        "left_semi",
-    )
-    cyc = wedges.join(
-        e.select(F.col("src").alias("w"), F.col("dst").alias("u")),
-        ["u", "w"],
-        "left_semi",
-    )
-    motifs = (
-        wedges.agg(F.count(F.lit(1)).alias("n_paths2"))
-        .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_transitive")))
-        .crossJoin(cyc.agg(F.count(F.lit(1)).alias("n_closing")))
-        .select(
-            F.col("n_paths2").cast("long"),
-            F.col("n_transitive").cast("long"),
-            F.expr("n_closing DIV 3").cast("long").alias("n_cyclic"),
+        closed = wedges.join(
+            e.select(F.col("src").alias("u"), F.col("dst").alias("w")),
+            ["u", "w"],
+            "left_semi",
         )
-    )
+        cyc = wedges.join(
+            e.select(F.col("src").alias("w"), F.col("dst").alias("u")),
+            ["u", "w"],
+            "left_semi",
+        )
+        motifs = (
+            wedges.agg(F.count(F.lit(1)).alias("n_paths2"))
+            .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_transitive")))
+            .crossJoin(cyc.agg(F.count(F.lit(1)).alias("n_closing")))
+            .select(
+                F.col("n_paths2").cast("long"),
+                F.col("n_transitive").cast("long"),
+                F.expr("n_closing DIV 3").cast("long").alias("n_cyclic"),
+            )
+        )
+        # collected, so the persisted arcs are released before returning
+        row = motifs.collect()
+    finally:
+        e.unpersist()
+    motifs = edges.sparkSession.createDataFrame(row, motifs.schema)
     return TriadMotifsResult(motifs=motifs, n_dropped_mids=n_dropped)

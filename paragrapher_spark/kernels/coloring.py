@@ -43,8 +43,8 @@ from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
 from paragrapher_spark.graph import (
+    arcs,
     gather_table,
-    undirected_adjacency,
     undirected_degrees,
     undirected_pairs,
 )
@@ -77,7 +77,7 @@ def greedy_coloring(
         undirected_degrees(undirected_pairs(edges))
         .select("id", portable_hash("color", seed, "id").alias("h"))
     )
-    sym = undirected_adjacency(edges)
+    sym = arcs(edges, directed=False).toDF("v", "u")
     # lower-priority adjacency, materialized ONCE: (v, u) where u is a
     # neighbor of v with (h_u, u) < (h_v, v)
     ladj, _ = gather_table(

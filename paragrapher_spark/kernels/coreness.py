@@ -36,7 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, undirected_adjacency
+from paragrapher_spark.graph import arcs, gather_table
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -64,7 +64,7 @@ def coreness(
     the H-index operator is a pure function of the persisted state, so
     a resumed run converges to the identical fixpoint."""
     spark = edges.sparkSession
-    adj, _ = gather_table(undirected_adjacency(edges), "u")
+    adj, _ = gather_table(arcs(edges, directed=False).toDF("v", "u"), "u")
 
     def step(rnd: int, state, ckpt):
         cur, _ = state

@@ -28,7 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, vertex_ids
+from paragrapher_spark.graph import arcs, gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -150,11 +150,7 @@ def salsa(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = arcs(edges, directed=True)
     ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     ed, _ = gather_table(

@@ -41,6 +41,7 @@ BFS. Radius is small (effective diameters of web/link graphs are < 20).
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -48,7 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-from paragrapher_spark.graph import gather_table, vertex_ids
+from paragrapher_spark.graph import arcs, gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 
 M = 16  # registers per counter (b = 4 index bits)
@@ -73,23 +74,30 @@ class HyperBallResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _init_registers(vertices: DataFrame) -> DataFrame:
-    """(id) -> (id, r0..r15): the singleton-set HLL counter of each vertex."""
-    h = portable_hash("hb", 42, "id")
+def hll_registers(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    value: Column | str,
+    tag: str,
+    seed: int,
+) -> DataFrame:
+    """(group_cols..., r0..r15): the singleton-set HLL counter of each
+    row's ``value`` (hashed with ``portable_hash(tag, seed, value)``) —
+    works identically on batch and streaming DataFrames."""
+    h = portable_hash(tag, seed, value)
     reg = F.pmod(h, F.lit(M))
     rest = F.shiftright(h, 4)  # remaining 56 hash bits
     tz = F.bit_count((rest.bitwiseAND(-rest)) - F.lit(1))
     rho = F.when(rest == 0, F.lit(RHO_CAP)).otherwise(
         F.least(tz + F.lit(1), F.lit(RHO_CAP))
     )
-    out = vertices.select(
-        "id",
+    return df.select(
+        *group_cols,
         *[
             F.when(reg == i, rho).otherwise(F.lit(0)).cast("int").alias(c)
             for i, c in enumerate(REG_COLS)
         ],
     )
-    return out
 
 
 def ball_estimate(prefix: str = "") -> Column:
@@ -144,16 +152,14 @@ def hyperball(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    # the gather below joins on dst (state flows dst -> src)
-    e, _ = gather_table(e.distinct(), "dst")
-    vertices = vertex_ids(e)
+    # the gather below joins on dst (state flows dst -> src); a self-loop
+    # would only merge a vertex's registers into themselves, which the
+    # merge's own-state union already does
+    e, _ = gather_table(arcs(edges, directed=directed), "dst")
+    # from the input edges, so a vertex whose only edge is a loop keeps a row
+    vertices = vertex_ids(edges)
     state = (
-        _init_registers(vertices)
+        hll_registers(vertices, ["id"], "id", "hb", 42)
         .withColumn("est", F.round(ball_estimate(), 6))
         .withColumn("harmonic", F.lit(0.0))
         .repartition(n_part, "id")

@@ -45,7 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, vertex_ids
+from paragrapher_spark.graph import arcs, gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 
 _GUARD = 2**62
@@ -83,12 +83,7 @@ def _walk_counts(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e, _ = gather_table(e.where(F.col("src") != F.col("dst")).distinct(), "src")
+    e, _ = gather_table(arcs(edges, directed=directed), "src")
     vertices = vertex_ids(e).repartition(n_part, "id").localCheckpoint(eager=True)
     max_in = e.groupBy("dst").count().agg(F.max("count")).collect()[0][0] or 0
 

@@ -17,7 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, undirected_adjacency, vertex_ids
+from paragrapher_spark.graph import arcs, gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -38,7 +38,7 @@ def label_propagation(
     checkpoint_every: int = 5,
 ) -> LabelPropResult:
     spark = edges.sparkSession
-    und, _ = gather_table(undirected_adjacency(edges).toDF("src", "dst"), "dst")
+    und, _ = gather_table(arcs(edges, directed=False), "dst")
     all_vertices = vertex_ids(edges, vertices)
 
     def step(it: int, state, ckpt):

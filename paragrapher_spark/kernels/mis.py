@@ -38,11 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-from paragrapher_spark.graph import (
-    undirected_adjacency,
-    undirected_degrees,
-    undirected_pairs,
-)
+from paragrapher_spark.graph import arcs, undirected_degrees, undirected_pairs
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -75,7 +71,7 @@ def maximal_independent_set(
     spark = edges.sparkSession
     und = undirected_pairs(edges)
     # symmetric adjacency, reused every round
-    adj = undirected_adjacency(edges).persist()
+    adj = arcs(edges, directed=False).toDF("v", "u").persist()
 
     def _start() -> tuple[DataFrame, DataFrame, int]:
         undecided = (

@@ -38,7 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table
+from paragrapher_spark.graph import gather_table, id_set
 from paragrapher_spark.plans import superstep
 
 
@@ -82,13 +82,9 @@ def sssp(
     # cheapest one shrinks every subsequent round's join input
     e, _ = gather_table(e.groupBy("src", "dst").agg(F.min("w").alias("w")), "src")
 
-    if isinstance(sources, list):
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")
-    else:
-        src_df = sources.select("id")
     zero = F.lit(0).cast(dict(e.dtypes)["w"])
     dist = (
-        src_df.distinct()
+        id_set(spark, sources)
         .select("id", zero.alias("dist"), F.lit(1).cast("int").alias("upd"))
         .repartition(n_part, "id")
         .localCheckpoint(eager=True)

@@ -38,7 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, vertex_ids
+from paragrapher_spark.graph import arcs, gather_table, vertex_ids
 from paragrapher_spark.plans import superstep
 
 
@@ -59,10 +59,7 @@ def topo_levels(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e, _ = gather_table(
-        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
-        "src",
-    )
+    e, _ = gather_table(arcs(edges, directed=True), "src")
     vertices = vertex_ids(e).repartition(n_part, "id").localCheckpoint(eager=True)
     n_vertices = vertices.count()
 

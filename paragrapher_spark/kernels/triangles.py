@@ -26,11 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import (
-    undirected_adjacency,
-    undirected_degrees,
-    undirected_pairs,
-)
+from paragrapher_spark.graph import arcs, undirected_degrees, undirected_pairs
 
 
 def _oriented(und: DataFrame) -> DataFrame:
@@ -97,8 +93,16 @@ def triangles(edges: DataFrame) -> DataFrame:
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
-    """Single-row (triangles: long) — global exact count."""
-    return triangles(edges).agg(F.count(F.lit(1)).alias("triangles"))
+    """Single-row (triangles: long) — global exact count. The count is
+    collected so the persisted oriented frame is released before the
+    one-row frame is returned."""
+    o = _oriented(undirected_pairs(edges)).persist()
+    try:
+        o.count()
+        counted = _listing(o).agg(F.count(F.lit(1)).alias("triangles"))
+        return edges.sparkSession.createDataFrame(counted.collect(), counted.schema)
+    finally:
+        o.unpersist()
 
 
 def triangles_per_vertex(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
@@ -253,7 +257,7 @@ def square_count(
     drop — the minhash/knn_lsh metric convention); with the cap unset
     the count is exact and the extra columns are omitted.
     """
-    adj = undirected_adjacency(edges).toDF("v", "n")
+    adj = arcs(edges, directed=False).toDF("v", "n")
     if max_center_degree is not None:
         deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
         dropped = deg.where(F.col("deg") > max_center_degree)
@@ -327,7 +331,7 @@ def delta_triangles(
     Hub deltas fan out like any wedge join; AQE skew-split applies (the
     degree-orientation trick does not, because both endpoints' full
     adjacencies are needed)."""
-    adj = undirected_adjacency(full_edges).toDF("v", "n")  # both directions
+    adj = arcs(full_edges, directed=False).toDF("v", "n")
     d = undirected_pairs(delta_edges)
     if old_edges is not None:
         # drop delta edges the old graph already had — their triangles

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
+from paragrapher_spark.graph import arcs, id_set
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -61,11 +62,37 @@ class WalksResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
+def _weighted_arcs(
+    edges: DataFrame, directed: bool, weight_col: str | None
+) -> DataFrame:
+    """(src, dst, w): the arcs a walk steps along, both orientations
+    unless ``directed``, weight 1 without ``weight_col``. Parallel
+    (src, dst) rows collapse to one neighbor carrying the max weight
+    (deterministic both engines; min/max/sum would all do, max matches
+    "strongest arc"); a weight <= 0 raises, since it would yield an empty
+    or overlapping pick interval."""
+    w = F.lit(1) if weight_col is None else F.col(weight_col)
+    e = edges.select("src", "dst", w.cast("long").alias("w"))
+    if not directed:
+        e = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+    dedup = e.groupBy("src", "dst").agg(F.max("w").alias("w"))
+    if weight_col is not None:
+        n_bad = dedup.where(F.col("w") <= 0).count()
+        if n_bad:
+            raise ValueError(
+                f"weighted walks need positive integer weights; "
+                f"{n_bad} edges have {weight_col} <= 0"
+            )
+    return dedup
+
+
 def _start(src_df: DataFrame, n_part: int):
-    """Fresh walk state: one walker per distinct start, parked at step 0."""
+    """Fresh walk state: one walker per start of the distinct ``src_df``,
+    parked at step 0."""
     walkers = (
-        src_df.distinct()
-        .select(F.col("id").alias("walk_id"), F.col("id").alias("cur"))
+        src_df.select(F.col("id").alias("walk_id"), F.col("id").alias("cur"))
         .repartition(n_part, "cur")
         .localCheckpoint(eager=True)
     )
@@ -141,30 +168,11 @@ def random_walks(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    if weight_col is None:
-        e = edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
-    else:
-        e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
     # one materialization: indexed, degree-annotated adjacency sorted by the
     # join key — every step's SortMergeJoin reuses the order (the cached-edge
-    # discipline measured in graph.gather_table). Parallel (src, dst) rows
-    # collapse to one neighbor carrying the max weight (deterministic both
-    # engines; min/max/sum would all do, max matches "strongest arc").
+    # discipline measured in graph.gather_table)
     win = Window.partitionBy("src").orderBy("dst")
-    dedup = e.groupBy("src", "dst").agg(F.max("w").alias("w"))
-    if weight_col is not None:
-        # zero/negative weights yield empty or overlapping pick intervals —
-        # fail loudly (the repo's malformed-input standard)
-        n_bad = dedup.where(F.col("w") <= 0).count()
-        if n_bad:
-            raise ValueError(
-                f"weighted walks need positive integer weights; "
-                f"{n_bad} edges have {weight_col} <= 0"
-            )
+    dedup = _weighted_arcs(edges, directed, weight_col)
     adj = (
         dedup.select(
             "src",
@@ -191,11 +199,7 @@ def random_walks(
         .persist()
     )
     degs.count()
-
-    if isinstance(starts, list):
-        src_df = spark.createDataFrame([(int(s),) for s in starts], "id long")
-    else:
-        src_df = starts.select("id")
+    src_df = id_set(spark, starts)
 
     # resume: the snapshot IS the full emitted-steps table; the live
     # walker state is reconstructable as the rows at the snapshot's step
@@ -297,22 +301,7 @@ def node2vec_walks(
         if int(a) <= 0:
             raise ValueError(f"{nm} must be a positive integer, got {a}")
 
-    if weight_col is None:
-        e = edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
-    else:
-        e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    dedup = e.groupBy("src", "dst").agg(F.max("w").alias("w"))
-    if weight_col is not None:
-        n_bad = dedup.where(F.col("w") <= 0).count()
-        if n_bad:
-            raise ValueError(
-                f"weighted walks need positive integer weights; "
-                f"{n_bad} edges have {weight_col} <= 0"
-            )
+    dedup = _weighted_arcs(edges, directed, weight_col)
     win = Window.partitionBy("src").orderBy("dst")
     adj = (
         dedup.select(
@@ -339,11 +328,7 @@ def node2vec_walks(
         F.col("src").alias("p_src"), F.col("dst").alias("p_dst"), F.lit(True).alias("is_adj")
     ).repartition(n_part, "p_src", "p_dst").persist()
     memb.count()
-
-    if isinstance(starts, list):
-        src_df = spark.createDataFrame([(int(s),) for s in starts], "id long")
-    else:
-        src_df = starts.select("id")
+    src_df = id_set(spark, starts)
 
     # the emitted steps table IS the snapshot; (prev, cur) walker state
     # rebuilds from steps t and t-1
@@ -461,18 +446,8 @@ def neighbor_sampling(
     at 100 TB: a mega-hub contributes ``fanout`` edges, not its full
     adjacency."""
     spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    adj = e.where(F.col("src") != F.col("dst")).distinct()
-
-    if isinstance(seeds, list):
-        frontier = spark.createDataFrame([(int(s),) for s in seeds], "id long")
-    else:
-        frontier = seeds.select("id")
-    frontier = frontier.distinct()
+    adj = arcs(edges, directed=directed)
+    frontier = id_set(spark, seeds)
 
     out: DataFrame | None = None
     for hop, fanout in enumerate(fanouts):

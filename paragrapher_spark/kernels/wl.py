@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_adjacency
+from paragrapher_spark.graph import arcs
 from paragrapher_spark.operators.indexing import dense_ids
 from paragrapher_spark.plans import superstep
 
@@ -56,7 +56,7 @@ def wl_refinement(
     canonical rank order is preserved), so fixed-round results gate
     bit-for-bit even past stabilization."""
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sym = undirected_adjacency(edges).localCheckpoint(eager=False)
+    sym = arcs(edges, directed=False).toDF("v", "u").localCheckpoint(eager=False)
     colors = (
         sym.groupBy(F.col("v").alias("id"))
         .agg(F.count(F.lit(1)).alias("color"))

@@ -32,6 +32,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paragrapher_spark.graph import arcs
+
 #: default bits per dimension: 21+21 = 42-bit z-values, ids to ~2.1e6.
 #: Raise to 31 (62-bit z) for planet-scale id spaces.
 DEFAULT_BITS = 21
@@ -192,9 +194,7 @@ def adjacency_gap_bits(edges: DataFrame, label: str = "natural") -> DataFrame:
     what the renumbering buys before paying for a rewrite."""
     from pyspark.sql import Window
 
-    dedup = edges.select("src", "dst").where(
-        F.col("src") != F.col("dst")
-    ).distinct()
+    dedup = arcs(edges, directed=True)
     win = Window.partitionBy("src").orderBy("dst")
     lagd = F.lag("dst").over(win)
     delta = F.col("dst") - F.col("src")

@@ -31,37 +31,10 @@ from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
 from paragrapher_spark.kernels.hyperball import (
-    M,
     REG_COLS,
-    RHO_CAP,
     ball_estimate,
+    hll_registers,
 )
-
-
-def _register_rows(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value: Column | str,
-    tag: str,
-    seed: int,
-) -> DataFrame:
-    """(group_cols..., r0..r15): per-row singleton register columns —
-    works identically on batch and streaming DataFrames."""
-    v = F.col(value) if isinstance(value, str) else value
-    h = portable_hash(tag, seed, v)
-    reg = F.pmod(h, F.lit(M))
-    rest = F.shiftright(h, 4)
-    tz = F.bit_count((rest.bitwiseAND(-rest)) - F.lit(1))
-    rho = F.when(rest == 0, F.lit(RHO_CAP)).otherwise(
-        F.least(tz + F.lit(1), F.lit(RHO_CAP))
-    )
-    return df.select(
-        *group_cols,
-        *[
-            F.when(reg == i, rho).otherwise(F.lit(0)).cast("int").alias(c)
-            for i, c in enumerate(REG_COLS)
-        ],
-    )
 
 
 def _merged_estimate(
@@ -87,7 +60,7 @@ def hll_distinct(
     COUNT(DISTINCT value) per group. One aggregation; the per-group state
     is 16 small ints regardless of input size."""
     return _merged_estimate(
-        _register_rows(df, group_cols, value, tag, seed), group_cols, out_col
+        hll_registers(df, group_cols, value, tag, seed), group_cols, out_col
     )
 
 
@@ -271,7 +244,7 @@ def stream_hll_distinct(
     schema = spark.read.parquet(source_dir).schema
     stream = spark.readStream.schema(schema).parquet(source_dir)
     est = _merged_estimate(
-        _register_rows(stream, group_cols, value_col, tag, seed),
+        hll_registers(stream, group_cols, value_col, tag, seed),
         group_cols,
         "approx_distinct",
     )

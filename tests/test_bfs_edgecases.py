@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from paragrapher_spark.fixtures import path_graph, powerlaw_graph, two_components
 from paragrapher_spark.kernels.bfs import bfs
 from paragrapher_spark.kernels.components import connected_components
+from paragrapher_spark.kernels.hyperball import hyperball
 from paragrapher_spark.kernels.labelprop import label_propagation
 from paragrapher_spark.kernels.pagerank import pagerank
 from paragrapher_spark.kernels.triangles import triangle_count
@@ -115,6 +116,14 @@ def test_kernels_on_self_loops_only(spark):
     assert comps == {0: 0, 1: 1, 2: 2}
 
     assert triangle_count(loops).collect()[0]["triangles"] == 0
+
+    # a loop reaches nothing new, but its vertex keeps its own row
+    b = bfs(loops, [0], directed=False)
+    assert {r.id: r.dist for r in b.distances.collect()} == {0: 0}
+    hb = hyperball(loops, radius=2)
+    balls = {r.id: r.ball for r in hb.states.collect()}
+    assert sorted(balls) == [0, 1, 2]
+    assert hb.nf[0] == hb.nf[-1] == 3
 
     pr = pagerank(loops, max_iter=10)
     ranks = {r.id: r.rank for r in pr.ranks.collect()}

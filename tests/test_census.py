@@ -1,8 +1,10 @@
-"""Dyad census + triad motifs (kernels/census.py) vs hand oracles."""
+"""Dyad census + triad motifs (kernels/census.py) vs hand oracles, and
+the one-row census/triangle kernels' cache release."""
 
 from __future__ import annotations
 
 from paragrapher_spark.kernels.census import dyad_census, triad_motifs
+from paragrapher_spark.kernels.triangles import triangle_count
 
 
 def _edges(spark, pairs):
@@ -51,3 +53,18 @@ def test_triad_motifs_hub_cap_is_loud(spark):
     capped = triad_motifs(e, max_mid_degree=3)
     assert capped.n_dropped_mids == 1
     assert capped.motifs.collect()[0].n_paths2 == 0
+
+
+def test_one_row_kernels_release_their_persisted_frames(spark):
+    # triangle_count and triad_motifs persist an intermediate frame, then
+    # collect their one row and unpersist it: a call leaves the session's
+    # persistent RDDs as it found them
+    e = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3)])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    assert triangle_count(e).collect()[0].triangles == 1
+    assert persisted().size() == before
+    row = triad_motifs(e).motifs.collect()[0]
+    # wedges 0->1->2, 1->2->0, 2->0->1 (the cycle) and 1->2->3
+    assert (row.n_paths2, row.n_transitive, row.n_cyclic) == (4, 0, 1)
+    assert persisted().size() == before

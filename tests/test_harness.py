@@ -208,3 +208,27 @@ def test_undirected_degrees_and_triangle_orientation_are_defined_once():
                     orientations.add(name)
     assert endpoint_ids == {"paragrapher_spark/graph.py"}
     assert orientations == {"paragrapher_spark/kernels/triangles.py"}
+
+
+def test_simple_graph_arcs_are_defined_once():
+    """Kernels take the distinct, loop-free arc set from ``graph.arcs``:
+    a ``F.col("src") != F.col("dst")`` filter under ``kernels/`` is left
+    only in ``components.py`` and ``msf.py``, whose views keep their own
+    orientation and weights."""
+    root = Path(__file__).resolve().parents[1]
+    hits = set()
+    for p in sorted((root / "paragrapher_spark" / "kernels").glob("*.py")):
+        for n in ast.walk(ast.parse(p.read_text(), filename=str(p))):
+            if (
+                isinstance(n, ast.Compare)
+                and len(n.ops) == 1
+                and isinstance(n.ops[0], ast.NotEq)
+                and all(
+                    isinstance(s, ast.Call)
+                    and _call_name(s) == "col"
+                    and _str_args(s) == [c]
+                    for s, c in ((n.left, "src"), (n.comparators[0], "dst"))
+                )
+            ):
+                hits.add(p.name)
+    assert hits == {"components.py", "msf.py"}

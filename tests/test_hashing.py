@@ -1,6 +1,7 @@
-"""The engine-portable hash, the undirected edge views and degree table,
-and the kernels' shared vertex set and gather cache, pinned on one tiny
-frame (the hash against hashlib and DuckDB)."""
+"""The engine-portable hash, the undirected edge views, the simple-graph
+arcs and degree table, and the kernels' shared vertex set, seed set and
+gather cache, pinned on one tiny frame (the hash against hashlib and
+DuckDB)."""
 
 from __future__ import annotations
 
@@ -11,8 +12,9 @@ from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import md5_60, portable_hash
 from paragrapher_spark.graph import (
+    arcs,
     gather_table,
-    undirected_adjacency,
+    id_set,
     undirected_degrees,
     undirected_pairs,
     vertex_ids,
@@ -82,11 +84,21 @@ def test_portable_hash_and_undirected_pairs(spark):
     assert pairs.columns == ["a", "b"]
     assert sorted(tuple(r) for r in pairs.collect()) == [(-7, 4), (1, 3)]
 
-    adj = undirected_adjacency(df)
-    assert adj.columns == ["v", "u"]
+    adj = arcs(df, directed=False)
+    assert adj.columns == ["src", "dst"]
     assert sorted(tuple(r) for r in adj.collect()) == [
         (-7, 4), (1, 3), (3, 1), (4, -7),
     ]
+
+    # directed: the loop is dropped, the duplicate (3, 1) counts once, and
+    # an arc keeps its direction (the src >= dst rows give no reversal)
+    directed = arcs(df, directed=True)
+    assert directed.columns == ["src", "dst"]
+    assert sorted(tuple(r) for r in directed.collect()) == [
+        (-7, 4), (1, 3), (3, 1), (4, -7),
+    ]
+    forward = arcs(df.where(F.col("src") >= F.col("dst")), directed=True)
+    assert sorted(tuple(r) for r in forward.collect()) == [(3, 1), (4, -7)]
 
     # the self-loop vertex has no row; duplicates count once
     deg = undirected_degrees(pairs)
@@ -104,6 +116,14 @@ def test_vertex_ids_and_gather_table(spark):
     assert sorted(r.id for r in ids.collect()) == [-7, 1, 2, 3, 4]
     verts = spark.createDataFrame([(9, "x"), (1, "y")], "id long, name string")
     assert sorted(tuple(r) for r in vertex_ids(df, verts).collect()) == [(1,), (9,)]
+
+    # a seed list or an (id) frame, duplicates collapsed
+    seeds = id_set(spark, [3, 1, 3])
+    assert seeds.columns == ["id"]
+    assert sorted(r.id for r in seeds.collect()) == [1, 3]
+    dsts = df.select(F.col("dst").alias("id"), "s")
+    assert sorted(r.id for r in id_set(spark, dsts).collect()) == [-7, 1, 2, 3, 4]
+    assert id_set(spark, []).collect() == []
 
     # the partition count is the session's, read at call time
     conf = "spark.sql.shuffle.partitions"
