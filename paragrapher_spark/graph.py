@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.extract import extract_import_keys, vertex_key
 from paragrapher_spark.operators.indexing import dense_ids, prefix_sum
+from paragrapher_spark.operators.salting import hub_cap
 
 
 @dataclass
@@ -296,26 +297,16 @@ def bipartite_project(
     pairs, so hub dsts are the quadratic blow-up. dsts with in-degree >
     ``cap`` are EXCLUDED and counted (``metrics["n_dropped_dsts"]`` /
     ``["n_dropped_refs"]`` — the minhash dropped-bucket discipline:
-    never a silent drop, never an unbounded wedge join). Plan: dedupe
-    arcs (one shuffle), in-degree agg + filter, self-equi-join on dst,
-    map-side-combinable pair count. No per-row Python anywhere.
+    never a silent drop, never an unbounded wedge join;
+    ``operators/salting.py:hub_cap``). Plan: dedupe arcs (one shuffle),
+    in-degree agg + filter, self-equi-join on dst, map-side-combinable
+    pair count. No per-row Python anywhere.
     """
-    simple = arcs(edges, directed=True)
-    indeg = simple.groupBy("dst").agg(F.count(F.lit(1)).alias("d"))
+    keep, hot = hub_cap(arcs(edges, directed=True), "dst", cap)
     if metrics is not None:
-        drop = (
-            indeg.where(F.col("d") > cap)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("d"), F.lit(0)).alias("r"),
-            )
-            .collect()[0]
-        )
-        metrics["n_dropped_dsts"] = int(drop["n"])
-        metrics["n_dropped_refs"] = int(drop["r"])
-    keep = simple.join(
-        indeg.where(F.col("d") <= cap).select("dst"), on="dst", how="left_semi"
-    )
+        drop = hot.collect()[0]
+        metrics["n_dropped_dsts"] = drop["n_keys"]
+        metrics["n_dropped_refs"] = drop["n_rows"]
     a = keep.select(F.col("dst"), F.col("src").alias("a"))
     b = keep.select(F.col("dst"), F.col("src").alias("b"))
     return (

@@ -41,7 +41,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import undirected_degrees, undirected_pairs
+from paragrapher_spark.graph import arcs, undirected_degrees, undirected_pairs
+from paragrapher_spark.operators.salting import hub_cap
 
 RA_FIXED_POINT = 1_000_000_000_000  # 1e-12 resolution; deg < 1e12 assumed
 
@@ -62,19 +63,15 @@ def link_prediction(
     (single IEEE division). Pairs already joined by an edge are anti-joined
     out — the link-prediction task scores *candidate* links only.
     """
-    und = undirected_pairs(edges).persist()
+    und = undirected_pairs(edges)
     deg = undirected_degrees(und)
     # adjacency in both directions: (center w, endpoint u)
-    adj = und.select(F.col("a").alias("w"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("w"), F.col("a").alias("u"))
-    )
-    centers = adj.join(deg.select(F.col("id").alias("w"), "deg"), on="w")
+    adj = arcs(edges, directed=False).toDF("w", "u")
     n_dropped = 0
     if max_center_degree is not None:
-        n_dropped = (
-            deg.where(F.col("deg") > max_center_degree).count()
-        )
-        centers = centers.where(F.col("deg") <= max_center_degree)
+        adj, hot = hub_cap(adj, "w", max_center_degree)
+        n_dropped = hot.collect()[0]["n_keys"]
+    centers = adj.join(deg.select(F.col("id").alias("w"), "deg"), on="w")
     left = centers.select("w", F.col("u"), F.col("deg").alias("wdeg"))
     right = centers.select("w", F.col("u").alias("v"))
     wedges = left.join(right, on="w").where(F.col("u") < F.col("v"))
@@ -106,7 +103,7 @@ def link_prediction(
             ).alias("jaccard"),
         )
     )
-    return LinkPredictionResult(scores=scores, n_dropped_centers=int(n_dropped))
+    return LinkPredictionResult(scores=scores, n_dropped_centers=n_dropped)
 
 
 def assortativity(edges: DataFrame) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.graph import arcs, undirected_degrees, undirected_pairs
+from paragrapher_spark.operators.salting import hub_cap
 
 
 def _oriented(und: DataFrame) -> DataFrame:
@@ -87,9 +88,7 @@ def _support(und: DataFrame) -> DataFrame:
 
 def triangles(edges: DataFrame) -> DataFrame:
     """All triangles as (u, v, w) vertex triples, each exactly once."""
-    o = _oriented(undirected_pairs(edges)).persist()
-    o.count()
-    return _listing(o)
+    return _listing(_oriented(undirected_pairs(edges)))
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -259,18 +258,10 @@ def square_count(
     """
     adj = arcs(edges, directed=False).toDF("v", "n")
     if max_center_degree is not None:
-        deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
-        dropped = deg.where(F.col("deg") > max_center_degree)
-        drop_stats = dropped.agg(
-            F.count(F.lit(1)).alias("n_dropped_centers"),
-            F.coalesce(
-                F.sum(F.col("deg") * (F.col("deg") - 1) / 2), F.lit(0)
-            )
-            .cast("long")
-            .alias("n_dropped_wedges"),
-        )
-        adj = adj.join(
-            deg.where(F.col("deg") <= max_center_degree).select("v"), on="v"
+        adj, hot = hub_cap(adj, "v", max_center_degree)
+        drop_stats = hot.select(
+            F.col("n_keys").alias("n_dropped_centers"),
+            F.col("n_pairs").alias("n_dropped_wedges"),
         )
     left = adj.select("v", F.col("n").alias("u"))
     right = adj.select("v", F.col("n").alias("w"))

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import md5_60
+from paragrapher_spark.operators.salting import hub_cap
+from paragrapher_spark.operators.similarity import bit_bands
 
 # Universal-hash family for MinHash: shingle universe is [0, 2^31); the
 # modulus must sit just above the universe (p = 2^31 + 11, prime) so that
@@ -151,8 +153,7 @@ def minhash_candidates(
     Pass a dict as ``metrics`` to receive the degenerate-bucket drop
     counts (``n_dropped_buckets`` / ``n_dropped_rows``) — at 100 TB a
     silent candidate loss would read as "deduped" when it isn't, so the
-    cap's effect is observable. The count is one extra O(#buckets)
-    aggregation over the (persisted) bucket-size table.
+    cap's effect is observable (``operators/salting.py:hub_cap``).
     """
     assert num_hashes % bands == 0
     rows = num_hashes // bands
@@ -176,27 +177,12 @@ def minhash_candidates(
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
 
-    # guard: drop degenerate buckets instead of exploding the self-join;
-    # the size table is tiny (one row per bucket) and persisted so the
-    # drop-count metric below reuses it instead of re-banding |docs| rows
-    bucket_sizes = (
-        band_keys.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("bn")).persist()
-    )
-    ok_buckets = bucket_sizes.where(
-        (F.col("bn") > 1) & (F.col("bn") <= max_bucket_size)
-    ).select("band", "bh")
+    # guard: drop degenerate buckets instead of exploding the self-join
+    bk, hot = hub_cap(band_keys, ["band", "bh"], max_bucket_size)
     if metrics is not None:
-        drop = (
-            bucket_sizes.where(F.col("bn") > max_bucket_size)
-            .agg(
-                F.count(F.lit(1)).alias("b"),
-                F.coalesce(F.sum("bn"), F.lit(0)).alias("r"),
-            )
-            .collect()[0]
-        )
-        metrics["n_dropped_buckets"] = int(drop["b"])
-        metrics["n_dropped_rows"] = int(drop["r"])
-    bk = band_keys.join(ok_buckets, on=["band", "bh"], how="left_semi")
+        drop = hot.collect()[0]
+        metrics["n_dropped_buckets"] = drop["n_keys"]
+        metrics["n_dropped_rows"] = drop["n_rows"]
 
     a = bk.select("band", "bh", F.col("id").alias("id_a"))
     b = bk.select("band", "bh", F.col("id").alias("id_b"))
@@ -225,7 +211,6 @@ def minhash_candidates(
         .localCheckpoint(eager=True)
     )
     sigs.unpersist()
-    bucket_sizes.unpersist()
     return out
 
 
@@ -304,27 +289,16 @@ def simhash_candidates(
     by construction — mirrored as-is by the DuckDB oracle.)
     """
     sigs = simhash_signatures(docs, text_col, id_col).persist()
-    block_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("block"),
-                F.shiftrightunsigned(F.col("simhash"), i * 15)
-                .bitwiseAND(F.lit(0x7FFF))
-                .alias("bv"),
-            )
-            for i in range(4)
-        ]
-    )
     blocks = sigs.select(
         F.col(id_col).alias("id"),
         F.col("simhash"),
-        F.explode(block_arr).alias("bk"),
-    ).select("id", "simhash", F.col("bk.block").alias("block"), F.col("bk.bv").alias("bv"))
-    a = blocks.select("block", "bv", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"))
-    b = blocks.select("block", "bv", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"))
+        F.explode(bit_bands(F.col("simhash"), SIMHASH_BITS, 4)).alias("bk"),
+    ).select("id", "simhash", "bk.band", "bk.bv")
+    a = blocks.select("band", "bv", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"))
+    b = blocks.select("band", "bv", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"))
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     out = (
-        a.join(b, on=["block", "bv"])
+        a.join(b, on=["band", "bv"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", ham.alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
@@ -431,13 +405,7 @@ def ngram_jaccard_pairs(
     )
     counts = g.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
     if max_df is not None:
-        ok_grams = (
-            g.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_df)
-            .select("gram")
-        )
-        g = g.join(ok_grams, on="gram", how="left_semi")
+        g, _ = hub_cap(g, "gram", max_df)
     a = g.select(F.col("gram"), F.col("id").alias("id_a"))
     b = g.select(F.col("gram"), F.col("id").alias("id_b"))
     shared = (
@@ -495,25 +463,13 @@ def embedding_dup_pairs(
     if method == "lsh":
         dim_row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
         bits = _hyperplane_bits(F.col("vec"), int(dim_row["d"]), n_bits)
-        band_w = n_bits // bands
-        band_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col("bits"), i * band_w)
-                    .bitwiseAND(F.lit((1 << band_w) - 1))
-                    .alias("bv"),
-                )
-                for i in range(bands)
-            ]
-        )
         bucketed = (
             base.withColumn("bits", bits)
-            .select(id_col, "vec", "norm", F.explode(band_arr).alias("bk"))
             .select(
                 id_col, "vec", "norm",
-                F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv"),
+                F.explode(bit_bands(F.col("bits"), n_bits, bands)).alias("bk"),
             )
+            .select(id_col, "vec", "norm", "bk.band", "bk.bv")
         )
         a = bucketed.select(
             "band", "bv", F.col(id_col).alias("id_a"),
@@ -866,10 +822,8 @@ def winnow_clone_pairs(
     byhash = fp.select("id", "h").distinct()
     metrics: dict = {"n_dropped_hashes": 0}
     if max_df is not None:
-        df_counts = byhash.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-        hot = df_counts.where(F.col("df") > max_df)
-        metrics["n_dropped_hashes"] = hot.count()
-        byhash = byhash.join(hot.select("h"), "h", "left_anti")
+        byhash, hot = hub_cap(byhash, "h", max_df)
+        metrics["n_dropped_hashes"] = hot.collect()[0]["n_keys"]
     a = byhash.select(F.col("id").alias("id_a"), "h")
     b = byhash.select(F.col("id").alias("id_b"), "h")
     pairs = (

@@ -13,6 +13,12 @@ AQE's skew-join handles *shuffle-partition* level skew; explicit salting is
 still the right tool when one key alone exceeds a partition (hub vertices
 at 10^12-file scale), so both are used: AQE on by default (session.py),
 salting opt-in per kernel.
+
+Salting cannot help a SELF-join on a hot key, whose output is quadratic
+in the key's row count however the rows are spread. ``hub_cap`` is the
+one guard every pair-listing self-join (LSH buckets, shared n-grams and
+fingerprints, co-reference dsts, wedge centres) puts in front of it: hot
+groups are dropped and counted, never silently.
 """
 
 from __future__ import annotations
@@ -42,24 +48,38 @@ def explode_salts(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataF
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int,
-    how: str = "inner",
-) -> DataFrame:
-    """Join big⋈small on ``key`` with the hot-key salt trick.
+def hub_cap(
+    rows: DataFrame, keys: str | list[str], cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """The loud hub cap in front of a self-join on ``keys``: a group of n
+    rows self-joins into n(n-1)/2 unordered pairs, so one hot key (a hub
+    vertex, a boilerplate n-gram, a degenerate LSH bucket) is a quadratic
+    blow-up.
 
-    big gets a per-row deterministic salt; small is replicated n_salts
-    times; the join key becomes (key, salt). Output drops the salt column.
-    Use when a single key's row count exceeds what one task should hold —
-    the PageRank contribution join on hub vertices, for example.
-    """
-    b = salt_column(big, key, n_salts)
-    s = explode_salts(small, n_salts)
-    out = b.join(s, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
+    Returns ``(kept, hot)``. ``kept`` is ``rows`` restricted to the
+    groups of more than 1 and at most ``cap`` rows (a singleton pairs
+    with nothing). ``hot`` is a lazy one-row frame ``(n_keys, n_rows,
+    n_pairs)`` of exact longs describing the groups over ``cap``: how
+    many there are, how many rows they hold, and Σ n(n-1)/2, the exact
+    self-join size they would have added — all 0 when no group is over.
+    Plan: one map-side-combinable group count, then a left-semi join on
+    ``keys``; ``hot`` reads the same count and costs nothing until a
+    caller collects it."""
+    keys = [keys] if isinstance(keys, str) else keys
+    sizes = rows.groupBy(*keys).agg(F.count(F.lit(1)).cast("long").alias("_n"))
+    kept = rows.join(
+        sizes.where((F.col("_n") > 1) & (F.col("_n") <= cap)).select(*keys),
+        on=keys,
+        how="left_semi",
+    )
+    hot = sizes.where(F.col("_n") > cap).agg(
+        F.count(F.lit(1)).cast("long").alias("n_keys"),
+        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_rows"),
+        F.coalesce(F.sum(F.expr("(_n * (_n - 1)) div 2")), F.lit(0))
+        .cast("long")
+        .alias("n_pairs"),
+    )
+    return kept, hot
 
 
 def skew_report(

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
+from paragrapher_spark.operators.salting import hub_cap
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -159,6 +160,26 @@ def _hyperplane_bits(vec: Column, dim: int, n_bits: int, seed: int = 42) -> Colu
     return out
 
 
+def bit_bands(bits: Column, n_bits: int, bands: int) -> Column:
+    """The ``explode``-able array of ``bands`` structs ``(band, bv)`` that
+    cut an ``n_bits`` signature into equal fields: ``bv`` is bits
+    ``[band·w, (band+1)·w)`` of ``bits`` with ``w = n_bits // bands``.
+    Rows sharing any ``(band, bv)`` are LSH candidates (hyperplane
+    signatures here, SimHash blocks in operators/dedup.py)."""
+    w = n_bits // bands
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.shiftrightunsigned(bits, i * w)
+                .bitwiseAND(F.lit((1 << w) - 1))
+                .alias("bv"),
+            )
+            for i in range(bands)
+        ]
+    )
+
+
 def knn_lsh(
     emb: DataFrame,
     k: int = 5,
@@ -178,7 +199,6 @@ def knn_lsh(
     loss at scale must be observable (same contract as
     dedup.minhash_candidates)."""
     assert n_bits % bands == 0
-    rows = n_bits // bands
     base = with_norm(emb, vec_col, id_col).persist()
     dim = len(base.select("vec").first()["vec"])
     sig = base.select(
@@ -187,35 +207,14 @@ def knn_lsh(
         "norm",
         _hyperplane_bits(F.col("vec"), dim, n_bits, seed).alias("bits"),
     )
-    mask = (1 << rows) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("bits"), i * rows)
-                .bitwiseAND(F.lit(mask))
-                .alias("bv"),
-            )
-            for i in range(bands)
-        ]
-    )
     banded = sig.select(
-        "id", "vec", "norm", F.explode(band_arr).alias("bk")
-    ).select("id", "vec", "norm", F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv"))
-    sizes = banded.groupBy("band", "bv").agg(F.count(F.lit(1)).alias("bn")).persist()
-    ok = sizes.where((F.col("bn") > 1) & (F.col("bn") <= max_bucket_size)).select("band", "bv")
+        "id", "vec", "norm", F.explode(bit_bands(F.col("bits"), n_bits, bands)).alias("bk")
+    ).select("id", "vec", "norm", "bk.band", "bk.bv")
+    bb, hot = hub_cap(banded, ["band", "bv"], max_bucket_size)
     if metrics is not None:
-        drop = (
-            sizes.where(F.col("bn") > max_bucket_size)
-            .agg(
-                F.count(F.lit(1)).alias("b"),
-                F.coalesce(F.sum("bn"), F.lit(0)).alias("r"),
-            )
-            .collect()[0]
-        )
-        metrics["n_dropped_buckets"] = int(drop["b"])
-        metrics["n_dropped_rows"] = int(drop["r"])
-    bb = banded.join(ok, on=["band", "bv"], how="left_semi")
+        drop = hot.collect()[0]
+        metrics["n_dropped_buckets"] = drop["n_keys"]
+        metrics["n_dropped_rows"] = drop["n_rows"]
     a = bb.select("band", "bv", F.col("id").alias("query_id"), F.col("vec").alias("qvec"), F.col("norm").alias("qnorm"))
     b = bb.select("band", "bv", F.col("id").alias("neighbor_id"), F.col("vec").alias("cvec"), F.col("norm").alias("cnorm"))
     cand = (
@@ -232,7 +231,6 @@ def knn_lsh(
     # lifetime block leak; checkpointed RDDs are GC-cleaned when dropped)
     out = _topk(cand, k).localCheckpoint(eager=True)
     base.unpersist()
-    sizes.unpersist()
     return out
 
 

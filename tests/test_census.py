@@ -1,10 +1,11 @@
 """Dyad census + triad motifs (kernels/census.py) vs hand oracles, and
-the one-row census/triangle kernels' cache release."""
+the census, triangle and link-prediction kernels' cache release."""
 
 from __future__ import annotations
 
 from paragrapher_spark.kernels.census import dyad_census, triad_motifs
-from paragrapher_spark.kernels.triangles import triangle_count
+from paragrapher_spark.kernels.linkpred import link_prediction
+from paragrapher_spark.kernels.triangles import triangle_count, triangles
 
 
 def _edges(spark, pairs):
@@ -55,10 +56,11 @@ def test_triad_motifs_hub_cap_is_loud(spark):
     assert capped.motifs.collect()[0].n_paths2 == 0
 
 
-def test_one_row_kernels_release_their_persisted_frames(spark):
+def test_kernels_release_their_persisted_frames(spark):
     # triangle_count and triad_motifs persist an intermediate frame, then
-    # collect their one row and unpersist it: a call leaves the session's
-    # persistent RDDs as it found them
+    # collect their one row and unpersist it; triangles and
+    # link_prediction return lazy frames and persist nothing: a call
+    # leaves the session's persistent RDDs as it found them
     e = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3)])
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
@@ -67,4 +69,10 @@ def test_one_row_kernels_release_their_persisted_frames(spark):
     row = triad_motifs(e).motifs.collect()[0]
     # wedges 0->1->2, 1->2->0, 2->0->1 (the cycle) and 1->2->3
     assert (row.n_paths2, row.n_transitive, row.n_cyclic) == (4, 0, 1)
+    assert persisted().size() == before
+    assert len(triangles(e).collect()) == 1
+    assert persisted().size() == before
+    # non-adjacent pairs through centre 2: (0, 3) and (1, 3)
+    scores = link_prediction(e).scores.collect()
+    assert sorted((r.u, r.v, r.cn) for r in scores) == [(0, 3, 1), (1, 3, 1)]
     assert persisted().size() == before

@@ -232,3 +232,23 @@ def test_simple_graph_arcs_are_defined_once():
             ):
                 hits.add(p.name)
     assert hits == {"components.py", "msf.py"}
+
+
+def test_hub_cap_is_defined_once():
+    """The loud hub cap in front of a self-join is ``operators/salting.py:
+    hub_cap``: an ``F.col(...)`` compared with a cap name is left only
+    there and in ``functions/text.py`` (``top_terms``' df filter, which
+    feeds no self-join)."""
+    root = Path(__file__).resolve().parents[1]
+    caps = {"cap", "max_bucket_size", "max_df", "max_center_degree"}
+    hits = set()
+    for p in sorted((root / "paragrapher_spark").rglob("*.py")):
+        for n in ast.walk(ast.parse(p.read_text(), filename=str(p))):
+            if not isinstance(n, ast.Compare):
+                continue
+            sides = (n.left, *n.comparators)
+            if any(
+                isinstance(s, ast.Call) and _call_name(s) == "col" for s in sides
+            ) and any(isinstance(s, ast.Name) and s.id in caps for s in sides):
+                hits.add(p.relative_to(root / "paragrapher_spark").as_posix())
+    assert hits == {"operators/salting.py", "functions/text.py"}

@@ -264,6 +264,25 @@ def test_skew_report_matches_python_replay(spark):
     assert got[1][4] == 0                     # warm key: below 2x threshold
 
 
+def test_hub_cap_keeps_pairable_groups_and_counts_the_hot_ones(spark):
+    """hub_cap keeps the groups of 2..cap rows (a singleton pairs with
+    nothing) and describes the ones over cap exactly: keys, rows and
+    the n(n-1)/2 self-join pairs they would have produced."""
+    from paragrapher_spark.operators.salting import hub_cap
+
+    cap = 4
+    sizes = {1: 1, 2: 2, 3: cap, 4: cap + 2}
+    rows = [(k, i) for k, n in sizes.items() for i in range(n)]
+    df = spark.createDataFrame(rows, "k long, i long")
+    kept, hot = hub_cap(df, "k", cap)
+    assert sorted(tuple(r) for r in kept.collect()) == [
+        (k, i) for k, i in rows if k in (2, 3)
+    ]
+    assert tuple(hot.collect()[0]) == (1, cap + 2, (cap + 2) * (cap + 1) // 2)
+    _, cold = hub_cap(df, "k", cap + 2)
+    assert tuple(cold.collect()[0]) == (0, 0, 0)
+
+
 def test_warm_start_same_fixpoint_fewer_supersteps(spark):
     """init_ranks: a converged vector from a ~90% edge subset warm-starts
     the full-graph run — identical fixpoint (unique), strictly fewer
