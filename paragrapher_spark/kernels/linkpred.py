@@ -124,8 +124,8 @@ def assortativity(edges: DataFrame) -> DataFrame:
     """
     und = undirected_pairs(edges)
     deg = undirected_degrees(und)
-    stubs = und.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
-        und.select(F.col("b").alias("s"), F.col("a").alias("d"))
+    stubs = arcs(edges, directed=False).select(
+        F.col("src").alias("s"), F.col("dst").alias("d")
     )
     x = stubs.join(deg.select(F.col("id").alias("s"), F.col("deg").alias("dx")), on="s").join(
         deg.select(F.col("id").alias("d"), F.col("deg").alias("dy")), on="d"

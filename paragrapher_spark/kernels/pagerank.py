@@ -9,20 +9,31 @@ Convergence: L∞(r' - r) < tol (the allclose-1e-6 contract, BASELINE.md).
 
 Scale design (SURVEY.md §7 step 5):
 
-- the edge table is joined with the rank table on ``src`` every superstep;
-  edges are repartitioned on ``src`` ONCE and persisted, so each iteration
-  shuffles only the rank table (|V| rows, not |E|) into co-location —
-  the gather; the ``groupBy(dst)`` scatter is the one unavoidable |E|
-  shuffle, with map-side partial aggregation.
-- per-edge contribution coefficients (1/outdeg) are precomputed into the
-  persisted edge table — no per-iteration degree join.
+- the gather joins the edge table with the rank state on ``src``. While
+  the state fits under the session's ``spark.sql.autoBroadcastJoinThreshold``
+  (estimated at 24 bytes a row, Spark's per-row size for a long and a
+  double, times ``n_salts`` when salting), the state is broadcast and
+  never hash-shuffled: the edge table is cached once in its input
+  partitioning and never shuffled or sorted. Above the threshold (or
+  with it at -1) the edges are cached by ``graph.gather_table``
+  (hash-partitioned and sorted on ``src``) and the gather is a
+  SortMergeJoin that shuffles and sorts only the |V|-row state.
+- the scatter is one ``groupBy(id)`` over the contributions unioned with
+  the state rows themselves, so the one exchange (map-side partially
+  aggregated) yields the inflow mass, the old rank, the dangling flag
+  and the teleport weight together — no merge join after the aggregate.
+- one |E| aggregate builds the vertex table ``(id, out)`` (out = Σ
+  out-edge weights; the out-degree unweighted). It gives N, the per-edge
+  coefficients folded into the cached edge table (``coef = w / out``,
+  no per-iteration degree join) and the dangling flag (``out == 0``).
 - hub skew: AQE skew-join splits oversized src partitions at runtime
   (session defaults); ``n_salts`` adds explicit deterministic salting for
   single-key hotspots beyond AQE's reach (operators.salting) — the
   reference splits giant adjacencies across buffers the same way
   (`src/webgraph.c:957-971`).
-- driver work is O(1) scalars per superstep (delta, dangling mass) —
-  the reference's serial-phase mistake (paper §5.6, 0.475 scaling
+- driver work is O(1) scalars per superstep (delta, dangling mass), plus
+  the broadcast state itself, which the threshold bounds — the
+  reference's serial-phase mistake (paper §5.6, 0.475 scaling
   efficiency) is what the ≥0.8 target forbids.
 - every superstep localCheckpoints (truncates the growing join lineage);
   every ``checkpoint_every`` supersteps the rank table is snapshotted via
@@ -35,10 +46,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from paragrapher_spark.graph import gather_table, vertex_ids
+from paragrapher_spark.graph import gather_table, id_set
 from paragrapher_spark.operators.salting import explode_salts, salt_column
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
@@ -103,178 +114,119 @@ def pagerank(
     over ``init_ranks``.
     """
     spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    vertices = vertex_ids(edges, vertices).repartition(n_part, "id").persist()
-    n = vertices.count()
+    w = F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
+    vtab = _vertex_table(edges, vertices, w).persist()
+    n = vtab.count()
     if n == 0:
-        empty = vertices.select("id", F.lit(0.0).alias("rank"))
+        vtab.unpersist()
         return PageRankResult(
-            ranks=empty, iterations=0, converged=True, final_delta=0.0, history=[]
+            ranks=vtab.select("id", F.lit(0.0).alias("rank")),
+            iterations=0, converged=True, final_delta=0.0, history=[],
         )
 
-    if weight_col is None:
-        out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        # contribution coefficient folded into the persisted edge table:
-        # no degree join inside the loop
-        edges_w = (
-            edges.select("src", "dst")
-            .join(out_deg, on="src")
-            .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef"))
-        )
-    else:
-        w = F.col(weight_col).cast("double")
-        # a vertex whose outgoing weights sum to 0 cannot distribute rank:
-        # it is dangling (dropped from out_deg so the flag below catches it)
-        out_deg = (
-            edges.groupBy("src")
-            .agg(F.sum(w).alias("wsum"))
-            .where(F.col("wsum") != 0)
-        )
-        edges_w = (
-            edges.select("src", "dst", w.alias("_w"))
-            .join(out_deg, on="src")
-            .select("src", "dst", (F.col("_w") / F.col("wsum")).alias("coef"))
-        )
-    edges_w, n_edges = gather_table(edges_w, "src")
+    # the session's spark.sql.autoBroadcastJoinThreshold in bytes (-1:
+    # broadcast joins off), against Spark's per-row size estimate for an
+    # (id long, rank double) row, 24 bytes
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+    def fits(copies: int) -> bool:
+        return 0 <= n * 24 * copies <= limit
+
+    # a vertex whose outgoing weights sum to 0 cannot distribute rank: it
+    # has no coefficient row and is dangling
+    out = vtab.where(F.col("out") != 0).select(F.col("id").alias("src"), "out")
+    if fits(1):
+        out = F.broadcast(out)
+    coef = (
+        edges.select("src", "dst", w.alias("_w"))
+        .join(out, on="src")
+        .select("src", "dst", (F.col("_w") / F.col("out")).alias("coef"))
+    )
 
     if n_salts == "auto":
-        max_deg = (
-            edges_w.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-            .agg(F.max("d"))
-            .collect()[0][0]
-            or 0
+        max_deg, n_edges = (
+            coef.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+            .agg(F.max("d"), F.sum("d"))
+            .collect()[0]
         )
-        fair_share = max(1, n_edges // n_part)
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        fair_share = max(1, (n_edges or 0) // n_part)
+        max_deg = max_deg or 0
         n_salts = (
             int(-(-max_deg // fair_share)) if max_deg > 2 * fair_share else 0
         )
 
-    # dangling vertices: no out-edges; their rank mass is redistributed.
-    # The flag rides ON the rank table so each superstep's single
-    # aggregation yields BOTH the convergence delta and the next
-    # superstep's dangling mass — one cheap job over checkpointed data,
-    # no per-iteration semi-join.
-    dangling_flag = out_deg.select(F.col("src").alias("id"), F.lit(True).alias("_nd"))
+    broadcast = fits(max(1, n_salts or 0))
+    if broadcast:
+        # the first superstep fills the cache; the broadcast gather never
+        # needs the edges partitioned or sorted on src
+        edges_w = coef.persist()
+    else:
+        edges_w, _ = gather_table(coef, "src")
 
-    # teleport vector: a per-vertex "p" column carried on the rank table;
-    # uniform PageRank keeps it a literal (no join, no extra bytes shuffled)
-    tp: DataFrame | None = None
+    # the per-vertex columns every state row carries: the dangling flag and
+    # the teleport vector's "p" column (uniform PageRank keeps p a literal:
+    # no join, no extra bytes shuffled)
+    fixed = vtab.select("id", (F.col("out") == 0).alias("is_dangling"))
     if teleport is not None:
         if isinstance(teleport, list):
-            tp = spark.createDataFrame(
-                [(int(t),) for t in teleport], "id long"
-            ).select("id", F.lit(1.0).alias("p_raw"))
+            tp = id_set(spark, teleport).select("id", F.lit(1.0).alias("p_raw"))
         else:
             tp = teleport.select("id", F.col("p").cast("double").alias("p_raw"))
         # restrict to graph vertices BEFORE normalizing: teleport ids absent
         # from the graph would otherwise silently leak restart mass
         # (Σ ranks < 1); after the semi-join, Σp over surviving ids is
         # renormalized to exactly 1.
-        tp = tp.join(vertices, on="id", how="left_semi")
+        tp = tp.join(vtab, on="id", how="left_semi")
         p_total = tp.agg(F.sum("p_raw")).collect()[0][0]
         if not p_total:
             raise ValueError(
                 "personalized teleport set has no overlap with the graph's "
                 "vertex set (or zero total mass)"
             )
-        tp = tp.select("id", (F.col("p_raw") / F.lit(p_total)).alias("p"))
-
-    # Classic (uniform) PageRank keeps p OUT of the rank table: it is the
-    # constant 1/N, so carrying it per row would add 8 bytes to every
-    # |V|-row shuffle and checkpoint each superstep for no information.
-    # Personalized runs carry the per-vertex p column (it varies).
-    p_lit = 1.0 / n  # python double; identical IEEE value to the SQL 1.0/N
-
-    def _with_flag(r: DataFrame) -> DataFrame:
-        out = r.join(dangling_flag, on="id", how="left")
-        if tp is None:
-            return out.select(
-                "id", "rank", F.col("_nd").isNull().alias("is_dangling")
-            )
-        return out.join(tp, on="id", how="left").select(
-            "id", "rank", F.col("_nd").isNull().alias("is_dangling"),
-            F.coalesce("p", F.lit(0.0)).alias("p"),
+        fixed = fixed.join(tp, on="id", how="left").select(
+            "id", "is_dangling",
+            F.coalesce(F.col("p_raw") / F.lit(p_total), F.lit(0.0)).alias("p"),
         )
-
-    p_cols = [] if tp is None else ["p"]
-
-    def _p_col():
-        return F.lit(p_lit) if tp is None else F.col("p")
+    # Classic (uniform) PageRank keeps p OUT of the rank table: it is the
+    # constant 1/N (the python double, identical IEEE value to the SQL
+    # 1.0/N), so carrying it per row would add 8 bytes to every
+    # |V|-row shuffle and checkpoint each superstep for no information.
+    p = F.lit(1.0 / n) if teleport is None else F.col("p")
+    p_cols = [] if teleport is None else ["p"]
 
     def _cold_start() -> DataFrame:
-        if init_ranks is not None:
-            # warm start: previous vector where present; vertices the
-            # delta introduced fall back to the SAME per-vertex teleport
-            # the cold start would seed them with (_p_col(): uniform 1/N,
-            # or the personalized p column) — so a warm personalized
-            # start replays exactly the cold start vector on missing ids
-            # (ADVICE r3: the old uniform-share fallback was an
-            # undocumented asymmetry a personalized-incremental oracle
-            # would trip over). Left join keeps the vertex set
-            # authoritative (ids dropped by the delta vanish with it).
-            return _with_flag(
-                vertices.join(
-                    init_ranks.select(
-                        "id", F.col("rank").cast("double").alias("_r0")
-                    ),
-                    on="id",
-                    how="left",
-                ).select("id", F.col("_r0").alias("rank"))
-            ).select(
-                "id",
-                F.coalesce("rank", _p_col()).alias("rank"),
-                "is_dangling",
-                *p_cols,
-            )
-        return _with_flag(
-            vertices.select("id", F.lit(0.0).alias("rank"))
-        ).select("id", _p_col().alias("rank"), "is_dangling", *p_cols)
+        if init_ranks is None:
+            return fixed.select("id", p.alias("rank"), "is_dangling", *p_cols)
+        # warm start: previous vector where present; vertices the delta
+        # introduced fall back to the SAME per-vertex teleport the cold
+        # start would seed them with (uniform 1/N, or the personalized p
+        # column) — so a warm personalized start replays exactly the cold
+        # start vector on missing ids. The left join keeps the vertex set
+        # authoritative (ids dropped by the delta vanish with it).
+        r0 = init_ranks.select("id", F.col("rank").cast("double").alias("_r0"))
+        return fixed.join(r0, on="id", how="left").select(
+            "id", F.coalesce("_r0", p).alias("rank"), "is_dangling", *p_cols
+        )
 
     def _start(r: DataFrame) -> tuple[DataFrame, float, float]:
-        """(ranks, dangling mass, delta) loop state from a start vector."""
-        r = r.repartition(n_part, "id").localCheckpoint(eager=True)
-        dm = (
-            r.agg(
-                F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0))
-            ).collect()[0][0]
-            or 0.0
-        )
+        """(ranks, dangling mass, delta) loop state from a start vector;
+        the dangling-mass aggregate is the one action that materializes
+        it."""
+        r = r.localCheckpoint(eager=False)
+        dm = r.agg(_dangling_mass()).collect()[0][0] or 0.0
         return r, dm, float("inf")
 
-    # the superstep references ``ranks`` twice (gather join + old_rank
-    # merge) — the chained-checkpoint shape whose driver cost blows up
+    # the superstep references ``ranks`` twice (gather join + scatter
+    # union) — the chained-checkpoint shape whose driver cost blows up
     # past ~18 generations (plans/iterstate.py); the convergence path
     # runs 17-40+ iterations, squarely in that zone
     def step(it: int, state, ckpt):
         ranks, dm, _ = state
-        ranks_src = ranks.select(F.col("id").alias("src"), "rank")
-        if n_salts:
-            e = salt_column(edges_w, "src", n_salts)
-            r = explode_salts(ranks_src, n_salts)
-            joined = e.join(r, on=["src", "_salt"])
-        else:
-            joined = edges_w.join(ranks_src, on="src")
-        sums = (
-            joined.select(F.col("dst").alias("id"), (F.col("rank") * F.col("coef")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("mass"))
-        )
         restart = (1.0 - damping) + damping * dm  # scaled per-vertex by p
-        new_ranks = (
-            ranks.select("id", F.col("rank").alias("old_rank"), "is_dangling", *p_cols)
-            .join(sums, on="id", how="left")
-            .select(
-                "id",
-                (
-                    F.lit(restart) * _p_col()
-                    + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("rank"),
-                "old_rank",
-                "is_dangling",
-                *p_cols,
-            )
-            .repartition(n_part, "id")
+        new_ranks = _next_ranks(
+            edges_w, ranks, restart, p,
+            damping=damping, n_salts=n_salts, broadcast=broadcast,
         )
         # non-eager cut: the delta/dangling aggregation below is the one
         # action of the superstep — it materializes the checkpoint as a
@@ -282,7 +234,7 @@ def pagerank(
         new_ranks = ckpt.cut(new_ranks, eager=False)
         row = new_ranks.agg(
             F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-            F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
+            _dangling_mass().alias("dm"),
         ).collect()[0]
         delta, dm = row["delta"] or 0.0, row["dm"] or 0.0
         ranks = new_ranks.select("id", "rank", "is_dangling", *p_cols)
@@ -297,7 +249,7 @@ def pagerank(
         done=lambda s: s[2] < tol,
         checkpoint=checkpoint,
         checkpoint_every=checkpoint_every,
-        restore=lambda _, snap: _start(_with_flag(snap.select("id", "rank"))),
+        restore=lambda _, snap: _start(snap.select("id", "rank").join(fixed, on="id")),
         snapshot=lambda s: s[0].select("id", "rank"),
         result=lambda s: s[0].select("id", "rank"),
         final=lambda lp: (
@@ -305,10 +257,84 @@ def pagerank(
         ),
     )
     edges_w.unpersist()
-    vertices.unpersist()
+    vtab.unpersist()
     return PageRankResult(
         ranks=loop.result, iterations=loop.last, converged=loop.done,
         final_delta=loop.state[2], history=loop.history,
+    )
+
+
+def _vertex_table(
+    edges: DataFrame, vertices: DataFrame | None, w: Column
+) -> DataFrame:
+    """``(id, out)``: every vertex with the sum ``out`` of its out-edge
+    weights ``w`` (0.0 without out-edges), from one aggregate over the
+    edges. The vertex set is ``vertices.id`` when given (isolated vertices
+    included), otherwise the distinct ``src`` ∪ ``dst`` endpoints."""
+    if vertices is None:
+        return (
+            edges.select(F.col("src").alias("id"), w.alias("_w"))
+            .unionByName(edges.select(F.col("dst").alias("id"), F.lit(0.0).alias("_w")))
+            .groupBy("id")
+            .agg(F.coalesce(F.sum("_w"), F.lit(0.0)).alias("out"))
+        )
+    out = edges.groupBy(F.col("src").alias("id")).agg(F.sum(w).alias("out"))
+    return vertices.select("id").join(out, on="id", how="left").select(
+        "id", F.coalesce("out", F.lit(0.0)).alias("out")
+    )
+
+
+def _dangling_mass() -> Column:
+    return F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0))
+
+
+def _next_ranks(
+    edges_w: DataFrame,
+    ranks: DataFrame,
+    restart: float,
+    p: Column,
+    *,
+    damping: float,
+    n_salts: int | None,
+    broadcast: bool,
+) -> DataFrame:
+    """One superstep's ``(id, rank, old_rank, is_dangling[, p])`` state
+    from the cached ``edges_w(src, dst, coef)`` and the rank state
+    ``ranks(id, rank, is_dangling[, p])``.
+
+    Gather: ``edges_w`` joins the ``(src, rank)`` state, broadcast when
+    ``broadcast``. Scatter: one ``groupBy(id)`` over the contributions
+    ``(id, c)`` unioned with the state rows ``(id, c=0, old_rank,
+    is_dangling[, p])``; only ids carrying an ``old_rank`` are kept, so a
+    contribution to an id outside the vertex table is dropped."""
+    ranks_src = ranks.select(F.col("id").alias("src"), "rank")
+    keys = ["src"]
+    if n_salts:
+        edges_w = salt_column(edges_w, "src", n_salts)
+        ranks_src = explode_salts(ranks_src, n_salts)
+        keys.append("_salt")
+    if broadcast:
+        ranks_src = F.broadcast(ranks_src)
+    contribs = edges_w.join(ranks_src, on=keys).select(
+        F.col("dst").alias("id"), (F.col("rank") * F.col("coef")).alias("c")
+    )
+    carried = [c for c in ranks.columns if c not in ("id", "rank")]
+    return (
+        ranks.select("id", F.lit(0.0).alias("c"), F.col("rank").alias("old_rank"), *carried)
+        .unionByName(contribs, allowMissingColumns=True)
+        .groupBy("id")
+        .agg(
+            F.sum("c").alias("mass"),
+            F.max("old_rank").alias("old_rank"),
+            *[F.max(c).alias(c) for c in carried],
+        )
+        .where(F.col("old_rank").isNotNull())
+        .select(
+            "id",
+            (F.lit(restart) * p + F.lit(damping) * F.col("mass")).alias("rank"),
+            "old_rank",
+            *carried,
+        )
     )
 
 

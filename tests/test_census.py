@@ -1,10 +1,12 @@
 """Dyad census + triad motifs (kernels/census.py) vs hand oracles, and
-the census, triangle and link-prediction kernels' cache release."""
+the census, triangle, link-prediction and PageRank kernels' cache
+release."""
 
 from __future__ import annotations
 
 from paragrapher_spark.kernels.census import dyad_census, triad_motifs
 from paragrapher_spark.kernels.linkpred import link_prediction
+from paragrapher_spark.kernels.pagerank import pagerank
 from paragrapher_spark.kernels.triangles import triangle_count, triangles
 
 
@@ -76,3 +78,15 @@ def test_kernels_release_their_persisted_frames(spark):
     scores = link_prediction(e).scores.collect()
     assert sorted((r.u, r.v, r.cn) for r in scores) == [(0, 3, 1), (1, 3, 1)]
     assert persisted().size() == before
+    # pagerank persists its vertex table and its edge table and releases
+    # both, on the empty graph's early return too. Its localCheckpointed
+    # supersteps and result also persist RDDs, but those are lineage cuts
+    # the caller holds, not caches the kernel could release.
+    def cached():
+        return sum(not r.rdd().isCheckpointed() for r in persisted().values())
+
+    before = cached()
+    assert pagerank(e.limit(0)).iterations == 0
+    assert cached() == before
+    assert pagerank(e, tol=0.0, max_iter=2).ranks.count() == 4
+    assert cached() == before

@@ -168,7 +168,8 @@ def test_personalized_pagerank(spark):
 def test_personalized_uniform_teleport_matches_classic(spark):
     edges_df = cycle_graph(spark, 6)
     classic = pagerank(edges_df, tol=1e-10, max_iter=60)
-    ppr = pagerank(edges_df, tol=1e-10, max_iter=60, teleport=list(range(6)))
+    # a repeated seed is one member of the teleport set
+    ppr = pagerank(edges_df, tol=1e-10, max_iter=60, teleport=list(range(6)) + [0])
     a = {r.id: r.rank for r in classic.ranks.collect()}
     b = {r.id: r.rank for r in ppr.ranks.collect()}
     for v in a:
@@ -231,6 +232,53 @@ def test_cached_edge_sort_order_reused_by_smj(spark):
         assert sorts[False] == 2 and sorts[True] == 1, sorts
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_sort_merge_gather_matches_broadcast_gather(spark, tmp_path):
+    """With broadcast joins off, the kernel gathers through the sort-merge
+    join over ``graph.gather_table``'s layout instead of broadcasting the
+    rank state; both paths give the same ranks. Covered: weights,
+    personalization, a vertex table with an isolated vertex, a dangling
+    vertex, and a resume of a broadcast-gather checkpoint on the
+    sort-merge path."""
+    from paragrapher_spark.plans.checkpoint import CheckpointManager
+
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1), (1, 4)]  # 4 dangling
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    dfw = spark.createDataFrame(
+        [(s, t, float(1 + s + 2 * t)) for s, t in pairs],
+        "src long, dst long, weight double",
+    )
+    verts = spark.createDataFrame([(i,) for i in range(6)], "id long")  # 5 isolated
+    runs = {
+        "dangling": lambda **kw: pagerank(df, **kw),
+        "weighted": lambda **kw: pagerank(dfw, weight_col="weight", **kw),
+        "personalized": lambda **kw: pagerank(df, teleport=[0, 3], **kw),
+        "vertices": lambda **kw: pagerank(df, vertices=verts, **kw),
+    }
+
+    def ranks(res):
+        return {r.id: r.rank for r in res.ranks.collect()}
+
+    def resumable(max_iter):
+        cm = CheckpointManager(str(tmp_path), "pr")
+        return pagerank(df, tol=0.0, max_iter=max_iter, checkpoint=cm, checkpoint_every=2)
+
+    default = {k: ranks(run(tol=0.0, max_iter=5)) for k, run in runs.items()}
+    resumable(2)  # snapshot at superstep 2, written by the broadcast gather
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        smj = {k: ranks(run(tol=0.0, max_iter=5)) for k, run in runs.items()}
+        smj["resumed"] = ranks(resumable(5))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    default["resumed"] = default["dangling"]
+    assert set(default["vertices"]) == set(range(6))
+    for k, want in default.items():
+        assert smj[k].keys() == want.keys(), k
+        for v in want:
+            assert smj[k][v] == pytest.approx(want[v], abs=1e-12), (k, v)
 
 
 def test_skew_report_matches_python_replay(spark):

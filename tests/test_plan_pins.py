@@ -67,21 +67,91 @@ def _edges(spark):
 # ---------------------------------------------------------------------------
 
 
-def _superstep(spark, deopt: bool = False):
-    """One gather+scatter superstep exactly as kernels/pagerank.py shapes
-    it: coef-edges cached by ``graph.gather_table`` (pre-partitioned and
-    sorted on src), rank state checkpointed on id. ``deopt=True`` breaks
-    the discipline the way a careless edit would (no persist/pre-partition,
-    rank state carries its build lineage) — the pin must catch that."""
-    from paragrapher_spark.graph import gather_table
-
+def _coef_edges(spark):
+    """The kernel's unweighted ``(src, dst, coef = 1/outdeg)`` edge table."""
     edges = _edges(spark)
-    n_part = 8
-    e = (
+    return (
         edges.select("src", "dst")
         .join(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), on="src")
         .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef"))
     )
+
+
+def _shuffles(live: str) -> int:
+    return len(re.findall(r"(?<!Broadcast)Exchange ", live))
+
+
+def _subtree(lines: list[str], marker: str) -> list[str]:
+    """The first line containing ``marker`` and the lines nested under it."""
+    at = next(i for i, ln in enumerate(lines) if marker in ln)
+    indent = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    out = [lines[at]]
+    for ln in lines[at + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= indent:
+            break
+        out.append(ln)
+    return out
+
+
+def _broadcast_superstep(spark, broadcast: bool = True):
+    """One superstep built by the kernel's own ``_next_ranks`` in the
+    broadcast regime: coef-edges persisted in their input partitioning,
+    rank state checkpointed. ``broadcast=False`` (under a -1 broadcast
+    threshold) is the sort-merge twin the pin must reject."""
+    from paragrapher_spark.kernels.pagerank import _next_ranks
+
+    e = _coef_edges(spark).persist()
+    e.count()
+    ranks = (
+        e.select(F.col("src").alias("id")).distinct()
+        .select("id", F.lit(0.001).alias("rank"), F.lit(False).alias("is_dangling"))
+        .localCheckpoint(eager=True)
+    )
+    step = _next_ranks(
+        e, ranks, 0.15, F.lit(0.001), damping=0.85, n_salts=None, broadcast=broadcast
+    )
+    return e, _live_plan_lines(_plan(step))
+
+
+def test_pagerank_broadcast_superstep_pin(spark):
+    e, live = _broadcast_superstep(spark)
+    e.unpersist()
+    plan = "\n".join(live)
+    # design: the rank state is broadcast to the cached edges (never
+    # hash-shuffled) and the scatter's groupBy(id), which also carries
+    # the state rows, is the one shuffle; no sort-merge gather
+    assert _shuffles(plan) == 1, plan
+    assert "Scan ExistingRDD" in "\n".join(_subtree(live, "BroadcastExchange")), plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_pagerank_broadcast_superstep_pin_has_teeth(spark):
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        e, live = _broadcast_superstep(spark, broadcast=False)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    e.unpersist()
+    plan = "\n".join(live)
+    # the sort-merge gather shuffles the state (and the uncached-layout
+    # edges) into co-location: it must violate the broadcast pin
+    assert _shuffles(plan) > 1, plan
+    assert "SortMergeJoin" in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
+def _superstep(spark, deopt: bool = False):
+    """The sort-merge gather (rank state above the broadcast threshold)
+    as kernels/pagerank.py shapes it: coef-edges cached by
+    ``graph.gather_table`` (pre-partitioned and sorted on src), rank
+    state checkpointed on id. ``deopt=True`` breaks the discipline the way
+    a careless edit would (no persist/pre-partition, rank state carries its
+    build lineage) — the pin must catch that."""
+    from paragrapher_spark.graph import gather_table
+
+    n_part = 8
+    e = _coef_edges(spark)
     if not deopt:
         e, _ = gather_table(e, "src")
     ranks = e.select(F.col("src").alias("id")).distinct().select(

@@ -3,8 +3,10 @@ operators and greps them for the properties the scale design promises:
 
 - parquet scans show PushedFilters / pruned ReadSchema (no full-width reads)
 - hot paths sit inside WholeStageCodegen spans (no row-at-a-time Python)
-- per-superstep exchange count matches the design (PageRank: rank shuffle +
-  groupBy(dst) shuffle only; the persisted edge table must NOT re-exchange)
+- per-superstep exchange count matches the design (PageRank: below the
+  broadcast threshold the rank state is broadcast and the scatter's
+  groupBy(id) is the one shuffle; above it, the sort-merge gather adds the
+  rank shuffle; the persisted edge table must NOT re-exchange)
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -21,6 +23,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from paragrapher_spark import get_spark  # noqa: E402
 from paragrapher_spark.graph import gather_table  # noqa: E402
 from paragrapher_spark.kernels.degrees import degree_distribution  # noqa: E402
+from paragrapher_spark.kernels.pagerank import _next_ranks  # noqa: E402
 from paragrapher_spark.operators.dedup import minhash_signatures  # noqa: E402
 from paragrapher_spark.sources.edges import copurchase_edges, load_table  # noqa: E402
 
@@ -46,12 +49,16 @@ def _live_plan_lines(plan: str) -> list[str]:
 def summarize(name: str, df, show_full: bool = False) -> None:
     plan = df._jdf.queryExecution().executedPlan().toString()
     live = "\n".join(_live_plan_lines(plan))
-    n_exchange = len(re.findall(r"Exchange ", live))
+    n_exchange = len(re.findall(r"(?<!Broadcast)Exchange ", live))
+    n_broadcast = live.count("BroadcastExchange ")
     n_codegen = len(re.findall(r"WholeStageCodegen", plan))
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     read_schema = re.findall(r"ReadSchema: ([^\n]*)", plan)
     print(f"== {name}")
-    print(f"   exchanges={n_exchange} codegen_spans={n_codegen}")
+    print(
+        f"   exchanges={n_exchange} broadcasts={n_broadcast} "
+        f"codegen_spans={n_codegen}"
+    )
     for p in pushed:
         print(f"   pushed: [{p[:120]}]")
     for r in read_schema:
@@ -147,34 +154,43 @@ def main() -> None:
         hstep,
     )
 
-    # PageRank single-superstep plan: edges cached by gather_table on src,
-    # ranks repartitioned on id -> join should reuse the edge partitioning
-    n_part = 8
-    e, _ = gather_table(
+    # PageRank single-superstep plans, built by the kernel's own
+    # _next_ranks. Broadcast regime (the rank state under the session's
+    # broadcast threshold): edges cached in their input partitioning
+    coef = (
         edges.select("src", "dst")
         .join(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), on="src")
-        .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef")),
-        "src",
+        .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("coef"))
     )
-    # ranks localCheckpointed exactly like the kernel's loop state — the
-    # superstep plan then shows only the per-iteration work, not the rank
-    # table's construction lineage
-    ranks = (
-        e.select(F.col("src").alias("id")).distinct()
-        .select("id", F.lit(0.001).alias("rank"))
-        .repartition(n_part, "id")
+    eb = coef.persist()
+    state = (
+        eb.select(F.col("src").alias("id")).distinct()
+        .select("id", F.lit(0.001).alias("rank"), F.lit(False).alias("is_dangling"))
         .localCheckpoint(eager=True)
     )
-    step = (
-        e.join(ranks.withColumnRenamed("id", "src"), on="src")
-        .select(F.col("dst").alias("id"), (F.col("rank") * F.col("coef")).alias("c"))
-        .groupBy("id")
-        .agg(F.sum("c").alias("mass"))
-    )
     summarize(
-        "pagerank superstep (cached edges + checkpointed ranks: expect ~2 "
-        "exchanges — the gather join co-location + the scatter agg)",
-        step,
+        "pagerank broadcast superstep (cached edges + broadcast checkpointed "
+        "state: expect 1 exchange — the scatter agg, which carries the state "
+        "rows — plus the state's BroadcastExchange, no SortMergeJoin)",
+        _next_ranks(
+            eb, state, 0.15, F.lit(0.001), damping=0.85, n_salts=None, broadcast=True
+        ),
+        show_full=True,
+    )
+    eb.unpersist()
+
+    # sort-merge regime (state above the threshold, here forced with the
+    # threshold at -1): edges cached by gather_table on src; the
+    # checkpointed state is shuffled onto them
+    e, _ = gather_table(coef, "src")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    summarize(
+        "pagerank sort-merge superstep (gather_table edges + checkpointed "
+        "state: expect 2 exchanges — the state into co-location + the "
+        "scatter agg; the cached edges do not re-exchange)",
+        _next_ranks(
+            e, state, 0.15, F.lit(0.001), damping=0.85, n_salts=None, broadcast=False
+        ),
         show_full=True,
     )
     spark.stop()
