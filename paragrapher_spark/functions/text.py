@@ -5,7 +5,7 @@ All JVM-side column expressions except the rolling-hash fingerprint
 form). Each returns a Column (composable) or a DataFrame query.
 
 - token/char statistics and a composite quality score (length, punctuation
-  density, stopword ratio, repetition) — the usual pre-training filters;
+  density, repetition) — the usual pre-training filters;
 - n-gram/stopword language ID over a small built-in lexicon (en/de/es/fr +
   han-script detection for zh);
 - rolling-hash document fingerprint (Rabin-Karp style, mod 2^61-1).
@@ -62,16 +62,6 @@ def punct_ratio(text: Column) -> Column:
         F.length(text) > 0,
         (F.length(text) - F.length(stripped)).cast("double")
         / F.length(text).cast("double"),
-    ).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    t = tokens(F.lower(text))
-    hits = F.size(
-        F.filter(t, lambda x: x.isin(*[F.lit(w) for w in STOPWORDS[lang]]))
-    )
-    return F.when(
-        F.size(t) > 0, hits.cast("double") / F.size(t).cast("double")
     ).otherwise(F.lit(0.0))
 
 

@@ -177,10 +177,10 @@ def gather_table(df: DataFrame, key: str) -> tuple[DataFrame, int]:
     action that fills the cache).
 
     The layout: hash-partitioned on ``key`` into the session's
-    ``spark.sql.shuffle.partitions`` (the count the loop state is
-    repartitioned into, so both sides of the join are co-partitioned and
-    only the |V|-row state shuffles each superstep), sorted within
-    partitions on ``key``, persisted.
+    ``spark.sql.shuffle.partitions`` (the count a shuffle of the loop
+    state onto ``key`` produces, so the join finds the edge side already
+    co-partitioned and only the |V|-row state shuffles each superstep),
+    sorted within partitions on ``key``, persisted.
 
     - Sorted BEFORE caching: once the state outgrows the broadcast
       threshold the gather is a SortMergeJoin, and a cached UNSORTED

@@ -12,12 +12,12 @@ Scale design (SURVEY.md §7 step 5):
 - the gather joins the edge table with the rank state on ``src``. While
   the state fits under the session's ``spark.sql.autoBroadcastJoinThreshold``
   (estimated at 24 bytes a row, Spark's per-row size for a long and a
-  double, times ``n_salts`` when salting), the state is broadcast and
-  never hash-shuffled: the edge table is cached once in its input
-  partitioning and never shuffled or sorted. Above the threshold (or
-  with it at -1) the edges are cached by ``graph.gather_table``
-  (hash-partitioned and sorted on ``src``) and the gather is a
-  SortMergeJoin that shuffles and sorts only the |V|-row state.
+  double), the state is broadcast and never hash-shuffled: the edge
+  table is cached once in its input partitioning and never shuffled or
+  sorted. Above the threshold (or with it at -1) the edges are cached by
+  ``graph.gather_table`` (hash-partitioned and sorted on ``src``) and the
+  gather is a SortMergeJoin that shuffles and sorts only the |V|-row
+  state.
 - the scatter is one ``groupBy(id)`` over the contributions unioned with
   the state rows themselves, so the one exchange (map-side partially
   aggregated) yields the inflow mass, the old rank, the dangling flag
@@ -26,11 +26,10 @@ Scale design (SURVEY.md §7 step 5):
   out-edge weights; the out-degree unweighted). It gives N, the per-edge
   coefficients folded into the cached edge table (``coef = w / out``,
   no per-iteration degree join) and the dangling flag (``out == 0``).
-- hub skew: AQE skew-join splits oversized src partitions at runtime
-  (session defaults); ``n_salts`` adds explicit deterministic salting for
-  single-key hotspots beyond AQE's reach (operators.salting) — the
-  reference splits giant adjacencies across buffers the same way
-  (`src/webgraph.c:957-971`).
+- hub skew: the broadcast gather never shuffles the edges, so a hub's
+  out-edges stay spread over the edge table's input partitions. The
+  sort-merge gather keeps them in one cached ``src`` partition, the
+  layout that spares it an |E| shuffle every superstep.
 - driver work is O(1) scalars per superstep (delta, dangling mass), plus
   the broadcast state itself, which the threshold bounds — the
   reference's serial-phase mistake (paper §5.6, 0.475 scaling
@@ -50,7 +49,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.graph import gather_table, id_set
-from paragrapher_spark.operators.salting import explode_salts, salt_column
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
@@ -70,7 +68,6 @@ def pagerank(
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 100,
-    n_salts: int | str | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 5,
     weight_col: str | None = None,
@@ -86,19 +83,14 @@ def pagerank(
     d*mass(v)), so Σ ranks stays 1. Default: uniform 1/N (classic).
 
     ``vertices`` (id) may be supplied to include isolated vertices; by
-    default the vertex set is the distinct endpoints of ``edges``.
+    default the vertex set is the distinct endpoints of ``edges``. A
+    repeated id in ``vertices`` is one vertex; repeated ids in a teleport
+    DataFrame add up (their ``p`` values are summed per id).
 
     ``weight_col`` names an edge-weight column: each vertex distributes its
     rank proportionally to outgoing weights (coef = w / Σ_out w) — the
     weighted-graph capability of the reference's WG404 arc-labelled format
     (`src/WG404AP.java:171-182`). Unweighted (default) is coef = 1/outdeg.
-
-    ``n_salts="auto"`` sizes the salt count from the max out-degree: a hub
-    whose adjacency exceeds ~2 partitions' fair share of edges is split
-    into ceil(max_deg / (|E|/n_part)) deterministic sub-keys — the
-    reference's giant-adjacency splitting (`src/webgraph.c:957-971`)
-    applied to the gather join. 0/None disables; AQE skew-join still
-    covers partition-level skew either way.
 
     ``init_ranks`` (id, rank) warm-starts the iteration from a previous
     converged vector instead of the teleport distribution — the
@@ -128,14 +120,12 @@ def pagerank(
     # broadcast joins off), against Spark's per-row size estimate for an
     # (id long, rank double) row, 24 bytes
     limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-
-    def fits(copies: int) -> bool:
-        return 0 <= n * 24 * copies <= limit
+    broadcast = 0 <= n * 24 <= limit
 
     # a vertex whose outgoing weights sum to 0 cannot distribute rank: it
     # has no coefficient row and is dangling
     out = vtab.where(F.col("out") != 0).select(F.col("id").alias("src"), "out")
-    if fits(1):
+    if broadcast:
         out = F.broadcast(out)
     coef = (
         edges.select("src", "dst", w.alias("_w"))
@@ -143,20 +133,6 @@ def pagerank(
         .select("src", "dst", (F.col("_w") / F.col("out")).alias("coef"))
     )
 
-    if n_salts == "auto":
-        max_deg, n_edges = (
-            coef.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-            .agg(F.max("d"), F.sum("d"))
-            .collect()[0]
-        )
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        fair_share = max(1, (n_edges or 0) // n_part)
-        max_deg = max_deg or 0
-        n_salts = (
-            int(-(-max_deg // fair_share)) if max_deg > 2 * fair_share else 0
-        )
-
-    broadcast = fits(max(1, n_salts or 0))
     if broadcast:
         # the first superstep fills the cache; the broadcast gather never
         # needs the edges partitioned or sorted on src
@@ -172,7 +148,9 @@ def pagerank(
         if isinstance(teleport, list):
             tp = id_set(spark, teleport).select("id", F.lit(1.0).alias("p_raw"))
         else:
-            tp = teleport.select("id", F.col("p").cast("double").alias("p_raw"))
+            tp = teleport.groupBy("id").agg(
+                F.sum(F.col("p").cast("double")).alias("p_raw")
+            )
         # restrict to graph vertices BEFORE normalizing: teleport ids absent
         # from the graph would otherwise silently leak restart mass
         # (Σ ranks < 1); after the semi-join, Σp over surviving ids is
@@ -226,7 +204,7 @@ def pagerank(
         restart = (1.0 - damping) + damping * dm  # scaled per-vertex by p
         new_ranks = _next_ranks(
             edges_w, ranks, restart, p,
-            damping=damping, n_salts=n_salts, broadcast=broadcast,
+            damping=damping, broadcast=broadcast,
         )
         # non-eager cut: the delta/dangling aggregation below is the one
         # action of the superstep — it materializes the checkpoint as a
@@ -269,8 +247,9 @@ def _vertex_table(
 ) -> DataFrame:
     """``(id, out)``: every vertex with the sum ``out`` of its out-edge
     weights ``w`` (0.0 without out-edges), from one aggregate over the
-    edges. The vertex set is ``vertices.id`` when given (isolated vertices
-    included), otherwise the distinct ``src`` ∪ ``dst`` endpoints."""
+    edges. The vertex set is the distinct ``vertices.id`` when given
+    (isolated vertices included), otherwise the distinct ``src`` ∪ ``dst``
+    endpoints."""
     if vertices is None:
         return (
             edges.select(F.col("src").alias("id"), w.alias("_w"))
@@ -279,7 +258,8 @@ def _vertex_table(
             .agg(F.coalesce(F.sum("_w"), F.lit(0.0)).alias("out"))
         )
     out = edges.groupBy(F.col("src").alias("id")).agg(F.sum(w).alias("out"))
-    return vertices.select("id").join(out, on="id", how="left").select(
+    ids = id_set(edges.sparkSession, vertices)
+    return ids.join(out, on="id", how="left").select(
         "id", F.coalesce("out", F.lit(0.0)).alias("out")
     )
 
@@ -295,7 +275,6 @@ def _next_ranks(
     p: Column,
     *,
     damping: float,
-    n_salts: int | None,
     broadcast: bool,
 ) -> DataFrame:
     """One superstep's ``(id, rank, old_rank, is_dangling[, p])`` state
@@ -308,14 +287,9 @@ def _next_ranks(
     is_dangling[, p])``; only ids carrying an ``old_rank`` are kept, so a
     contribution to an id outside the vertex table is dropped."""
     ranks_src = ranks.select(F.col("id").alias("src"), "rank")
-    keys = ["src"]
-    if n_salts:
-        edges_w = salt_column(edges_w, "src", n_salts)
-        ranks_src = explode_salts(ranks_src, n_salts)
-        keys.append("_salt")
     if broadcast:
         ranks_src = F.broadcast(ranks_src)
-    contribs = edges_w.join(ranks_src, on=keys).select(
+    contribs = edges_w.join(ranks_src, on="src").select(
         F.col("dst").alias("id"), (F.col("rank") * F.col("coef")).alias("c")
     )
     carried = [c for c in ranks.columns if c not in ("id", "rank")]
@@ -381,8 +355,8 @@ def ppr_batch(
     pre-sorted on src; each round is one equi-join edges⋈state on src
     (state arrives hash-partitioned on src) + one grouped sum keyed
     (dst, seed). Seed batch size scales state linearly but supersteps
-    stay two-shuffle; skew on hot vertices is the same salting surface
-    as classic PageRank.
+    stay two-shuffle; a hot vertex's out-edges sit in one cached src
+    partition, the layout that spares the |E| shuffle every round.
     """
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -1,6 +1,5 @@
 from paragrapher_spark.operators.asof import asof_join, range_join
 from paragrapher_spark.operators.indexing import dense_ids, prefix_sum
-from paragrapher_spark.operators.salting import explode_salts, salt_column
 from paragrapher_spark.operators.packing import pack_documents, pack_stats
 from paragrapher_spark.operators.sampling import (
     assign_splits,
@@ -14,8 +13,6 @@ __all__ = [
     "range_join",
     "dense_ids",
     "prefix_sum",
-    "salt_column",
-    "explode_salts",
     "sample_hash",
     "stratified_sample",
     "assign_splits",

@@ -1,24 +1,28 @@
-"""Skew handling: hash-based salting for power-law join keys.
+"""Skew handling for power-law join keys: measure it, cap it, or cut the
+graph so that no vertex owns a partition.
 
 The reference's edge-balanced partitioner splits a single giant adjacency
 across multiple buffers (`src/webgraph.c:957-971`) — vertex-aligned
 partitioning would put twitter-2010's 3M-degree hubs in one buffer. The
-Spark analogue on joins: a hot key's rows are split into ``n_salts``
-sub-keys on the big (edge) side, and the small (vertex attribute) side is
-replicated once per salt. Salt is hash-based (deterministic), never
-``rand()`` — resumed/retried tasks must produce identical rows
-(SURVEY.md §7 hard point (d)).
+Spark side of that problem:
 
-AQE's skew-join handles *shuffle-partition* level skew; explicit salting is
-still the right tool when one key alone exceeds a partition (hub vertices
-at 10^12-file scale), so both are used: AQE on by default (session.py),
-salting opt-in per kernel.
+- AQE's skew-join (on by default, session.py) splits an oversized
+  shuffle partition of a join at runtime.
+- ``skew_report`` measures the heaviest join keys, and how many
+  fair-share pieces each would split into, before one becomes a
+  straggler.
+- ``grid_partition`` is the 2D vertex-cut: every vertex's edges land in
+  at most 2p-1 blocks, whatever its degree (``vertex_cut_report``
+  compares it with 1D hash-by-src).
+- A SELF-join on a hot key is quadratic in the key's row count however
+  the rows are spread. ``hub_cap`` is the one guard every pair-listing
+  self-join (LSH buckets, shared n-grams and fingerprints, co-reference
+  dsts, wedge centres) puts in front of it: hot groups are dropped and
+  counted, never silently.
 
-Salting cannot help a SELF-join on a hot key, whose output is quadratic
-in the key's row count however the rows are spread. ``hub_cap`` is the
-one guard every pair-listing self-join (LSH buckets, shared n-grams and
-fingerprints, co-reference dsts, wedge centres) puts in front of it: hot
-groups are dropped and counted, never silently.
+Every assignment is hash-based (deterministic), never ``rand()`` —
+resumed/retried tasks must produce identical rows (SURVEY.md §7 hard
+point (d)).
 """
 
 from __future__ import annotations
@@ -27,25 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paragrapher_spark.functions.hashing import portable_hash
-
-
-def salt_column(df: DataFrame, key: str, n_salts: int, salt_col: str = "_salt") -> DataFrame:
-    """Add a deterministic salt in [0, n_salts) derived from the full row.
-
-    Uses xxhash64 over all columns so the same logical row always lands in
-    the same salt bucket (idempotent under task retry), while rows sharing
-    a hot key spread uniformly.
-    """
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    )
-
-
-def explode_salts(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
-    """Replicate every row once per salt value (the small/broadcast side)."""
-    return df.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
 
 
 def hub_cap(
@@ -89,19 +74,19 @@ def skew_report(
     k: int = 20,
 ) -> DataFrame:
     """(key, cnt, share_fp, fair_share, rec_salts): the ``k`` heaviest
-    join keys with the salting prescription the PageRank kernel's
-    ``n_salts="auto"`` applies (kernels/pagerank.py:146-156) — surfaced
-    as a first-class diagnostic so skew is measured before it becomes a
-    straggler, not after.
+    join keys, each with the number of sub-keys its rows would need to be
+    split into to fit an even partitioning — surfaced as a first-class
+    diagnostic so skew is measured before it becomes a straggler, not
+    after.
 
     Exact integers throughout: ``share_fp`` is the key's milli-share of
     all rows (ONE integer division), ``fair_share`` = max(1,
     rows // n_partitions) (what an even partitioning would hand each
     task), ``rec_salts`` = ceil(cnt / fair_share) when the key exceeds
-    2x fair share, else 0 (not worth the replication) — the same
-    threshold the kernel uses. One map-side-combinable count + a
-    single-row total broadcast + a bounded top-k
-    (TakeOrderedAndProject); ties break on the key."""
+    2x fair share, else 0 (a key under twice its share is not worth
+    splitting). One map-side-combinable count + a single-row total
+    broadcast + a bounded top-k (TakeOrderedAndProject); ties break on
+    the key."""
     cnts = df.groupBy(key).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     total = cnts.agg(
         F.sum("cnt").cast("long").alias("__total")

@@ -416,10 +416,10 @@ def _join_skew_report_sql() -> str:
 def _q_join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-skew diagnostic (operators/salting.py skew_report): the 15
     heaviest src keys of the co-purchase edge table with milli-share,
-    even-partitioning fair share at 32 partitions, and the salting
-    prescription the PageRank kernel's n_salts='auto' would apply —
-    skew measured as a first-class query, before it becomes a
-    straggler. All exact integers."""
+    even-partitioning fair share at 32 partitions, and the number of
+    fair-share sub-keys each would split into — skew measured as a
+    first-class query, before it becomes a straggler. All exact
+    integers."""
     from paragrapher_spark.operators.salting import skew_report
 
     edges = copurchase_edges(spark, sf_dir)

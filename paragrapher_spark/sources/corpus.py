@@ -10,8 +10,8 @@ where ``content`` holds import statements that resolve to other rows'
 ``(repo, path)``. This generator plays the role of the reference's bundled
 test datasets (`test/Makefile:61-96` downloads cnr-2000 / MS1 / WDC-2012;
 `test/datasets/small.properties` is the tiny fixture): a seeded, wall-clock
-free corpus whose link structure is power-law skewed, so the salting path
-is exercised (the reference splits giant adjacencies across buffers,
+free corpus whose link structure is power-law skewed, so the hub paths
+are exercised (the reference splits giant adjacencies across buffers,
 `src/webgraph.c:957-971`).
 
 Everything is built from ``spark.range`` + built-in expressions (md5,

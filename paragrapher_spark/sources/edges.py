@@ -186,7 +186,8 @@ def rmat_edges(
     regenerates the IDENTICAL power-law graph (rmat_edges_sql). This is
     the deliberately-skewed counterpart of ``md5_vertex_graph`` (uniform
     in-degrees): R-MAT's recursive quadrant bias yields the heavy-tailed
-    degree distribution that exercises salting/AQE skew paths honestly.
+    degree distribution that exercises the hub caps and AQE skew paths
+    honestly.
 
     Plan shape: spark.range(m) → one in-row explode over ``scale`` bit
     levels → md5 + bit arithmetic (whole-stage codegen) → one groupBy(k)

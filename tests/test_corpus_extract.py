@@ -90,7 +90,7 @@ def test_edges_resolve_without_loss(spark):
 
 
 def test_skew_present(spark):
-    """The corpus must produce hub vertices (skew fixture) so salting paths
+    """The corpus must produce hub vertices (skew fixture) so hub paths
     are exercised — reference analogue: splitting giant adjacencies
     (`src/webgraph.c:957-971`)."""
     c = synth_corpus(spark, 1000, N_REPOS)

@@ -42,18 +42,6 @@ def test_star_skew(spark):
     _run_and_compare(spark, star_graph(spark, 301))
 
 
-def test_star_salted_matches_unsalted(spark):
-    """Salting must not change results — determinism contract."""
-    edges_df = star_graph(spark, 301)
-    plain = pagerank(edges_df, tol=1e-9, max_iter=40)
-    salted = pagerank(edges_df, tol=1e-9, max_iter=40, n_salts=4)
-    a = {r.id: r.rank for r in plain.ranks.collect()}
-    b = {r.id: r.rank for r in salted.ranks.collect()}
-    assert a.keys() == b.keys()
-    for v in a:
-        assert a[v] == pytest.approx(b[v], abs=1e-12)
-
-
 def test_dangling_mass(spark):
     _run_and_compare(spark, dangling_graph(spark))
 
@@ -117,18 +105,6 @@ def test_weighted_equal_weights_matches_unweighted(spark):
             dfw, tol=1e-10, max_iter=60, weight_col="weight"
         ).ranks.collect()
     }
-    for v in a:
-        assert a[v] == pytest.approx(b[v], abs=1e-12)
-
-
-def test_auto_salting_matches_unsalted(spark):
-    """n_salts='auto' must trigger on an extreme hub and not change results."""
-    edges_df = star_graph(spark, 401)  # hub out-degree 400 >> |E|/n_part
-    plain = pagerank(edges_df, tol=1e-9, max_iter=40)
-    auto = pagerank(edges_df, tol=1e-9, max_iter=40, n_salts="auto")
-    a = {r.id: r.rank for r in plain.ranks.collect()}
-    b = {r.id: r.rank for r in auto.ranks.collect()}
-    assert a.keys() == b.keys()
     for v in a:
         assert a[v] == pytest.approx(b[v], abs=1e-12)
 
@@ -239,8 +215,8 @@ def test_sort_merge_gather_matches_broadcast_gather(spark, tmp_path):
     join over ``graph.gather_table``'s layout instead of broadcasting the
     rank state; both paths give the same ranks. Covered: weights,
     personalization, a vertex table with an isolated vertex, a dangling
-    vertex, and a resume of a broadcast-gather checkpoint on the
-    sort-merge path."""
+    vertex, a 300-spoke hub, and a resume of a broadcast-gather
+    checkpoint on the sort-merge path."""
     from paragrapher_spark.plans.checkpoint import CheckpointManager
 
     pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1), (1, 4)]  # 4 dangling
@@ -250,11 +226,13 @@ def test_sort_merge_gather_matches_broadcast_gather(spark, tmp_path):
         "src long, dst long, weight double",
     )
     verts = spark.createDataFrame([(i,) for i in range(6)], "id long")  # 5 isolated
+    star = star_graph(spark, 301)
     runs = {
         "dangling": lambda **kw: pagerank(df, **kw),
         "weighted": lambda **kw: pagerank(dfw, weight_col="weight", **kw),
         "personalized": lambda **kw: pagerank(df, teleport=[0, 3], **kw),
         "vertices": lambda **kw: pagerank(df, vertices=verts, **kw),
+        "star": lambda **kw: pagerank(star, **kw),
     }
 
     def ranks(res):
@@ -281,9 +259,39 @@ def test_sort_merge_gather_matches_broadcast_gather(spark, tmp_path):
             assert smj[k][v] == pytest.approx(want[v], abs=1e-12), (k, v)
 
 
+def test_repeated_ids_count_once_in_vertices_and_add_up_in_teleport(spark):
+    """A vertex listed twice in ``vertices`` is one vertex, and teleport
+    rows repeating an id add up: both runs equal their deduplicated twin
+    and keep Σ ranks = 1."""
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+
+    def ranks(**kw):
+        res = pagerank(df, tol=0.0, max_iter=6, **kw)
+        got = {r.id: r.rank for r in res.ranks.collect()}
+        assert math.isclose(sum(got.values()), 1.0, abs_tol=1e-12), kw
+        return got
+
+    def tp(rows):
+        return spark.createDataFrame(rows, "id long, p double")
+
+    def ids(rows):
+        return spark.createDataFrame([(i,) for i in rows], "id long")
+
+    for got, want in (
+        (
+            ranks(teleport=tp([(0, 0.5), (0, 0.5), (3, 1.0)])),
+            ranks(teleport=tp([(0, 1.0), (3, 1.0)])),
+        ),
+        (ranks(vertices=ids([0, 1, 2, 3, 3])), ranks(vertices=ids(range(4)))),
+    ):
+        assert got.keys() == want.keys()
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-12), v
+
+
 def test_skew_report_matches_python_replay(spark):
     """skew_report replays exactly: counts, milli-shares, fair share,
-    and the kernel's auto-salt prescription (ceil over 2x threshold)."""
+    and the sub-key count of each key (ceil over the 2x threshold)."""
     from paragrapher_spark.operators.salting import skew_report
 
     # one mega-hub (key 7: 70 rows), one warm key (3: 12), cold rest
@@ -308,7 +316,7 @@ def test_skew_report_matches_python_replay(spark):
         rec = (c + fair - 1) // fair if c > 2 * fair else 0
         exp.append((key, c, (1000 * c) // total, fair, rec))
     assert got == exp
-    assert got[0][0] == 7 and got[0][4] >= 6  # the hub needs real salting
+    assert got[0][0] == 7 and got[0][4] >= 6  # the hub needs splitting
     assert got[1][4] == 0                     # warm key: below 2x threshold
 
 

@@ -93,29 +93,49 @@ def _subtree(lines: list[str], marker: str) -> list[str]:
     return out
 
 
-def _broadcast_superstep(spark, broadcast: bool = True):
-    """One superstep built by the kernel's own ``_next_ranks`` in the
-    broadcast regime: coef-edges persisted in their input partitioning,
-    rank state checkpointed. ``broadcast=False`` (under a -1 broadcast
-    threshold) is the sort-merge twin the pin must reject."""
+def _superstep(spark, layout: str, broadcast: bool) -> list[str]:
+    """The live plan lines of one superstep built by the kernel's own
+    ``_next_ranks`` over the coef-edges in ``layout``: ``"persist"`` (the
+    broadcast gather's cache, in its input partitioning),
+    ``"gather_table"`` (the sort-merge gather's cache, partitioned and
+    sorted on src) or ``"raw"`` (uncached: the plan re-derives the edges).
+    The rank state is checkpointed; ``broadcast=False`` plans under a -1
+    broadcast threshold, as a state above the threshold would."""
+    from paragrapher_spark.graph import gather_table
     from paragrapher_spark.kernels.pagerank import _next_ranks
 
-    e = _coef_edges(spark).persist()
-    e.count()
+    e = _coef_edges(spark)
+    if layout == "persist":
+        e = e.persist()
+        e.count()
+    elif layout == "gather_table":
+        e, _ = gather_table(e, "src")
     ranks = (
         e.select(F.col("src").alias("id")).distinct()
         .select("id", F.lit(0.001).alias("rank"), F.lit(False).alias("is_dangling"))
         .localCheckpoint(eager=True)
     )
-    step = _next_ranks(
-        e, ranks, 0.15, F.lit(0.001), damping=0.85, n_salts=None, broadcast=broadcast
-    )
-    return e, _live_plan_lines(_plan(step))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if not broadcast:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        step = _next_ranks(
+            e, ranks, 0.15, F.lit(0.001), damping=0.85, broadcast=broadcast
+        )
+        return _live_plan_lines(_plan(step))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        e.unpersist()
+
+
+def _gather_edge_side(live: list[str]) -> str:
+    """The edge (left) input of the superstep's sort-merge gather."""
+    smj = _subtree(live, "SortMergeJoin")
+    return "\n".join(_subtree(smj[1:], smj[1]))
 
 
 def test_pagerank_broadcast_superstep_pin(spark):
-    e, live = _broadcast_superstep(spark)
-    e.unpersist()
+    live = _superstep(spark, "persist", broadcast=True)
     plan = "\n".join(live)
     # design: the rank state is broadcast to the cached edges (never
     # hash-shuffled) and the scatter's groupBy(id), which also carries
@@ -126,61 +146,33 @@ def test_pagerank_broadcast_superstep_pin(spark):
 
 
 def test_pagerank_broadcast_superstep_pin_has_teeth(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        e, live = _broadcast_superstep(spark, broadcast=False)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    e.unpersist()
-    plan = "\n".join(live)
-    # the sort-merge gather shuffles the state (and the uncached-layout
-    # edges) into co-location: it must violate the broadcast pin
+    plan = "\n".join(_superstep(spark, "persist", broadcast=False))
+    # the sort-merge gather shuffles the state into co-location with the
+    # edges: it must violate the broadcast pin
     assert _shuffles(plan) > 1, plan
     assert "SortMergeJoin" in plan, plan
     assert "BroadcastExchange" not in plan, plan
 
 
-def _superstep(spark, deopt: bool = False):
-    """The sort-merge gather (rank state above the broadcast threshold)
-    as kernels/pagerank.py shapes it: coef-edges cached by
-    ``graph.gather_table`` (pre-partitioned and sorted on src), rank
-    state checkpointed on id. ``deopt=True`` breaks the discipline the way
-    a careless edit would (no persist/pre-partition, rank state carries its
-    build lineage) — the pin must catch that."""
-    from paragrapher_spark.graph import gather_table
-
-    n_part = 8
-    e = _coef_edges(spark)
-    if not deopt:
-        e, _ = gather_table(e, "src")
-    ranks = e.select(F.col("src").alias("id")).distinct().select(
-        "id", F.lit(0.001).alias("rank")
-    )
-    if not deopt:
-        ranks = ranks.repartition(n_part, "id").localCheckpoint(eager=True)
-    return (
-        e.join(ranks.withColumnRenamed("id", "src"), on="src")
-        .select(F.col("dst").alias("id"), (F.col("rank") * F.col("coef")).alias("c"))
-        .groupBy("id")
-        .agg(F.sum("c").alias("mass"))
-    )
-
-
 def test_pagerank_superstep_exchange_pin(spark):
-    step = _superstep(spark)
-    # design: the gather join co-locates the (small) rank table onto the
-    # persisted src-partitioned edges (<=1 exchange; 0 when broadcast)
-    # plus the scatter aggregation's dst re-hash (1 exchange). The edge
-    # table itself must NOT re-exchange (it is cached pre-partitioned).
-    assert _exchanges(step) <= 2, _plan(step)
+    live = _superstep(spark, "gather_table", broadcast=False)
+    plan = "\n".join(live)
+    # design: the state shuffles onto the cached src-partitioned, sorted
+    # edges (1 exchange) and the scatter's groupBy(id) is the other; the
+    # edge side reads the cache with no exchange of its own
+    assert _shuffles(plan) == 2, plan
+    edge_side = _gather_edge_side(live)
+    assert "InMemoryTableScan" in edge_side, plan
+    assert "Exchange" not in edge_side, plan
 
 
 def test_pagerank_superstep_pin_has_teeth(spark):
-    # the SAME computation with the partitioning discipline removed must
-    # violate the pin — otherwise the pin asserts nothing
-    deopt = _superstep(spark, deopt=True)
-    assert _exchanges(deopt) > 2, _plan(deopt)
+    # the SAME superstep over uncached edges re-derives and re-shuffles
+    # the |E| side every superstep: it must violate the pin
+    live = _superstep(spark, "raw", broadcast=False)
+    plan = "\n".join(live)
+    assert _shuffles(plan) > 2, plan
+    assert "Exchange" in _gather_edge_side(live), plan
 
 
 # ---------------------------------------------------------------------------

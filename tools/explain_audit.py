@@ -172,9 +172,7 @@ def main() -> None:
         "pagerank broadcast superstep (cached edges + broadcast checkpointed "
         "state: expect 1 exchange — the scatter agg, which carries the state "
         "rows — plus the state's BroadcastExchange, no SortMergeJoin)",
-        _next_ranks(
-            eb, state, 0.15, F.lit(0.001), damping=0.85, n_salts=None, broadcast=True
-        ),
+        _next_ranks(eb, state, 0.15, F.lit(0.001), damping=0.85, broadcast=True),
         show_full=True,
     )
     eb.unpersist()
@@ -188,9 +186,7 @@ def main() -> None:
         "pagerank sort-merge superstep (gather_table edges + checkpointed "
         "state: expect 2 exchanges — the state into co-location + the "
         "scatter agg; the cached edges do not re-exchange)",
-        _next_ranks(
-            e, state, 0.15, F.lit(0.001), damping=0.85, n_salts=None, broadcast=False
-        ),
+        _next_ranks(e, state, 0.15, F.lit(0.001), damping=0.85, broadcast=False),
         show_full=True,
     )
     spark.stop()
