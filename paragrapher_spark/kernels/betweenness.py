@@ -101,7 +101,7 @@ def _forward_levels(
             visited = visited.unionByName(frontier).transform(ckpt.cut_lazy)
         return (visited, frontier, n_front), {"frontier_size": n_front}
 
-    # pin into cached partitions + reclaim round-trip files (ADVICE r4);
+    # pin into cached partitions (superstep.run's pin epilogue);
     # a caller's later unpersist() on this frame is a cache-manager no-op
     loop = superstep.run(
         step,

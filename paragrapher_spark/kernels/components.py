@@ -122,7 +122,7 @@ def connected_components(
         return e, _signature(e), False
 
     # star contractions reference the round's edge state twice — the
-    # chained-checkpoint shape; cuts go through plans/iterstate.py
+    # self-join shape; cuts go through plans/iterstate.py
     def step(rnd: int, state, ckpt):
         e, sig, _ = state
         # non-eager: the signature aggregation is the round's one action and

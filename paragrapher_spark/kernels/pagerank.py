@@ -34,8 +34,10 @@ Scale design (SURVEY.md §7 step 5):
   the broadcast state itself, which the threshold bounds — the
   reference's serial-phase mistake (paper §5.6, 0.475 scaling
   efficiency) is what the ≥0.8 target forbids.
-- every superstep localCheckpoints (truncates the growing join lineage);
-  every ``checkpoint_every`` supersteps the rank table is snapshotted via
+- every superstep cuts its state with a ``localCheckpoint`` that drops
+  the carried size estimate (plans/iterstate.py), so no superstep writes
+  files and planning stays flat at any iteration count; every
+  ``checkpoint_every`` supersteps the rank table is snapshotted via
   CheckpointManager for resume (north rule: resumable mid-iteration with
   per-partition lineage + metrics).
 """
@@ -196,9 +198,9 @@ def pagerank(
         return r, dm, float("inf")
 
     # the superstep references ``ranks`` twice (gather join + scatter
-    # union) — the chained-checkpoint shape whose driver cost blows up
-    # past ~18 generations (plans/iterstate.py); the convergence path
-    # runs 17-40+ iterations, squarely in that zone
+    # union) — the self-join shape whose carried size estimate squares
+    # every generation under a plain localCheckpoint (plans/iterstate.py);
+    # the convergence path runs 17-40+ iterations
     def step(it: int, state, ckpt):
         ranks, dm, _ = state
         restart = (1.0 - damping) + damping * dm  # scaled per-vertex by p
@@ -208,7 +210,7 @@ def pagerank(
         )
         # non-eager cut: the delta/dangling aggregation below is the one
         # action of the superstep — it materializes the checkpoint as a
-        # side effect (parquet round-trip every 4th iteration, eager)
+        # side effect
         new_ranks = ckpt.cut(new_ranks, eager=False)
         row = new_ranks.agg(
             F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),

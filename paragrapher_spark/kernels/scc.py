@@ -90,6 +90,11 @@ TRIM_PEELS_PER_ROUND = 4
 #: is roughly neutral.
 PROP_UNROLL = 2
 
+#: Outer rounds between cuts of the accumulated ``found`` union: bounds
+#: the result plan's Union arity, so the final checkpoint costs
+#: O(FOUND_CUT_ROUNDS), not O(rounds).
+FOUND_CUT_ROUNDS = 4
+
 
 def _prio(col: str = "id"):
     """Random-priority struct for a vertex column: (hash, id) — a
@@ -121,8 +126,9 @@ def _min_propagate(
     present in ``labels`` (the self-jump invariant — initial labels are
     self-structs and both relaxation and jumping preserve ancestry).
     State cuts go through ``ckpt`` (plans/iterstate.py) — the per-step
-    query references ``cur`` twice (relax + jump), the exact shape that
-    trips the chained-checkpoint driver blowup documented there.
+    query references ``cur`` twice (relax + jump), the self-join shape
+    whose carried size estimate a plain localCheckpoint squares every
+    generation (documented there).
     Returns (fixpoint labels, supersteps used)."""
     cur = ckpt.cut(labels.repartition(n_part, "id"))
 
@@ -385,9 +391,8 @@ def _scc_impl(
         blab, bwd_steps = _min_propagate(
             mverts.select("id", _prio("id").alias("lab")), rev, n_part, ckpt
         )
-        # cached (never parquet-backed): ``found`` retains every round's
-        # settled rows for the whole run, so they must not depend on
-        # iterstate files that a later cut deletes
+        # cached: ``found`` retains every round's settled rows for the
+        # whole run, and ``out`` below self-joins this frame
         settled = (
             mverts.join(blab, on="id")
             .where(F.col("lab") == F.col("color"))
@@ -413,12 +418,10 @@ def _scc_impl(
             .localCheckpoint(eager=True)
         )
         found = out if found is None else found.unionByName(out)
-        # bound the accumulated-union depth: cut ``found`` itself on the
-        # iterstate cadence (localCheckpoint, NEVER iterstate parquet —
-        # ``found`` must survive ckpt.close()). Keeps the result plan's
-        # Union arity <= period regardless of outer-round count, so the
-        # final checkpoint cost is O(period), not O(rounds).
-        if rnd % ckpt.period == 0:
+        # bound the accumulated-union depth: cut ``found`` itself every
+        # FOUND_CUT_ROUNDS rounds, so the result plan's Union arity stays
+        # bounded regardless of outer-round count
+        if rnd % FOUND_CUT_ROUNDS == 0:
             found = found.localCheckpoint(eager=True)
 
         # shrink with the PAIR refinement: an SCC's members share BOTH

@@ -9,10 +9,14 @@ owns everything a superstep loop needs besides the step itself:
 - the ``StateCheckpointer`` the step cuts its state through,
 - per-step ``duration_s`` (the step call alone: no tick, no checkpoint I/O),
 - per-step shuffle bytes read from Spark's app-status store,
-- ``history`` rows ``{key: i, **step metrics, duration_s,
+- per-step Janino compile seconds (``compile_s``, the step call alone):
+  Spark inlines double literals into the generated Java, so a step whose
+  literal changes every superstep (PageRank's restart term) recompiles
+  its stages every time,
+- ``history`` rows ``{key: i, **step metrics, duration_s, compile_s,
   shuffle_write_bytes, shuffle_read_bytes}``,
 - the ``save``/``log_metrics`` cadence and the final save,
-- the ``pin()``/``close()`` epilogue.
+- the ``pin()`` epilogue (result frames cut eagerly).
 
 A kernel supplies ``step(i, state, ckpt) -> (state, metrics)`` and, where
 it needs them, small hooks: ``done`` (checked before every step),
@@ -90,6 +94,25 @@ def _shuffle_ticker(spark: SparkSession) -> Callable[[], tuple[int, int]]:
     return tick
 
 
+def _compile_clock(spark: SparkSession) -> Callable[[], float]:
+    """``clock()`` -> seconds the JVM has spent compiling generated code
+    (``CodeGenerator.compileTime()``: one counter for the driver and the
+    local-mode executors), or -1 if the (not public-API) py4j path fails."""
+    try:
+        gen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator  # type: ignore[attr-defined]
+        gen.compileTime()
+    except Exception:
+        return lambda: -1.0
+
+    def clock() -> float:
+        try:
+            return gen.compileTime() / 1e9
+        except Exception:
+            return -1.0
+
+    return clock
+
+
 def run(
     step: Callable[[int, Any, StateCheckpointer], tuple[Any, dict[str, Any]]],
     state: Any,
@@ -115,9 +138,9 @@ def run(
     ``restore(i, snapshot_df)``. Step ``i`` is saved as
     ``snapshot(state)`` when ``i % checkpoint_every == 0`` or ``i ==
     max_iter`` and logged as progress otherwise. After the loop the
-    ``result(state)`` frames are pinned and the round-trip files deleted;
-    if ``final(loop)`` returns ``(iteration, metrics)``, the (first) pinned
-    frame is saved there as the ``final`` record.
+    ``result(state)`` frames are pinned; if ``final(loop)`` returns
+    ``(iteration, metrics)``, the (first) pinned frame is saved there as
+    the ``final`` record.
     """
     i = start
     resumed = checkpoint.resume(spark) if checkpoint is not None else None
@@ -128,24 +151,25 @@ def run(
         state = state()
     ckpt = StateCheckpointer(spark)
     tick = _shuffle_ticker(spark)
+    compiled = _compile_clock(spark)
     history: list[dict[str, Any]] = []
-    try:
-        while i < max_iter and not done(state):
-            i += 1
-            t0 = time.monotonic()
-            state, metrics = step(i, state, ckpt)
-            metrics["duration_s"] = time.monotonic() - t0
-            metrics["shuffle_write_bytes"], metrics["shuffle_read_bytes"] = tick()
-            history.append({key: i, **metrics})
-            if checkpoint is not None:
-                if i % checkpoint_every == 0 or i == max_iter:
-                    checkpoint.save(i, snapshot(state), metrics)
-                else:
-                    checkpoint.log_metrics(i, metrics)
-        out = result(state)
-        pinned = ckpt.pin(*out) if isinstance(out, tuple) else ckpt.pin(out)
-    finally:
-        ckpt.close()
+    while i < max_iter and not done(state):
+        i += 1
+        c0 = compiled()
+        t0 = time.monotonic()
+        state, metrics = step(i, state, ckpt)
+        metrics["duration_s"] = time.monotonic() - t0
+        c1 = compiled()
+        metrics["compile_s"] = c1 - c0 if min(c0, c1) >= 0 else -1.0
+        metrics["shuffle_write_bytes"], metrics["shuffle_read_bytes"] = tick()
+        history.append({key: i, **metrics})
+        if checkpoint is not None:
+            if i % checkpoint_every == 0 or i == max_iter:
+                checkpoint.save(i, snapshot(state), metrics)
+            else:
+                checkpoint.log_metrics(i, metrics)
+    out = result(state)
+    pinned = ckpt.pin(*out) if isinstance(out, tuple) else ckpt.pin(out)
     loop = Loop(pinned, state, i, done(state), history)
     rec = final(loop) if checkpoint is not None else None
     if rec is not None:

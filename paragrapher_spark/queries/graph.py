@@ -904,7 +904,7 @@ def _q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SCC kernel (tests/test_walks_scc_neighborhood.py::
 #: test_scc_md5_graph_has_giant_component) — a sparse md5 random digraph
 #: whose giant SCC forces ~10 propagation supersteps, i.e. a deep chain
-#: of checkpoint generations through plans/iterstate.py. The gated SCC
+#: of state cuts through plans/iterstate.py. The gated SCC
 #: queries (scc_imports/call_scc) settle in few supersteps, which is why
 #: the r4 crash lived only in pytest; this query pins the deep-superstep
 #: path under the oracle gate forever (VERDICT r4 task #7).

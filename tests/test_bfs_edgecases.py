@@ -162,8 +162,7 @@ def test_bfs_single_action_per_superstep(spark):
     assert res.iterations == 8 and res.exhausted
     supersteps = 9  # 8 discovering + 1 empty-frontier terminator
     setup = 5  # edge count/persist, dist seed checkpoint, max-depth probe,
-    #            frontier seed checkpoint, + the O(1) pin epilogue that
-    #            reclaims iterstate round-trip files (ckpt.pin)
+    #            frontier seed checkpoint, + the O(1) pin epilogue (ckpt.pin)
     assert execs <= setup + 2 * supersteps, execs
 
 

@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import json
 import os
+import signal
+import subprocess
+import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,6 +59,97 @@ def test_pagerank_resume_identical(spark, tmp_path):
     assert got.keys() == want.keys()
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-9)
+
+
+_KILLED_RUN = """
+import sys
+from paragrapher_spark import get_spark
+from paragrapher_spark.fixtures import powerlaw_graph
+from paragrapher_spark.kernels.pagerank import pagerank
+from paragrapher_spark.plans.checkpoint import CheckpointManager
+
+spark = get_spark(shuffle_partitions=8)
+spark.sparkContext.setLogLevel("ERROR")
+pagerank(
+    powerlaw_graph(spark, n=300, m=3), tol=0.0, max_iter=50,
+    checkpoint=CheckpointManager(sys.argv[1], "pr"), checkpoint_every=2,
+)
+"""
+
+
+def _last_complete(manifest: str) -> int:
+    """Newest complete iteration in a manifest another process is
+    appending to (a torn last line is skipped), or 0."""
+    last = 0
+    if os.path.exists(manifest):
+        with open(manifest) as fh:
+            for line in fh:
+                try:
+                    rec = json.loads(line)
+                except ValueError:
+                    continue
+                if rec["status"] == "complete":
+                    last = rec["iteration"]
+    return last
+
+
+def _group_alive(pgid: int) -> bool:
+    """Any non-zombie process left in process group ``pgid`` (Linux)."""
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                state, _, pgrp = fh.read().rsplit(")", 1)[1].split()[:3]
+        except (OSError, ValueError):
+            continue
+        if int(pgrp) == pgid and state != "Z":
+            return True
+    return False
+
+
+def test_pagerank_resumes_after_sigkill(spark, tmp_path):
+    # A run in its own process group (driver JVM included) is SIGKILLed
+    # once iteration 2's snapshot is complete. Loop state lives only in
+    # memory, so resuming must need nothing but the snapshots.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    manifest = CheckpointManager(str(tmp_path), "pr").manifest_path
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+        PG_SPARK_DRIVER_MEM="1g",
+        SPARK_GRAFT_CPUS="2",
+    )
+    child = subprocess.Popen(
+        [sys.executable, "-c", _KILLED_RUN, str(tmp_path)],
+        cwd=root, env=env, start_new_session=True,
+        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+    )
+    try:
+        deadline = time.monotonic() + 300
+        while _last_complete(manifest) < 2:
+            assert child.poll() is None, "run exited before its iteration-2 snapshot"
+            assert time.monotonic() < deadline, "no iteration-2 snapshot in 300 s"
+            time.sleep(0.05)
+    finally:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait()
+    deadline = time.monotonic() + 30
+    while _group_alive(child.pid) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not _group_alive(child.pid), "killed run left a process behind"
+    killed_at = _last_complete(manifest)
+    assert 2 <= killed_at < 6
+
+    edges = powerlaw_graph(spark, n=300, m=3)
+    resumed = pagerank(
+        edges, tol=0.0, max_iter=6,
+        checkpoint=CheckpointManager(str(tmp_path), "pr"), checkpoint_every=2,
+    )
+    assert resumed.history[0]["iteration"] == killed_at + 1
+    want = {r.id: r.rank for r in pagerank(edges, tol=0.0, max_iter=6).ranks.collect()}
+    got = {r.id: r.rank for r in resumed.ranks.collect()}
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], abs=1e-12)
 
 
 def test_cc_resume_identical(spark, tmp_path):

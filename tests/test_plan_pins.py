@@ -331,7 +331,7 @@ def test_scc_result_lineage_pin(spark):
     checkpoint-generation LogicalRDDs, which crashed Spark 4.1's
     constraint rewrite at the final localCheckpoint on deep-superstep
     inputs (kernels/scc.py, the md5-random-digraph class). The kernel
-    now cuts ``out`` per round, cuts ``done`` on the iterstate cadence,
+    now cuts ``out`` per round, cuts ``found`` every 4th round,
     and pins the final result with an eager localCheckpoint — so the
     plan a caller actually consumes is a single ExistingRDD scan."""
     from paragrapher_spark.kernels.scc import scc

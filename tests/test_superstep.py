@@ -1,20 +1,21 @@
 """plans/superstep.py — the one loop every iterative kernel runs on.
 
 A synthetic step over a tiny DataFrame, no kernel: resume point, save /
-progress cadence, the per-row schema, round-trip cleanup, and that a
+progress cadence, the per-row schema, stopping on ``done``, and that a
 step's shuffle bytes land in that step's own row.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from paragrapher_spark.plans import superstep
 from paragrapher_spark.plans.checkpoint import CheckpointManager
 
-ROW_KEYS = {"round", "total", "duration_s", "shuffle_write_bytes", "shuffle_read_bytes"}
+ROW_KEYS = {
+    "round", "total", "duration_s", "compile_s", "shuffle_write_bytes",
+    "shuffle_read_bytes",
+}
 
 
 def _step(i, state, ckpt):
@@ -50,19 +51,15 @@ def test_resume_and_cadence(spark, tmp_path):
     assert {r.id: r.v for r in resumed.result.collect()} == {i: i + 7 for i in range(8)}
 
 
-def test_done_stops_and_round_trip_files_are_reclaimed(spark, tmp_path, monkeypatch):
-    base = str(tmp_path / "iterstate")
-    os.makedirs(base)
-    monkeypatch.setenv("PG_ITERSTATE_DIR", base)
+def test_done_stops_and_result_is_pinned(spark):
     loop = superstep.run(
         _step, _start(spark), spark=spark, max_iter=50,
         done=lambda s: s.agg(F.min("v")).collect()[0][0] >= 6,
     )
-    # 6 steps cross the parquet round-trip on the 4th cut
     assert loop.done and loop.last == 6
     assert [h["iteration"] for h in loop.history] == list(range(1, 7))
-    assert os.listdir(base) == []
-    assert loop.result.count() == 8  # pinned: readable after cleanup
+    assert all(h["compile_s"] >= 0 for h in loop.history)
+    assert loop.result.count() == 8
 
 
 def test_shuffle_bytes_land_in_their_own_row(spark):
